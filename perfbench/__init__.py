@@ -1,0 +1,6 @@
+"""Repository benchmark: three closed-loop workloads over the engine's
+public entry points, plus a traced run for per-layer numbers.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""

@@ -1,0 +1,13 @@
+"""Tests of the benchmark's own logic.  Run from the repository root:
+
+    python -m pytest perfbench/tests -q
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+if ROOT not in sys.path:
+    sys.path.insert(0, ROOT)
