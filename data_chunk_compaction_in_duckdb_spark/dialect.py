@@ -457,6 +457,63 @@ def _literal_spans(sql: str) -> list[tuple[int, int]]:
     return spans
 
 
+def mask_literals(sql: str) -> str:
+    """``sql`` with every literal, quoted identifier and comment blanked
+    to spaces (positions preserved), so keyword and marker scans never
+    see quoted text."""
+    out = list(sql)
+    for a, b in _literal_spans(sql):
+        out[a:b] = " " * (min(b, len(out)) - a)
+    return "".join(out)
+
+
+# --- statement classification ------------------------------------------
+# One leading-keyword switch per statement, the shape of DuckDB's
+# embedded API (one parse, then one statement-type switch —
+# src/main/client_context.cpp).  ``Engine.sql`` and the sqllogic runner
+# both route by it; each kind's handler keeps its own grammar.
+
+_STATEMENT_KINDS = {
+    **dict.fromkeys(("BEGIN", "START", "COMMIT", "ROLLBACK", "ABORT"), "txn"),
+    **dict.fromkeys(("INSERT", "UPDATE", "DELETE", "TRUNCATE"), "dml"),
+    **dict.fromkeys(("PREPARE", "EXECUTE", "DEALLOCATE"), "prepared"),
+    "EXPLAIN": "explain",
+    **dict.fromkeys(
+        ("VACUUM", "CHECKPOINT", "EXPORT", "IMPORT"), "maintenance"
+    ),
+    **dict.fromkeys(("DESCRIBE", "SHOW", "SUMMARIZE"), "introspection"),
+    **dict.fromkeys(("SET", "RESET", "PRAGMA"), "settings"),
+}
+# CREATE/DROP kinds by object word (after OR REPLACE / UNIQUE); any other
+# object (TEMP VIEW, FUNCTION, ...) is Spark's to parse
+_DDL_KINDS = {
+    "VIEW": "catalog_ddl",
+    "SCHEMA": "catalog_ddl",
+    "SEQUENCE": "sequence_ddl",
+    "TABLE": "table_ddl",
+    "INDEX": "table_ddl",
+}
+_HEAD_RE = re.compile(
+    r"\s*([A-Za-z]+)\b(?:\s+OR\s+REPLACE\b)?(?:\s+UNIQUE\b)?\s*([A-Za-z]*)",
+    re.I,
+)
+
+
+def classify_statement(sql: str) -> str:
+    """The statement's kind, from its leading keyword over the literal-
+    and comment-masked text: one of ``txn``, ``dml``, ``prepared``,
+    ``catalog_ddl`` (view/schema), ``sequence_ddl``, ``table_ddl``
+    (CREATE TABLE / [UNIQUE] INDEX), ``explain``, ``maintenance``,
+    ``introspection``, ``settings`` or ``query`` (everything else)."""
+    m = _HEAD_RE.match(mask_literals(sql))
+    if m is None:
+        return "query"
+    word = m.group(1).upper()
+    if word in ("CREATE", "DROP"):
+        return _DDL_KINDS.get(m.group(2).upper(), "query")
+    return _STATEMENT_KINDS.get(word, "query")
+
+
 def _star_is_expression(out: str, i: int) -> bool:
     """True when the ``*`` at index ``i`` is a star EXPRESSION (select
     list or ``t.*``), not the multiplication operator.  DuckDB parses

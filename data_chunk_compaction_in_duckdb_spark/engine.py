@@ -12,21 +12,23 @@ A user of the reference switches like this::
     eng.table("lineitem").filter(...)                                  # DataFrame API
     eng.explain(df)                                                    # EXPLAIN
     eng.compact(df)                                                    # compaction layer
+
+``Engine.sql`` classifies each statement once and hands it to one
+handler; its docstring lists the statement kinds.
 """
 
 from __future__ import annotations
 
+import re as _re
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from data_chunk_compaction_in_duckdb_spark import catalog as _catalog
+from data_chunk_compaction_in_duckdb_spark import dialect, prepared, settings
 from data_chunk_compaction_in_duckdb_spark.session import get_spark
 
-
-_UNHANDLED = object()  # sentinel: statement not a txn/DML form
-
-import re as _re  # noqa: E402 — view/schema DDL grammar below
+# -- statement grammars, grouped by the handler that owns them
 
 _CREATE_VIEW_RE = _re.compile(
     r"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(\w+)\s+AS\s+(.*?);?\s*$",
@@ -40,6 +42,27 @@ _CREATE_SCHEMA_RE = _re.compile(
 )
 _DROP_SCHEMA_RE = _re.compile(
     r"^\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", _re.I
+)
+_EXPLAIN_RE = _re.compile(r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.*)$", _re.I | _re.S)
+_VACUUM_RE = _re.compile(r"^\s*VACUUM(\s+ANALYZE)?\s*;?\s*$", _re.I)
+_CHECKPOINT_RE = _re.compile(r"^\s*CHECKPOINT(\s+\w+)?\s*;?\s*$", _re.I)
+_EXPORT_DB_RE = _re.compile(
+    r"^\s*EXPORT\s+DATABASE\s+'([^']+)'"
+    r"(?:\s*\(\s*FORMAT\s+'?(\w+)'?\s*\))?\s*;?\s*$",
+    _re.I,
+)
+_IMPORT_DB_RE = _re.compile(
+    r"^\s*IMPORT\s+DATABASE\s+'([^']+)'\s*;?\s*$", _re.I
+)
+_DESCRIBE_SEL_RE = _re.compile(r"^\s*DESCRIBE\s+(SELECT\b.*)$", _re.I | _re.S)
+_DESCRIBE_TBL_RE = _re.compile(r"^\s*DESCRIBE\s+(\w+)\s*;?\s*$", _re.I)
+_SHOW_TABLES_RE = _re.compile(r"^\s*SHOW\s+(?:ALL\s+)?TABLES\s*;?\s*$", _re.I)
+_SUMMARIZE_RE = _re.compile(r"^\s*SUMMARIZE\s+(\w+)\s*;?\s*$", _re.I)
+# catalog table functions, each backed by the Engine method of its name
+_CATALOG_TF_RE = _re.compile(
+    r"\b(duckdb_(?:tables|views|schemas|types|keywords|functions|settings"
+    r"|sequences|indexes))\s*\(\s*\)",
+    _re.I,
 )
 
 
@@ -62,6 +85,23 @@ class Engine:
         self.tables: dict[str, DataFrame] = {}
         if register:
             self.tables = _catalog.register_views(self.spark, sf_dir)
+        # catalog state: SQL-created views (name -> body) and schemas,
+        # sequences, versioned tables, ART and FTS/ANN indexes
+        self._views: dict[str, str] = {}
+        self._schemas: set[str] = set()
+        self._sequences: dict[str, Any] = {}
+        self._versioned: dict[str, Any] = {}
+        self._art_indexes: dict[str, dict] = {}
+        self._indexes: dict[str, Any] = {}
+        self._txn = None  # the open storage.transaction.Transaction
+        self._root_log = None  # storage.txnlog.RootLog (atomic commit)
+        self._prepared = prepared.PreparedStore()
+        self._settings = settings.SettingsStore(self.spark)
+        # per-engine temp roots (created lazily, removed on close())
+        # and generation counters that keep replaced paths fresh
+        self._seq_root: str | None = None
+        self._index_root: str | None = None
+        self._seq_gen = self._art_gen = self._idx_gen = 0
 
     def _wrap(self, df: DataFrame):
         """With ``auto_compact`` on, hand out CompactingPhysicalOperator-
@@ -78,167 +118,115 @@ class Engine:
         return AutoCompactFrame(df, target_rows=self.compact_target_rows)
 
     # -- entry point 1: SQL string (Connection::Query)
+
+    # statement kind (dialect.classify_statement) -> handler method; a
+    # kind without an entry (table_ddl here) is a query for Spark
+    _HANDLERS = {
+        "dml": "_dml",
+        "prepared": "_prepared_statement",
+        "catalog_ddl": "_catalog_ddl",
+        "sequence_ddl": "_sequence_ddl",
+        "explain": "_explain",
+        "maintenance": "_maintenance",
+        "introspection": "_introspection",
+        "settings": "_settings_statement",
+    }
+
     def sql(self, query: str, *args: Any, **params: Any) -> DataFrame | None:
-        """Run SQL against the registered catalog (returns None for the
-        dispatched sequence DDL statements, a DataFrame for everything
-        else).  Named ``:param``
-        placeholders make this the prepared-statement path (reference
-        entry point 2, client_context.cpp:534-560); positional ``?``
-        markers with ``*args`` cover the reference's ``$1``/``?``
-        prepared form (test/sql/prepared/) — both bound by Spark's
-        parameterized SQL, never string interpolation.
+        """Run one SQL statement against the registered catalog: a
+        DataFrame for queries and readbacks, None for statements.
 
-        Sequence SQL rides the same entry point (reference
-        test/sql/catalog/sequence/): ``CREATE [OR REPLACE] SEQUENCE`` /
-        ``DROP SEQUENCE [IF EXISTS]`` statements manage engine-registered
-        sequences (backed by commit logs under a per-engine root), and
-        queries calling ``nextval('name')``/``currval('name')`` bind
-        those names through Arrow-batched UDFs — one linearizable range
-        claim per batch.  Pipelines should prefer
-        ``storage.with_sequence`` (one O(1) claim per DataFrame); the
-        SQL form exists for reference-parity per-row semantics.
+        DuckDB's expression grammar is rewritten first
+        (``dialect.rewrite_expressions``), so DML fragments, prepared
+        bodies and view definitions accept the same surface as plain
+        SELECTs.  The statement is then classified once by its leading
+        keyword (``dialect.classify_statement``) and handed to one
+        handler:
 
-        Inside the SQL text Catalyst+AQE own compaction (shuffle-read
-        coalescing); with ``auto_compact`` on, the returned handle also
-        auto-compacts anything composed on it at the DataFrame level."""
-        from data_chunk_compaction_in_duckdb_spark import settings as _settings
-        from data_chunk_compaction_in_duckdb_spark.storage import seqsql
+        - txn — BEGIN / START TRANSACTION / COMMIT / ROLLBACK / ABORT
+          (reference transaction_context.cpp, test/sql/transactions/):
+          staged multi-statement atomicity on the versioned store;
+        - dml — INSERT [OR REPLACE|IGNORE] / DELETE [USING] / UPDATE
+          [FROM] / TRUNCATE on versioned tables (Spark SQL cannot run
+          DML against temp views);
+        - prepared — PREPARE / EXECUTE / DEALLOCATE
+          (``prepared.dispatch``, test/sql/prepared/): an EXECUTE of a
+          query body goes straight to the query handler with its
+          arguments bound by Spark's parameterized SQL;
+        - catalog_ddl — CREATE/DROP VIEW and SCHEMA;
+        - sequence_ddl — CREATE/DROP SEQUENCE (test/sql/catalog/
+          sequence/), backed by commit logs under a per-engine root;
+        - explain — EXPLAIN [ANALYZE] in DuckDB's (explain_key,
+          explain_value) shape;
+        - maintenance — VACUUM / CHECKPOINT / EXPORT / IMPORT DATABASE;
+        - introspection — DESCRIBE / SHOW TABLES / SUMMARIZE in DuckDB's
+          output shapes;
+        - settings — SET / RESET / PRAGMA of DuckDB settings and engine
+          pragmas (src/main/settings/);
+        - query — everything else: catalog table functions
+          (``duckdb_tables()`` ...) become temp views, ``nextval``/
+          ``currval``/``current_setting`` bind as UDFs, star modifiers
+          and QUALIFY are rewritten, and ``spark.sql`` runs the text.
 
-        # DuckDB expression grammar FIRST (dialect.rewrite_expressions:
-        # list/struct literals, JSON arrows, slicing, SIMILAR TO, //,
-        # function aliases) so DML fragments, prepared bodies and view
-        # definitions all accept the same surface as plain SELECTs
-        from data_chunk_compaction_in_duckdb_spark import dialect
+        A handler whose grammar does not match passes the statement on
+        to the query handler (``SET spark.sql.x = v``, ``EXECUTE
+        IMMEDIATE``, ``CREATE TEMP VIEW``, ``SHOW FUNCTIONS``).  Inside
+        an aborted transaction every kind but txn is refused with
+        DuckDB's error.
 
+        Named ``:param`` placeholders with ``**params`` and positional
+        ``?`` markers with ``*args`` are the prepared-statement path
+        (reference client_context.cpp:534-560) — bound by Spark's
+        parameterized SQL, never string interpolation.  Inside the SQL
+        text Catalyst+AQE own compaction (shuffle-read coalescing); with
+        ``auto_compact`` on, the returned handle also auto-compacts
+        anything composed on it at the DataFrame level."""
         expr = dialect.rewrite_expressions(query)
         if expr is not None:
             query = expr
+        kind = dialect.classify_statement(query)
+        if kind == "txn":
+            from data_chunk_compaction_in_duckdb_spark.storage import dmlsql
 
-        # transaction statements + versioned-table DML first (reference
-        # src/transaction/transaction_context.cpp, test/sql/transactions/
-        # and the INSERT/DELETE/UPDATE statement surface): Spark SQL
-        # can't parse DML against temp views, so both are engine-level
-        handled = self._dispatch_txn_dml(query)
-        if handled is not _UNHANDLED:
-            return handled
+            verb = dmlsql.parse_txn_verb(query)
+            if verb is not None:
+                {
+                    "begin": self.begin,
+                    "commit": self.commit_txn,
+                    "rollback": self.rollback,
+                }[verb]()
+                return None
+        if self._txn is not None and self._txn.aborted:
+            # probed: an aborted transaction refuses every statement
+            # except COMMIT/ROLLBACK with the same error text
+            from data_chunk_compaction_in_duckdb_spark.storage.transaction import (  # noqa: E501
+                TransactionAborted,
+            )
 
-        # PREPARE/EXECUTE/DEALLOCATE (reference test/sql/prepared/,
-        # src/main/prepared_statement.cpp): EXECUTE of a SELECT-ish
-        # body binds the arguments as literal Columns through Spark's
-        # parameterized SQL (never interpolation); prepared DML
-        # re-enters this dispatch with the markers substituted
-        handled = self._dispatch_prepared(query)
-        if handled is not _UNHANDLED:
-            return handled
+            raise TransactionAborted()
+        handler = getattr(self, self._HANDLERS.get(kind, "_query"))
+        return handler(query, args, params)
 
-        # CREATE/DROP VIEW + CREATE/DROP SCHEMA DDL and the catalog
-        # table-function readbacks (duckdb_tables/views/schemas/types/
-        # keywords/functions — reference src/function/table/system/)
-        handled = self._dispatch_view_schema(query)
-        if handled is not _UNHANDLED:
-            return handled
-        # EXPLAIN [ANALYZE] <select> (reference test/sql/explain/, the
-        # EXPLAIN ANALYZE harvest in vector_compaction.cpp:83-92) —
-        # DuckDB's (explain_key, explain_value) output shape
-        handled = self._dispatch_explain(query)
-        if handled is not _UNHANDLED:
-            return handled
+    def _query(self, query: str, args: tuple, params: dict) -> DataFrame:
+        """The query handler: DuckDB forms Spark's parser lacks, then
+        ``spark.sql``."""
+        from data_chunk_compaction_in_duckdb_spark.storage import seqsql
 
-        # VACUUM / EXPORT DATABASE / IMPORT DATABASE maintenance
-        # statements (reference test/sql/vacuum/, physical_export.cpp)
-        handled = self._dispatch_maintenance(query)
-        if handled is not _UNHANDLED:
-            return handled
-
-        # DESCRIBE / SHOW TABLES / SUMMARIZE statements (reference
-        # test/sql/show_select/, summarize TF) — DuckDB's output shapes,
-        # not Spark's native DESCRIBE
-        handled = self._dispatch_show_describe(query)
-        if handled is not _UNHANDLED:
-            return handled
+        if args and params:
+            raise ValueError("use positional ? args or named :params, not both")
         query = self._rewrite_catalog_tfs(query)
-
-        # settings statements (reference src/main/settings/,
-        # test/sql/settings/): SET/PRAGMA <known setting>, RESET <name>.
-        # Dotted Spark conf keys never match the name grammar, so
-        # `SET spark.sql.x = v` still falls through to spark.sql below.
-        st = _settings.parse_set(query)
-        if st is not None:
-            name, value, scope = st
-            if self._is_setting(name):
-                _settings.check_scope(name, scope, "set")
-                self._settings_store().set(name, value)
-            elif name in self._PRAGMAS:
-                # engine pragmas keep working through the SQL form too
-                self.pragma(name, value)
-            else:
-                raise ValueError(
-                    "Catalog Error: unrecognized configuration "
-                    f'parameter "{name}"'
-                )
-            return None
-        rst = _settings.parse_reset(query)
-        if rst is not None:
-            name, scope = rst
-            if self._is_setting(name):
-                _settings.check_scope(name, scope, "reset")
-                self._settings_store().reset(name)
-            elif name in self._PRAGMAS:
-                # symmetric with the SET path: unset restores the
-                # Spark conf default for pragma-mapped names
-                self.spark.conf.unset(self._PRAGMAS[name])
-            else:
-                raise ValueError(
-                    "Catalog Error: unrecognized configuration "
-                    f'parameter "{name}"'
-                )
-            return None
-        if _settings.SETTINGS_TF_RE.search(query):
-            self.duckdb_settings().createOrReplaceTempView(
-                "__duckdb_settings"
-            )
-            query = _settings.sub_outside_literals(
-                _settings.SETTINGS_TF_RE, "__duckdb_settings", query
-            )
-        if _settings.CURRENT_SETTING_RE.search(query):
+        if settings.CURRENT_SETTING_RE.search(query):
             self._register_current_setting_udf()
-
-        created = seqsql.parse_create_sequence(query)
-        if created is not None:
-            name, or_replace, kwargs = created
-            seqs = getattr(self, "_sequences", {})
-            if name in seqs and not or_replace:
-                raise ValueError(
-                    f"Catalog Error: sequence {name} already exists"
-                )
-            self.create_sequence(name, self._next_seq_path(name), **kwargs)
-            return None
-        dropped = seqsql.parse_drop_sequence(query)
-        if dropped is not None:
-            name, if_exists = dropped
-            seqs = getattr(self, "_sequences", {})
-            if name not in seqs:
-                if if_exists:
-                    return None
-                raise ValueError(
-                    f"Catalog Error: sequence {name} does not exist"
-                )
-            del seqs[name]
-            return None
         if seqsql.SEQFN_RE.search(query):
-            paths = {
-                n: s.path
-                for n, s in getattr(self, "_sequences", {}).items()
-            }
+            # per-row nextval/currval for reference parity: one range
+            # claim per Arrow batch (pipelines prefer
+            # storage.with_sequence, one claim per DataFrame)
+            paths = {n: s.path for n, s in self._sequences.items()}
             nextval_udf, currval_udf = seqsql.make_seq_udfs(paths)
             self.spark.udf.register("nextval", nextval_udf)
             self.spark.udf.register("currval", currval_udf)
-        if args and params:
-            raise ValueError("use positional ? args or named :params, not both")
-        # DuckDB dialect forms Spark's parser lacks (dialect.py):
-        # expression grammar already ran at the top of sql(); star
-        # modifiers next (local rewrite), then QUALIFY (binder rewrite
-        # + helper-column drop)
+        # star modifiers (local rewrite), then QUALIFY (binder rewrite +
+        # helper-column drop)
         star = dialect.rewrite_star_modifiers(query)
         if star is not None:
             query = star
@@ -268,36 +256,32 @@ class Engine:
             df = df.drop(drop_col)
         return self._wrap(df)
 
-    # -- transactions (reference src/transaction/transaction_context.cpp,
-    #    test/sql/transactions/) — staged multi-statement atomicity onto
-    #    the versioned store (storage/transaction.py)
+    def _rewrite_catalog_tfs(self, query: str) -> str:
+        """Materialize each catalog-TF call site (``duckdb_tables()``
+        etc., outside literals) into a temp view and rewrite the call —
+        the SAME SQL text runs natively in DuckDB."""
+        if not _CATALOG_TF_RE.search(query):
+            return query
+        built: set[str] = set()
 
-    def _dispatch_txn_dml(self, query: str):
-        """BEGIN/COMMIT/ROLLBACK/ABORT + INSERT/DELETE/UPDATE dispatch.
-        Returns the sentinel ``_UNHANDLED`` for every other statement
-        (after enforcing DuckDB's aborted-transaction guard, probed:
-        an aborted transaction refuses ALL statements except
-        COMMIT/ROLLBACK with the same error text)."""
+        def to_view(m) -> str:
+            name = m.group(1).lower()
+            if name not in built:
+                getattr(self, name)().createOrReplaceTempView(f"__{name}")
+                built.add(name)
+            return f"__{name}"
+
+        return settings.sub_outside_literals(_CATALOG_TF_RE, to_view, query)
+
+    # -- dml (reference physical_insert/delete/update.cpp): AUTOCOMMIT
+    #    onto the versioned store, or staged in the open transaction
+
+    def _dml(self, query: str, args: tuple, params: dict):
         from data_chunk_compaction_in_duckdb_spark.storage import dmlsql
-        from data_chunk_compaction_in_duckdb_spark.storage.transaction import (
-            TransactionAborted,
-        )
 
-        verb = dmlsql.parse_txn_verb(query)
-        if verb == "begin":
-            self.begin()
-            return None
-        if verb == "commit":
-            self.commit_txn()
-            return None
-        if verb == "rollback":
-            self.rollback()
-            return None
-        txn = getattr(self, "_txn", None)
+        txn = self._txn
         trunc = dmlsql.parse_truncate(query)
         if trunc is not None:
-            if txn is not None:
-                txn.check_active()
             vt = self._require_versioned(trunc)
             from pyspark.sql import functions as F
 
@@ -310,8 +294,6 @@ class Engine:
             return None
         ins = dmlsql.parse_insert(query)
         if ins is not None:
-            if txn is not None:
-                txn.check_active()
             name, collist, body, mode = ins
             vt = self._require_versioned(name)
             if body.upper().startswith("VALUES"):
@@ -411,8 +393,6 @@ class Engine:
             return None
         dele = dmlsql.parse_delete(query)
         if dele is not None:
-            if txn is not None:
-                txn.check_active()
             name, where, using = dele
             vt = self._require_versioned(name)
             from pyspark.sql import functions as F
@@ -452,8 +432,6 @@ class Engine:
             return None
         upd = dmlsql.parse_update(query)
         if upd is not None:
-            if txn is not None:
-                txn.check_active()
             name, assigns, where, from_ = upd
             vt = self._require_versioned(name)
             from pyspark.sql import functions as F
@@ -495,24 +473,35 @@ class Engine:
                 vt.update_where(cond, exprs)
                 self._publish_autocommit(name, vt)
             return None
-        if txn is not None and txn.aborted:
-            raise TransactionAborted()
-        return _UNHANDLED
+        return self._query(query, args, params)
+
+    # -- prepared statements (reference test/sql/prepared/,
+    #    src/main/prepared_statement.cpp)
+
+    def _prepared_statement(self, query: str, args: tuple, params: dict):
+        def run_body(bound: str, binds: dict[str, str]):
+            return self._query(
+                bound, (), prepared.fold_args(self.spark, binds)
+            )
+
+        handled, result = prepared.dispatch(
+            self._prepared, query, run_body, self.sql
+        )
+        return result if handled else self._query(query, args, params)
 
     # -- view / schema DDL + catalog readback (reference
     #    src/function/table/system/duckdb_tables.cpp, duckdb_views.cpp,
     #    duckdb_schemas.cpp, duckdb_types.cpp, duckdb_keywords.cpp,
     #    duckdb_functions.cpp; test/sql/pg_catalog/)
 
-    def _dispatch_view_schema(self, query: str):
+    def _catalog_ddl(self, query: str, args: tuple, params: dict):
         """CREATE/DROP VIEW and CREATE/DROP SCHEMA — Spark temp views
         plus an engine-side DDL registry so duckdb_views()/
         duckdb_schemas() can read back DuckDB's catalog shape."""
         m = _CREATE_VIEW_RE.match(query)
         if m:
             or_replace, name, body = bool(m.group(1)), m.group(2), m.group(3)
-            views = getattr(self, "_views", {})
-            if name in views and not or_replace:
+            if name in self._views and not or_replace:
                 raise ValueError(
                     f'Catalog Error: View with name "{name}" already exists'
                 )
@@ -522,14 +511,13 @@ class Engine:
             self.spark.sql(self._rewrite_catalog_tfs(body)).createOrReplaceTempView(
                 name
             )
-            self._views = {**views, name: body}
+            self._views = {**self._views, name: body}
             return None
         m = _DROP_VIEW_RE.match(query)
         if m:
             if_exists, name = bool(m.group(1)), m.group(2)
-            views = getattr(self, "_views", {})
-            if name in views:
-                del views[name]
+            if name in self._views:
+                del self._views[name]
                 self.spark.catalog.dropTempView(name)
                 return None
             # not in the engine registry: a Spark-native temp view
@@ -544,97 +532,89 @@ class Engine:
         m = _CREATE_SCHEMA_RE.match(query)
         if m:
             if_not_exists, name = bool(m.group(1)), m.group(2)
-            schemas = getattr(self, "_schemas", set())
-            if name in schemas and not if_not_exists:
+            if name in self._schemas and not if_not_exists:
                 raise ValueError(
                     f'Catalog Error: Schema with name "{name}" already exists'
                 )
-            self._schemas = schemas | {name}
+            self._schemas = self._schemas | {name}
             return None
         m = _DROP_SCHEMA_RE.match(query)
         if m:
             if_exists, name = bool(m.group(1)), m.group(2)
-            schemas = getattr(self, "_schemas", set())
-            if name not in schemas:
+            if name not in self._schemas:
                 if if_exists:
                     return None
                 raise ValueError(
                     f"Catalog Error: Schema with name {name} does not exist"
                 )
-            self._schemas = schemas - {name}
+            self._schemas = self._schemas - {name}
             return None
-        return _UNHANDLED
+        return self._query(query, args, params)
 
-    def _rewrite_catalog_tfs(self, query: str) -> str:
-        """Materialize any catalog-TF call site (``duckdb_tables()``
-        etc.) into a temp view and rewrite the call (outside literals)
-        — the same round-trippable pattern duckdb_settings() uses, so
-        the SAME SQL text runs natively in DuckDB."""
-        from data_chunk_compaction_in_duckdb_spark.settings import (
-            sub_outside_literals,
-        )
+    def _sequence_ddl(self, query: str, args: tuple, params: dict):
+        """CREATE [OR REPLACE] SEQUENCE / DROP SEQUENCE [IF EXISTS]
+        (grammar shared with the sqllogic runner: storage/seqsql.py)."""
+        from data_chunk_compaction_in_duckdb_spark.storage import seqsql
 
-        from data_chunk_compaction_in_duckdb_spark.dialect import (
-            _literal_spans,
-        )
+        created = seqsql.parse_create_sequence(query)
+        if created is not None:
+            name, or_replace, kwargs = created
+            if name in self._sequences and not or_replace:
+                raise ValueError(
+                    f"Catalog Error: sequence {name} already exists"
+                )
+            self.create_sequence(name, self._next_seq_path(name), **kwargs)
+            return None
+        dropped = seqsql.parse_drop_sequence(query)
+        if dropped is not None:
+            name, if_exists = dropped
+            if name not in self._sequences:
+                if if_exists:
+                    return None
+                raise ValueError(
+                    f"Catalog Error: sequence {name} does not exist"
+                )
+            del self._sequences[name]
+            return None
+        return self._query(query, args, params)
 
-        for fname, builder in (
-            ("duckdb_tables", self.duckdb_tables),
-            ("duckdb_views", self.duckdb_views),
-            ("duckdb_schemas", self.duckdb_schemas),
-            ("duckdb_types", self.duckdb_types),
-            ("duckdb_keywords", self.duckdb_keywords),
-            ("duckdb_functions", self.duckdb_functions),
-        ):
-            pat = _re.compile(rf"\b{fname}\s*\(\s*\)", _re.I)
-            # literal-aware probe: a TF name appearing only as DATA
-            # must not materialize the catalog view.  Spans recompute
-            # per TF — earlier substitutions shift the offsets.
-            lits = _literal_spans(query)
-            if any(
-                not any(a <= m.start() < b for a, b in lits)
-                for m in pat.finditer(query)
-            ):
-                builder().createOrReplaceTempView(f"__{fname}")
-                query = sub_outside_literals(pat, f"__{fname}", query)
-        return query
-
-    _VACUUM_RE = _re.compile(r"^\s*VACUUM(\s+ANALYZE)?\s*;?\s*$", _re.I)
-    _EXPORT_DB_RE = _re.compile(
-        r"^\s*EXPORT\s+DATABASE\s+'([^']+)'"
-        r"(?:\s*\(\s*FORMAT\s+'?(\w+)'?\s*\))?\s*;?\s*$",
-        _re.I,
-    )
-    _IMPORT_DB_RE = _re.compile(
-        r"^\s*IMPORT\s+DATABASE\s+'([^']+)'\s*;?\s*$", _re.I
-    )
-
-    def _dispatch_maintenance(self, query: str):
-        """VACUUM [ANALYZE] / EXPORT DATABASE / IMPORT DATABASE
-        statements (reference test/sql/vacuum/, physical_export.cpp:215,
-        test/sql/copy/ export roundtrips) onto the existing APIs:
+    def _maintenance(self, query: str, args: tuple, params: dict):
+        """VACUUM [ANALYZE] / CHECKPOINT / EXPORT DATABASE / IMPORT
+        DATABASE statements (reference test/sql/vacuum/,
+        checkpoint_manager.cpp, physical_export.cpp:215, test/sql/copy/
+        export roundtrips) onto the existing APIs:
 
         - VACUUM sweeps every versioned table's unreferenced data files
           (versioned.vacuum — the reference's checkpoint truncation);
           VACUUM ANALYZE additionally recomputes nothing here because
           zone maps refresh at every commit (stats ride the manifest).
+        - CHECKPOINT folds each versioned table's live set into few
+          files.
         - EXPORT DATABASE '<dir>' [(FORMAT csv|parquet)] writes every
           engine-created table (versioned + CTAS) plus a schema.sql DDL
           record (sources/summary.export_database).
         - IMPORT DATABASE '<dir>' re-registers every exported table.
+
+        Probed: DuckDB accepts VACUUM and CHECKPOINT inside an open
+        transaction without touching the staged state — both are no-ops
+        there (working under a pinned base would race the staged
+        snapshot or manufacture a commit conflict).
         """
-        if self._VACUUM_RE.match(query):
-            # probed: DuckDB accepts VACUUM inside an open transaction
-            # (no-op there — sweeping under a pinned base would race
-            # the staged snapshot, same rule as CHECKPOINT).  DuckDB's
-            # VACUUM never destroys history, so the statement sweeps
-            # ORPHAN files only; retention truncation is the explicit
-            # Python vacuum(retain_last=...) API.
-            if getattr(self, "_txn", None) is None:
-                for name, vt in getattr(self, "_versioned", {}).items():
+        if _VACUUM_RE.match(query):
+            # DuckDB's VACUUM never destroys history, so the statement
+            # sweeps ORPHAN files only; retention truncation is the
+            # explicit Python vacuum(retain_last=...) API.
+            if self._txn is None:
+                for vt in self._versioned.values():
                     vt.vacuum_orphans()
             return None
-        m = self._EXPORT_DB_RE.match(query)
+        if _CHECKPOINT_RE.match(query):
+            if self._txn is None:
+                for name, vt in self._versioned.items():
+                    vt.checkpoint()
+                    self._publish_autocommit(name, vt)
+            return None
+        m = _EXPORT_DB_RE.match(query)
         if m:
             from data_chunk_compaction_in_duckdb_spark.sources.summary import (
                 export_database,
@@ -642,14 +622,14 @@ class Engine:
 
             out_dir, fmt = m.group(1), (m.group(2) or "parquet").lower()
             tables: dict[str, DataFrame] = {}
-            for name, vt in getattr(self, "_versioned", {}).items():
+            for name, vt in self._versioned.items():
                 tables[name] = vt.read()
             for name, df in self.tables.items():
                 if name not in tables and name not in _catalog.TABLES:
                     tables[name] = df
             export_database(self.spark, tables, out_dir, fmt=fmt)
             return None
-        m = self._IMPORT_DB_RE.match(query)
+        m = _IMPORT_DB_RE.match(query)
         if m:
             from data_chunk_compaction_in_duckdb_spark.sources.summary import (
                 import_database,
@@ -662,13 +642,9 @@ class Engine:
                 df.createOrReplaceTempView(name)
                 self.tables[name] = df
             return None
-        return _UNHANDLED
+        return self._query(query, args, params)
 
-    _EXPLAIN_RE = _re.compile(
-        r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.*)$", _re.I | _re.S
-    )
-
-    def _dispatch_explain(self, query: str):
+    def _explain(self, query: str, args: tuple, params: dict):
         """EXPLAIN [ANALYZE] <query> in DuckDB's two-column shape
         (probed: one row, explain_key = 'physical_plan' /
         'analyzed_plan', explain_value = the rendered tree).  EXPLAIN
@@ -677,16 +653,16 @@ class Engine:
         operator's numOutputRows (plans/metrics.explain_analyze — the
         same instrumentation the reference harvests from its
         profilers, vector_compaction.cpp:83-92)."""
-        m = self._EXPLAIN_RE.match(query)
+        m = _EXPLAIN_RE.match(query)
         if m is None:
-            return _UNHANDLED
+            return self._query(query, args, params)
         analyze, inner = bool(m.group(1)), m.group(2).strip().rstrip(";")
         if not _re.match(r"^\s*(SELECT|WITH|VALUES|TABLE)\b", inner, _re.I):
             raise ValueError(
                 "Not implemented Error: EXPLAIN of a non-SELECT "
                 "statement is not supported"
             )
-        df = self.sql(inner)
+        df = self._query(inner, (), {})
         if analyze:
             import time
 
@@ -716,74 +692,90 @@ class Engine:
             [(key, value)], "explain_key string, explain_value string"
         )
 
-    _DESCRIBE_SEL_RE = _re.compile(r"^\s*DESCRIBE\s+(SELECT\b.*)$", _re.I | _re.S)
-    _DESCRIBE_TBL_RE = _re.compile(r"^\s*DESCRIBE\s+(\w+)\s*;?\s*$", _re.I)
-    _SHOW_TABLES_RE = _re.compile(r"^\s*SHOW\s+(?:ALL\s+)?TABLES\s*;?\s*$", _re.I)
-    _SUMMARIZE_RE = _re.compile(r"^\s*SUMMARIZE\s+(\w+)\s*;?\s*$", _re.I)
-    _CHECKPOINT_RE = _re.compile(r"^\s*CHECKPOINT(\s+\w+)?\s*;?\s*$", _re.I)
-
-    def _dispatch_show_describe(self, query: str):
+    def _introspection(self, query: str, args: tuple, params: dict):
         """DESCRIBE <table|SELECT ...> / SHOW [ALL] TABLES / SUMMARIZE
-        <table> in DuckDB's output shapes (the sqllogic runner has had
-        this dispatch since round 6; Engine.sql mirrors it so the same
-        statement text works on the user-facing entry point).  Spark's
-        native DESCRIBE has a different shape, so these must intercept
-        before spark.sql."""
+        <table> in DuckDB's output shapes (reference
+        test/sql/show_select/, summarize TF).  Spark's native DESCRIBE
+        has a different shape, so these must intercept before
+        spark.sql."""
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        m = self._DESCRIBE_SEL_RE.match(query)
+        m = _DESCRIBE_SEL_RE.match(query)
         if m:
             return introspect.describe_query(self.spark, m.group(1))
-        m = self._DESCRIBE_TBL_RE.match(query)
+        m = _DESCRIBE_TBL_RE.match(query)
         if m:
             name = m.group(1)
-            if name in getattr(self, "_sequences", {}):
+            if name in self._sequences:
                 return introspect.describe_sequence(self._sequences[name])
-            if name in getattr(self, "_versioned", {}):
+            if name in self._versioned:
                 return introspect.describe_versioned(self._versioned[name])
             return introspect.describe_table(self.spark, name)
-        if self._SHOW_TABLES_RE.match(query):
+        if _SHOW_TABLES_RE.match(query):
             return introspect.show_tables(self.spark)
-        if self._CHECKPOINT_RE.match(query):
-            # reference CHECKPOINT: fold the live set into few files
-            # (checkpoint_manager.cpp).  Probed: DuckDB accepts it
-            # inside an open transaction without touching the staged
-            # state — here that is a no-op (checkpointing under a
-            # pinned base would only manufacture a commit conflict).
-            if getattr(self, "_txn", None) is None:
-                for name, vt in getattr(self, "_versioned", {}).items():
-                    vt.checkpoint()
-                    self._publish_autocommit(name, vt)
-            return None
-        m = self._SUMMARIZE_RE.match(query)
+        m = _SUMMARIZE_RE.match(query)
         if m:
             from data_chunk_compaction_in_duckdb_spark.sources.summary import (
                 summarize,
             )
 
             return summarize(self.spark.table(m.group(1)))
-        return _UNHANDLED
+        return self._query(query, args, params)
+
+    def _settings_statement(self, query: str, args: tuple, params: dict):
+        """SET/PRAGMA <known setting or engine pragma> and RESET <name>
+        (reference src/main/settings/, test/sql/settings/).  Dotted
+        Spark conf keys never match the name grammar, so
+        ``SET spark.sql.x = v`` passes on to spark.sql."""
+        st = settings.parse_set(query)
+        if st is not None:
+            name, value, scope = st
+            if self._is_setting(name):
+                settings.check_scope(name, scope, "set")
+                self._settings.set(name, value)
+            elif name in self._PRAGMAS:
+                # engine pragmas keep working through the SQL form too
+                self.pragma(name, value)
+            else:
+                raise ValueError(
+                    "Catalog Error: unrecognized configuration "
+                    f'parameter "{name}"'
+                )
+            return None
+        rst = settings.parse_reset(query)
+        if rst is not None:
+            name, scope = rst
+            if self._is_setting(name):
+                settings.check_scope(name, scope, "reset")
+                self._settings.reset(name)
+            elif name in self._PRAGMAS:
+                # symmetric with the SET path: unset restores the
+                # Spark conf default for pragma-mapped names
+                self.spark.conf.unset(self._PRAGMAS[name])
+            else:
+                raise ValueError(
+                    "Catalog Error: unrecognized configuration "
+                    f'parameter "{name}"'
+                )
+            return None
+        return self._query(query, args, params)
 
     def duckdb_tables(self) -> DataFrame:
         from data_chunk_compaction_in_duckdb_spark import introspect
 
         return introspect.duckdb_tables(
-            self.spark,
-            getattr(self, "_versioned", {}),
-            getattr(self, "_art_indexes", {}),
+            self.spark, self._versioned, self._art_indexes
         )
 
     def duckdb_views(self) -> DataFrame:
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        return introspect.duckdb_views(self.spark, getattr(self, "_views", {}))
+        return introspect.duckdb_views(self.spark, self._views)
 
     def duckdb_schemas(self) -> DataFrame:
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        return introspect.duckdb_schemas(
-            self.spark, sorted(getattr(self, "_schemas", set()))
-        )
+        return introspect.duckdb_schemas(self.spark, sorted(self._schemas))
 
     def duckdb_types(self) -> DataFrame:
         from data_chunk_compaction_in_duckdb_spark import introspect
@@ -800,32 +792,8 @@ class Engine:
 
         return introspect.duckdb_functions(self.spark)
 
-    # -- prepared statements (reference test/sql/prepared/)
-
-    def _prepared_store(self):
-        if getattr(self, "_prepared", None) is None:
-            from data_chunk_compaction_in_duckdb_spark.prepared import (
-                PreparedStore,
-            )
-
-            self._prepared = PreparedStore()
-        return self._prepared
-
-    def _dispatch_prepared(self, query: str):
-        from pyspark.sql import functions as F
-
-        from data_chunk_compaction_in_duckdb_spark import prepared as P
-
-        def run_sql(bound: str, binds: dict[str, str]):
-            return self.sql(bound, **P.fold_args(self.spark, binds))
-
-        handled, result = P.dispatch(
-            self._prepared_store(), query, run_sql, self.sql
-        )
-        return result if handled else _UNHANDLED
-
     def _require_versioned(self, name: str):
-        vt = getattr(self, "_versioned", {}).get(name)
+        vt = self._versioned.get(name)
         if vt is None:
             raise ValueError(
                 f"Catalog Error: Table with name {name} does not exist "
@@ -856,7 +824,7 @@ class Engine:
     def snapshot_versions(self) -> dict[str, int]:
         """Atomic {table: version} mapping from the root log (empty
         when atomic commit is not enabled)."""
-        log = getattr(self, "_root_log", None)
+        log = self._root_log
         return log.snapshot() if log is not None else {}
 
     def _publish_autocommit(self, name: str, vt) -> None:
@@ -865,9 +833,12 @@ class Engine:
         snapshot_versions() stays current (txnlog.RootLog.note — the
         manifest link already committed, this is visibility only)."""
         vt.read().createOrReplaceTempView(name)
-        log = getattr(self, "_root_log", None)
-        if log is not None:
-            log.note({name: (vt, vt.latest_version())})
+        if self._root_log is not None:
+            self._root_log.note({name: (vt, vt.latest_version())})
+
+    # -- transactions (reference src/transaction/transaction_context.cpp,
+    #    test/sql/transactions/) — staged multi-statement atomicity onto
+    #    the versioned store (storage/transaction.py)
 
     def begin(self) -> None:
         """BEGIN [TRANSACTION] / START TRANSACTION."""
@@ -875,7 +846,7 @@ class Engine:
             Transaction,
         )
 
-        if getattr(self, "_txn", None) is not None:
+        if self._txn is not None:
             # probed: a nested BEGIN also ABORTS the open transaction
             self._txn.aborted = True
             raise ValueError(
@@ -886,20 +857,15 @@ class Engine:
         # catalog DDL (CREATE/DROP VIEW/SCHEMA) is transactional in the
         # reference (probed: a rolled-back CTAS/VIEW vanishes) — pin the
         # registries so ROLLBACK can restore them
-        self._txn._catalog_snap = (
-            dict(getattr(self, "_views", {})),
-            set(getattr(self, "_schemas", set())),
-        )
+        self._txn._catalog_snap = (dict(self._views), set(self._schemas))
 
-    def _restore_catalog(self, txn) -> None:
-        views_snap, schemas_snap = getattr(
-            txn, "_catalog_snap", ({}, set())
-        )
-        cur_views = getattr(self, "_views", {})
-        for name in set(cur_views) - set(views_snap):
+    def _restore_catalog(self, views_snap: dict, schemas_snap: set) -> None:
+        """Put the view/schema registries (and the Spark temp views
+        behind them) back to a snapshot taken at BEGIN."""
+        for name in set(self._views) - set(views_snap):
             self.spark.catalog.dropTempView(name)
         for name, body in views_snap.items():
-            if cur_views.get(name) != body:
+            if self._views.get(name) != body:
                 self.spark.sql(
                     self._rewrite_catalog_tfs(body)
                 ).createOrReplaceTempView(name)
@@ -912,7 +878,7 @@ class Engine:
         DuckDB behavior).  On CommitConflictError the transaction is
         closed (the reference also invalidates it) and the error
         re-raises for the caller to retry on fresh state."""
-        txn = getattr(self, "_txn", None)
+        txn = self._txn
         if txn is None:
             raise ValueError(
                 "TransactionContext Error: cannot commit - no "
@@ -922,38 +888,36 @@ class Engine:
         try:
             if txn.aborted:
                 # probed: COMMIT of an aborted txn silently rolls back
-                self._restore_catalog(txn)
+                self._restore_catalog(*txn._catalog_snap)
                 return {}
             try:
-                return txn.commit(
-                    root_log=getattr(self, "_root_log", None)
-                )
+                return txn.commit(root_log=self._root_log)
             except Exception:
                 # a conflict-invalidated transaction must not leak its
                 # CREATE VIEW / CREATE SCHEMA effects (the reference
                 # invalidates the whole transaction, catalog included)
-                self._restore_catalog(txn)
+                self._restore_catalog(*txn._catalog_snap)
                 raise
         finally:
             self._restore_views(txn)
 
     def rollback(self) -> None:
         """ROLLBACK / ABORT: discard staging, restore committed views."""
-        txn = getattr(self, "_txn", None)
+        txn = self._txn
         if txn is None:
             raise ValueError(
                 "TransactionContext Error: cannot rollback - no "
                 "transaction is active"
             )
         self._txn = None
-        self._restore_catalog(txn)
+        self._restore_catalog(*txn._catalog_snap)
         self._restore_views(txn)
 
     def _restore_views(self, txn) -> None:
         # plain rebind, no root-log note: ending a transaction mutates
         # nothing (a rolled-back/conflicted txn must not grow the log)
         for name in txn._staged:
-            vt = getattr(self, "_versioned", {}).get(name)
+            vt = self._versioned.get(name)
             if vt is not None:
                 vt.read().createOrReplaceTempView(name)
 
@@ -963,9 +927,9 @@ class Engine:
         import os
         import tempfile
 
-        if getattr(self, "_seq_root", None) is None:
+        if self._seq_root is None:
             self._seq_root = tempfile.mkdtemp(prefix="engine_seq_")
-        self._seq_gen = getattr(self, "_seq_gen", 0) + 1
+        self._seq_gen += 1
         return os.path.join(self._seq_root, f"{name}_{self._seq_gen}")
 
     # -- entry point 3: programmatic DataFrame (embedded C++ driver)
@@ -1089,7 +1053,7 @@ class Engine:
         default_collation, enable_progress_bar) route to the settings
         store so ``pragma``/``SET``/``RESET``/readback stay coherent."""
         if self._is_setting(name):
-            self._settings_store().set(name, value)
+            self._settings.set(name, value)
             return
         key = self._PRAGMAS.get(name)
         if key is None:
@@ -1101,42 +1065,29 @@ class Engine:
     # -- DuckDB settings surface (reference src/main/settings/,
     #    src/main/config.cpp, test/sql/settings/)
 
-    def _settings_store(self):
-        if getattr(self, "_settings", None) is None:
-            from data_chunk_compaction_in_duckdb_spark.settings import (
-                SettingsStore,
-            )
-
-            self._settings = SettingsStore(self.spark)
-        return self._settings
-
     @staticmethod
     def _is_setting(name: str) -> bool:
-        from data_chunk_compaction_in_duckdb_spark import settings as S
-
         try:
-            S.canonical_name(name)
+            settings.canonical_name(name)
             return True
         except ValueError:
             return False
 
     def set_setting(self, name: str, value: Any) -> None:
-        self._settings_store().set(name, value)
+        self._settings.set(name, value)
 
     def reset_setting(self, name: str) -> None:
-        self._settings_store().reset(name)
+        self._settings.reset(name)
 
     def current_setting(self, name: str) -> Any:
         """Typed readback (DuckDB's ``current_setting()`` scalar)."""
-        return self._settings_store().current(name)
+        return self._settings.current(name)
 
     def duckdb_settings(self) -> DataFrame:
         """duckdb_settings() catalog readback (introspect module)."""
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        return introspect.duckdb_settings(
-            self.spark, self._settings_store()
-        )
+        return introspect.duckdb_settings(self.spark, self._settings)
 
     def _register_current_setting_udf(self) -> None:
         """SQL-callable ``current_setting(name)`` returning VARCHAR (the
@@ -1144,12 +1095,7 @@ class Engine:
         CAST on both engines).  Snapshots the store's current rendering
         at registration — re-registered before every query that
         references it, so reads always see the latest SET."""
-        store = self._settings_store()
-        from data_chunk_compaction_in_duckdb_spark.settings import (
-            SETTING_SPECS,
-        )
-
-        snap = {n: store.rendered(n) for n in SETTING_SPECS}
+        snap = {n: self._settings.rendered(n) for n in settings.SETTING_SPECS}
         aliases = {"max_memory": "memory_limit", "timezone": "TimeZone"}
 
         def _cs(name: str) -> str:
@@ -1226,7 +1172,7 @@ class Engine:
         # unique physical name per index: a table can carry several
         # indexes (reference: many ARTs per table); each lands in its
         # own bucketed copy and the view follows the LATEST layout
-        self._art_gen = getattr(self, "_art_gen", 0) + 1
+        self._art_gen += 1
         phys = f"{table}_idx{self._art_gen}"
         write_bucketed(df, phys, path, cols, n_buckets=n_buckets)
         indexed = self.spark.table(phys)
@@ -1234,7 +1180,6 @@ class Engine:
         self.tables[table] = indexed
         if table in _catalog.TABLES:
             _catalog.invalidate_views(self.spark)
-        self._art_indexes = getattr(self, "_art_indexes", {})
         self._art_indexes[idx_name] = {
             "table": table,
             "columns": cols,
@@ -1245,16 +1190,14 @@ class Engine:
         """DROP INDEX: removes the catalog entry (the bucketed copy
         stays as plain storage — scanning it without the index is
         always correct, like the reference's heap after DROP INDEX)."""
-        del getattr(self, "_art_indexes", {})[name]
+        del self._art_indexes[name]
 
     def duckdb_indexes(self) -> DataFrame:
         """duckdb_indexes() over every index registered on this engine
         (reference src/function/table/system/duckdb_indexes.cpp)."""
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        return introspect.duckdb_indexes(
-            self.spark, getattr(self, "_art_indexes", {})
-        )
+        return introspect.duckdb_indexes(self.spark, self._art_indexes)
 
     # -- durable tables (reference CREATE TABLE + storage layer)
     def create_versioned_table(
@@ -1271,7 +1214,6 @@ class Engine:
 
         vt = VersionedTable.create(self.spark, path, df, **kwargs)
         self._publish_autocommit(name, vt)
-        self._versioned = getattr(self, "_versioned", {})
         self._versioned[name] = vt
         return vt
 
@@ -1281,9 +1223,7 @@ class Engine:
         duckdb_constraints.cpp)."""
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        return introspect.duckdb_constraints(
-            self.spark, getattr(self, "_versioned", {})
-        )
+        return introspect.duckdb_constraints(self.spark, self._versioned)
 
     def refresh_versioned_view(
         self, name: str, vt, version: int | None = None
@@ -1300,12 +1240,11 @@ class Engine:
         from data_chunk_compaction_in_duckdb_spark.storage import Sequence
 
         seq = Sequence.create(self.spark, path, **kwargs)
-        self._sequences = getattr(self, "_sequences", {})
         self._sequences[name] = seq
         return seq
 
     def sequence(self, name: str):
-        return getattr(self, "_sequences", {})[name]
+        return self._sequences[name]
 
     def nextval(self, name: str) -> int:
         """nextval('seq') — driver-side single allocation; for per-row
@@ -1338,9 +1277,8 @@ class Engine:
             return introspect.describe_versioned(name_or_table)
         if isinstance(name_or_table, Sequence):
             return introspect.describe_sequence(name_or_table)
-        seqs = getattr(self, "_sequences", {})
-        if name_or_table in seqs:
-            return introspect.describe_sequence(seqs[name_or_table])
+        if name_or_table in self._sequences:
+            return introspect.describe_sequence(self._sequences[name_or_table])
         return introspect.describe_table(self.spark, name_or_table)
 
     def duckdb_columns(self, tables: list[str] | None = None) -> DataFrame:
@@ -1354,16 +1292,12 @@ class Engine:
         duckdb_sequences.cpp) — one O(1) head read per sequence."""
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        return introspect.duckdb_sequences(
-            self.spark, getattr(self, "_sequences", {})
-        )
+        return introspect.duckdb_sequences(self.spark, self._sequences)
 
     def show_sequences(self) -> DataFrame:
         from data_chunk_compaction_in_duckdb_spark import introspect
 
-        return introspect.show_sequences(
-            self.spark, getattr(self, "_sequences", {})
-        )
+        return introspect.show_sequences(self.spark, self._sequences)
 
     # -- materialized indexes (reference PRAGMA create_fts_index,
     # extension/fts; CREATE INDEX + storage, test/sql/index/)
@@ -1380,7 +1314,6 @@ class Engine:
             self.spark, self._next_index_path("fts", name), docs,
             id_col, text_col,
         )
-        self._indexes = getattr(self, "_indexes", {})
         self._indexes[name] = idx
         return idx
 
@@ -1407,12 +1340,11 @@ class Engine:
             self.spark, self._next_index_path(kind, name), corpus,
             id_col, vec_col, dim, **kwargs,
         )
-        self._indexes = getattr(self, "_indexes", {})
         self._indexes[name] = idx
         return idx
 
     def index(self, name: str):
-        return getattr(self, "_indexes", {})[name]
+        return self._indexes[name]
 
     def match_bm25(self, name: str, query_terms: list[str], **kwargs: Any):
         """match_bm25 over a registered FTS index (reference
@@ -1424,16 +1356,15 @@ class Engine:
         import os
         import tempfile
 
-        if getattr(self, "_index_root", None) is None:
+        if self._index_root is None:
             self._index_root = tempfile.mkdtemp(prefix="engine_idx_")
-        self._idx_gen = getattr(self, "_idx_gen", 0) + 1
+        self._idx_gen += 1
         return os.path.join(self._index_root, f"{kind}_{name}_{self._idx_gen}")
 
     def close(self) -> None:
         import shutil
 
-        for attr in ("_seq_root", "_index_root"):
-            root = getattr(self, attr, None)
+        for root in (self._seq_root, self._index_root):
             if root:
                 shutil.rmtree(root, ignore_errors=True)
         self.spark.stop()

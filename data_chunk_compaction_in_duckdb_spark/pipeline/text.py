@@ -69,7 +69,7 @@ def exploded_word_ngrams(
     token arrays and only slices/joins them with single spaces, byte-for-
     byte what ``array_join(slice(words, i, n), ' ')`` produces (pinned by
     ``tests/test_pipeline.py::test_exploded_word_ngrams_bitexact``).
-    MEASURED NEGATIVE at fixture scale (r10, tools/ab_ngrams.py,
+    MEASURED NEGATIVE at fixture scale (r10, OPTIMIZATION_r10.md §5,
     interleaved 7-rep A/B at sf0.1): arrow 1.35/1.10/1.76 s vs expr
     1.23/0.96/1.60 s med on contamination / repeated-spans / duplicate-
     fraction — the Arrow transpose of the token arrays out and the gram

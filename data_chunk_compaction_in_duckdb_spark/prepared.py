@@ -28,9 +28,9 @@ Spark-first execution: markers are rewritten to Spark's ``:name``
 named-parameter form OUTSIDE string literals and the argument
 expressions bind through ``spark.sql(query, args=...)`` as literal
 Columns — Catalyst constant-folds them; never string interpolation.
-Prepared DML (INSERT/DELETE/UPDATE on versioned tables) re-enters
-``Engine.sql`` with the markers substituted as parenthesized SQL
-expressions, the same constant expressions DuckDB binds.
+A body that is not a query (prepared DML on versioned tables, ...)
+re-enters ``Engine.sql`` with the markers substituted as parenthesized
+SQL expressions, the same constant expressions DuckDB binds.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from data_chunk_compaction_in_duckdb_spark import dialect
 from data_chunk_compaction_in_duckdb_spark.settings import (
     sub_outside_literals,
 )
@@ -64,23 +65,6 @@ class PreparedStatement:
     n_params: int      # numbered/qmark: parameter count
     names: list[str]   # named: parameter names in first-appearance order
     bound: str         # body with markers rewritten to :pN / :name
-
-
-def _mask_literals(sql: str) -> str:
-    """Replace literal/comment/quoted-identifier CONTENTS with spaces so
-    marker scans never see quoted text (positions preserved).  Uses the
-    SAME span machinery as ``sub_outside_literals`` — counting and
-    rewriting must agree on what is a marker, or a ``?`` in a comment
-    would inflate the arity of a parameter it never rewrites."""
-    from data_chunk_compaction_in_duckdb_spark.dialect import (
-        _literal_spans,
-    )
-
-    out = list(sql)
-    for a, b in _literal_spans(sql):
-        for i in range(a, min(b, len(out))):
-            out[i] = " "
-    return "".join(out)
 
 
 def parse_prepare(sql: str) -> tuple[str, str] | None:
@@ -110,7 +94,10 @@ def parse_execute(sql: str) -> tuple[str, str | None] | None:
 def analyze(name: str, body: str) -> PreparedStatement:
     """Classify the statement's parameter style and pre-rewrite its
     markers to Spark named-parameter form (:p1.. / :name)."""
-    masked = _mask_literals(body)
+    # counted on the masked text, rewritten by sub_outside_literals: both
+    # use dialect._literal_spans, so counting and rewriting agree on what
+    # is a marker (a ``?`` in a comment never inflates the arity)
+    masked = dialect.mask_literals(body)
     numbered = [int(x) for x in _NUMBERED_RE.findall(masked)]
     named = _NAMED_RE.findall(masked)  # cannot match $1: leading [A-Za-z_]
     qmarks = len(_QMARK_RE.findall(masked))
@@ -240,7 +227,6 @@ class PreparedStore:
         return {f"p{i + 1}": text for i, text in enumerate(pos)}
 
 
-_DML_RE = re.compile(r"^\s*(INSERT|DELETE|UPDATE)\b", re.I)
 _MARKER_RE = re.compile(r":([A-Za-z_]\w*)")
 
 
@@ -275,8 +261,9 @@ def _is_catalog_error(e: Exception) -> bool:
 def dispatch(store: PreparedStore, query: str, run_sql, run_statement):
     """Shared PREPARE/EXECUTE/DEALLOCATE dispatch for ``Engine.sql``
     and the sqllogic runner.  ``run_sql(bound_sql, {param: expr_text})``
-    executes a parameterized SELECT-ish body; ``run_statement(sql)``
-    re-enters the caller's full statement dispatch (prepared DML).
+    executes a parameterized query body; a body of any other statement
+    kind (prepared DML, ...) re-enters the caller's statement router as
+    ``run_statement(sql)`` with the arguments substituted.
     Returns ``(handled, result)``.
 
     Catalog errors raise at PREPARE time like DuckDB (the statement is
@@ -288,7 +275,7 @@ def dispatch(store: PreparedStore, query: str, run_sql, run_statement):
     if pr is not None:
         name, body = pr
         st = analyze(name, body)
-        if not _DML_RE.match(body):
+        if dialect.classify_statement(body) == "query":
             try:
                 run_sql(st.bound, {p: "NULL" for p in param_names(st)})
             except Exception as e:  # noqa: BLE001 — filter below
@@ -309,7 +296,7 @@ def dispatch(store: PreparedStore, query: str, run_sql, run_statement):
             return False, None  # Spark's EXECUTE IMMEDIATE, not ours
         st = store.get(name)
         binds = store.bind_args(st, raw)
-        if _DML_RE.match(st.body):
+        if dialect.classify_statement(st.body) != "query":
             return True, run_statement(substitute(st, binds))
         return True, run_sql(st.bound, binds)
     return False, None
@@ -330,7 +317,7 @@ def fold_args(spark, binds: dict[str, str]) -> dict:
     if not binds:
         return {}
     for text in binds.values():
-        if re.search(r"\bSELECT\b", _mask_literals(text), re.I):
+        if re.search(r"\bSELECT\b", dialect.mask_literals(text), re.I):
             raise ValueError(
                 "Invalid Input Error: Only scalar parameters, named "
                 "parameters or NULL supported for EXECUTE"

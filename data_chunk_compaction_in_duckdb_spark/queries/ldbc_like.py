@@ -220,7 +220,7 @@ _SNB_SPARK = _SNB_SPARK.replace(
 # a BroadcastNestedLoopJoin with its own broadcast-build job per
 # reference; `LATERAL VIEW explode(sequence(0, 9))` is a Generate node —
 # no join, no build job — and trivially produces the same ten digits
-# (interleaved A/B tools/ab_place_explode.py: bi10 med 2.10 -> 1.81 s,
+# (interleaved A/B, OPTIMIZATION_r10.md §11: bi10 med 2.10 -> 1.81 s,
 # bi14 2.30 -> 2.03 s; multiset-identical results; the oracle keeps the
 # original CROSS JOIN text).
 _SNB_SPARK = _SNB_SPARK.replace(
@@ -231,9 +231,23 @@ _SNB_SPARK = _SNB_SPARK.replace(
     "FROM nation LATERAL VIEW explode(sequence(0, 9)) d AS d)",
     1,
 )
-assert _SNB_SPARK.count("DISTINCT") == _SNB.count("DISTINCT") - 1
-assert "\n  UNION\n" not in _SNB_SPARK
-assert "LATERAL VIEW explode" in _SNB_SPARK and "CROSS JOIN" not in _SNB_SPARK
+
+
+def _check_snb_spark(spark_text: str, oracle_text: str) -> str:
+    """``spark_text`` if every Spark-side rewrite above applied, else
+    ValueError — ``str.replace`` matches nothing silently when the
+    oracle text drifts, and an explicit raise (unlike ``assert``) also
+    guards under ``python -O``."""
+    if spark_text.count("DISTINCT") != oracle_text.count("DISTINCT") - 1:
+        raise ValueError("SNB Spark text: snb_message_tag DISTINCT not dropped")
+    if "\n  UNION\n" in spark_text:
+        raise ValueError("SNB Spark text: snb_person_tag UNION not rewritten")
+    if "LATERAL VIEW explode" not in spark_text or "CROSS JOIN" in spark_text:
+        raise ValueError("SNB Spark text: snb_place CROSS JOIN not rewritten")
+    return spark_text
+
+
+_SNB_SPARK = _check_snb_spark(_SNB_SPARK, _SNB)
 
 # name -> (description, needs_recursive, SELECT body)
 _QUERIES: dict[str, tuple[str, bool, str]] = {}
@@ -942,7 +956,7 @@ _BI10_TAIL = """friend_list AS (
 # estimated size is broadcast-sized — the four hop joins then share a
 # single build via ReusedExchange (one driver job instead of four
 # sequential per-hop frontier builds; interleaved A/B
-# tools/ab_bi10_knows.py: med 1.70 -> 1.51 s, every rep faster).  At
+# OPTIMIZATION_r10.md §11: med 1.70 -> 1.51 s, every rep faster).  At
 # scale knows is O(|person|) and the estimate blows the cap, so the
 # builder falls back to broadcasting the frontier, whose size IS
 # structurally bounded: the knows graph's out-degree is fixed by its
@@ -978,7 +992,7 @@ def _bi10_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # physical_recursive_cte.cpp materializes its working table the same
     # way) instead of once per recursion round.  eager=False: the
     # checkpoint fills inside the first job that reads it — no separate
-    # blocking driver job (r10 A/B, tools/ab_materialize.py).
+    # blocking driver job (r10 A/B, OPTIMIZATION_r10.md §1).
     knows = spark.sql(
         f"WITH {_SNB_SPARK} SELECT k_person1id, k_person2id FROM snb_knows"
     ).localCheckpoint(eager=False)

@@ -198,7 +198,7 @@ def tpch_q2_official(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consuming job instead of a separate blocking driver job — the
         # r9 driver bench showed the eager form regressing at 32 slots
         # while the 8-core control improved, and the r10 interleaved A/B
-        # (tools/ab_materialize.py, 3 runs) has lazy <= eager throughout.
+        # (OPTIMIZATION_r10.md §1, 3 runs) has lazy <= eager throughout.
         .localCheckpoint(eager=False)
     )
     min_cost = eur.groupBy("ps_partkey").agg(

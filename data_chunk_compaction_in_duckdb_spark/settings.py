@@ -260,7 +260,6 @@ RESET_RE = re.compile(
     r"^\s*RESET\s+(?:(SESSION|GLOBAL)\s+)?([A-Za-z_]\w*)\s*;?\s*$", re.I
 )
 CURRENT_SETTING_RE = re.compile(r"\bcurrent_setting\s*\(", re.I)
-SETTINGS_TF_RE = re.compile(r"\bduckdb_settings\s*\(\s*\)", re.I)
 
 
 def parse_set(sql: str):

@@ -22,14 +22,15 @@ T (text).  NULL renders as the literal string `NULL`, booleans as
 `true`/`false` (the sqllogictest conventions).  `rowsort` sorts rendered
 rows before comparing; the default is `nosort` (query must ORDER BY).
 
-Engine-surface statements the reference's catalog families use but
-Spark SQL lacks are dispatched by ``EngineSqlContext`` (round 6):
-CREATE/DROP SEQUENCE, nextval()/currval(), DESCRIBE <table>,
-DESCRIBE SELECT, duckdb_sequences() readback, and the index-DDL family
-(CREATE TABLE AS to a file-local temp view, CREATE [UNIQUE] INDEX /
-DROP INDEX through Engine.create_index's bucketed ART analog,
-duckdb_indexes() readback) — the SAME .test text DuckDB executes
-natively during generation (tools/gen_sqllogic.py).
+``EngineSqlContext`` routes each statement by the classifier
+``Engine.sql`` uses (``dialect.classify_statement``).  It keeps its own
+handlers only for the file-local table model — CREATE TABLE AS to a
+temp view, CREATE [UNIQUE] INDEX / DROP INDEX through
+Engine.create_index's bucketed ART analog, DML on those tables, and
+the transactions that snapshot them — and sends every other statement
+(settings, view/schema/sequence DDL, EXPLAIN, DESCRIBE, queries) to
+``Engine.sql``: the SAME .test text DuckDB executes natively during
+generation (tools/gen_sqllogic.py).
 """
 
 from __future__ import annotations
@@ -39,12 +40,6 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 
 _QUERY_RE = re.compile(r"^query\s+([IRT]+)\s*(rowsort|nosort)?\s*$")
-
-_CATALOG_TF_RE = re.compile(
-    r"\bduckdb_(tables|views|schemas|types|keywords|functions)\s*\(\s*\)",
-    re.I,
-)
-
 
 class SqlLogicError(AssertionError):
     """A .test directive failed (wrong rows, unexpected error, ...)."""
@@ -144,18 +139,8 @@ def render_row(row, types: str) -> str:
 
 
 # --------------------------------------------------- engine statements
-#
-# The reference's sequence/catalog sqllogic families (test/sql/catalog/
-# sequence/, test/sql/show_select/) mix DDL statements with queries over
-# nextval()/currval()/DESCRIBE.  Spark SQL has none of those, so the
-# runner routes them through the engine surface (storage.Sequence,
-# introspect) and everything else through spark.sql — the SAME .test
-# text DuckDB executes natively in the generator's validation pass.
+# (routing: see the module docstring)
 
-_DESCRIBE_RE = re.compile(r"^\s*DESCRIBE\s+(\w+)\s*;?\s*$", re.I)
-_DESCRIBE_SELECT_RE = re.compile(
-    r"^\s*DESCRIBE\s+(SELECT\b.*)$", re.I | re.S
-)
 # index-DDL family (reference test/sql/index/ + duckdb_indexes();
 # CREATE TABLE AS is routed here too so the indexed tables are
 # file-local temp views on the Spark side and real tables in DuckDB)
@@ -171,73 +156,44 @@ _CREATE_INDEX_RE = re.compile(
 _DROP_INDEX_RE = re.compile(
     r"^\s*DROP\s+INDEX\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", re.I
 )
+_PRAGMA_TABLE_INFO_RE = re.compile(
+    r"\bpragma_table_info\s*\(\s*'(\w+)'\s*\)", re.I
+)
+
+
 class EngineSqlContext:
-    """Per-file execution context: owns a throwaway sequence root and
-    dispatches engine-surface SQL; plain SQL falls through to
-    spark.sql.  ``close()`` removes every sequence log it created."""
+    """Per-file execution context over one ``Engine``: owns the file's
+    CTAS tables and a throwaway root for the sequence logs and index
+    copies its statements create.  ``close()`` removes that root."""
 
     def __init__(self, spark):
         import tempfile
 
+        from data_chunk_compaction_in_duckdb_spark.engine import Engine
+        from data_chunk_compaction_in_duckdb_spark.prepared import (
+            PreparedStore,
+        )
+
         self.spark = spark
         self.root = tempfile.mkdtemp(prefix="sqllogic_seq_")
-        self.sequences: dict[str, object] = {}
-        self._generation = 0  # bumped per DDL so replaced paths are fresh
+        self._engine = Engine(spark=spark, register=False)
+        # CREATE SEQUENCE through Engine.sql logs under this file's root
+        self._engine._seq_root = self.root
+        self._generation = 0  # bumped per index DDL so paths are fresh
         self.ctas: dict[str, object] = {}  # file-local CREATE TABLE AS
-        self._engine = None  # lazy: only index-DDL files pay for it
+        # runner-side store: prepared DML re-enters this context, so it
+        # reaches the CTAS tables
+        self._prepared = PreparedStore()
         # transaction state (reference test/sql/transactions/): BEGIN
         # snapshots the catalog dicts — DataFrames are immutable, so a
         # dict copy IS the MVCC snapshot; ROLLBACK re-registers it
         self._txn_snap: dict | None = None
-        self._txn_seq_snap: dict | None = None
-        self._txn_art_snap: dict | None = None
         self._txn_aborted = False
-
-    def _eng(self):
-        if self._engine is None:
-            from data_chunk_compaction_in_duckdb_spark.engine import Engine
-
-            self._engine = Engine(spark=self.spark, register=False)
-        return self._engine
 
     def close(self) -> None:
         import shutil
 
         shutil.rmtree(self.root, ignore_errors=True)
-
-    # -- sequence DDL (shared grammar/UDFs: storage/seqsql.py)
-
-    def _create_sequence(self, name: str, or_replace: bool, kwargs: dict) -> None:
-        import os
-
-        from data_chunk_compaction_in_duckdb_spark.storage import Sequence
-
-        if name in self.sequences and not or_replace:
-            raise SqlLogicError(
-                f"Catalog Error: sequence {name} already exists"
-            )
-        self._generation += 1
-        path = os.path.join(self.root, f"{name}_{self._generation}")
-        self.sequences[name] = Sequence.create(self.spark, path, **kwargs)
-
-    def _register_seq_udfs(self) -> None:
-        """(Re)bind nextval/currval to the CURRENT name->path snapshot.
-        Arrow-batched pandas_udfs: one linearizable range claim per
-        (batch, name) — the claim itself is multi-process safe (O_EXCL
-        manifest commit), so values stay globally unique no matter how
-        Spark batches the rows; per-row ORDER is engine-specific in
-        both systems, so specs compare value SETS (rowsort) or
-        aggregates."""
-        from data_chunk_compaction_in_duckdb_spark.storage.seqsql import (
-            make_seq_udfs,
-        )
-
-        paths = {n: s.path for n, s in self.sequences.items()}
-        nextval_udf, currval_udf = make_seq_udfs(paths)
-        self.spark.udf.register("nextval", nextval_udf)
-        self.spark.udf.register("currval", currval_udf)
-
-    # -- dispatch
 
     # -- transactions (reference transaction_context.cpp semantics,
     #    probed on DuckDB 1.0: aborted txn refuses everything but
@@ -245,7 +201,7 @@ class EngineSqlContext:
     #    binder errors do NOT abort, constraint violations do)
 
     def _txn_restore(self) -> None:
-        eng = self._eng()
+        eng = self._engine
         for name in set(self.ctas) - set(self._txn_snap):
             self.spark.catalog.dropTempView(name)
             eng.tables.pop(name, None)
@@ -254,29 +210,14 @@ class EngineSqlContext:
                 df.createOrReplaceTempView(name)
                 eng.tables[name] = df
         self.ctas = dict(self._txn_snap)
-        # catalog DDL (sequences, indexes) rolls back; sequence VALUE
-        # state does not (probed: nextval survives ROLLBACK)
-        self.sequences = dict(self._txn_seq_snap)
-        if self._engine is not None:
-            self._engine._art_indexes = dict(self._txn_art_snap)
-            cur_views = getattr(self._engine, "_views", {})
-            for name in set(cur_views) - set(self._txn_view_snap):
-                self.spark.catalog.dropTempView(name)
-            for name, body in self._txn_view_snap.items():
-                if cur_views.get(name) != body:
-                    # route through the engine's catalog-TF rewrite so a
-                    # rolled-back view whose body calls duckdb_tables()
-                    # etc. restores instead of failing to parse
-                    self.spark.sql(
-                        self._engine._rewrite_catalog_tfs(body)
-                    ).createOrReplaceTempView(name)
-            self._engine._views = dict(self._txn_view_snap)
-            self._engine._schemas = set(self._txn_schema_snap)
+        # catalog DDL (sequences, indexes, views, schemas) rolls back;
+        # sequence VALUE state does not (probed: nextval survives
+        # ROLLBACK)
+        eng._sequences = dict(self._txn_seq_snap)
+        eng._art_indexes = dict(self._txn_art_snap)
+        eng._restore_catalog(*self._txn_catalog_snap)
 
-    def _dispatch_txn(self, sql: str):
-        from data_chunk_compaction_in_duckdb_spark.storage import dmlsql
-
-        verb = dmlsql.parse_txn_verb(sql)
+    def _txn_statement(self, verb: str) -> None:
         if verb == "begin":
             if self._txn_snap is not None:
                 # probed: a nested BEGIN also ABORTS the open transaction
@@ -285,135 +226,100 @@ class EngineSqlContext:
                     "TransactionContext Error: cannot start a "
                     "transaction within a transaction"
                 )
+            eng = self._engine
             self._txn_snap = dict(self.ctas)
-            self._txn_seq_snap = dict(self.sequences)
-            self._txn_art_snap = dict(
-                getattr(self._engine, "_art_indexes", {}) or {}
-            )
+            self._txn_seq_snap = dict(eng._sequences)
+            self._txn_art_snap = dict(eng._art_indexes)
             # engine-side catalog DDL (CREATE VIEW/SCHEMA) is
             # transactional too — same snapshot discipline
-            self._txn_view_snap = dict(
-                getattr(self._engine, "_views", {}) or {}
-            )
-            self._txn_schema_snap = set(
-                getattr(self._engine, "_schemas", set()) or set()
-            )
+            self._txn_catalog_snap = (dict(eng._views), set(eng._schemas))
             self._txn_aborted = False
-            return True
-        if verb == "commit":
-            if self._txn_snap is None:
-                raise SqlLogicError(
-                    "TransactionContext Error: cannot commit - no "
-                    "transaction is active"
-                )
-            if self._txn_aborted:
-                self._txn_restore()
-            self._txn_snap = None
-            return True
-        if verb == "rollback":
-            if self._txn_snap is None:
-                raise SqlLogicError(
-                    "TransactionContext Error: cannot rollback - no "
-                    "transaction is active"
-                )
+            return
+        if self._txn_snap is None:
+            raise SqlLogicError(
+                f"TransactionContext Error: cannot {verb} - no "
+                "transaction is active"
+            )
+        if verb == "rollback" or self._txn_aborted:
             self._txn_restore()
-            self._txn_snap = None
-            return True
+        self._txn_snap = None
+
+    def execute(self, sql: str):
+        """Returns a DataFrame (queries) or None (statements)."""
+        from data_chunk_compaction_in_duckdb_spark import dialect
+        from data_chunk_compaction_in_duckdb_spark import prepared as _prep
+        from data_chunk_compaction_in_duckdb_spark.storage import dmlsql
+
+        # DuckDB expression grammar first, same as Engine.sql — DML
+        # fragments and CTAS bodies accept the same surface as SELECTs
+        expr = dialect.rewrite_expressions(sql)
+        if expr is not None:
+            sql = expr
+        kind = dialect.classify_statement(sql)
+        if kind == "txn":
+            verb = dmlsql.parse_txn_verb(sql)
+            if verb is not None:
+                self._txn_statement(verb)
+                return None
         if self._txn_snap is not None and self._txn_aborted:
             raise SqlLogicError(
                 "TransactionContext Error: Current transaction is "
                 "aborted (please ROLLBACK)"
             )
-        return False
+        if kind == "prepared":
+            # same shared dispatch as Engine.sql; prepared DML re-enters
+            # this context's own router
+            handled, result = _prep.dispatch(
+                self._prepared,
+                sql,
+                lambda bound, binds: self._engine.sql(
+                    bound, **_prep.fold_args(self.spark, binds)
+                ),
+                self.execute,
+            )
+            if handled:
+                return result
+        elif kind == "table_ddl":
+            if self._table_ddl(sql):
+                return None
+        elif kind == "dml":
+            if self._dml(sql):
+                return None
+        elif kind == "query" and _PRAGMA_TABLE_INFO_RE.search(sql):
+            sql = self._sub_pragma_table_info(sql)
+        return self._engine.sql(sql)
 
-    def execute(self, sql: str):
-        """Returns a DataFrame (queries) or None (statements)."""
-        from data_chunk_compaction_in_duckdb_spark import settings as _st
-        from data_chunk_compaction_in_duckdb_spark import dialect as _dialect
-        from data_chunk_compaction_in_duckdb_spark.storage import (
-            dmlsql,
-            seqsql,
+    def _sub_pragma_table_info(self, sql: str) -> str:
+        from data_chunk_compaction_in_duckdb_spark import introspect
+        from data_chunk_compaction_in_duckdb_spark.settings import (
+            sub_outside_literals,
         )
 
-        # DuckDB expression grammar first, same as Engine.sql — DML
-        # fragments and CTAS bodies accept the same surface as SELECTs
-        expr = _dialect.rewrite_expressions(sql)
-        if expr is not None:
-            sql = expr
-
-        if self._dispatch_txn(sql):
-            return None
-
-        # PREPARE/EXECUTE/DEALLOCATE (reference test/sql/prepared/):
-        # same shared dispatch as Engine.sql; prepared DML re-enters
-        # this context's own statement dispatch
-        from data_chunk_compaction_in_duckdb_spark import prepared as _prep
-
-        if getattr(self, "_prepared", None) is None:
-            self._prepared = _prep.PreparedStore()
-
-        def _run_prepared_sql(bound: str, binds: dict):
-            if binds:
-                return self.spark.sql(
-                    bound, args=_prep.fold_args(self.spark, binds)
-                )
-            return self.spark.sql(bound)
-
-        handled, result = _prep.dispatch(
-            self._prepared, sql, _run_prepared_sql, self.execute
+        # one view PER referenced table: a spec may join
+        # pragma_table_info('t1') with pragma_table_info('t2')
+        names = (m.group(1) for m in _PRAGMA_TABLE_INFO_RE.finditer(sql))
+        for tname in dict.fromkeys(names):
+            introspect.pragma_table_info(
+                self.spark, tname
+            ).createOrReplaceTempView(f"__pti_{tname}")
+        return sub_outside_literals(
+            _PRAGMA_TABLE_INFO_RE, lambda m: f"__pti_{m.group(1)}", sql
         )
-        if handled:
-            return result
 
-        # settings surface (SET/RESET/PRAGMA <setting>, current_setting,
-        # duckdb_settings) routes through the engine facade so the SAME
-        # .test text runs natively in DuckDB
-        if (
-            _st.parse_set(sql) is not None
-            or _st.parse_reset(sql) is not None
-            or _st.CURRENT_SETTING_RE.search(sql)
-            or _st.SETTINGS_TF_RE.search(sql)
-        ):
-            return self._eng().sql(sql)
+    # -- CTAS tables and the indexes over them
 
-        # view/schema DDL + catalog table functions (duckdb_tables/
-        # views/schemas/types/keywords/functions) route through the
-        # engine facade — same round-trippable text DuckDB runs natively
-        from data_chunk_compaction_in_duckdb_spark import engine as _eng_mod
-
-        if (
-            _eng_mod._CREATE_VIEW_RE.match(sql)
-            or _eng_mod._DROP_VIEW_RE.match(sql)
-            or _eng_mod._CREATE_SCHEMA_RE.match(sql)
-            or _eng_mod._DROP_SCHEMA_RE.match(sql)
-            or _eng_mod.Engine._EXPLAIN_RE.match(sql)
-            or _CATALOG_TF_RE.search(sql)
-        ):
-            return self._eng().sql(sql)
-
-        created = seqsql.parse_create_sequence(sql)
-        if created:
-            self._create_sequence(*created)
-            return None
-        dropped = seqsql.parse_drop_sequence(sql)
-        if dropped:
-            name, if_exists = dropped
-            if name not in self.sequences:
-                if if_exists:
-                    return None
-                raise SqlLogicError(
-                    f"Catalog Error: sequence {name} does not exist"
-                )
-            del self.sequences[name]
-            return None
+    def _table_ddl(self, sql: str) -> bool:
+        """CREATE [UNIQUE] INDEX / DROP INDEX through Engine.create_index's
+        bucketed ART analog, and CREATE [OR REPLACE] TABLE AS to a
+        file-local temp view.  False when the grammar does not match."""
+        eng = self._engine
         m = _CREATE_INDEX_RE.match(sql)
         if m:
             import os
 
             unique, name, table = bool(m.group(1)), m.group(2), m.group(3)
             cols = [c.strip() for c in m.group(4).split(",") if c.strip()]
-            eng = self._eng()
-            if name in getattr(eng, "_art_indexes", {}):
+            if name in eng._art_indexes:
                 raise SqlLogicError(
                     f'Catalog Error: Index with name "{name}" already exists'
                 )
@@ -431,54 +337,109 @@ class EngineSqlContext:
             eng.create_index(
                 table,
                 cols,
-                os.path.join(self.root, f"ix_{name}_{self._generation}"),
+                os.path.join(
+                    self.root, "indexes", f"{name}_{self._generation}"
+                ),
                 n_buckets=2,
                 name=name,
                 unique=unique,
             )
-            return None
+            return True
         m = _DROP_INDEX_RE.match(sql)
         if m:
             if_exists, name = bool(m.group(1)), m.group(2)
-            eng = self._eng()
-            if name not in getattr(eng, "_art_indexes", {}):
+            if name not in eng._art_indexes:
                 if if_exists:
-                    return None
+                    return True
                 raise SqlLogicError(
                     f"Catalog Error: Index with name {name} does not exist"
                 )
             eng.drop_index(name)
-            return None
+            return True
+        m = _CTAS_RE.match(sql)
+        if m:
+            or_replace, name, select = bool(m.group(1)), m.group(2), m.group(3)
+            if name in self.ctas and not or_replace:
+                raise SqlLogicError(
+                    f'Catalog Error: Table with name "{name}" already exists'
+                )
+            df = self.spark.sql(select.rstrip().rstrip(";"))
+            df.createOrReplaceTempView(name)
+            self.ctas[name] = df
+            eng.tables[name] = df
+            # DuckDB's CREATE OR REPLACE TABLE silently drops dependent
+            # indexes (probed) — mirror it
+            for iname in [
+                i for i, info in eng._art_indexes.items()
+                if info["table"] == name
+            ]:
+                del eng._art_indexes[iname]
+            return True
+        return False
+
+    def _replace_table(self, name: str, df) -> None:
+        df = df.localCheckpoint(eager=True)
+        df.createOrReplaceTempView(name)
+        self.ctas[name] = df
+        self._engine.tables[name] = df
+
+    def _check_unique(self, name: str, df) -> None:
+        """ART UNIQUE enforcement after an append or update (reference
+        test/sql/index unique-violation grid; DuckDB updates the index
+        per row).  DuckDB's ART UNIQUE index admits any number of NULL
+        keys (probed: two NULL-key inserts under a unique index
+        succeed) — NULLs compare unequal, so only fully-non-NULL keys
+        take part in the duplicate check."""
+        for iname, info in self._engine._art_indexes.items():
+            if info["table"] != name or not info["unique"]:
+                continue
+            cols = list(info["columns"])
+            dup = (
+                df.na.drop(subset=cols)
+                .groupBy(*cols)
+                .count()
+                .filter("count > 1")
+                .limit(1)
+                .count()
+            )
+            if dup:
+                # a constraint violation ABORTS an open transaction
+                # (probed DuckDB behavior)
+                if self._txn_snap is not None:
+                    self._txn_aborted = True
+                raise SqlLogicError(
+                    "Constraint Error: Duplicate key violates unique "
+                    f'index "{iname}" on {name}({", ".join(cols)})'
+                )
+
+    def _require_ctas(self, name: str):
+        if name not in self.ctas:
+            raise SqlLogicError(
+                f"Catalog Error: Table with name {name} does not exist"
+            )
+        return self.ctas[name]
+
+    def _dml(self, sql: str) -> bool:
+        """TRUNCATE / INSERT / DELETE / UPDATE on CTAS tables.  False
+        when the grammar does not match."""
+        from pyspark.sql import functions as F
+
+        from data_chunk_compaction_in_duckdb_spark.storage import dmlsql
+
         tr = dmlsql.parse_truncate(sql)
         if tr is not None:
-            if tr not in self.ctas:
-                raise SqlLogicError(
-                    f"Catalog Error: Table with name {tr} does not exist"
-                )
-            new = self.ctas[tr].limit(0).localCheckpoint(eager=True)
-            new.createOrReplaceTempView(tr)
-            self.ctas[tr] = new
-            self._eng().tables[tr] = new
-            return None
+            self._replace_table(tr, self._require_ctas(tr).limit(0))
+            return True
         ins = dmlsql.parse_insert(sql)
         if ins is not None:
             name, collist, body, mode = ins
-            if name not in self.ctas:
-                raise SqlLogicError(
-                    f"Catalog Error: Table with name {name} does not exist"
-                )
-            cur = self.ctas[name]
-            if seqsql.SEQFN_RE.search(body):
-                self._register_seq_udfs()
+            cur = self._require_ctas(name)
             if body.upper().startswith("VALUES"):
-                new = self.spark.sql(f"SELECT * FROM ({body})")
-            else:
-                new = self.spark.sql(body)
+                body = f"SELECT * FROM ({body})"
+            new = self._engine.sql(body)
             # positional insert: align names/types to the target schema;
             # a column list binds listed columns and NULLs the rest
             if collist is not None:
-                from pyspark.sql import functions as F
-
                 missing = set(collist) - set(cur.columns)
                 if missing:
                     raise SqlLogicError(
@@ -498,13 +459,12 @@ class EngineSqlContext:
                 new = new.withColumn(
                     f.name, new[f.name].cast(f.dataType)
                 )
-            eng = self._eng()
             if mode is not None:
                 # OR REPLACE / OR IGNORE need a UNIQUE index on the
                 # target (probed DuckDB error text on an unindexed one)
                 ukeys = [
                     list(info["columns"])
-                    for info in getattr(eng, "_art_indexes", {}).values()
+                    for info in self._engine._art_indexes.values()
                     if info["table"] == name and info["unique"]
                 ]
                 if not ukeys:
@@ -523,47 +483,13 @@ class EngineSqlContext:
                         new.select(*keys).distinct(), keys, "left_anti"
                     )
             merged = cur.unionByName(new)
-            # ART UNIQUE enforcement on append (reference test/sql/index
-            # unique-violation grid; duckdb updates the index per insert)
-            for iname, info in getattr(eng, "_art_indexes", {}).items():
-                if info["table"] != name or not info["unique"]:
-                    continue
-                cols = list(info["columns"])
-                # DuckDB's ART UNIQUE index admits any number of NULL
-                # keys (probed: two NULL-key inserts under a unique
-                # index succeed) — NULLs compare unequal, so only
-                # fully-non-NULL keys participate in the dup check
-                dup = (
-                    merged.na.drop(subset=cols)
-                    .groupBy(*cols)
-                    .count()
-                    .filter("count > 1")
-                    .limit(1)
-                    .count()
-                )
-                if dup:
-                    # a constraint violation ABORTS an open transaction
-                    # (probed DuckDB behavior)
-                    if self._txn_snap is not None:
-                        self._txn_aborted = True
-                    raise SqlLogicError(
-                        "Constraint Error: Duplicate key violates unique "
-                        f'index "{iname}" on {name}({", ".join(cols)})'
-                    )
-            merged = merged.localCheckpoint(eager=True)
-            merged.createOrReplaceTempView(name)
-            self.ctas[name] = merged
-            eng.tables[name] = merged
-            return None
+            self._check_unique(name, merged)
+            self._replace_table(name, merged)
+            return True
         d = dmlsql.parse_delete(sql)
         if d is not None:
-            from pyspark.sql import functions as F
-
             name, where, using = d
-            if name not in self.ctas:
-                raise SqlLogicError(
-                    f"Catalog Error: Table with name {name} does not exist"
-                )
+            cur = self._require_ctas(name)
             if using is not None:
                 from data_chunk_compaction_in_duckdb_spark.operators.mutations import (  # noqa: E501
                     delete_using,
@@ -575,24 +501,16 @@ class EngineSqlContext:
                 cond = F.expr(
                     dmlsql.rewrite_qualified(where or "TRUE", name, alias)
                 )
-                new = delete_using(self.ctas[name], src_pref, cond)
+                new = delete_using(cur, src_pref, cond)
             else:
                 cond = F.expr(where) if where else F.lit(True)
-                new = self.ctas[name].filter(~cond | cond.isNull())
-            new = new.localCheckpoint(eager=True)
-            new.createOrReplaceTempView(name)
-            self.ctas[name] = new
-            self._eng().tables[name] = new
-            return None
+                new = cur.filter(~cond | cond.isNull())
+            self._replace_table(name, new)
+            return True
         u = dmlsql.parse_update(sql)
         if u is not None:
-            from pyspark.sql import functions as F
-
             name, assigns, where, from_ = u
-            if name not in self.ctas:
-                raise SqlLogicError(
-                    f"Catalog Error: Table with name {name} does not exist"
-                )
+            cur = self._require_ctas(name)
             if from_ is not None:
                 from data_chunk_compaction_in_duckdb_spark.operators.mutations import (  # noqa: E501
                     prefix_source,
@@ -608,168 +526,35 @@ class EngineSqlContext:
                     c: F.expr(dmlsql.rewrite_qualified(e, name, alias))
                     for c, e in assigns.items()
                 }
-                missing = set(exprs) - set(self.ctas[name].columns)
+                missing = set(exprs) - set(cur.columns)
                 if missing:
                     raise SqlLogicError(
                         f'Binder Error: Referenced column '
                         f'"{sorted(missing)[0]}" not found'
                     )
-                new = update_from(self.ctas[name], src_pref, cond, exprs)
-                new = new.localCheckpoint(eager=True)
-                new.createOrReplaceTempView(name)
-                self.ctas[name] = new
-                self._eng().tables[name] = new
-                return None
+                self._replace_table(
+                    name, update_from(cur, src_pref, cond, exprs)
+                )
+                return True
             from data_chunk_compaction_in_duckdb_spark.operators.mutations import (  # noqa: E501
                 apply_assignments,
             )
 
             cond = F.expr(where) if where else F.lit(True)
-            new = self.ctas[name]
             for col in assigns:
-                if col not in new.columns:
+                if col not in cur.columns:
                     raise SqlLogicError(
                         f'Binder Error: Referenced column "{col}" not found'
                     )
             new = apply_assignments(
-                new, cond, {c: F.expr(e) for c, e in assigns.items()}
+                cur, cond, {c: F.expr(e) for c, e in assigns.items()}
             )
             # an UPDATE re-inserts into unique ART indexes (reference:
             # delete+insert per updated row) — enforce like INSERT does
-            for iname, info in getattr(
-                self._eng(), "_art_indexes", {}
-            ).items():
-                if info["table"] != name or not info["unique"]:
-                    continue
-                cols = list(info["columns"])
-                dup = (
-                    new.na.drop(subset=cols)
-                    .groupBy(*cols)
-                    .count()
-                    .filter("count > 1")
-                    .limit(1)
-                    .count()
-                )
-                if dup:
-                    if self._txn_snap is not None:
-                        self._txn_aborted = True
-                    raise SqlLogicError(
-                        "Constraint Error: Duplicate key violates unique "
-                        f'index "{iname}" on {name}({", ".join(cols)})'
-                    )
-            new = new.localCheckpoint(eager=True)
-            new.createOrReplaceTempView(name)
-            self.ctas[name] = new
-            self._eng().tables[name] = new
-            return None
-        m = _CTAS_RE.match(sql)
-        if m:
-            or_replace, name, select = bool(m.group(1)), m.group(2), m.group(3)
-            if name in self.ctas and not or_replace:
-                raise SqlLogicError(
-                    f'Catalog Error: Table with name "{name}" already exists'
-                )
-            df = self.spark.sql(select.rstrip().rstrip(";"))
-            df.createOrReplaceTempView(name)
-            self.ctas[name] = df
-            eng = self._eng()
-            eng.tables[name] = df
-            # DuckDB's CREATE OR REPLACE TABLE silently drops dependent
-            # indexes (probed) — mirror it
-            arts = getattr(eng, "_art_indexes", {})
-            for iname in [
-                i for i, info in arts.items() if info["table"] == name
-            ]:
-                del arts[iname]
-            return None
-        pti = re.compile(r"\bpragma_table_info\s*\(\s*'(\w+)'\s*\)", re.I)
-        if pti.search(sql):
-            from data_chunk_compaction_in_duckdb_spark import introspect
-
-            # one view PER referenced table: a spec may join
-            # pragma_table_info('t1') with pragma_table_info('t2')
-            for tname in dict.fromkeys(m.group(1) for m in pti.finditer(sql)):
-                introspect.pragma_table_info(
-                    self.spark, tname
-                ).createOrReplaceTempView(f"__pti_{tname}")
-            from data_chunk_compaction_in_duckdb_spark.settings import (
-                sub_outside_literals,
-            )
-
-            sql = sub_outside_literals(
-                pti, lambda m: f"__pti_{m.group(1)}", sql
-            )
-            return self.spark.sql(sql)
-        if re.search(r"\bduckdb_indexes\s*\(\s*\)", sql, re.I):
-            from data_chunk_compaction_in_duckdb_spark import introspect
-
-            introspect.duckdb_indexes(
-                self.spark, getattr(self._eng(), "_art_indexes", {})
-            ).createOrReplaceTempView("__duckdb_indexes")
-            from data_chunk_compaction_in_duckdb_spark.settings import (
-                sub_outside_literals,
-            )
-
-            sql = sub_outside_literals(
-                re.compile(r"\bduckdb_indexes\s*\(\s*\)", re.I),
-                "__duckdb_indexes",
-                sql,
-            )
-            return self.spark.sql(sql)
-        m = _DESCRIBE_SELECT_RE.match(sql)
-        if m:
-            from data_chunk_compaction_in_duckdb_spark import introspect
-
-            return introspect.describe_query(self.spark, m.group(1))
-        m = _DESCRIBE_RE.match(sql)
-        if m:
-            from data_chunk_compaction_in_duckdb_spark import introspect
-
-            name = m.group(1)
-            if name in self.sequences:
-                return introspect.describe_sequence(self.sequences[name])
-            return introspect.describe_table(self.spark, name)
-        if re.search(r"\bduckdb_sequences\s*\(\s*\)", sql, re.I):
-            # table-function readback: materialize the catalog function
-            # into a temp view and rewrite the call site — the SAME
-            # .test text runs natively in DuckDB (which requires the
-            # parenthesized table-function form)
-            from data_chunk_compaction_in_duckdb_spark import introspect
-
-            introspect.duckdb_sequences(
-                self.spark, self.sequences
-            ).createOrReplaceTempView("__duckdb_sequences")
-            from data_chunk_compaction_in_duckdb_spark.settings import (
-                sub_outside_literals,
-            )
-
-            sql = sub_outside_literals(
-                re.compile(r"\bduckdb_sequences\s*\(\s*\)", re.I),
-                "__duckdb_sequences",
-                sql,
-            )
-        if seqsql.SEQFN_RE.search(sql):
-            self._register_seq_udfs()
-        from data_chunk_compaction_in_duckdb_spark import dialect
-
-        star = dialect.rewrite_star_modifiers(sql)
-        if star is not None:
-            sql = star
-
-        def _resolve_cols(name: str):
-            # DuckDB's QUALIFY source-column-over-alias precedence
-            # (see dialect.rewrite_qualify) — session views cover both
-            # the fixture tables and this context's CTAS views
-            try:
-                return self.spark.table(name).columns
-            except Exception:  # noqa: BLE001 — not a resolvable table
-                return None
-
-        q = dialect.rewrite_qualify(sql, column_resolver=_resolve_cols)
-        if q is not None:
-            rewritten, drop_col, _reorder = q
-            return self.spark.sql(rewritten).drop(drop_col)
-        return self.spark.sql(sql)
+            self._check_unique(name, new)
+            self._replace_table(name, new)
+            return True
+        return False
 
 
 def run_file(spark, path: str) -> int:

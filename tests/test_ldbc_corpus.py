@@ -113,6 +113,29 @@ def test_snb_place_explode_equivalent(spark, sf_dir):
     assert a == b
 
 
+def test_snb_spark_guard_fires_when_a_rewrite_missed():
+    """The guard on the Spark-side SNB text is an explicit raise, not an
+    ``assert`` that ``python -O`` strips: text on which one of the three
+    rewrites did not apply is refused, the rewritten text passes."""
+    import pytest
+
+    from data_chunk_compaction_in_duckdb_spark.queries.ldbc_like import (
+        _SNB,
+        _SNB_SPARK,
+        _check_snb_spark,
+    )
+
+    assert _check_snb_spark(_SNB_SPARK, _SNB) == _SNB_SPARK
+    with pytest.raises(ValueError, match="DISTINCT"):
+        _check_snb_spark(_SNB, _SNB)
+    union_kept = _SNB_SPARK.replace("\n  UNION ALL\n", "\n  UNION\n")
+    with pytest.raises(ValueError, match="UNION"):
+        _check_snb_spark(union_kept, _SNB)
+    cross_join_kept = _SNB_SPARK.replace("LATERAL VIEW explode", "CROSS JOIN")
+    with pytest.raises(ValueError, match="CROSS JOIN"):
+        _check_snb_spark(cross_join_kept, _SNB)
+
+
 def test_bi10_knows_broadcast_guard(spark, sf_dir, monkeypatch):
     """bi10's hop joins broadcast the knows edge table once (build shared
     by all four hops) when the customer SCAN estimate is under the cap,

@@ -75,10 +75,12 @@ def lift_parameters(
     occurrence its own parameter, DuckDB's numbered style).  Returns
     (parameterized_sql, values) or None when the query has no liftable
     literal."""
-    from data_chunk_compaction_in_duckdb_spark.dialect import _literal_spans
-    from data_chunk_compaction_in_duckdb_spark.prepared import _mask_literals
+    from data_chunk_compaction_in_duckdb_spark.dialect import (
+        _literal_spans,
+        mask_literals,
+    )
 
-    masked = _mask_literals(sql)
+    masked = mask_literals(sql)
     prot = _protected_spans(sql)
 
     def clear(a: int, b: int) -> bool:
