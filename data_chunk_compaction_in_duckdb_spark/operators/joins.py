@@ -148,15 +148,14 @@ def mark_join(
     return out.drop("_bk", "_bn", "_bnull")
 
 
-def _global_row_number(
-    df: DataFrame, order: Sequence[str], out_col: str, partitions: int = 32
-) -> DataFrame:
+def _global_row_number(df: DataFrame, order: Sequence[str], out_col: str) -> DataFrame:
     """Distributed global row numbering: range-repartition on the order
     keys, number rows within each partition (one local sort), then add
     broadcast exclusive prefix-counts per partition — no single-task
     window anywhere; the only driver-independent sync is the tiny
     per-partition count table."""
     cols = [F.col(c) for c in order]
+    partitions = df.sparkSession.sparkContext.defaultParallelism  # one per core
     d = (
         df.repartitionByRange(partitions, *cols)
         .withColumn("_pid", F.spark_partition_id())

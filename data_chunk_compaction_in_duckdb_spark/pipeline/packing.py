@@ -27,10 +27,11 @@ def pack_training_windows(
     id_col: str,
     tokens: Column,
     capacity: int,
-    partitions: int = 32,
 ) -> DataFrame:
     """(id, n_tokens, window_id, offset_in_window, crosses_boundary)
-    for the sequential concat-and-chunk layout in id order."""
+    for the sequential concat-and-chunk layout in id order, range-split
+    into one partition per core (``defaultParallelism``)."""
+    partitions = docs.sparkSession.sparkContext.defaultParallelism
     d = (
         docs.select(F.col(id_col).alias("_id"), tokens.alias("_tok"))
         .repartitionByRange(partitions, F.col("_id"))

@@ -14,19 +14,22 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_chunk_compaction_in_duckdb_spark.catalog import footer_schema
+
+
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Streaming file sources need an explicit schema; infer it from a batch
-    # read of the same file so the stream tracks whatever physical type the
-    # fixture uses for ts (int64 nanoseconds in older fixtures, native
-    # timestamp[us] in current ones).
+    # Streaming file sources need an explicit schema; take the one the
+    # batch catalog binds (the footer's, else a batch read's inference), so
+    # the stream tracks whatever physical type the fixture uses for ts
+    # (int64 nanoseconds in older fixtures, native timestamp[us] in
+    # current ones).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
+    path = os.path.join(sf_dir, "events.parquet")
+    schema = footer_schema(spark, path) or spark.read.parquet(path).schema
     # The streaming file source requires a directory: scan sf_dir with a
     # glob pinned to the events file.
     raw = (
-        spark.readStream.schema(batch_schema)
+        spark.readStream.schema(schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
