@@ -59,11 +59,13 @@ _FOOTER_TYPES = {
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_type(t, ntz: bool) -> T.DataType | None:
+def footer_type(t, ntz: bool) -> T.DataType | None:
+    """The Spark type inferred for a footer column of Arrow type ``t``,
+    or None outside the mapped set (``ntz``: the NTZ inference conf)."""
     import pyarrow as pa
 
     if isinstance(t, pa.ListType):
-        elem = _footer_type(t.value_type, ntz)
+        elem = footer_type(t.value_type, ntz)
         return None if elem is None else T.ArrayType(elem, True)
     if str(t) == "timestamp[us]":
         return T.TimestampNTZType() if ntz else None
@@ -93,7 +95,7 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     )
     fields = []
     for f in md.schema.to_arrow_schema():
-        dt = _footer_type(f.type, ntz)
+        dt = footer_type(f.type, ntz)
         if dt is None:
             return None
         fields.append(T.StructField(f.name, dt, True))

@@ -20,12 +20,13 @@ handler; its docstring lists the statement kinds.
 from __future__ import annotations
 
 import re as _re
+from collections import Counter
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from data_chunk_compaction_in_duckdb_spark import catalog as _catalog
-from data_chunk_compaction_in_duckdb_spark import dialect, prepared, settings
+from data_chunk_compaction_in_duckdb_spark import dialect, local_exec, prepared, settings
 from data_chunk_compaction_in_duckdb_spark.session import get_spark
 
 # -- statement grammars, grouped by the handler that owns them
@@ -97,6 +98,9 @@ class Engine:
         self._root_log = None  # storage.txnlog.RootLog (atomic commit)
         self._prepared = prepared.PreparedStore()
         self._settings = settings.SettingsStore(self.spark)
+        # query statements read on the driver ("local") and the reason
+        # each other one kept its Spark plan (local_exec.run)
+        self.local_exec_counts: Counter = Counter()
         # per-engine temp roots (created lazily, removed on close())
         # and generation counters that keep replaced paths fresh
         self._seq_root: str | None = None
@@ -167,6 +171,20 @@ class Engine:
           (``duckdb_tables()`` ...) become temp views, ``nextval``/
           ``currval``/``current_setting`` bind as UDFs, star modifiers
           and QUALIFY are rewritten, and ``spark.sql`` runs the text.
+          A tiny read is then run on the driver (``local_exec``): when
+          the optimized plan is Project/Filter over one parquet
+          relation (a fixture view or a versioned snapshot), every
+          conjunct is IS NOT NULL, an integral =/</<=/>/>=/IN against
+          literals of the column's type or a string = literal, every
+          output is a column or a rename of one, every column type is
+          footer-mapped, and the needed column chunks fit under
+          ``spark.sql.autoBroadcastJoinThreshold``, pyarrow reads the
+          rows inside this call and the result is a DataFrame over a
+          LocalRelation: its actions run no Spark job, and it holds the
+          fixture file or the versioned manifest version the view
+          names now — a snapshot.  A bigger input or any other shape
+          keeps the Spark plan; ``local_exec_counts`` counts the local
+          reads and each fallback's reason.
 
         A handler whose grammar does not match passes the statement on
         to the query handler (``SET spark.sql.x = v``, ``EXECUTE
@@ -254,7 +272,7 @@ class Engine:
             df = self.spark.sql(query)
         if drop_col:
             df = df.drop(drop_col)
-        return self._wrap(df)
+        return self._wrap(local_exec.run(self.spark, df, self.local_exec_counts))
 
     def _rewrite_catalog_tfs(self, query: str) -> str:
         """Materialize each catalog-TF call site (``duckdb_tables()``
@@ -1072,12 +1090,6 @@ class Engine:
             return True
         except ValueError:
             return False
-
-    def set_setting(self, name: str, value: Any) -> None:
-        self._settings.set(name, value)
-
-    def reset_setting(self, name: str) -> None:
-        self._settings.reset(name)
 
     def current_setting(self, name: str) -> Any:
         """Typed readback (DuckDB's ``current_setting()`` scalar)."""

@@ -43,13 +43,6 @@ def inet_ntoa(n: Column | str) -> Column:
     )
 
 
-def cidr_network(addr: Column, prefix_len: int) -> Column:
-    """Network base address of `addr` under a /prefix_len mask —
-    integer floor-division form of (addr & mask), exact in BIGINT."""
-    block = 2 ** (32 - prefix_len)
-    return (addr - addr % block).cast("long")
-
-
 def inet_contains(cidr: str, ip: Column | str) -> Column:
     """True when ip (dotted-quad column) falls inside 'a.b.c.d/len' —
     the reference's `<<=` containment operator."""

@@ -26,11 +26,6 @@ def md5_keyed(col: Column | str, key: str | Column) -> Column:
     return F.md5(F.concat(k.cast("string"), F.lit(":"), F.col(col) if isinstance(col, str) else col))
 
 
-def md5_keyed_sql(expr: str, key: str) -> str:
-    """DuckDB SQL mirroring md5_keyed."""
-    return f"md5('{key}:' || {expr})"
-
-
 def hash32_expr(inner_sql: str, key: str = "") -> Column:
     """Portable 32-bit hash as a Spark SQL expression over `inner_sql`
     (a SQL fragment naming input columns)."""

@@ -59,14 +59,6 @@ def char_shingles_expr(text_sql: str, n: int = 5) -> Column:
     )
 
 
-def char_shingles_sql(text_sql: str, n: int = 5) -> str:
-    """DuckDB SQL mirroring char_shingles_expr."""
-    return (
-        f"list_distinct(list_transform(generate_series(1, GREATEST(length({text_sql}) - {n - 1}, 1)), "
-        f"i -> substr({text_sql}, i, {n})))"
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,

@@ -321,19 +321,6 @@ def _make_language_id():
 language_id = _make_language_id()
 
 
-def profile_documents(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Convenience: all text-analysis columns in one pass."""
-    toks = token_counts(text_col)
-    qual = quality_features(text_col)
-    return docs.select(
-        F.col(id_col),
-        *[v.alias(k) for k, v in toks.items()],
-        *[v.alias(k) for k, v in qual.items()],
-        text_fingerprint(text_col).alias("fingerprint"),
-        language_id(F.col(text_col)).alias("lang_pred"),
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     id_col: str,

@@ -25,9 +25,13 @@ Probed semantics mirrored exactly:
     when preparing, not when executing).
 
 Spark-first execution: markers are rewritten to Spark's ``:name``
-named-parameter form OUTSIDE string literals and the argument
-expressions bind through ``spark.sql(query, args=...)`` as literal
-Columns — Catalyst constant-folds them; never string interpolation.
+named-parameter form OUTSIDE string literals and the arguments bind
+through ``spark.sql(query, args=...)`` as literal Columns, never by
+string interpolation.  ``fold_args`` makes those Columns: a plain
+literal argument (an integer in BIGINT range, a simple quoted string,
+NULL, TRUE, FALSE) is folded in Python without a Spark job, and so are
+the NULLs of PREPARE's validation; any other argument expression is
+folded by one FROM-less SELECT, which is one Spark job.
 A body that is not a query (prepared DML on versioned tables, ...)
 re-enters ``Engine.sql`` with the markers substituted as parenthesized
 SQL expressions, the same constant expressions DuckDB binds.
@@ -302,16 +306,42 @@ def dispatch(store: PreparedStore, query: str, run_sql, run_statement):
     return False, None
 
 
+# EXECUTE argument texts that fold to a literal without Spark: an integer
+# in BIGINT range (a wider one is a DECIMAL in SQL), a single-quoted string
+# with no quote or backslash inside (Spark would unescape or concatenate),
+# NULL, TRUE and FALSE
+_INT_ARG_RE = re.compile(r"[+-]?\d+")
+_STRING_ARG_RE = re.compile(r"'([^'\\]*)'")
+_WORD_ARGS = {"NULL": None, "TRUE": True, "FALSE": False}
+
+
+def _plain_literal(text: str) -> tuple[bool, object]:
+    """``(True, value)`` when ``text`` is a plain literal whose folded
+    value and type the one-row SELECT would give as well."""
+    text = text.strip()
+    if _INT_ARG_RE.fullmatch(text):
+        value = int(text)
+        return -(2**63) <= value < 2**63, value
+    m = _STRING_ARG_RE.fullmatch(text)
+    if m is not None:
+        return True, m.group(1)
+    word = text.upper()
+    return word in _WORD_ARGS, _WORD_ARGS.get(word)
+
+
 def fold_args(spark, binds: dict[str, str]) -> dict:
     """Evaluate EXECUTE argument expressions to literal Columns.
 
     Spark's parameterized SQL accepts only LITERAL arguments
     (INVALID_SQL_ARG otherwise), while DuckDB accepts any constant
-    scalar expression — so each argument is constant-folded driver-side
-    through a FROM-less one-row SELECT (a LocalRelation: no table can
-    be referenced, no job runs) and passed as a typed literal.
-    Subquery arguments are rejected with DuckDB's exact error (probed:
-    'Only scalar parameters, named parameters or NULL supported')."""
+    scalar expression.  A plain literal (`_plain_literal`) becomes
+    ``F.lit`` of its value directly, with no Spark work.  Any other
+    argument (an expression, a decimal — ``1.5`` is DECIMAL(2,1) in SQL
+    but DOUBLE through ``F.lit``) is constant-folded by one FROM-less
+    SELECT over all of them, which runs one Spark job, and passed as the
+    typed literal of its value.  Subquery arguments are rejected with
+    DuckDB's exact error (probed: 'Only scalar parameters, named
+    parameters or NULL supported')."""
     from pyspark.sql import functions as F
 
     if not binds:
@@ -322,9 +352,16 @@ def fold_args(spark, binds: dict[str, str]) -> dict:
                 "Invalid Input Error: Only scalar parameters, named "
                 "parameters or NULL supported for EXECUTE"
             )
-    # ONE folding SELECT for all arguments (param names are \w+, safe
-    # as aliases), not one driver round-trip per argument
-    keys = list(binds)
-    projection = ", ".join(f"({binds[k]}) AS {k}" for k in keys)
-    row = spark.sql(f"SELECT {projection}").collect()[0]
-    return {k: F.lit(row[k]) for k in keys}
+    out, rest = {}, []
+    for k, text in binds.items():
+        plain, value = _plain_literal(text)
+        if plain:
+            out[k] = F.lit(value)
+        else:
+            rest.append(k)
+    if rest:
+        # param names are \w+, safe as aliases
+        projection = ", ".join(f"({binds[k]}) AS {k}" for k in rest)
+        row = spark.sql(f"SELECT {projection}").collect()[0]
+        out.update({k: F.lit(row[k]) for k in rest})
+    return out

@@ -1,0 +1,310 @@
+"""Driver-local reads (local_exec) give what the Spark plan gives.
+
+Each statement runs twice through ``Engine.sql``: once as the engine runs
+it, and once with ``local_exec.run`` patched to hand back the Spark plan.
+Rows (order aside) and the JVM-side schema, nullability included, must
+match, and ``Engine.local_exec_counts`` says which path the first run took.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import json
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from data_chunk_compaction_in_duckdb_spark import catalog, local_exec, prepared
+from data_chunk_compaction_in_duckdb_spark.engine import Engine
+
+ORDER_COLS = "o_orderkey, o_custkey, o_orderstatus, o_totalprice"
+
+
+@pytest.fixture()
+def eng(spark, sf_dir, tmp_path):
+    e = Engine(spark, sf_dir)
+    e.create_versioned_table("orders_v", e.tables["orders"], str(tmp_path / "orders_v"))
+    return e
+
+
+def _spark_plan(monkeypatch):
+    return monkeypatch.setattr(local_exec, "run", lambda spark, df, counts: df)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _jvm_schema(df) -> T.StructType:
+    return T.StructType.fromJson(json.loads(df._jdf.schema().json()))
+
+
+def both(eng, monkeypatch, sql: str, *args, **params) -> tuple[str, list[tuple]]:
+    """The path the engine took for ``sql`` ("local" or the fallback
+    reason) and its rows, after checking them against the Spark plan."""
+    before = eng.local_exec_counts.copy()
+    got = eng.sql(sql, *args, **params)
+    (path,) = (eng.local_exec_counts - before).keys()
+    with monkeypatch.context() as m:
+        _spark_plan(m)
+        ref = eng.sql(sql, *args, **params)
+    assert _jvm_schema(got) == _jvm_schema(ref), sql
+    rows = _rows(got)
+    assert rows == _rows(ref), sql
+    if path == "local":
+        assert got._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    return path, rows
+
+
+@pytest.mark.parametrize(
+    "sql, params",
+    [
+        ("SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer WHERE c_custkey = :k",
+         {"k": 7}),
+        ("SELECT o_orderkey, o_totalprice FROM orders WHERE o_custkey = :k", {"k": 4}),
+        ("SELECT * FROM customer WHERE c_custkey IN (3, 5, 140)", {}),
+        ("SELECT c_name AS n, c_custkey FROM customer WHERE c_custkey >= 140", {}),
+        ("SELECT o_orderkey FROM orders WHERE 10 > o_orderkey AND o_orderkey > 2", {}),
+        ("SELECT c_custkey, c_nationkey FROM customer WHERE c_nationkey <= 2", {}),
+        ("SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'", {}),
+        ("SELECT * FROM nation", {}),
+        (f"SELECT {ORDER_COLS} FROM orders_v WHERE o_orderkey = :k", {"k": 33}),
+        (f"SELECT {ORDER_COLS} FROM orders_v WHERE o_orderkey IN (1, 2, 3, 4)", {}),
+        (f"SELECT {ORDER_COLS} FROM orders_v WHERE o_orderkey BETWEEN 10 AND 40", {}),
+    ],
+)
+def test_point_in_and_range_reads_run_locally(eng, monkeypatch, sql, params):
+    path, rows = both(eng, monkeypatch, sql, **params)
+    assert path == "local"
+    assert rows
+
+
+@pytest.mark.parametrize("key", [-5, 999999, 10**9, 9223372036854775807])
+def test_missing_and_negative_keys_read_locally_and_empty(eng, monkeypatch, key):
+    sql = "SELECT c_custkey, c_name FROM customer WHERE c_custkey = :k"
+    assert both(eng, monkeypatch, sql, k=key) == ("local", [])
+
+
+@pytest.mark.parametrize(
+    "sql, params, reason",
+    [
+        # BIGINT overflow: the key is a DECIMAL, and the optimizer folds
+        # the out-of-range compare to an empty relation; nothing is scanned
+        ("SELECT c_custkey FROM customer WHERE c_custkey = 9223372036854775808", {}, "shape"),
+        ("SELECT c_custkey FROM customer WHERE c_nationkey = :k", {"k": 3000000000}, "shape"),
+        # a NULL key folds the filter away too
+        ("SELECT c_custkey FROM customer WHERE c_custkey = :k", {"k": None}, "shape"),
+        ("SELECT c_custkey FROM customer WHERE c_custkey = 1 OR c_custkey = 2", {}, "conjunct"),
+        ("SELECT c_custkey FROM customer WHERE c_mktsegment > 'B'", {}, "conjunct"),
+        ("SELECT c_custkey FROM customer WHERE c_acctbal = 711.56", {}, "conjunct"),
+        ("SELECT c_custkey + 1 AS k FROM customer WHERE c_custkey = 1", {}, "shape"),
+        ("SELECT c_custkey FROM customer WHERE c_custkey = 1 LIMIT 1", {}, "shape"),
+        ("SELECT count(*) AS n FROM customer WHERE c_custkey = 1", {}, "shape"),
+        ("SELECT c_name, o_orderkey FROM customer JOIN orders ON c_custkey = o_custkey "
+         "WHERE c_custkey = 1", {}, "shape"),
+        ("SELECT input_file_name() AS f, c_custkey FROM customer WHERE c_custkey = 1", {},
+         "shape"),
+    ],
+)
+def test_other_statements_keep_the_spark_plan(eng, monkeypatch, sql, params, reason):
+    assert both(eng, monkeypatch, sql, **params)[0] == reason
+
+
+def test_python_udf_filter_falls_back(eng, monkeypatch, spark):
+    spark.udf.register("is_even", lambda k: k % 2 == 0, "boolean")
+    sql = "SELECT c_custkey FROM customer WHERE is_even(c_custkey) AND c_custkey < 10"
+    path, rows = both(eng, monkeypatch, sql)
+    assert path == "shape" and [r[0] for r in rows] == [0, 2, 4, 6, 8]
+
+
+def test_metadata_column_falls_back(eng, monkeypatch, spark, sf_dir):
+    spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+        "c_custkey", F.col("_metadata.file_name").alias("f")
+    ).createOrReplaceTempView("cust_md")
+    path, rows = both(eng, monkeypatch, "SELECT c_custkey, f FROM cust_md WHERE c_custkey = 1")
+    assert path == "shape" and rows == [(1, "customer.parquet")]
+
+
+def test_serving_shapes_hit_and_execute_folds_without_a_job(eng, monkeypatch, spark):
+    eng.sql(f"PREPARE get_order AS SELECT {ORDER_COLS} FROM orders_v WHERE o_orderkey = ?")
+    assert both(eng, monkeypatch, "EXECUTE get_order(35)")[0] == "local"
+    assert both(eng, monkeypatch, "EXECUTE get_order(-1)") == ("local", [])
+    sc = spark.sparkContext
+    sc.setJobGroup("local-exec", "local-exec")
+    try:
+        rows = eng.sql("EXECUTE get_order(35)").collect()
+        rows += eng.sql(
+            "SELECT c_custkey, c_name FROM customer WHERE c_custkey = :k", k=3
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 2
+    assert list(sc.statusTracker().getJobIdsForGroup("local-exec")) == []
+
+
+def test_read_errors_fall_back_and_are_counted(eng, monkeypatch):
+    def broken(*a, **k):
+        raise OSError("unreadable")
+
+    monkeypatch.setattr(pq, "read_table", broken)
+    sql = "SELECT c_custkey, c_name FROM customer WHERE c_custkey = 9"
+    path, rows = both(eng, monkeypatch, sql)
+    assert path == "error" and [r[0] for r in rows] == [9]
+
+
+def test_broadcast_threshold_bounds_the_local_read(eng, monkeypatch, spark):
+    sql = "SELECT c_custkey FROM customer WHERE c_custkey = 9"
+    try:
+        for threshold in ("10b", "-1"):  # -1 turns broadcasting off
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            assert both(eng, monkeypatch, sql)[0] == "bytes"
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert both(eng, monkeypatch, sql)[0] == "local"
+
+
+def test_every_mapped_type_in_the_projection(eng, monkeypatch, spark, tmp_path):
+    path = str(tmp_path / "alltypes.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "b": pa.array([True, None, False], pa.bool_()),
+                "i8": pa.array([1, 2, None], pa.int8()),
+                "i16": pa.array([-3, None, 300], pa.int16()),
+                "i32": pa.array([None, 7, -70000], pa.int32()),
+                "i64": pa.array([1, 2, 3], pa.int64()),
+                "f": pa.array([1.5, None, -0.25], pa.float32()),
+                "d": pa.array([None, 2.25, 1e300], pa.float64()),
+                "s": pa.array(["x", "", None], pa.string()),
+                "day": pa.array([dt.date(2024, 2, 29), None, dt.date(1900, 1, 1)], pa.date32()),
+                "ts": pa.array([dt.datetime(2024, 1, 1, 12, 30, 0, 123456), None,
+                                dt.datetime(1969, 12, 31, 23, 59, 59)], pa.timestamp("us")),
+                "li": pa.array([[1, None], None, []], pa.list_(pa.int64())),
+                "nl": pa.array([[[1], [2, 3]], [None], None], pa.list_(pa.list_(pa.int32()))),
+            }
+        ),
+        path,
+    )
+    schema = catalog.footer_schema(spark, path)
+    assert schema is not None
+    spark.read.schema(schema).parquet(path).createOrReplaceTempView("alltypes")
+    for where in ("i64 >= 1", "i8 = 2", "i16 IN (-3, 300)", "i32 < 0", "s = ''",
+                  "b IS NOT NULL", "i64 = 99"):
+        assert both(eng, monkeypatch, f"SELECT * FROM alltypes WHERE {where}")[0] == "local"
+
+
+def test_column_case_differs_from_the_file(eng, monkeypatch, spark, tmp_path):
+    path = str(tmp_path / "upper.parquet")
+    pq.write_table(pa.table({"ID": pa.array([1, 2, 3], pa.int64()),
+                             "v": pa.array(["a", "b", "c"])}), path)
+    spark.read.schema("id BIGINT, v STRING").parquet(path).createOrReplaceTempView("cased")
+    path_taken, rows = both(eng, monkeypatch, "SELECT id, v FROM cased WHERE id = 2")
+    assert path_taken == "type" and rows == [(2, "b")]
+
+
+def test_key_in_a_later_file_next_to_empty_part_files(eng, monkeypatch, spark, tmp_path):
+    base = eng.tables["orders"].filter("o_orderkey <= 3")
+    vt = eng.create_versioned_table("multi", base, str(tmp_path / "multi"))
+    for key in (100, 101, 102):
+        eng.sql(f"INSERT INTO multi SELECT {key} AS o_orderkey, o_custkey, o_orderstatus, "
+                f"o_totalprice, o_orderdate, o_orderpriority FROM orders WHERE o_orderkey = 1")
+    eng.sql("DELETE FROM multi WHERE o_orderkey = 101")  # leaves an empty part file
+    files = vt._manifest(vt.latest_version())["files"]
+    counts = [pq.read_metadata(f"{vt.path}/{f}").num_rows for f in files]
+    assert len(files) >= 4 and 0 in counts
+    for key in (102, 100, 101, 2):
+        path, rows = both(eng, monkeypatch, f"SELECT {ORDER_COLS} FROM multi WHERE o_orderkey = {key}")
+        assert path == "local" and len(rows) == (0 if key == 101 else 1), key
+    path, rows = both(eng, monkeypatch, "SELECT o_orderkey FROM multi WHERE o_orderkey >= 2")
+    assert path == "local" and [r[0] for r in rows] == [100, 102, 2, 3]
+
+
+def test_reads_after_update_delete_and_checkpoint(eng, monkeypatch):
+    read = f"SELECT {ORDER_COLS} FROM orders_v WHERE o_orderkey IN (1, 2, 3)"
+    eng.sql("UPDATE orders_v SET o_totalprice = 1.25 WHERE o_orderkey = 2")
+    path, rows = both(eng, monkeypatch, read)
+    assert path == "local" and [r[3] for r in rows if r[0] == 2] == [1.25]
+    eng.sql("DELETE FROM orders_v WHERE o_orderkey = 3")
+    path, rows = both(eng, monkeypatch, read)
+    assert path == "local" and [r[0] for r in rows] == [1, 2]
+    vt = eng._versioned["orders_v"]
+    vt.checkpoint()
+    eng.refresh_versioned_view("orders_v", vt)
+    assert both(eng, monkeypatch, read) == ("local", rows)
+
+
+def test_reads_after_add_and_rename_column(eng, monkeypatch):
+    vt = eng._versioned["orders_v"]
+    vt.add_column("o_note", "STRING")
+    eng.refresh_versioned_view("orders_v", vt)
+    eng.sql("INSERT INTO orders_v SELECT o_orderkey + 100000, o_custkey, o_orderstatus, "
+            "o_totalprice, o_orderdate, o_orderpriority, 'fresh' FROM orders WHERE o_orderkey = 1")
+    read = "SELECT o_orderkey, o_note FROM orders_v WHERE o_orderkey IN (1, 100001)"
+    path, rows = both(eng, monkeypatch, read)
+    assert path == "local" and rows == [(1, None), (100001, "fresh")]
+    vt.rename_column("o_note", "o_memo")
+    eng.refresh_versioned_view("orders_v", vt)
+    read = "SELECT o_orderkey, o_memo FROM orders_v WHERE o_orderkey IN (1, 100001)"
+    assert both(eng, monkeypatch, read) == ("local", rows)
+    read = "SELECT o_orderkey FROM orders_v WHERE o_memo = 'fresh'"
+    assert both(eng, monkeypatch, read) == ("local", [(100001,)])
+
+
+def test_read_inside_a_rolled_back_transaction(eng, monkeypatch):
+    read = f"SELECT {ORDER_COLS} FROM orders_v WHERE o_orderkey = 777777"
+    eng.sql("BEGIN")
+    eng.sql("INSERT INTO orders_v SELECT 777777, o_custkey, o_orderstatus, o_totalprice, "
+            "o_orderdate, o_orderpriority FROM orders WHERE o_orderkey = 1")
+    assert len(both(eng, monkeypatch, read)[1]) == 1
+    eng.sql("ROLLBACK")
+    assert both(eng, monkeypatch, read)[1] == []
+
+
+def test_auto_compact_still_wraps_the_result(spark, sf_dir):
+    from data_chunk_compaction_in_duckdb_spark.compaction.auto import AutoCompactFrame
+
+    e = Engine(spark, sf_dir, auto_compact=True)
+    out = e.sql("SELECT c_custkey, c_name FROM customer WHERE c_custkey = 5")
+    assert isinstance(out, AutoCompactFrame) and e.local_exec_counts["local"] == 1
+    assert [tuple(r) for r in out.collect()] == [(5, "Customer#000000005")]
+
+
+@pytest.mark.parametrize(
+    "text",
+    ["5", "-5", "+7", "007", "0", "2147483647", "2147483648", "-2147483648",
+     "-2147483649", "9223372036854775807", "-9223372036854775808", "'abc'", "''",
+     "'héllo wörld'", "NULL", "null", "TRUE", "false", " 12 "],
+)
+def test_plain_execute_arguments_fold_like_the_select(spark, text):
+    plain, value = prepared._plain_literal(text)
+    assert plain
+    row = spark.sql(f"SELECT ({text}) AS x").collect()[0]
+    assert type(row.x) is type(value) and row.x == value
+
+    def lit_type(v):
+        return spark.range(1).select(F.lit(v).alias("x")).schema["x"].dataType
+
+    assert lit_type(value) == lit_type(row.x)
+    sc = spark.sparkContext
+    sc.setJobGroup("fold-args", "fold-args")
+    try:
+        folded = prepared.fold_args(spark, {"p1": text})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("fold-args")) == []
+    assert spark.range(1).select(folded["p1"].alias("x")).schema["x"].dataType == lit_type(value)
+
+
+@pytest.mark.parametrize(
+    "text", ["1.5", "9223372036854775808", "-9223372036854775809", "1 + 1", "'it''s'",
+             "'a\\\\b'", "DATE '2024-01-01'", "- 5"],
+)
+def test_other_execute_arguments_fold_through_the_select(spark, text):
+    assert not prepared._plain_literal(text)[0]
+    folded = prepared.fold_args(spark, {"p1": text, "p2": "3"})
+    row = spark.sql(f"SELECT ({text}) AS x").collect()[0]
+    got = spark.range(1).select(folded["p1"].alias("x"), folded["p2"].alias("y")).collect()[0]
+    assert got.x == row.x and got.y == 3

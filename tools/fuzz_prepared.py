@@ -9,7 +9,10 @@ prepared.py (marker rewrite + literal-Column binding through
 Engine.sql, including the QUALIFY/star dialect rewrites).  A binding
 bug (wrong marker order, type-lossy fold, literal-span miscount)
 surfaces as a row/value divergence against the unparameterized
-original.
+original.  About a third of the statements are point, IN and range
+reads of the shape Engine.sql reads on the driver (local_exec); the
+summary line says how many EXECUTEs took that path instead of a Spark
+job.
 
 Usage: python tools/fuzz_prepared.py [n_queries] [seed]
 Exit 1 on any divergence.
@@ -129,6 +132,34 @@ def lift_parameters(
     return "".join(out), values
 
 
+def local_select(rng: random.Random) -> str:
+    """A point, IN or range read of bare or renamed columns over one
+    fixture table — the shape Engine.sql reads on the driver
+    (local_exec) — with edge keys: negative, missing, beyond INT."""
+    from tools.fuzz_differential import STR_LITS, TABLES
+
+    table = rng.choice(list(TABLES))
+    ints, strs = TABLES[table]["int"], TABLES[table]["str"]
+    cols = rng.sample(ints + strs, rng.randint(1, len(ints + strs)))
+    proj = ", ".join(c if rng.random() < 0.7 else f"{c} AS x{i}" for i, c in enumerate(cols))
+    keys = [-5, 0, 1, 2, 3, 7, 24, 99, 149, 1500, 99999, 2147483648]
+    conds = []
+    for _ in range(rng.randint(1, 2)):
+        roll = rng.random()
+        col = rng.choice(ints)
+        if roll < 0.2 and strs:
+            s = rng.choice(strs)
+            conds.append(f"{s} = '{rng.choice(STR_LITS[s])}'")
+        elif roll < 0.3:
+            conds.append(f"{rng.choice(ints + strs)} IS NOT NULL")
+        elif roll < 0.5:
+            conds.append(f"{col} IN ({', '.join(str(k) for k in rng.sample(keys, 3))})")
+        else:
+            op, k = rng.choice(["=", "<", "<=", ">", ">="]), rng.choice(keys)
+            conds.append(f"{col} {op} {k}" if rng.random() < 0.8 else f"{k} {op} {col}")
+    return f"SELECT {proj} FROM {table} WHERE {' AND '.join(conds)}"
+
+
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 300
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 8
@@ -151,9 +182,9 @@ def main() -> int:
 
     rng = random.Random(seed)
     bad: list[tuple[str, str]] = []
-    lifted = 0
+    lifted = local = 0
     for i in range(n):
-        sql = gen_query(rng)
+        sql = local_select(rng) if rng.random() < 0.3 else gen_query(rng)
         lift = lift_parameters(sql, rng)
         if lift is None:
             continue
@@ -178,7 +209,9 @@ def main() -> int:
             continue
         try:
             eng.sql(f"PREPARE fz AS {p_sql}")
+            before = eng.local_exec_counts["local"]
             sdf = eng.sql(f"EXECUTE fz({args})")
+            local += eng.local_exec_counts["local"] - before
             s_cols = sdf.columns
             s_rows = [tuple(x) for x in sdf.collect()]
             eng.sql("DEALLOCATE fz")
@@ -197,8 +230,8 @@ def main() -> int:
     for sql, reason in bad:
         print(f"DIVERGENCE: {reason}\n  {sql}")
     print(
-        f"done: {n} generated, {lifted} parameterized+executed, "
-        f"{len(bad)} divergences"
+        f"done: {n} generated, {lifted} parameterized+executed "
+        f"({local} read on the driver), {len(bad)} divergences"
     )
     return 1 if bad else 0
 
