@@ -9,21 +9,14 @@ arithmetic on both sides.
 
 The Spark expressions are pure built-ins (md5/substring/instr/aggregate)
 — JVM-side, codegen-friendly, no Python.  At 100 TB scale md5 is ~2×
-slower than xxhash64; operators accept a `portable=False` flag to switch
-to xxhash64 when oracle comparability is not needed.
+slower than xxhash64; the price buys oracle comparability, and no
+operator offers an xxhash64 variant.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def md5_keyed(col: Column | str, key: str | Column) -> Column:
-    """md5(key || ':' || col) — the i-th 'independent' hash permutation for
-    minhash (strings compare lexicographically the same everywhere)."""
-    k = F.lit(key) if isinstance(key, str) else key
-    return F.md5(F.concat(k.cast("string"), F.lit(":"), F.col(col) if isinstance(col, str) else col))
 
 
 def hash32_expr(inner_sql: str, key: str = "") -> Column:

@@ -290,88 +290,34 @@ def _assign_cells_arrow(
     vec_col: str,
     cents: list[list[float]],
     n_assign: int,
+    carry: bool = False,
 ) -> DataFrame:
     """IVF cell assignment as ONE Arrow pass: each batch of vectors is
     scored against the full centroid matrix in numpy with a
-    dim-sequential left fold — ((0 + t0) + t1) + ... per (row, cell) —
-    the exact IEEE evaluation order of the zip_with/aggregate expression
-    form, so the chosen cells (and thus every downstream pair and the
-    DuckDB oracle replay) are bit-identical.  Ranking replicates the
-    expression's sort_array(struct(-dot, idx)): np.argsort(-dots,
-    kind="stable") ascending orders NaN last (Spark's NaN-greatest) and
-    breaks exact ties by centroid index (stability == the struct's idx
-    tiebreak).  This removes the n*cells*dim interpreted-lambda cost
-    that made the assignment the sf1 bottleneck (BENCH_sf1: 9.3x)."""
+    dim-sequential left fold — ((0 + t0) + t1) + ... per (row, cell).
+    Ranking is the oracle's (-dot, idx) ascending order:
+    np.argsort(-dots, kind="stable") orders NaN last (Spark's
+    NaN-greatest) and breaks exact ties by the lowest centroid index
+    (stability == the idx tiebreak).  Both are pinned against a plain
+    Python reference by tests/test_dedup_rerank_reference.py.  This
+    removes the n*cells*dim interpreted-lambda cost that made the
+    assignment the sf1 bottleneck (BENCH_sf1: 9.3x).
+
+    Emits (_id, _cell) rows, ``n_assign`` per vector.  ``carry=True``
+    adds the double-cast vector as ``_v`` so within-cell consumers need
+    no join-back to the embedding table (one fewer corpus scan +
+    join); float->double is an exact widening."""
     from pyspark.sql import types as T
 
     id_field = emb.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("_id", id_field.dataType, True),
-            T.StructField("_cell", T.IntegerType(), True),
-        ]
-    )
-    cmat = [list(map(float, c)) for c in cents]
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cm = np.asarray(cmat, dtype=np.float64)
-        k, dim = cm.shape
-        take = min(n_assign, k)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            # zero-copy flatten of the vector column (r10: the previous
-            # mapInPandas form boxed every element through .tolist();
-            # this is the carry variant's kernel minus the vector carry)
-            tbl = pa.Table.from_batches([batch])
-            ids = tbl.column(id_col).combine_chunks()
-            arr = tbl.column(vec_col).combine_chunks()
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
-            vecs = flat.astype(np.float64, copy=False).reshape(n, -1)
-            dots = np.zeros((n, k))
-            for j in range(dim):
-                dots = dots + vecs[:, j][:, None] * cm[:, j][None, :]
-            order = np.argsort(-dots, axis=1, kind="stable")[:, :take]
-            idx = pa.array(np.repeat(np.arange(n), take))
-            yield pa.record_batch(
-                [
-                    ids.take(idx),
-                    pa.array(order.reshape(-1).astype("int32")),
-                ],
-                names=["_id", "_cell"],
-            )
-
-    return emb.select(id_col, vec_col).mapInArrow(gen, out_schema)
-
-
-def _assign_cells_arrow_carry(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cents: list[list[float]],
-    n_assign: int,
-) -> DataFrame:
-    """``_assign_cells_arrow`` with the (double-cast) vector carried
-    through the kernel — same bit-exact ranking (dim-sequential fold,
-    stable argsort) — so within-cell consumers need NO join-back to the
-    embedding table (guide §2.4: one fewer corpus scan + join; the
-    shuffled bytes are identical, since the join-back produced the same
-    (cell, id, vector) rows).  float->double is an exact widening, the
-    same cast the join-back applied."""
-    from pyspark.sql import types as T
-
-    id_field = emb.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("_id", id_field.dataType, True),
-            T.StructField("_cell", T.IntegerType(), True),
-            T.StructField("_v", T.ArrayType(T.DoubleType()), True),
-        ]
-    )
+    fields = [
+        T.StructField("_id", id_field.dataType, True),
+        T.StructField("_cell", T.IntegerType(), True),
+    ]
+    if carry:
+        fields.append(T.StructField("_v", T.ArrayType(T.DoubleType()), True))
+    out_schema = T.StructType(fields)
+    names = [f.name for f in fields]
     cmat = [list(map(float, c)) for c in cents]
 
     def gen(batches):
@@ -386,6 +332,8 @@ def _assign_cells_arrow_carry(
             n = batch.num_rows
             if n == 0:
                 continue
+            # zero-copy flatten of the vector column (r10: the previous
+            # mapInPandas form boxed every element through .tolist())
             tbl = pa.Table.from_batches([batch])
             ids = tbl.column(id_col).combine_chunks()
             arr = tbl.column(vec_col).combine_chunks()
@@ -396,15 +344,10 @@ def _assign_cells_arrow_carry(
                 dots = dots + vecs[:, j][:, None] * cm[:, j][None, :]
             order = np.argsort(-dots, axis=1, kind="stable")[:, :take]
             idx = pa.array(np.repeat(np.arange(n), take))
-            vq = pc.cast(arr, pa.list_(pa.float64()))
-            yield pa.record_batch(
-                [
-                    ids.take(idx),
-                    pa.array(order.reshape(-1).astype("int32")),
-                    vq.take(idx),
-                ],
-                names=["_id", "_cell", "_v"],
-            )
+            cols = [ids.take(idx), pa.array(order.reshape(-1).astype("int32"))]
+            if carry:
+                cols.append(pc.cast(arr, pa.list_(pa.float64())).take(idx))
+            yield pa.record_batch(cols, names=names)
 
     return emb.select(id_col, vec_col).mapInArrow(gen, out_schema)
 
@@ -417,8 +360,6 @@ def semantic_ivf_neardup_pairs(
     n_clusters: int = 8,
     n_assign: int = 2,
     threshold: float = 0.9,
-    rerank: str = "cell",
-    assign: str = "arrow",
 ) -> DataFrame:
     """Semantic near-dup pairs via IVF cell bucketing — the 100 TB scale
     path for ``embedding_neardup_pairs``: each vector is assigned to its
@@ -426,147 +367,31 @@ def semantic_ivf_neardup_pairs(
     pairs are not lost) and exact cosine confirms within-cell pairs.
     Per-cell candidate volume is ~(n/k)^2 instead of n^2.
 
-    Cell assignment sorts struct(-dot, idx) ascending so ties replay
-    identically in DuckDB's list_sort (lexicographic struct order) —
-    the whole assignment is a deterministic md5-centroid expression,
-    which is what makes this approximate operator fully oracle-pairable
-    (unlike LSH ANN, whose per-table multi-probe union has no compact
-    SQL form).
+    Cell assignment ranks struct(-dot, idx) ascending over deterministic
+    md5 centroids (``_assign_cells_arrow``), so ties replay identically
+    in DuckDB's list_sort (lexicographic struct order) — which is what
+    makes this approximate operator fully oracle-pairable (unlike LSH
+    ANN, whose per-table multi-probe union has no compact SQL form).
+    The assignment carries each vector, so confirmation needs no
+    join-back to ``emb``.
 
-    ``rerank`` picks the confirmation kernel:
-
-    - ``"cell"`` (default): groupBy(_cell).applyInArrow — each cell's
-      vectors cross the Arrow boundary ONCE (n*n_assign rows total, not
-      once per candidate pair) and the pairwise cosine matrix is
-      computed in numpy with a dim-sequential left fold, i.e. the exact
-      FP operation order of the expression path and the DuckDB oracle,
-      so results are bit-identical (A/B-verified EQUAL at sf0.01).
-      Measured at sf1 (20k vectors, 8 cells, 3.9M output pairs):
-      136 s -> 47 s; the interpreted per-pair lambda cost (~50 us/pair
-      — Catalyst has no HOF codegen) was the gap, and the remaining
-      cost is the 8-task parallelism floor of 8 oversized cells.
-      Kernel memory is O(cell_size^2) doubles — hold the documented
-      cells ∝ corpus rule and both memory and parallelism stay flat.
-    - ``"pair"``: the pure-expression path (id-pair distinct + per-pair
-      zip_with dot).  Kept for A/B verification; right choice only when
-      Arrow is unavailable.
-
-    ``assign`` picks the cell-assignment kernel the same way:
-    ``"arrow"`` (default) scores each vector batch against the centroid
-    matrix in numpy with the expression path's exact fold order (see
-    ``_assign_cells_arrow``); ``"expr"`` keeps the sort_array/transform
-    expression form for A/B verification.  Both produce identical cells
-    (pinned by tests/test_dedup_rerank_ab.py)."""
+    Confirmation is groupBy(_cell).applyInArrow (``_cell_rerank_pairs``):
+    each cell's vectors cross the Arrow boundary ONCE (n*n_assign rows
+    total, not once per candidate pair) and the pairwise cosine matrix
+    is computed in numpy with a dim-sequential left fold.  Measured at
+    sf1 (20k vectors, 8 cells, 3.9M output pairs): 136 s -> 47 s against
+    a per-pair expression rerank; the interpreted per-pair lambda cost
+    (~50 us/pair — Catalyst has no HOF codegen) was the gap, and the
+    remaining cost is the 8-task parallelism floor of 8 oversized cells.  Kernel memory is
+    O(cell_size^2) doubles — hold the documented cells ∝ corpus rule and
+    both memory and parallelism stay flat."""
     from data_chunk_compaction_in_duckdb_spark.pipeline.similarity import (
         _centroid,
-        cosine_similarity,
-        lit_double_matrix,
     )
 
     cents = [_centroid(dim, i) for i in range(n_clusters)]
-    # ONE transform over the literal centroid matrix, not n_clusters
-    # separate dot expressions — with the documented cell-count rule
-    # (cells scale with the corpus) a per-centroid loop would rebuild
-    # the plan-size blowup fixed in similarity._codebook_scores.  The
-    # struct shape (-dot asc, idx asc) is kept bit-identical to the
-    # DuckDB oracle's list_sort replay; built by one F.expr parse
-    # (lit_double_matrix) to keep the driver out of the hot path.
-    cents_lit = lit_double_matrix(cents)
-
-    def _cell_entry(cen: Column, i: Column) -> Column:
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), cen, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.struct((-dot).alias("d"), i.cast("int").alias("i"))
-
-    if assign == "arrow":
-        if rerank == "cell":
-            # carry the vector through the assignment kernel — the
-            # join-back to emb (one more scan + broadcast join) existed
-            # only to reattach vectors for the per-cell kernel
-            cv = _assign_cells_arrow_carry(
-                emb, id_col, vec_col, cents, n_assign
-            )
-            return _cell_rerank_pairs(emb, cv, id_col, threshold)
-        cells = _assign_cells_arrow(emb, id_col, vec_col, cents, n_assign)
-    elif assign == "expr":
-        cells_expr = F.slice(
-            F.transform(
-                F.sort_array(F.transform(cents_lit, _cell_entry)), lambda s: s.i
-            ),
-            1,
-            n_assign,
-        )
-        cells = emb.select(
-            F.col(id_col).alias("_id"), F.explode(cells_expr).alias("_cell")
-        )
-    else:
-        raise ValueError(f"assign must be 'arrow' or 'expr', got {assign!r}")
-
-    if rerank == "cell":
-        cv = cells.join(
-            emb.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
-            ),
-            "_id",
-        )
-        return _cell_rerank_pairs(emb, cv, id_col, threshold)
-    if rerank != "pair":
-        raise ValueError(f"rerank must be 'cell' or 'pair', got {rerank!r}")
-
-    a = cells.select(F.col("_id").alias("id_a"), "_cell")
-    b = cells.select(F.col("_id").alias("id_b"), "_cell")
-    cand = (
-        a.join(b, ["_cell"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # Per-vector norms are computed ONCE here (n rows) instead of per
-    # candidate pair (~(n/k)^2 rows): the pairwise re-rank then does only
-    # the dot product — 3x less lambda work in the hot path.
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(
-                F.col(vec_col), lambda x: x.cast("double") * x.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    ea = emb.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        norm.alias("_na"),
-    )
-    eb = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        norm.alias("_nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("_va"), F.col("_vb"), lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # try_divide: a zero-norm vector makes the denominator 0 —
-            # DuckDB's x/0.0 is NULL (pair dropped by the >= filter) while
-            # Spark's ANSI Divide raises; try_divide restores the NULL
-            (F.try_divide(dot, F.col("_na") * F.col("_nb"))).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    cv = _assign_cells_arrow(emb, id_col, vec_col, cents, n_assign, carry=True)
+    return _cell_rerank_pairs(emb, cv, id_col, threshold)
 
 
 def _cell_rerank_pairs(
@@ -576,14 +401,12 @@ def _cell_rerank_pairs(
     threshold: float,
 ) -> DataFrame:
     """Within-cell pairwise-cosine confirmation as ONE Arrow batch per
-    cell (see semantic_ivf_neardup_pairs).  ``cv`` is the
-    (_id, _cell, _v: array<double>) relation — from the carrying
-    assignment kernel or the cells ⋈ emb join-back.  The numpy kernel
-    sums dots and norms dim-sequentially — ((0 + t0) + t1) + ... —
-    which is the same IEEE evaluation order as the zip_with/aggregate
-    left fold, so every cosine (and therefore the >= threshold decision
-    and the ROUND(c, 4) the queries apply) is bit-identical to the
-    expression path and the DuckDB oracle."""
+    cell (see semantic_ivf_neardup_pairs).  ``cv`` is the carrying
+    assignment kernel's (_id, _cell, _v: array<double>) relation.  The
+    numpy kernel sums dots and norms dim-sequentially — ((0 + t0) + t1)
+    + ... — so every cosine is bit-identical to a plain left-fold loop
+    (pinned by tests/test_dedup_rerank_reference.py); the registry
+    oracle checks the ROUND(c, 4) the queries apply against DuckDB."""
     from pyspark.sql import types as T
 
     id_field = emb.schema[id_col]
@@ -626,22 +449,22 @@ def _cell_rerank_pairs(
         den = nrm[:, None] * nrm[None, :]
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = dots / den
-        # Degenerate-input semantics, pinned to the expression path and
-        # the DuckDB oracle (tests/test_dedup_rerank_ab.py):
+        # Degenerate-input semantics (DuckDB's x/0.0 and NaN order),
+        # pinned by tests/test_dedup_rerank_reference.py:
         #  - zero-norm vector -> denominator 0 -> DuckDB x/0.0 is NULL
-        #    (and the pair path uses try_divide) -> pair DROPPED;
+        #    -> pair DROPPED;
         #  - NaN element with nonzero norms -> cosine NaN -> both engines
         #    order NaN greater than any double -> `>= threshold` KEEPS it.
         # numpy's `>=` is False for NaN, so pass NaN explicitly, then
         # mask out the zero-denominator pairs.
-        # mask the exact-zero denominator only: 0*NaN is NaN, which
-        # try_divide does NOT null out, so such pairs stay NaN-kept
+        # mask the exact-zero denominator only: 0*NaN is NaN, so such
+        # pairs stay NaN-kept
         keep = ((cos >= threshold) | np.isnan(cos)) & (den != 0.0)
         ia, ib = np.where((ids[:, None] < ids[None, :]) & keep)
         # Arrow, not pandas: the pandas->Arrow conversion turns float
         # NaN into NULL, which would silently rewrite the kept
-        # NaN-cosine pairs to NULL cosine (diverging from the
-        # expression path and DuckDB, both of which emit NaN).
+        # NaN-cosine pairs to NULL cosine (diverging from DuckDB, which
+        # emits NaN).
         return pa.table(
             {
                 "id_a": pa.array(ids[ia]),
@@ -665,7 +488,6 @@ def repeated_ngram_spans(
     text_col: str,
     n: int = 6,
     min_docs: int = 2,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Exact-substring dedup, detection stage (the distributed analog of
     suffix-array exact-substring dedup a la Lee et al. 2022): word
@@ -682,26 +504,16 @@ def repeated_ngram_spans(
     The gram-building projection is CPU-bound, so the scan is widened
     with ``fan_out`` first (a no-op on already-parallel cluster scans;
     measured 3.2 s -> 0.8 s at sf0.1 on a single-file local scan).
-    ``kernel="expr"`` (default) builds grams with the JVM HOF
-    expression; the Arrow kernel alternative measured SLOWER at fixture
-    doc sizes (r10 A/B — see ``pipeline.text.exploded_word_ngrams``)."""
+    Grams come from the JVM HOF expression ``word_ngrams``; an Arrow
+    gram kernel measured 5-15 % slower at fixture doc sizes
+    (OPTIMIZATION_r10.md §5)."""
     from data_chunk_compaction_in_duckdb_spark.compaction import fan_out
-    from data_chunk_compaction_in_duckdb_spark.pipeline.text import (
-        exploded_word_ngrams,
-        word_ngrams,
-    )
+    from data_chunk_compaction_in_duckdb_spark.pipeline.text import word_ngrams
 
-    if kernel == "arrow":
-        grams = exploded_word_ngrams(
-            fan_out(docs), id_col, text_col, n, distinct=False
-        )
-    else:
-        grams = fan_out(docs).select(
-            F.col(id_col),
-            F.explode(word_ngrams(text_col, n, distinct=False)).alias(
-                "gram"
-            ),
-        )
+    grams = fan_out(docs).select(
+        F.col(id_col),
+        F.explode(word_ngrams(text_col, n, distinct=False)).alias("gram"),
+    )
     return (
         grams.groupBy("gram")
         .agg(

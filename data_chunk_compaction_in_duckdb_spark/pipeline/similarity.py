@@ -176,7 +176,8 @@ def topk_per_query(
     NULLs last; ``asc`` = NULLs first, values ascending, NaN last; ties
     broken by ``tiebreak_col`` ascending — so partial-then-merge returns
     the identical row set as the single window (pinned by
-    tests/test_similarity_topk_twophase.py).  The kernel runs on
+    tests/test_similarity_topk_twophase.py::
+    test_two_phase_equals_single_window).  The kernel runs on
     ``mapInArrow`` rather than pandas because Arrow's validity mask is
     the only thing that keeps NULL and NaN doubles distinguishable
     across the Python boundary."""
@@ -260,80 +261,33 @@ def topk_similar(
     vec_col: str,
     query_id_col: str | None = None,
     k: int = 5,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Exact brute-force top-k: for each query vector, the k most cosine-
     similar corpus vectors (excluding itself when ids collide).
     Deterministic tiebreak (similarity desc, corpus id asc).
 
-    ``kernel="arrow"`` (default) collects the query set driver-side
-    (|Q| x dim doubles — the same bounded model-size contract as
-    ``build_adc_luts``; the expression form broadcast the identical
-    rows) and fuses scoring + the per-partition top-k prune into ONE
-    ``mapInArrow`` pass over the corpus: no join, no per-pair
-    interpreted HOF fold — each partition emits at most |Q| * k rows
-    into the exact merge window.  The numpy kernel replays the
-    expression path's FP semantics bit-for-bit (dim-sequential
-    left-fold dots/norms, NULL on a zero denominator exactly like
-    Spark's non-ANSI ``/``, NaN pass-through) — pinned by
-    tests/test_similarity_topk_twophase.py's kernel-vs-expr A/B.
-    ``kernel="expr"`` keeps the broadcast-NL + expression form.
-    Corpus-side cost and shuffle shape are unchanged: one scan, no
-    corpus shuffle (fan_out's widening aside), partial-before-merge."""
+    Collects the query set driver-side (|Q| x dim doubles — the same
+    bounded model-size contract as ``build_adc_luts``) and fuses scoring
+    + the per-partition top-k prune into ONE ``mapInArrow`` pass over
+    the corpus: no join, no per-pair interpreted HOF fold — each
+    partition emits at most |Q| * k rows into the exact merge window.
+    The numpy kernel's FP semantics: dim-sequential left-fold dots and
+    norms, NULL on a zero denominator (Spark's non-ANSI ``/`` and
+    DuckDB's ``x/0.0``), NaN pass-through ranked first — pinned against
+    a plain Python reference by
+    tests/test_similarity_topk_twophase.py::test_topk_similar_matches_python_reference.
+    Corpus-side cost and shuffle shape: one scan, no corpus shuffle
+    (fan_out's widening aside), partial-before-merge."""
     qid = query_id_col or id_col
     from data_chunk_compaction_in_duckdb_spark.compaction import fan_out
 
-    if kernel == "arrow":
-        # the numpy kernel's per-row work is tiny — cap the widening by
-        # input size so a few-MB corpus is not split into 32 Python
-        # tasks of pure fixed cost (r10 A/B; see fan_out's docstring).
-        # Partitioning cannot change the result: the per-partition
-        # prune keeps a superset of the global top-k at any split.
-        corpus = fan_out(corpus, bytes_per_task=VEC_KERNEL_BYTES_PER_TASK)
-        return _topk_similar_arrow(corpus, queries, id_col, vec_col, qid, k)
-    # The corpus streams through the interpreted per-pair scoring doing
-    # O(dim) flops per pair — widen a 1-task scan so it runs on all cores.
-    corpus = fan_out(corpus)
-    if kernel != "expr":
-        raise ValueError(f"kernel must be 'arrow' or 'expr', got {kernel!r}")
-
-    def _norm(col: Column) -> Column:
-        return F.sqrt(
-            F.aggregate(
-                F.transform(col, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-
-    # Precompute norms once per side — naive per-pair cosine recomputes
-    # both norms for every (query, candidate) pair, tripling the flops.
-    q = queries.select(
-        F.col(qid).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("_qv"), F.col("_cv"), lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            (dot / (F.col("_qn") * F.col("_cn"))).alias("cosine"),
-        )
-    )
-    return topk_per_query(scored, k)
+    # the numpy kernel's per-row work is tiny — cap the widening by
+    # input size so a few-MB corpus is not split into 32 Python
+    # tasks of pure fixed cost (r10 A/B; see fan_out's docstring).
+    # Partitioning cannot change the result: the per-partition
+    # prune keeps a superset of the global top-k at any split.
+    corpus = fan_out(corpus, bytes_per_task=VEC_KERNEL_BYTES_PER_TASK)
+    return _topk_similar_arrow(corpus, queries, id_col, vec_col, qid, k)
 
 
 def _topk_similar_arrow(
@@ -368,7 +322,7 @@ def _topk_similar_arrow(
         qv = np.array(qvecs, dtype=np.float64)
         nq, dim = qv.shape
         qn_sq = np.zeros(nq)
-        for j in range(dim):  # dim-sequential fold == expression path
+        for j in range(dim):  # dim-sequential left fold
             qn_sq = qn_sq + qv[:, j] * qv[:, j]
         qn = np.sqrt(qn_sq)
         qids = np.array(qids_py)
@@ -705,7 +659,6 @@ def ivf_ann_topk(
     n_clusters: int = 16,
     n_probe: int = 4,
     centroids: list[list[float]] | None = None,
-    rerank: str = "cell",
     corpus_cells: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN (the other scale path next to lsh_ann_topk):
@@ -723,20 +676,16 @@ def ivf_ann_topk(
     training is itself deterministic (fixed init + exact means), so
     reproducibility is kept.  Recall vs brute force is pinned by test.
 
-    ``rerank`` picks the scoring kernel (same contract as
-    ``dedup.semantic_ivf_neardup_pairs``): ``"cell"`` (default) cogroups
-    corpus cells with query probes and computes each cell's query x
-    corpus cosine matrix in one Arrow batch — vectors cross the Arrow
-    boundary once per cell membership / probe, never once per pair, and
-    the numpy kernel reproduces the expression path's dim-sequential
-    IEEE fold, NULL on a zero denominator (both engines' x/0.0) and NaN
-    pass-through, so results are bit-identical; ``"pair"`` keeps the
-    per-pair expression form for A/B verification."""
+    Scoring is a numpy kernel chosen by the input: an ad-hoc corpus
+    takes ``_ivf_fused_topk`` (one pass), a stored ``corpus_cells``
+    relation takes ``_ivf_cogroup_rerank`` (per-cell cogroup).  Both
+    cross the Arrow boundary once per vector or probe, never once per
+    pair, and share one FP contract: dim-sequential left-fold dots and
+    norms, NULL on a zero denominator (both engines' x/0.0) and NaN
+    pass-through ranked first — pinned against a plain Python reference
+    by tests/test_pipeline.py::test_ivf_ann_topk_matches_python_reference."""
     qid = query_id_col or id_col
     from data_chunk_compaction_in_duckdb_spark.compaction import fan_out
-    from data_chunk_compaction_in_duckdb_spark.pipeline.dedup import (
-        _assign_cells_arrow,
-    )
 
     # widen a 1-task local scan for the assignment kernel, capped by
     # input size (r10): every corpus-side pass here is a vectorized
@@ -744,47 +693,29 @@ def ivf_ann_topk(
     # task overhead (interleaved A/B: 0.82 -> 0.56 s med at sf0.1)
     corpus = fan_out(corpus, bytes_per_task=VEC_KERNEL_BYTES_PER_TASK)
     cents = centroids or [_centroid(dim, i) for i in range(n_clusters)]
-    # Corpus-side assignment rides the numpy Arrow kernel (same reason
-    # as pq_codes/dedup: Catalyst has no HOF codegen, so the
-    # rows x cells x dim interpreted fold was the sf1 bottleneck); its
-    # (-dot asc, idx asc, NaN last) ranking IS the oracle's
-    # list_sort(struct(-dot, i)) order.  The id join-back is
-    # co-partitioned narrow traffic; ``corpus_cells`` (an (id, _cell)
-    # relation, e.g. IVFIndex's versioned store) skips the assignment
-    # entirely — at 100 TB it IS materialized at ingest (the
-    # partition-prune layout) and never recomputed per query.
-    if corpus_cells is not None:
-        cells = corpus_cells.select(
-            F.col(id_col).alias("match_id"), "_cell"
-        )
-    elif rerank == "cell":
+    if corpus_cells is None:
         # Ad-hoc corpus (cells computed on the fly): ONE fused Arrow
         # pass — assign cells, filter candidates against the broadcast
         # probe set, score, per-partition top-k — instead of
         # assignment + id join-back + cell cogroup, which executed the
         # widened corpus subtree 4x across AQE stages (guide §2.4).
-        # Bit-identical by construction (same folds/ranking conventions
-        # as _assign_cells_arrow, _nearest_clusters and the cogroup
-        # kernel); pinned by test_ivf_cell_rerank_equals_pair_rerank,
-        # which A/Bs this path against rerank="pair" incl. zero-norm
-        # and NaN vectors.  The stored-index variants keep the cogroup —
-        # at 100 TB the index IS the partition-prune layout.
+        # Its assignment ranking is _assign_cells_arrow's, i.e. the
+        # oracle's list_sort(struct(-dot, i)) order.
         return _ivf_fused_topk(
             corpus, queries, id_col, vec_col, qid, k, cents, n_probe
         )
-    else:
-        cells = _assign_cells_arrow(
-            corpus, id_col, vec_col, cents, 1
-        ).withColumnRenamed("_id", "match_id")
+    # ``corpus_cells`` (an (id, _cell) relation, e.g. IVFIndex's
+    # versioned store) skips the assignment entirely — at 100 TB it IS
+    # materialized at ingest (the partition-prune layout) and never
+    # recomputed per query.  The id join-back is co-partitioned narrow
+    # traffic.
+    cells = corpus_cells.select(F.col(id_col).alias("match_id"), "_cell")
     cb = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("_cv"),
-        _vec_norm(F.col(vec_col)).alias("_cn"),
+        F.col(id_col).alias("match_id"), F.col(vec_col).alias("_cv")
     ).join(cells, "match_id")
     qb = queries.select(
         F.col(qid).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        _vec_norm(F.col(vec_col)).alias("_qn"),
         F.explode(
             F.slice(
                 _nearest_clusters(vec_col, dim, n_clusters, centroids),
@@ -793,50 +724,12 @@ def ivf_ann_topk(
             )
         ).alias("_cell"),
     )
-    if rerank == "cell":
-        scored = _ivf_cogroup_rerank(
-            cb.select("_cell", "match_id", "_cv"),
-            qb.select("_cell", "query_id", "_qv"),
-            corpus.schema[id_col].dataType,
-            k,
-        )
-    elif rerank == "pair":
-        # dedupe SLIM id pairs (multi-probe can hit the same pair
-        # through several cells), then rejoin the vectors for the
-        # rerank — the dropDuplicates shuffle moves 2 ids per row
-        # instead of 2 ids + 2 dim-length vectors
-        cands = (
-            cb.select("match_id", "_cell")
-            .join(F.broadcast(qb.select("query_id", "_cell")), "_cell")
-            .drop("_cell")
-            .filter(F.col("query_id") != F.col("match_id"))
-            .dropDuplicates(["query_id", "match_id"])
-        )
-        # norms hoisted to once per vector; bit-identical per-pair value
-        scored = (
-            cands.join(
-                F.broadcast(
-                    qb.select("query_id", "_qv", "_qn").dropDuplicates(
-                        ["query_id"]
-                    )
-                ),
-                "query_id",
-            )
-            .join(cb.select("match_id", "_cv", "_cn"), "match_id")
-            .select(
-                "query_id",
-                "match_id",
-                # try_divide: zero-norm vector -> denominator 0 ->
-                # NULL, matching DuckDB's x/0.0 and the cell kernel's
-                # validity mask (ANSI Divide would raise)
-                F.try_divide(
-                    _vec_dot(F.col("_qv"), F.col("_cv")),
-                    F.col("_qn") * F.col("_cn"),
-                ).alias("cosine"),
-            )
-        )
-    else:
-        raise ValueError(f"rerank must be 'cell' or 'pair', got {rerank!r}")
+    scored = _ivf_cogroup_rerank(
+        cb.select("_cell", "match_id", "_cv"),
+        qb.select("_cell", "query_id", "_qv"),
+        corpus.schema[id_col].dataType,
+        k,
+    )
     return topk_per_query(scored, k)
 
 
@@ -981,10 +874,10 @@ def _ivf_cogroup_rerank(
     """Cogrouped per-cell scoring for ``ivf_ann_topk``: each Voronoi
     cell's corpus vectors meet the queries probing that cell in ONE
     Arrow batch and the full query x corpus cosine matrix is computed
-    in numpy with the expression path's exact FP semantics:
+    in numpy with these FP semantics:
 
     - dots and norms accumulate dim-sequentially — ((0 + t0) + t1) + …
-      — the zip_with/aggregate left-fold order;
+      — a plain left fold;
     - a zero denominator yields NULL (Spark's non-ANSI ``/`` and
       DuckDB's ``x/0.0`` both return NULL), carried through Arrow's
       validity mask;

@@ -40,8 +40,10 @@ def word_ngrams(col: Column | str, n: int, distinct: bool = True) -> Column:
 
     Documents shorter than ``n`` words yield one gram (the whole text) so
     every non-empty document contributes at least one row downstream —
-    the convention the contamination/top-k operators rely on.  Pure
-    built-ins (split/sequence/transform/slice), so the expression stays
+    the convention the contamination/top-k operators rely on.  A NULL
+    text yields ``[NULL]``, so exploding it emits one (id, NULL) row
+    (pinned by tests/test_pipeline.py::test_word_ngrams_pinned_rows).
+    Pure built-ins (split/sequence/transform/slice), so the expression stays
     inside whole-stage codegen and is replayable in DuckDB as
     list_transform over list_slice."""
     c = F.col(col) if isinstance(col, str) else col
@@ -53,147 +55,12 @@ def word_ngrams(col: Column | str, n: int, distinct: bool = True) -> Column:
     return F.array_distinct(grams) if distinct else grams
 
 
-def exploded_word_ngrams(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    distinct: bool = False,
-) -> DataFrame:
-    """``explode(word_ngrams(text, n, distinct))`` as (id, gram) rows,
-    with the gram ASSEMBLY vectorized in an Arrow kernel (guide §4.2).
-
-    Tokenization stays the JVM ``split(trim(text), '\\s+')`` — the same
-    authoritative Java regex as ``word_ngrams``, so no third regex
-    engine's whitespace semantics can creep in; the kernel receives the
-    token arrays and only slices/joins them with single spaces, byte-for-
-    byte what ``array_join(slice(words, i, n), ' ')`` produces (pinned by
-    ``tests/test_pipeline.py::test_exploded_word_ngrams_bitexact``).
-    MEASURED NEGATIVE at fixture scale (r10, OPTIMIZATION_r10.md §5,
-    interleaved 7-rep A/B at sf0.1): arrow 1.35/1.10/1.76 s vs expr
-    1.23/0.96/1.60 s med on contamination / repeated-spans / duplicate-
-    fraction — the Arrow transpose of the token arrays out and the gram
-    strings back costs MORE than the interpreted HOF chain it replaces
-    on these small (~100-word) documents.  The n-gram query paths
-    therefore default to the expression form (``kernel="expr"``); this
-    kernel stays as the measured, bit-exact alternative for corpora with
-    long documents where the per-gram HOF interpretation dominates the
-    one-off boundary crossing.
-
-    Gram conventions replicated exactly: a document shorter than ``n``
-    words yields ONE gram (the whole text); a NULL text yields no rows
-    (explode of NULL); ``distinct`` dedups per document inside the
-    kernel (each document is one Arrow row, so per-batch dedup is
-    complete — no extra shuffle)."""
-    from pyspark.sql import types as T
-
-    id_field = docs.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType, True),
-            T.StructField("gram", T.StringType(), True),
-        ]
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        sep = " "
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            la = batch.column(1)
-            rows = batch.num_rows
-            ids = batch.column(0)
-            valid = pc.is_valid(la).to_numpy(zero_copy_only=False)
-            lens = (
-                pc.fill_null(pc.list_value_length(la), 0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            # flatten() skips null list slots, so offsets built from the
-            # null-filled lengths stay aligned with the flat token array
-            flat = la.flatten()
-            off = np.zeros(rows + 1, dtype=np.int64)
-            np.cumsum(lens, out=off[1:])
-            # gram count per doc: max(len - (n-1), 1).  A NULL words
-            # array yields exactly ONE NULL gram — size(NULL)=NULL,
-            # greatest skips it, and array_join(slice(NULL)) is NULL —
-            # so explode emits one (id, NULL) row, replicated here.
-            # (split() always yields >= 1 token, but guard len == 0.)
-            g = np.where(
-                valid, np.where(lens == 0, 0, np.maximum(lens - (n - 1), 1)), 1
-            )
-            total = int(g.sum())
-            if total == 0:
-                continue
-            doc_sel = np.repeat(np.arange(rows), g)
-            within = np.arange(total) - np.repeat(np.cumsum(g) - g, g)
-            starts = off[doc_sel] + within
-            vsel = valid[doc_sel]
-            full = vsel & (lens[doc_sel] - within >= n)
-            short = vsel & ~full
-
-            out_ids = []
-            out_grams = []
-            if full.any():
-                s = starts[full]
-                parts = [flat.take(pa.array(s + j)) for j in range(n)]
-                out_grams.append(
-                    pc.binary_join_element_wise(*parts, sep)
-                )
-                out_ids.append(ids.take(pa.array(doc_sel[full])))
-            if short.any():
-                # short documents: ONE gram = all words joined (the
-                # truncated-slice convention of word_ngrams).  binary_join
-                # has no kernel for list<string not null>; cast to the
-                # plain nullable-element list type first.
-                short_rows = doc_sel[short]
-                sl = pc.cast(
-                    la.take(pa.array(short_rows)), pa.list_(pa.string())
-                )
-                out_grams.append(pc.binary_join(sl, sep))
-                out_ids.append(ids.take(pa.array(short_rows)))
-            if not vsel.all():
-                null_rows = doc_sel[~vsel]
-                out_grams.append(pa.nulls(len(null_rows), pa.string()))
-                out_ids.append(ids.take(pa.array(null_rows)))
-            ids_out = pa.concat_arrays(
-                [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in out_ids]
-            )
-            grams_out = pa.concat_arrays(
-                [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in out_grams]
-            )
-            if distinct:
-                keep = (
-                    pa.table({"_i": ids_out, "_g": grams_out})
-                    .to_pandas()
-                    .duplicated()
-                    .to_numpy()
-                )
-                if keep.any():
-                    sel = pa.array(np.nonzero(~keep)[0])
-                    ids_out = ids_out.take(sel)
-                    grams_out = grams_out.take(sel)
-            yield pa.record_batch(
-                [ids_out, grams_out], names=[id_col, "gram"]
-            )
-
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    return docs.select(F.col(id_col), words.alias("_w")).mapInArrow(
-        gen, out_schema
-    )
-
-
 def ngram_contamination(
     docs: DataFrame,
     bench: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 5,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Benchmark-contamination check: for each candidate document, the
     fraction of its distinct word ``n``-grams that also occur anywhere in
@@ -219,15 +86,9 @@ def ngram_contamination(
     from data_chunk_compaction_in_duckdb_spark.compaction import fan_out
 
     docs = fan_out(docs)  # single-file local scans plan as one task
-    # kernel="expr" (default): r10 measured the Arrow gram kernel SLOWER
-    # at fixture doc sizes (see exploded_word_ngrams); the expression
-    # form stays authoritative, the kernel stays A/B-able.
-    if kernel == "arrow":
-        cand = exploded_word_ngrams(docs, id_col, text_col, n, distinct=True)
-    else:
-        cand = docs.select(
-            F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("gram")
-        )
+    cand = docs.select(
+        F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("gram")
+    )
     bgrams = bench.select(
         F.explode(word_ngrams(text_col, n)).alias("gram")
     ).distinct()

@@ -475,7 +475,6 @@ class IVFIndex:
         queries: DataFrame,
         k: int = 5,
         n_probe: int = 4,
-        rerank: str = "cell",
         version: int | None = None,
         check_coverage: bool = False,
     ) -> DataFrame:
@@ -503,6 +502,5 @@ class IVFIndex:
             n_clusters=mt["n_clusters"],
             n_probe=n_probe,
             centroids=mt["centroids"],
-            rerank=rerank,
             corpus_cells=self.cells(version),
         )

@@ -248,43 +248,107 @@ def test_ivf_ann_recall_vs_bruteforce(spark, sf_dir):
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
-def test_ivf_cell_rerank_equals_pair_rerank(spark, sf_dir):
-    """The cogrouped Arrow rerank (default) must produce the identical
-    (query, match, cosine) result as the per-pair expression form —
-    including on degenerate inputs: a zero-norm vector (NULL cosine in
-    both: try_divide / validity mask) and a NaN-element vector (true
-    NaN cosine in both, ranked first by the desc top-k)."""
+def _fold_dot(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _cosine_key(c):
+    """NULL and NaN stay distinct; other doubles compare bit-exactly."""
+    import math
+    import struct
+
+    if c is None:
+        return None
+    return "nan" if math.isnan(c) else struct.pack("<d", c)
+
+
+def test_ivf_ann_topk_matches_python_reference(spark, sf_dir):
+    """Both IVF scoring kernels — the fused one-pass kernel (ad-hoc
+    corpus) and the per-cell cogroup (stored ``corpus_cells``) — return
+    exactly the rows of a plain-Python IVF top-k: left-fold dots,
+    ``math.sqrt`` norms, corpus cell = lowest of ``(isnan(dot), -dot,
+    idx)``, query probes in ``_nearest_clusters``'s order (NaN first,
+    dot desc, idx desc), top-k by (NaN first, cosine desc, NULL last,
+    match_id).  Degenerate rows, as corpus vectors and as queries: a
+    zero-norm vector has NULL cosine (0 denominator), a NaN-element
+    vector has NaN cosine, kept and ranked first."""
     import math
 
     from data_chunk_compaction_in_duckdb_spark.catalog import load_table
     from data_chunk_compaction_in_duckdb_spark.pipeline import ivf_ann_topk
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    bad = spark.createDataFrame(
-        [(900001, [0.0] * 64), (900002, [float("nan")] + [1.0] * 63)],
-        "vec_id bigint, embedding array<double>",
+    from data_chunk_compaction_in_duckdb_spark.pipeline.dedup import (
+        _assign_cells_arrow,
     )
-    full = emb.select("vec_id", F.col("embedding").cast("array<double>")).unionAll(bad)
-    queries = full.filter(F.col("vec_id") % 50 == 0)
+    from data_chunk_compaction_in_duckdb_spark.pipeline.similarity import (
+        _centroid,
+    )
 
-    def rows(rerank):
-        out = set()
-        for r in ivf_ann_topk(
-            full, queries, "vec_id", "embedding", dim=64, k=5,
-            n_clusters=8, n_probe=4, rerank=rerank,
-        ).collect():
-            c = r["cosine"]
-            key = (
-                "null" if c is None
-                else "nan" if math.isnan(c)
-                else round(c, 12)
-            )
-            out.add((r["query_id"], r["match_id"], key))
-        return out
+    dim, n_clusters, n_probe, k = 64, 8, 4, 5
+    zero, nan_row = 900001, 900002
+    emb = load_table(spark, sf_dir, "embeddings").limit(200)
+    rows = [
+        (r[0], list(r[1]))
+        for r in emb.select(
+            "vec_id", F.col("embedding").cast("array<double>")
+        ).collect()
+    ]
+    rows += [(zero, [0.0] * dim), (nan_row, [float("nan")] + [1.0] * (dim - 1))]
+    full = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    queries = full.filter((F.col("vec_id") % 50 == 0) | (F.col("vec_id") >= zero))
 
-    a, b = rows("cell"), rows("pair")
-    assert a == b
-    assert a, "fixture must produce matches"
+    cents = [_centroid(dim, i) for i in range(n_clusters)]
+
+    def nan_or(d, v):
+        return 0.0 if math.isnan(d) else v
+
+    def cell_of(v):
+        dots = [_fold_dot(v, c) for c in cents]
+        return min(range(n_clusters),
+                   key=lambda i: (math.isnan(dots[i]), nan_or(dots[i], -dots[i]), i))
+
+    def probes(v):
+        dots = [_fold_dot(v, c) for c in cents]
+        order = sorted(range(n_clusters),
+                       key=lambda i: (not math.isnan(dots[i]),
+                                      nan_or(dots[i], -dots[i]), -i))
+        return set(order[:n_probe])
+
+    def cosine(a, b):
+        den = math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
+        return None if den == 0.0 else _fold_dot(a, b) / den
+
+    def rank(c, mid):
+        if c is None:
+            return (2, 0.0, mid)
+        return (0, 0.0, mid) if math.isnan(c) else (1, -c, mid)
+
+    vecs = dict(rows)
+    cells = {i: cell_of(v) for i, v in rows}
+    want = set()
+    for qid in [i for i, _ in rows if i % 50 == 0 or i >= zero]:
+        ps = probes(vecs[qid])
+        scored = [(cosine(vecs[qid], vecs[m]), m)
+                  for m in vecs if m != qid and cells[m] in ps]
+        for c, m in sorted(scored, key=lambda t: rank(*t))[:k]:
+            want.add((qid, m, _cosine_key(c)))
+
+    stored = _assign_cells_arrow(full, "vec_id", "embedding", cents, 1)
+    for corpus_cells in (None, stored.withColumnRenamed("_id", "vec_id")):
+        got = {
+            (r["query_id"], r["match_id"], _cosine_key(r["cosine"]))
+            for r in ivf_ann_topk(
+                full, queries, "vec_id", "embedding", dim=dim, k=k,
+                n_clusters=n_clusters, n_probe=n_probe,
+                corpus_cells=corpus_cells,
+            ).collect()
+        }
+        assert got == want, corpus_cells is None
+    assert any(m == nan_row and c == "nan" for q, m, c in want if q < zero)
+    zero_rows = [c for q, _, c in want if q == zero]
+    assert len(zero_rows) == k and all(c is None for c in zero_rows)
 
 
 def test_ivf_trained_centroids_deterministic_and_competitive(spark, sf_dir):
@@ -919,14 +983,14 @@ def test_literal_array_bitexact(spark):
             assert _struct.pack("<d", x) == _struct.pack("<d", y), (x, y)
 
 
-def test_exploded_word_ngrams_bitexact(spark):
-    """The Arrow gram-assembly kernel must reproduce the expression path
-    (explode(word_ngrams(...))) byte-for-byte on every edge class: short
-    docs (whole-text gram), exact-n docs, empty text, NULL text, multi/
-    exotic whitespace (tokenized by the SAME JVM split in both paths),
-    repeated grams, unicode, and both distinct modes."""
+def test_word_ngrams_pinned_rows(spark):
+    """explode(word_ngrams(text, n, distinct)) yields exactly these
+    hand-written (doc_id, gram) rows on every edge class: short docs
+    (whole-text gram), exact-n docs, empty text (one "" gram), NULL text
+    (one NULL gram), whitespace runs and a tab (Java ``\\s+``), repeated
+    grams, unicode, and NBSP (not ``\\s`` in Java, so it stays inside a
+    token)."""
     from data_chunk_compaction_in_duckdb_spark.pipeline.text import (
-        exploded_word_ngrams,
         word_ngrams,
     )
 
@@ -935,24 +999,71 @@ def test_exploded_word_ngrams_bitexact(spark):
         (2, "one two"),                      # shorter than n
         (3, "exactly three words"),          # == n for n=3
         (4, ""),                             # empty -> one "" gram
-        (5, None),                           # NULL -> no rows
+        (5, None),                           # NULL -> one NULL gram
         (6, "  leading   and\ttrailing  "),  # \s+ run + tab
         (7, "x x x x x x"),                  # repeated grams
         (8, "héllo wörld ünïcode grams hére"),
-        (9, "a b c d"),                 # NBSP is NOT \s in Java
+        (9, "a\u00a0b c d"),                 # NBSP is NOT \s in Java
         (10, "one"),
     ]
+    # the same for every n below (no doc here has more than 2 words)
+    fixed = [(2, "one two"), (4, ""), (5, None), (10, "one")]
+    # n -> (doc_id, gram) rows with multiplicity (distinct=False)
+    expected = {
+        2: [
+            (1, "a b"), (1, "b c"), (1, "c d"), (1, "d e"), (1, "e f"),
+            (1, "f g"),
+            (3, "exactly three"), (3, "three words"),
+            (6, "leading and"), (6, "and trailing"),
+            (7, "x x"), (7, "x x"), (7, "x x"), (7, "x x"), (7, "x x"),
+            (8, "héllo wörld"), (8, "wörld ünïcode"), (8, "ünïcode grams"),
+            (8, "grams hére"),
+            (9, "a\u00a0b c"), (9, "c d"),
+        ],
+        3: [
+            (1, "a b c"), (1, "b c d"), (1, "c d e"), (1, "d e f"),
+            (1, "e f g"),
+            (3, "exactly three words"),
+            (6, "leading and trailing"),
+            (7, "x x x"), (7, "x x x"), (7, "x x x"), (7, "x x x"),
+            (8, "héllo wörld ünïcode"), (8, "wörld ünïcode grams"),
+            (8, "ünïcode grams hére"),
+            (9, "a\u00a0b c d"),
+        ],
+        5: [
+            (1, "a b c d e"), (1, "b c d e f"), (1, "c d e f g"),
+            (3, "exactly three words"),
+            (6, "leading and trailing"),
+            (7, "x x x x x"), (7, "x x x x x"),
+            (8, "héllo wörld ünïcode grams hére"),
+            (9, "a\u00a0b c d"),
+        ],
+        6: [
+            (1, "a b c d e f"), (1, "b c d e f g"),
+            (3, "exactly three words"),
+            (6, "leading and trailing"),
+            (7, "x x x x x x"),
+            (8, "héllo wörld ünïcode grams hére"),
+            (9, "a\u00a0b c d"),
+        ],
+    }
+
+    def srt(pairs):
+        return sorted(pairs, key=lambda t: (t[0], t[1] is None, t[1] or ""))
+
     docs = spark.createDataFrame(rows, "doc_id INT, text STRING")
-    for n in (2, 3, 5, 6):
+    for n, grams in expected.items():
         for distinct in (False, True):
-            expr = docs.select(
+            want = grams + fixed
+            if distinct:  # per-document dedup; only doc 7 repeats
+                want = list(dict.fromkeys(want))
+            got = docs.select(
                 F.col("doc_id"),
                 F.explode(word_ngrams("text", n, distinct)).alias("gram"),
             )
-            kern = exploded_word_ngrams(docs, "doc_id", "text", n, distinct)
-            a = sorted((r.doc_id, r.gram) for r in expr.collect())
-            b = sorted((r.doc_id, r.gram) for r in kern.collect())
-            assert a == b, (n, distinct, a[:5], b[:5])
+            assert srt((r.doc_id, r.gram) for r in got.collect()) == srt(
+                want
+            ), (n, distinct)
     # cross-check an aggregate consumer end-to-end (the repeated-span
     # detection shape) on a corpus with genuine cross-doc repeats
     corpus = spark.createDataFrame(

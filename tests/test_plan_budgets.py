@@ -88,6 +88,11 @@ BUDGETS = {
     # scans; it bought 4x on the 1-task local scan)
     "text_duplicate_gram_fraction": 5,  # both gram subtrees widened +
     # dictionary probe join
+    # batch pipeline jobs; measured identical at sf0.001 and sf0.1
+    "dedup_semantic_ivf_pairs": 2,  # per-cell groupBy + dropDuplicates
+    # on the id pair
+    "contamination_ngram_overlap": 3,  # fan_out widen + bench-gram
+    # distinct + per-doc agg; the bench grams broadcast into the probe
     # third-party suite representatives (identical SQL both engines;
     # Catalyst owns the plan — budgets pin against silent regressions)
     "clickbench_q10": 2,  # region agg + count-distinct expand

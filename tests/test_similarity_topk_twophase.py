@@ -78,14 +78,14 @@ def test_partial_phase_precedes_merge_window(spark, scored):
     assert 0 <= win_pos < arrow_pos, plan[:2000]
 
 
-def test_topk_similar_kernel_matches_expr(spark):
-    """The fused Arrow brute-force kernel must reproduce the expression
-    path bit-for-bit (same dots, same NULL/NaN handling, same top-k
-    total order) on double and float32 vectors."""
+def test_topk_similar_matches_python_reference(spark):
+    """The fused Arrow brute-force kernel returns exactly the rows of a
+    plain-Python top-k — left-fold dots, ``math.sqrt`` norms, order
+    (NaN first, cosine desc, NULL last, match_id) — bit-for-bit, on
+    double and float32 vectors.  A NaN-element corpus vector has a NaN
+    cosine against every query, kept and ranked first."""
     import random
     import struct as _struct
-
-    from pyspark.sql import functions as F
 
     from data_chunk_compaction_in_duckdb_spark.pipeline.similarity import (
         topk_similar,
@@ -93,31 +93,51 @@ def test_topk_similar_kernel_matches_expr(spark):
 
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(200)]
+    rows.append((200, [float("nan")] + [1.0] * 15))
     emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
 
-    def key(rs):
-        return sorted(
-            (
-                r.query_id,
-                r.match_id,
-                None if r.cosine is None else _struct.pack("<d", r.cosine),
-            )
-            for r in rs
-        )
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def cos(a, b):
+        den = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+        return None if den == 0.0 else dot(a, b) / den
+
+    def rank(c, mid):
+        if c is None:
+            return (2, 0.0, mid)
+        return (0, 0.0, mid) if math.isnan(c) else (1, -c, mid)
+
+    def key(q, m, c):
+        if c is None:
+            return (q, m, None)
+        return (q, m, "nan" if math.isnan(c) else _struct.pack("<d", c))
 
     for cast in (None, "array<float>"):
         c = emb if cast is None else emb.withColumn(
             "embedding", F.col("embedding").cast(cast)
         )
         q = c.filter(F.col("vec_id") % 13 == 0)
-        a = key(topk_similar(c, q, "vec_id", "embedding", k=5, kernel="arrow").collect())
-        b = key(topk_similar(c, q, "vec_id", "embedding", k=5, kernel="expr").collect())
-        assert a == b and len(a) == 80
+        vecs = {r[0]: [float(x) for x in r[1]] for r in c.collect()}
+        want = set()
+        for qid in [i for i in vecs if i % 13 == 0]:
+            scored = [(cos(vecs[qid], vecs[m]), m) for m in vecs if m != qid]
+            for cv, m in sorted(scored, key=lambda t: rank(*t))[:5]:
+                want.add(key(qid, m, cv))
+        got = {
+            key(r.query_id, r.match_id, r.cosine)
+            for r in topk_similar(c, q, "vec_id", "embedding", k=5).collect()
+        }
+        assert got == want and len(got) == 80, cast
+        assert {m for (qid, m, cv) in got if cv == "nan"} == {200}
 
 
 def test_topk_similar_kernel_zero_norm_yields_null(spark):
     """Zero-norm corpus vectors produce NULL cosine in the Arrow kernel
-    (the try_divide / IVF-kernel convention; the ANSI expression path
+    (DuckDB's x/0.0 and the IVF kernels' convention; an ANSI ``/``
     would raise instead — the fixture domain has no zero vectors)."""
     from pyspark.sql import functions as F
 
@@ -128,7 +148,7 @@ def test_topk_similar_kernel_zero_norm_yields_null(spark):
     rows = [(0, [1.0, 2.0]), (1, [2.0, 1.0]), (2, [0.0, 0.0])]
     emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
     out = topk_similar(
-        emb, emb.filter("vec_id = 0"), "vec_id", "embedding", k=5, kernel="arrow"
+        emb, emb.filter("vec_id = 0"), "vec_id", "embedding", k=5
     ).collect()
     got = {r.match_id: r.cosine for r in out}
     assert got[2] is None and got[1] is not None
