@@ -291,25 +291,22 @@ class Engine:
 
         return settings.sub_outside_literals(_CATALOG_TF_RE, to_view, query)
 
-    # -- dml (reference physical_insert/delete/update.cpp): AUTOCOMMIT
-    #    onto the versioned store, or staged in the open transaction
+    # -- dml (reference physical_insert/delete/update.cpp): each
+    #    statement is one verb on its target — staged in the open
+    #    transaction, or the VersionedTable verb's one-statement commit
 
     def _dml(self, query: str, args: tuple, params: dict):
+        from pyspark.sql import functions as F
+
+        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (  # noqa: E501
+            prefix_source,
+        )
         from data_chunk_compaction_in_duckdb_spark.storage import dmlsql
 
-        txn = self._txn
         trunc = dmlsql.parse_truncate(query)
         if trunc is not None:
             vt = self._require_versioned(trunc)
-            from pyspark.sql import functions as F
-
-            if txn is not None:
-                txn.delete_where(trunc, vt, F.lit(True))
-                self._rebind_staged(trunc, vt)
-            else:
-                vt.delete_where(F.lit(True))
-                vt.read().createOrReplaceTempView(trunc)
-            return None
+            return self._mutate(trunc, vt, "delete_where", F.lit(True))
         ins = dmlsql.parse_insert(query)
         if ins is not None:
             name, collist, body, mode = ins
@@ -325,12 +322,11 @@ class Engine:
             # list, listed columns bind positionally and unlisted ones
             # take NULL (the store has no column defaults, matching
             # DuckDB's defaultless-column NULL).
-            from pyspark.sql import functions as F
-
             from data_chunk_compaction_in_duckdb_spark.storage import (
                 VersionedTable as _VT,
             )
 
+            txn = self._txn
             m = (
                 txn.table(name, vt).m
                 if txn is not None
@@ -380,118 +376,62 @@ class Engine:
                         "is a no-op"
                     )
                 key_cols = list(pk[0]["columns"])
-                if mode == "ignore":
-                    current = (
-                        txn.read(name, vt) if txn is not None else vt.read()
-                    )
-                    rows = rows.join(
-                        current.select(*key_cols), key_cols, "left_anti"
-                    )
-                    # falls through to the plain insert below
-                else:  # replace: upsert through the staged merge
-                    if txn is not None:
-                        txn.merge(name, vt, rows, key_cols)
-                        self._rebind_staged(name, vt)
-                    else:
-                        from data_chunk_compaction_in_duckdb_spark.storage.transaction import (  # noqa: E501
-                            _StagedTable,
-                        )
-
-                        st = _StagedTable(vt)
-                        st.merge(rows, key_cols)
-                        st.commit(op="merge")
-                        self._publish_autocommit(name, vt)
-                    return None
-            if txn is not None:
-                txn.insert(name, vt, rows)
-                self._rebind_staged(name, vt)
-            else:
-                vt.insert(rows)
-                self._publish_autocommit(name, vt)
-            return None
+                if mode == "replace":
+                    return self._mutate(name, vt, "merge", rows, key_cols)
+                current = txn.read(name, vt) if txn is not None else vt.read()
+                rows = rows.join(
+                    current.select(*key_cols), key_cols, "left_anti"
+                )
+            return self._mutate(name, vt, "insert", rows)
         dele = dmlsql.parse_delete(query)
         if dele is not None:
             name, where, using = dele
             vt = self._require_versioned(name)
-            from pyspark.sql import functions as F
-
-            if using is not None:
-                # DELETE ... USING (join-delete, reference
-                # physical_delete over a join plan)
-                from data_chunk_compaction_in_duckdb_spark.operators.mutations import (  # noqa: E501
-                    prefix_source,
-                )
-
-                srcname, alias = using
-                src_pref = prefix_source(self.spark.table(srcname))
-                cond = F.expr(
-                    dmlsql.rewrite_qualified(where or "TRUE", name, alias)
-                )
-                if txn is not None:
-                    txn.delete_using(name, vt, src_pref, cond)
-                    self._rebind_staged(name, vt)
-                else:
-                    from data_chunk_compaction_in_duckdb_spark.storage.transaction import (  # noqa: E501
-                        _StagedTable,
-                    )
-
-                    st = _StagedTable(vt)
-                    st.delete_using(src_pref, cond)
-                    st.commit(op="delete")
-                    self._publish_autocommit(name, vt)
-                return None
-            cond = F.expr(where) if where else F.lit(True)
-            if txn is not None:
-                txn.delete_where(name, vt, cond)
-                self._rebind_staged(name, vt)
-            else:
-                vt.delete_where(cond)
-                self._publish_autocommit(name, vt)
-            return None
+            if using is None:
+                cond = F.expr(where) if where else F.lit(True)
+                return self._mutate(name, vt, "delete_where", cond)
+            # DELETE ... USING (join-delete, reference physical_delete
+            # over a join plan)
+            srcname, alias = using
+            src_pref = prefix_source(self.spark.table(srcname))
+            cond = F.expr(
+                dmlsql.rewrite_qualified(where or "TRUE", name, alias)
+            )
+            return self._mutate(name, vt, "delete_using", src_pref, cond)
         upd = dmlsql.parse_update(query)
         if upd is not None:
             name, assigns, where, from_ = upd
             vt = self._require_versioned(name)
-            from pyspark.sql import functions as F
-
-            if from_ is not None:
-                # UPDATE ... FROM (join-update)
-                from data_chunk_compaction_in_duckdb_spark.operators.mutations import (  # noqa: E501
-                    prefix_source,
-                )
-
-                srcname, alias = from_
-                src_pref = prefix_source(self.spark.table(srcname))
-                cond = F.expr(
-                    dmlsql.rewrite_qualified(where or "TRUE", name, alias)
-                )
-                exprs = {
-                    c: F.expr(dmlsql.rewrite_qualified(e, name, alias))
-                    for c, e in assigns.items()
-                }
-                if txn is not None:
-                    txn.update_from(name, vt, src_pref, cond, exprs)
-                    self._rebind_staged(name, vt)
-                else:
-                    from data_chunk_compaction_in_duckdb_spark.storage.transaction import (  # noqa: E501
-                        _StagedTable,
-                    )
-
-                    st = _StagedTable(vt)
-                    st.update_from(src_pref, cond, exprs)
-                    st.commit(op="update")
-                    self._publish_autocommit(name, vt)
-                return None
-            cond = F.expr(where) if where else F.lit(True)
-            exprs = {c: F.expr(e) for c, e in assigns.items()}
-            if txn is not None:
-                txn.update_where(name, vt, cond, exprs)
-                self._rebind_staged(name, vt)
-            else:
-                vt.update_where(cond, exprs)
-                self._publish_autocommit(name, vt)
-            return None
+            if from_ is None:
+                cond = F.expr(where) if where else F.lit(True)
+                exprs = {c: F.expr(e) for c, e in assigns.items()}
+                return self._mutate(name, vt, "update_where", cond, exprs)
+            # UPDATE ... FROM (join-update)
+            srcname, alias = from_
+            src_pref = prefix_source(self.spark.table(srcname))
+            cond = F.expr(
+                dmlsql.rewrite_qualified(where or "TRUE", name, alias)
+            )
+            exprs = {
+                c: F.expr(dmlsql.rewrite_qualified(e, name, alias))
+                for c, e in assigns.items()
+            }
+            return self._mutate(
+                name, vt, "update_from", src_pref, cond, exprs
+            )
         return self._query(query, args, params)
+
+    def _mutate(self, name: str, vt, verb: str, *args: Any) -> None:
+        """Run DML ``verb`` on table ``name``: the Transaction verb then
+        the staged view inside a transaction, else the VersionedTable
+        verb (a one-statement commit) then the committed view.  Both
+        stage on the same storage.versioned._StagedTable."""
+        if self._txn is not None:
+            getattr(self._txn, verb)(name, vt, *args)
+            self._rebind_staged(name, vt)
+        else:
+            getattr(vt, verb)(*args)
+            self._publish_autocommit(name, vt)
 
     # -- prepared statements (reference test/sql/prepared/,
     #    src/main/prepared_statement.cpp)

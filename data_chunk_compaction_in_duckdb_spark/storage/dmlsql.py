@@ -11,8 +11,10 @@ both SQL entry points intercept these statements BEFORE spark.sql and
 route them to the versioned store / view-rebind machinery — the same
 .test text DuckDB executes natively in the dual-engine grids.
 
-Parsers only; execution lives in storage/transaction.py (staged,
-multi-statement atomic) and engine.py (auto-commit).
+Parsers only; ``Engine._mutate`` runs each parsed statement as one
+verb on the open storage/transaction.py ``Transaction`` or, in
+autocommit, on the ``VersionedTable`` — both stage it on
+storage/versioned.py ``_StagedTable``.
 """
 
 from __future__ import annotations

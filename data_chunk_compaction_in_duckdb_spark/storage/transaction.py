@@ -20,13 +20,20 @@ transaction_manager.cpp, test/sql/transactions/):
     — both probed on DuckDB 1.0.  Binder-stage errors (bad column,
     missing table) do NOT abort, also probed.
 
-Scale shape (100 TB): staging is file-granular copy-on-write, same as
-the non-transactional mutations — DELETE/UPDATE locate affected files
-among the not-yet-rewritten base files (a distributed distinct-file
-scan, never a row collect), carry untouched files by reference, and
-compose rewrites LAZILY on the staged frames.  COMMIT writes each
-table's pending rows once (one union, one write job) and publishes one
-manifest; a 50-statement transaction costs one data-write pass, not 50.
+One DML path: a transaction keeps one ``versioned._StagedTable`` per
+table it touches, and that class is also the whole algorithm of every
+autocommit ``VersionedTable`` verb (a one-statement transaction).  So a
+statement stages identically inside and outside BEGIN..COMMIT; only
+what happens after it differs — an autocommit verb publishes base+1 at
+once, a transaction keeps staging until COMMIT.
+
+Scale shape (100 TB): staging is file-granular copy-on-write —
+DELETE/UPDATE locate affected files among the not-yet-rewritten base
+files (a distributed distinct-file scan, never a row collect), carry
+untouched files by reference, and compose rewrites LAZILY on the staged
+frames.  COMMIT writes each table's pending rows once (one union, one
+write job) and publishes one manifest; a 50-statement transaction costs
+one data-write pass, not 50.
 
 Cross-table atomicity: with a root transaction log (storage/txnlog.py,
 ``Engine.enable_atomic_commit``) COMMIT prepares every table's data
@@ -41,15 +48,14 @@ compensation on a mid-sequence conflict.
 from __future__ import annotations
 
 from collections.abc import Mapping
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from data_chunk_compaction_in_duckdb_spark.storage.versioned import (
     CommitConflictError,
     ConstraintViolation,
     VersionedTable,
+    _StagedTable,
 )
 
 
@@ -61,330 +67,6 @@ class TransactionAborted(RuntimeError):
             "TransactionContext Error: Current transaction is aborted "
             "(please ROLLBACK)"
         )
-
-
-class _StagedTable:
-    """Per-table staging: ``carry`` (base files not yet rewritten, moved
-    by reference at commit) + ``pending`` (lazy DataFrames of rewritten/
-    inserted rows, written once at commit)."""
-
-    def __init__(self, vt: VersionedTable):
-        self.vt = vt
-        self.base = vt.latest_version()
-        self.m = vt._manifest(self.base)
-        self.carry: set[str] = set(self.m["files"])
-        self.pending: list[DataFrame] = []
-
-    # -- reads -----------------------------------------------------------
-
-    def _stored_cols(self) -> list[str]:
-        return list(self.m["mapping"])
-
-    def _with_generated(self, df: DataFrame) -> DataFrame:
-        return VersionedTable._apply_generated(
-            df.select(*self._stored_cols()), self.m
-        )
-
-    def read(self) -> DataFrame:
-        """The transaction's view of the table: carried base files plus
-        every staged frame (read-your-own-writes)."""
-        frames: list[DataFrame] = []
-        if self.carry:
-            frames.append(self.vt._read_files_logical(self.m, self.carry))
-        frames += [self._with_generated(p) for p in self.pending]
-        if not frames:
-            schema = VersionedTable._logical_schema(self.m)
-            empty = self.vt.spark.createDataFrame([], schema)
-            return VersionedTable._apply_generated(empty, self.m)
-        return reduce(DataFrame.unionByName, frames)
-
-    # -- mutations (all validate at statement time, like the reference:
-    #    a ConstraintViolation here aborts the enclosing transaction) ----
-
-    def insert(self, rows: DataFrame) -> None:
-        aligned = rows.select(*self._stored_cols())
-        self.vt._validate(
-            aligned, self.m.get("constraints", []), current=self.read()
-        )
-        self.pending.append(aligned)
-
-    def _affected_carry(self, cond: Column) -> set[str]:
-        """Files among ``carry`` containing rows matching cond — the
-        same metadata-sized distinct-file collect the non-transactional
-        mutations use (versioned.py _affected_files), restricted to the
-        not-yet-rewritten base files."""
-        if not self.carry:
-            return set()
-        from data_chunk_compaction_in_duckdb_spark.storage.versioned import (
-            _strip_uri,
-        )
-        import os
-
-        cur = self.vt._read_files_logical(self.m, self.carry).withColumn(
-            "_vt_file", F.input_file_name()
-        )
-        hits = cur.filter(cond).select("_vt_file").distinct().collect()
-        return {
-            os.path.relpath(_strip_uri(r["_vt_file"]), self.vt.path)
-            for r in hits
-        }
-
-    def delete_where(self, cond: Column) -> None:
-        keep = ~cond | cond.isNull()
-        affected = self._affected_carry(cond)
-        new_pending = [
-            self._with_generated(p).filter(keep) for p in self.pending
-        ]
-        if affected:
-            new_pending.append(
-                self.vt._read_files_logical(self.m, affected).filter(keep)
-            )
-            self.carry -= affected
-        self.pending = new_pending
-
-    def update_where(
-        self, cond: Column, assignments: Mapping[str, Column]
-    ) -> None:
-        stored = set(self._stored_cols())
-        bad = [c for c in assignments if c not in stored]
-        if bad:
-            raise ValueError(
-                f"Binder Error: cannot UPDATE column(s) {bad} — not a "
-                "stored column (generated columns are computed at read)"
-            )
-
-        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (
-            apply_assignments,
-        )
-
-        def proj(df: DataFrame) -> DataFrame:
-            out = apply_assignments(df, cond, assignments)
-            # generated columns are recomputed from the post-update
-            # stored values by _with_generated at the next read
-            return out.select(*self._stored_cols())
-
-        affected = self._affected_carry(cond)
-        new_pending = [proj(self._with_generated(p)) for p in self.pending]
-        if affected:
-            new_pending.append(
-                proj(self.vt._read_files_logical(self.m, affected))
-            )
-            self.carry -= affected
-        self.pending = new_pending
-        cons = self.m.get("constraints", [])
-        row_checks = [
-            c for c in cons if c["type"] in ("not_null", "check")
-        ]
-        if row_checks and new_pending:
-            self.vt._validate(
-                reduce(DataFrame.unionByName, new_pending),
-                row_checks,
-                current=None,
-            )
-        pk_touched = [
-            c
-            for c in cons
-            if c["type"] == "primary_key"
-            and set(c["columns"]) & set(assignments)
-        ]
-        if pk_touched:
-            # key-touching UPDATE: the staged POST-state must stay unique
-            self.vt._validate(self.read(), pk_touched, current=None)
-
-    def _affected_carry_join(self, src_pref: DataFrame, cond: Column) -> set[str]:
-        """Files among ``carry`` whose rows have ANY source match under
-        the join predicate — the join-DML sibling of _affected_carry."""
-        if not self.carry:
-            return set()
-        import os
-
-        from data_chunk_compaction_in_duckdb_spark.storage.versioned import (
-            _strip_uri,
-        )
-
-        cur = self.vt._read_files_logical(self.m, self.carry).withColumn(
-            "_vt_file", F.input_file_name()
-        )
-        hits = (
-            cur.join(src_pref, cond, "semi")
-            .select("_vt_file")
-            .distinct()
-            .collect()
-        )
-        return {
-            os.path.relpath(_strip_uri(r["_vt_file"]), self.vt.path)
-            for r in hits
-        }
-
-    def delete_using(self, src_pref: DataFrame, cond: Column) -> None:
-        """DELETE ... USING (join-delete): anti-join survivors, file-
-        granular like delete_where."""
-        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (
-            delete_using,
-        )
-
-        affected = self._affected_carry_join(src_pref, cond)
-        new_pending = [
-            delete_using(self._with_generated(p), src_pref, cond).select(
-                *self._stored_cols()
-            )
-            for p in self.pending
-        ]
-        if affected:
-            new_pending.append(
-                delete_using(
-                    self.vt._read_files_logical(self.m, affected),
-                    src_pref,
-                    cond,
-                ).select(*self._stored_cols())
-            )
-            self.carry -= affected
-        self.pending = new_pending
-
-    def update_from(
-        self,
-        src_pref: DataFrame,
-        cond: Column,
-        assignments: Mapping[str, Column],
-    ) -> None:
-        """UPDATE ... FROM (join-update): matched rows take the source
-        expressions; DuckDB's arbitrary pick under multi-match."""
-        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (
-            update_from,
-        )
-
-        stored = set(self._stored_cols())
-        bad = [c for c in assignments if c not in stored]
-        if bad:
-            raise ValueError(
-                f"Binder Error: cannot UPDATE column(s) {bad} — not a "
-                "stored column"
-            )
-        affected = self._affected_carry_join(src_pref, cond)
-        new_pending = [
-            update_from(
-                self._with_generated(p), src_pref, cond, assignments
-            ).select(*self._stored_cols())
-            for p in self.pending
-        ]
-        if affected:
-            new_pending.append(
-                update_from(
-                    self.vt._read_files_logical(self.m, affected),
-                    src_pref,
-                    cond,
-                    assignments,
-                ).select(*self._stored_cols())
-            )
-            self.carry -= affected
-        self.pending = new_pending
-        cons = self.m.get("constraints", [])
-        row_checks = [c for c in cons if c["type"] in ("not_null", "check")]
-        if row_checks and new_pending:
-            self.vt._validate(
-                reduce(DataFrame.unionByName, new_pending),
-                row_checks,
-                current=None,
-            )
-
-    def merge(self, rows: DataFrame, key_cols: list[str]) -> None:
-        """INSERT OR REPLACE (upsert): same-key rows across carry and
-        pending are replaced by the incoming batch — multi-column keys
-        supported (the non-transactional vt.merge is single-key).
-        Affected carry files come from a distributed semi-join on the
-        keys, collecting file NAMES only."""
-        import os
-
-        from data_chunk_compaction_in_duckdb_spark.storage.versioned import (
-            _strip_uri,
-        )
-
-        aligned = rows.select(*self._stored_cols())
-        cons = self.m.get("constraints", [])
-        self.vt._validate(
-            aligned,
-            [c for c in cons if c["type"] in ("not_null", "check")],
-            current=None,
-        )
-        # replacing table keys is the point of MERGE; uniqueness must
-        # still hold WITHIN the incoming batch
-        self.vt._validate(
-            aligned,
-            [c for c in cons if c["type"] == "primary_key"],
-            current=None,
-        )
-        keys = aligned.select(*key_cols).distinct()
-        new_pending = [
-            self._with_generated(p)
-            .join(keys, key_cols, "left_anti")
-            .select(*self._stored_cols())
-            for p in self.pending
-        ]
-        if self.carry:
-            cur = self.vt._read_files_logical(self.m, self.carry).withColumn(
-                "_vt_file", F.input_file_name()
-            )
-            hits = (
-                cur.join(keys, key_cols, "semi")
-                .select("_vt_file")
-                .distinct()
-                .collect()
-            )
-            affected = {
-                os.path.relpath(_strip_uri(r["_vt_file"]), self.vt.path)
-                for r in hits
-            }
-            if affected:
-                new_pending.append(
-                    self.vt._read_files_logical(self.m, affected)
-                    .join(keys, key_cols, "left_anti")
-                    .select(*self._stored_cols())
-                )
-                self.carry -= affected
-        new_pending.append(aligned)
-        self.pending = new_pending
-
-    def is_noop(self) -> bool:
-        """True when the staged state is byte-identical to the base
-        manifest — the table was only read (or touched by DML that
-        matched no rows).  MVCC read-only participants must NOT publish
-        a version or conflict with concurrent writers (reference:
-        read-only transactions never enter the commit lock,
-        transaction_manager.cpp)."""
-        return not self.pending and self.carry == set(self.m["files"])
-
-    def prepare(self, op: str = "txn") -> dict:
-        """Write this table's data files and build (but NOT publish)
-        the base+1 manifest: carried files by reference, all pending
-        frames folded into a single write pass.  A crash after prepare
-        leaves only orphan data files (vacuum-cleaned); nothing is
-        visible until the manifest links."""
-        new_files: list[str] = []
-        if self.pending:
-            rows = reduce(
-                DataFrame.unionByName,
-                [p.select(*self._stored_cols()) for p in self.pending],
-            )
-            new_files = self.vt._write_data(rows, self.m["mapping"])
-        return self.vt._build_manifest(
-            self.base + 1,
-            op,
-            sorted(self.carry) + new_files,
-            schema=VersionedTable._logical_schema(self.m),
-            mapping=self.m["mapping"],
-            used_physical=self.m["used_physical"],
-            constraints=self.m.get("constraints", []),
-            generated=self.m.get("generated", {}),
-        )
-
-    def commit(self, op: str = "txn") -> int:
-        """One manifest commit at base+1 (prepare + atomic link).  A
-        no-op staged table (read-only within the transaction) commits
-        to its base version without publishing anything."""
-        if self.is_noop():
-            return self.base
-        self.vt._link_manifest(self.prepare(op))
-        return self.base + 1
 
 
 class Transaction:

@@ -42,6 +42,12 @@ match the reference's ALTER ADD COLUMN DEFAULT semantics exactly
 (DuckDB also materializes the default column; an explicit NULL
 inserted later must stay NULL, which a read-time COALESCE would
 repaint).
+
+One DML path: every mutation verb (``insert``, ``delete_where``,
+``update_where``, ``merge``, ``delete_keys``, ``delete_using``,
+``update_from``) stages its statement on a ``_StagedTable`` — the same
+class a BEGIN..COMMIT transaction stages on (storage/transaction.py) —
+and publishes it at base+1 as a one-statement commit.
 """
 
 from __future__ import annotations
@@ -51,7 +57,8 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Mapping
+from collections.abc import Callable, Iterable, Mapping
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -332,12 +339,7 @@ class VersionedTable:
             return self._apply_generated(
                 self.spark.createDataFrame([], schema), m
             )
-        paths = [os.path.join(self.path, f) for f in files]
-        raw = self.spark.read.schema(self._physical_schema(m)).parquet(*paths)
-        projected = raw.select(
-            *[F.col(ph).alias(lg) for lg, ph in m["mapping"].items()]
-        )
-        return self._apply_generated(projected, m)
+        return self._read_files_logical(m, files)
 
     def history(self) -> list[dict]:
         """Commit log, oldest first: version / op / file count.
@@ -444,18 +446,17 @@ class VersionedTable:
         return v + 1
 
     # ---------------------------------------------------------- mutations
+    #
+    # Every DML verb is the same algorithm: stage the statement on a
+    # fresh _StagedTable pinned at the latest version — exactly what a
+    # transaction does per table — and publish base+1.  An autocommit
+    # statement is a one-statement transaction (the reference runs both
+    # through transaction_context.cpp); unlike a transaction, it commits
+    # a version even when it matched nothing.
 
-    def _affected_files(self, cond: Column, version: int) -> set[str]:
-        """Distinct files of ``version`` containing rows matching cond —
-        collects file NAMES only (metadata-sized), never rows."""
-        cur = self.read(version).withColumn("_vt_file", F.input_file_name())
-        rows = cur.filter(cond).select("_vt_file").distinct().collect()
-        return {
-            os.path.relpath(_strip_uri(r["_vt_file"]), self.path)
-            for r in rows
-        }
-
-    def _read_files_logical(self, m: dict, files: set[str]) -> DataFrame:
+    def _read_files_logical(
+        self, m: dict, files: Iterable[str]
+    ) -> DataFrame:
         """Like read() but over a file subset — generated columns ARE
         computed so mutation predicates may reference them; _write_data
         projects them away again (they are never stored)."""
@@ -475,7 +476,9 @@ class VersionedTable:
         base: int | None = None,
     ) -> int:
         """Commit = (``base``'s files − affected) + rewrite(affected) +
-        extras.  Untouched files move by reference.
+        extras.  Untouched files move by reference.  The whole-table
+        rewrites (checkpoint, cluster_by, index rebuilds) commit here;
+        DML goes through _stage_commit.
 
         ``base`` is the version the caller PLANNED against (read its
         manifest, scanned its files) and the commit lands at base+1 —
@@ -505,130 +508,81 @@ class VersionedTable:
         )
         return v + 1
 
+    def _stage_commit(
+        self, op: str, stage: Callable[[_StagedTable], None]
+    ) -> int:
+        """One statement as a one-statement transaction: ``stage`` it on
+        a _StagedTable pinned at the latest version, then publish
+        base+1.  A writer that committed in between makes base+1
+        collide: CommitConflictError, nothing published."""
+        st = _StagedTable(self)
+        stage(st)
+        self._link_manifest(st.prepare(op))
+        return st.base + 1
+
     def insert(self, rows: DataFrame) -> int:
         """INSERT INTO: append-only — zero rewrites, one manifest.
         ``rows`` uses logical column names.  Constraints are enforced
         on the incoming batch (PRIMARY KEY also against the table)."""
-        base = self.latest_version()
-        m = self._manifest(base)
-        self._validate(rows, m.get("constraints", []), current=self.read(base))
-        return self._cow_commit(
-            "insert", set(), None, self._write_data(rows, m["mapping"]),
-            base=base,
-        )
+        return self._stage_commit("insert", lambda st: st.insert(rows))
 
     def delete_where(self, cond: Column) -> int:
         """DELETE WHERE: rewrite only files containing matches, keeping
         their non-matching rows (reference physical_delete.cpp row-id
         deletes; file granularity here)."""
-        base = self.latest_version()
-        affected = self._affected_files(cond, base)
-        if not affected:
-            return self._cow_commit("delete", set(), None, base=base)
-        m = self._manifest(base)
-        survivors = self._read_files_logical(m, affected).filter(
-            ~cond | cond.isNull()
-        )
-        return self._cow_commit("delete", affected, survivors, base=base)
+        return self._stage_commit("delete", lambda st: st.delete_where(cond))
 
     def update_where(
         self, cond: Column, assignments: Mapping[str, Column]
     ) -> int:
         """UPDATE SET ... WHERE: rewrite only affected files with the
-        conditional projection (physical_update.cpp analog)."""
-        base = self.latest_version()
-        affected = self._affected_files(cond, base)
-        if not affected:
-            return self._cow_commit("update", set(), None, base=base)
-        m = self._manifest(base)
-        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (
-            apply_assignments,
+        conditional projection (physical_update.cpp analog).  Assigning
+        a generated or unknown column is a Binder error."""
+        return self._stage_commit(
+            "update", lambda st: st.update_where(cond, assignments)
         )
 
-        updated = apply_assignments(
-            self._read_files_logical(m, affected), cond, assignments
+    def merge(self, updates: DataFrame, key_col: str | list[str]) -> int:
+        """MERGE / upsert on one key column or a list of them: rows in
+        ``updates`` replace same-key rows and append otherwise
+        (physical_insert.cpp ON CONFLICT DO UPDATE).  Only files
+        containing a matched key are rewritten.  Constraints validate
+        the incoming batch; same-key collisions with the table are the
+        point of MERGE, so PRIMARY KEY checks only within the batch."""
+        key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
+        return self._stage_commit(
+            "merge", lambda st: st.merge(updates, key_cols)
         )
-        cons = m.get("constraints", [])
-        self._validate(
-            updated,
-            [c for c in cons if c["type"] in ("not_null", "check")],
-            current=None,
-        )
-        # a key-touching UPDATE must stay unique vs the untouched files
-        pk_touched = [
-            c
-            for c in cons
-            if c["type"] == "primary_key"
-            and set(c["columns"]) & set(assignments)
-        ]
-        if pk_touched:
-            untouched = set(m["files"]) - affected
-            self._validate(
-                updated,
-                pk_touched,
-                current=self._read_files_logical(m, untouched)
-                if untouched
-                else None,
-            )
-        return self._cow_commit("update", affected, updated, base=base)
-
-    def merge(self, updates: DataFrame, key_col: str) -> int:
-        """MERGE / upsert: rows in ``updates`` replace same-key rows and
-        append otherwise (physical_insert.cpp ON CONFLICT DO UPDATE).
-        Only files containing a matched key are rewritten.  Affected
-        files come from a distributed semi-join (collects file names,
-        not keys — the updates side never reaches the driver).
-        Constraints validate the incoming batch; same-key collisions
-        with the table are the point of MERGE, so PRIMARY KEY checks
-        only within the batch."""
-        base = self.latest_version()
-        m = self._manifest(base)
-        self._validate(updates, m.get("constraints", []), current=None)
-        cur = self.read(base).withColumn("_vt_file", F.input_file_name())
-        hits = (
-            cur.join(updates.select(key_col).distinct(), key_col, "semi")
-            .select("_vt_file")
-            .distinct()
-            .collect()
-        )
-        affected = {
-            os.path.relpath(_strip_uri(r["_vt_file"]), self.path)
-            for r in hits
-        }
-        extra = self._write_data(updates, m["mapping"])
-        if not affected:
-            return self._cow_commit("merge", set(), None, extra, base=base)
-        survivors = self._read_files_logical(m, affected).join(
-            updates.select(key_col), key_col, "left_anti"
-        )
-        return self._cow_commit("merge", affected, survivors, extra, base=base)
 
     def delete_keys(self, keys: DataFrame, key_col: str) -> int:
         """DELETE WHERE key IN (SELECT ...) — the anti-join form
-        (reference physical_delete over a semi-join plan).  Affected
-        files come from a distributed semi-join (file names only);
-        survivors anti-join the key set.  The keys side never reaches
-        the driver — this is how a dedup pass deletes its losers from
-        a 100 TB table."""
-        base = self.latest_version()
-        cur = self.read(base).withColumn("_vt_file", F.input_file_name())
-        hits = (
-            cur.join(keys.select(key_col).distinct(), key_col, "semi")
-            .select("_vt_file")
-            .distinct()
-            .collect()
+        (reference physical_delete over a semi-join plan).  The keys
+        side never reaches the driver — this is how a dedup pass
+        deletes its losers from a 100 TB table."""
+        return self._stage_commit(
+            "delete", lambda st: st.delete_keys(keys, [key_col])
         )
-        affected = {
-            os.path.relpath(_strip_uri(r["_vt_file"]), self.path)
-            for r in hits
-        }
-        if not affected:
-            return self._cow_commit("delete", set(), None, base=base)
-        m = self._manifest(base)
-        survivors = self._read_files_logical(m, affected).join(
-            keys.select(key_col).distinct(), key_col, "left_anti"
+
+    def delete_using(self, src_pref: DataFrame, cond: Column) -> int:
+        """DELETE ... USING (join-delete): ``src_pref`` is the source
+        with ``__src_``-prefixed columns (operators/mutations
+        prefix_source) and ``cond`` the join predicate."""
+        return self._stage_commit(
+            "delete", lambda st: st.delete_using(src_pref, cond)
         )
-        return self._cow_commit("delete", affected, survivors, base=base)
+
+    def update_from(
+        self,
+        src_pref: DataFrame,
+        cond: Column,
+        assignments: Mapping[str, Column],
+    ) -> int:
+        """UPDATE ... FROM (join-update) over a prefixed source, as in
+        delete_using."""
+        return self._stage_commit(
+            "update",
+            lambda st: st.update_from(src_pref, cond, assignments),
+        )
 
     # ------------------------------------------------------ schema DDL
 
@@ -966,6 +920,233 @@ class VersionedTable:
                 os.remove(mp)
         return removed
 
+
+class _StagedTable:
+    """The store's one DML algorithm: a table's staged state, pinned at
+    ``base`` = the latest version when created.  ``carry`` holds the
+    base files not yet rewritten (moved by reference at commit) and
+    ``pending`` the lazy DataFrames of rewritten or inserted rows
+    (written once, at commit).  Each VersionedTable verb stages one
+    statement on a fresh instance; a transaction (storage/transaction.py)
+    keeps one per table it touches.
+
+    Every statement validates when staged, like the reference: a
+    ConstraintViolation here aborts the enclosing transaction."""
+
+    def __init__(self, vt: VersionedTable):
+        self.vt = vt
+        self.base = vt.latest_version()
+        self.m = vt._manifest(self.base)
+        self.carry: set[str] = set(self.m["files"])
+        self.pending: list[DataFrame] = []
+
+    # -- reads -----------------------------------------------------------
+
+    def _stored_cols(self) -> list[str]:
+        return list(self.m["mapping"])
+
+    def _with_generated(self, df: DataFrame) -> DataFrame:
+        return VersionedTable._apply_generated(
+            df.select(*self._stored_cols()), self.m
+        )
+
+    def read(self) -> DataFrame:
+        """The staged view of the table: carried base files plus every
+        staged frame (read-your-own-writes)."""
+        frames: list[DataFrame] = []
+        if self.carry:
+            frames.append(self.vt._read_files_logical(self.m, self.carry))
+        frames += [self._with_generated(p) for p in self.pending]
+        if not frames:
+            schema = VersionedTable._logical_schema(self.m)
+            empty = self.vt.spark.createDataFrame([], schema)
+            return VersionedTable._apply_generated(empty, self.m)
+        return reduce(DataFrame.unionByName, frames)
+
+    def _affected_files(
+        self, match: Callable[[DataFrame], DataFrame]
+    ) -> set[str]:
+        """Files among ``carry`` holding a row that ``match`` (a filter
+        or a semi-join of the carried rows) keeps.  A distributed
+        distinct-file collect: file NAMES reach the driver, never rows
+        or keys."""
+        if not self.carry:
+            return set()
+        cur = self.vt._read_files_logical(self.m, self.carry).withColumn(
+            "_vt_file", F.input_file_name()
+        )
+        hits = match(cur).select("_vt_file").distinct().collect()
+        return {
+            os.path.relpath(_strip_uri(r["_vt_file"]), self.vt.path)
+            for r in hits
+        }
+
+    def _rewrite(
+        self,
+        match: Callable[[DataFrame], DataFrame],
+        rewrite: Callable[[DataFrame], DataFrame],
+    ) -> None:
+        """Apply ``rewrite`` to every pending frame and to the carried
+        files ``match`` hits, which leave ``carry``; untouched files stay
+        carried by reference.  Generated columns are computed on the
+        input and dropped from the output (recomputed at read)."""
+        affected = self._affected_files(match)
+        frames = [self._with_generated(p) for p in self.pending]
+        if affected:
+            frames.append(self.vt._read_files_logical(self.m, affected))
+            self.carry -= affected
+        self.pending = [
+            rewrite(f).select(*self._stored_cols()) for f in frames
+        ]
+
+    # -- mutations -------------------------------------------------------
+
+    def insert(self, rows: DataFrame) -> None:
+        aligned = rows.select(*self._stored_cols())
+        self.vt._validate(
+            aligned, self.m.get("constraints", []), current=self.read()
+        )
+        self.pending.append(aligned)
+
+    def delete_where(self, cond: Column) -> None:
+        keep = ~cond | cond.isNull()
+        self._rewrite(lambda df: df.filter(cond), lambda df: df.filter(keep))
+
+    def delete_keys(self, keys: DataFrame, key_cols: list[str]) -> None:
+        """Anti-join delete of the key set: affected files come from a
+        semi-join on the keys."""
+        keys = keys.select(*key_cols).distinct()
+        self._rewrite(
+            lambda df: df.join(keys, key_cols, "semi"),
+            lambda df: df.join(keys, key_cols, "left_anti"),
+        )
+
+    def delete_using(self, src_pref: DataFrame, cond: Column) -> None:
+        """DELETE ... USING (join-delete): anti-join survivors."""
+        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (
+            delete_using,
+        )
+
+        self._rewrite(
+            lambda df: df.join(src_pref, cond, "semi"),
+            lambda df: delete_using(df, src_pref, cond),
+        )
+
+    def update_where(
+        self, cond: Column, assignments: Mapping[str, Column]
+    ) -> None:
+        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (
+            apply_assignments,
+        )
+
+        self._check_assignable(assignments)
+        self._rewrite(
+            lambda df: df.filter(cond),
+            lambda df: apply_assignments(df, cond, assignments),
+        )
+        self._validate_update(assignments)
+
+    def update_from(
+        self,
+        src_pref: DataFrame,
+        cond: Column,
+        assignments: Mapping[str, Column],
+    ) -> None:
+        """UPDATE ... FROM (join-update): matched rows take the source
+        expressions; DuckDB's arbitrary pick under multi-match."""
+        from data_chunk_compaction_in_duckdb_spark.operators.mutations import (
+            update_from,
+        )
+
+        self._check_assignable(assignments)
+        self._rewrite(
+            lambda df: df.join(src_pref, cond, "semi"),
+            lambda df: update_from(df, src_pref, cond, assignments),
+        )
+        self._validate_update(assignments)
+
+    def _check_assignable(self, assignments: Mapping[str, Column]) -> None:
+        bad = [c for c in assignments if c not in self.m["mapping"]]
+        if bad:
+            raise ValueError(
+                f"Binder Error: cannot UPDATE column(s) {bad} — not a "
+                "stored column (generated columns are computed at read)"
+            )
+
+    def _validate_update(self, assignments: Mapping[str, Column]) -> None:
+        cons = self.m.get("constraints", [])
+        row_checks = [c for c in cons if c["type"] in ("not_null", "check")]
+        if row_checks and self.pending:
+            self.vt._validate(
+                reduce(DataFrame.unionByName, self.pending),
+                row_checks,
+                current=None,
+            )
+        pk_touched = [
+            c
+            for c in cons
+            if c["type"] == "primary_key"
+            and set(c["columns"]) & set(assignments)
+        ]
+        if pk_touched:
+            # key-touching UPDATE: the staged POST-state must stay unique
+            self.vt._validate(self.read(), pk_touched, current=None)
+
+    def merge(self, rows: DataFrame, key_cols: list[str]) -> None:
+        """INSERT OR REPLACE (upsert): same-key rows across carry and
+        pending are replaced by the incoming batch.  Replacing table
+        keys is the point of MERGE, so constraints (PRIMARY KEY
+        uniqueness too) validate the batch alone."""
+        aligned = rows.select(*self._stored_cols())
+        self.vt._validate(
+            aligned, self.m.get("constraints", []), current=None
+        )
+        self.delete_keys(aligned, key_cols)
+        self.pending.append(aligned)
+
+    # -- commit ----------------------------------------------------------
+
+    def is_noop(self) -> bool:
+        """True when the staged state is byte-identical to the base
+        manifest — the table was only read (or touched by DML that
+        matched no rows).  MVCC read-only transaction participants must
+        NOT publish a version or conflict with concurrent writers
+        (reference: read-only transactions never enter the commit lock,
+        transaction_manager.cpp)."""
+        return not self.pending and self.carry == set(self.m["files"])
+
+    def prepare(self, op: str = "txn") -> dict:
+        """Write this table's data files and build (but NOT publish)
+        the base+1 manifest: carried files by reference, all pending
+        frames folded into a single write pass.  A crash after prepare
+        leaves only orphan data files (vacuum-cleaned); nothing is
+        visible until the manifest links."""
+        new_files: list[str] = []
+        if self.pending:
+            rows = reduce(
+                DataFrame.unionByName,
+                [p.select(*self._stored_cols()) for p in self.pending],
+            )
+            new_files = self.vt._write_data(rows, self.m["mapping"])
+        return self.vt._build_manifest(
+            self.base + 1,
+            op,
+            sorted(self.carry) + new_files,
+            schema=VersionedTable._logical_schema(self.m),
+            mapping=self.m["mapping"],
+            used_physical=self.m["used_physical"],
+            constraints=self.m.get("constraints", []),
+            generated=self.m.get("generated", {}),
+        )
+
+    def commit(self, op: str = "txn") -> int:
+        """One manifest commit at base+1 (prepare + atomic link).  A
+        no-op staged table (read-only within the transaction) commits
+        to its base version without publishing anything."""
+        if self.is_noop():
+            return self.base
+        self.vt._link_manifest(self.prepare(op))
+        return self.base + 1
 
 def quarantine(df: DataFrame, constraints: list[dict]) -> DataFrame:
     """Constraint quarantine for pipeline loads: instead of rejecting a

@@ -469,11 +469,175 @@ def test_autocommit_dml_keeps_root_log_current(spark, tmp_path):
     # autocommit writes advance the table outside any transaction
     eng.sql("INSERT INTO ta_a6 VALUES (200, 200)")
     eng.sql("DELETE FROM ta_a6 WHERE k = 0")
-    assert eng.snapshot_versions()["ta_a6"] == 3  # note() kept it fresh
+    eng.sql("TRUNCATE tb_a6")
+    snap = eng.snapshot_versions()
+    assert snap["ta_a6"] == 3 and snap["tb_a6"] == 1  # note() kept it fresh
     # a later transaction must commit cleanly (no false conflict)
     eng.sql("BEGIN")
     eng.sql("INSERT INTO ta_a6 VALUES (300, 300)")
     eng.sql("INSERT INTO tb_a6 VALUES (300, 300)")
     eng.sql("COMMIT")
     snap = eng.snapshot_versions()
-    assert snap["ta_a6"] == 4 and snap["tb_a6"] == 1
+    assert snap["ta_a6"] == 4 and snap["tb_a6"] == 2
+    assert eng.sql("SELECT k FROM tb_a6").collect() == [(300,)]
+
+
+# --- one DML algorithm: autocommit is a one-statement transaction
+
+_PARITY = {
+    "insert": "INSERT INTO {t} VALUES (100, 1000), (101, 1010)",
+    "insert_or_replace": "INSERT OR REPLACE INTO {t} VALUES (2, 222), (9, 999)",
+    "insert_or_ignore": "INSERT OR IGNORE INTO {t} VALUES (3, 0), (10, 100)",
+    "delete": "DELETE FROM {t} WHERE k < 3",
+    "delete_using": "DELETE FROM {t} USING par_src WHERE {t}.k = par_src.sk",
+    "update": "UPDATE {t} SET v = v + 1 WHERE k % 2 = 0",
+    "update_from": (
+        "UPDATE {t} SET v = par_src.w FROM par_src WHERE {t}.k = par_src.sk"
+    ),
+    "truncate": "TRUNCATE {t}",
+}
+
+
+@pytest.mark.parametrize("stmt", sorted(_PARITY))
+def test_autocommit_matches_transaction(spark, tmp_path, stmt):
+    """Each statement gives the same rows autocommit and inside
+    BEGIN..COMMIT (on a twin table), and each adds exactly one
+    version."""
+    eng = Engine(spark=spark, register=False)
+    df = spark.range(8).selectExpr("id AS k", "id * 10 AS v")
+    pk = [{"type": "primary_key", "columns": ["k"]}]
+    for t in ("par_auto", "par_txn"):
+        eng.create_versioned_table(t, df, str(tmp_path / t), constraints=pk)
+    spark.createDataFrame(
+        [(1, -1), (4, -4), (6, -6)], "sk BIGINT, w BIGINT"
+    ).createOrReplaceTempView("par_src")
+
+    def rows(t):
+        return sorted(
+            tuple(r) for r in eng.sql(f"SELECT k, v FROM {t}").collect()
+        )
+
+    before = rows("par_auto")
+    eng.sql(_PARITY[stmt].format(t="par_auto"))
+    eng.sql("BEGIN")
+    eng.sql(_PARITY[stmt].format(t="par_txn"))
+    eng.sql("COMMIT")
+    assert rows("par_auto") == rows("par_txn") != before
+    for t in ("par_auto", "par_txn"):
+        assert eng._versioned[t].latest_version() == 1
+
+
+def test_update_from_key_collision_rejected(spark, tmp_path):
+    """UPDATE ... FROM that assigns a primary key checks the post-state
+    for duplicates, as UPDATE ... WHERE does (DuckDB raises a
+    constraint error)."""
+    eng = Engine(spark=spark, register=False)
+    vt = eng.create_versioned_table(
+        "ufk", spark.range(4).selectExpr("id AS k", "id AS v"),
+        str(tmp_path / "ufk"),
+        constraints=[{"type": "primary_key", "columns": ["k"]}],
+    )
+    spark.createDataFrame([(1, 2)], "sk BIGINT, nk BIGINT") \
+        .createOrReplaceTempView("ufk_src")
+    with pytest.raises(ConstraintViolation, match="PRIMARY KEY"):
+        eng.sql("UPDATE ufk SET k = ufk_src.nk FROM ufk_src "
+                "WHERE ufk.k = ufk_src.sk")
+    assert vt.latest_version() == 0
+
+
+def _random_dml(rng, fresh, live: list[int], in_txn: bool) -> str:
+    """One random DML statement on ``dtab(k, v)`` / ``dsrc(sk, w)`` in
+    text both engines run; ``live`` is the table's committed keys.
+    INSERT keys are fresh; OR REPLACE runs autocommit only, so no key
+    is deleted and re-inserted inside one transaction (DuckDB 1.0's
+    over-eager unique check rejects that)."""
+    kinds = ["insert", "update", "update", "delete", "delete_using",
+             "update_from"]
+    kind = rng.choice(kinds if in_txn else [*kinds, "replace", "replace"])
+    if kind == "insert":
+        vals = ", ".join(
+            f"({next(fresh)}, {rng.randint(0, 500)})"
+            for _ in range(rng.randint(1, 3))
+        )
+        return f"INSERT INTO dtab VALUES {vals}"
+    if kind == "replace":
+        return (
+            f"INSERT OR REPLACE INTO dtab VALUES ({rng.choice(live)}, "
+            f"{rng.randint(0, 500)}), ({next(fresh)}, {rng.randint(0, 500)})"
+        )
+    if kind == "update":
+        expr = rng.choice(["v + 7", "v * 3 % 1000", "k + v % 11"])
+        pred = rng.choice(
+            ["k % 4 = 1", "v > 300", "k BETWEEN 5 AND 12", "v % 3 = 0"]
+        )
+        return f"UPDATE dtab SET v = {expr} WHERE {pred}"
+    if kind == "delete":
+        pred = rng.choice(
+            ["k % 7 = 3", "v BETWEEN 100 AND 160",
+             f"k = {rng.choice(live)}"]
+        )
+        return f"DELETE FROM dtab WHERE {pred}"
+    if kind == "delete_using":
+        return (
+            "DELETE FROM dtab USING dsrc WHERE dtab.k = dsrc.sk "
+            f"AND dsrc.w < {rng.randint(-40, -10)}"
+        )
+    return "UPDATE dtab SET v = v + dsrc.w FROM dsrc WHERE dtab.k = dsrc.sk"
+
+
+@pytest.mark.slow
+def test_dml_differential_vs_duckdb(spark, tmp_path):
+    """Seeded random INSERT / UPDATE / DELETE (with USING, FROM and OR
+    REPLACE forms), some autocommit and some grouped in BEGIN..COMMIT
+    or ROLLBACK, replayed as the same text in DuckDB; the sorted rows
+    must agree after every group."""
+    import itertools
+    import random
+
+    import duckdb
+
+    rng = random.Random(1313)
+    fresh = itertools.count(1000)
+    src = sorted(  # unique source keys, over old and fresh target keys
+        {
+            rng.choice([rng.randrange(20), rng.randrange(1000, 1030)]):
+            rng.randint(-50, -1)
+            for _ in range(14)
+        }.items()
+    )
+    eng = Engine(spark=spark, register=False)
+    eng.create_versioned_table(
+        "dtab", spark.range(20).selectExpr("id AS k", "id * 10 AS v"),
+        str(tmp_path / "dtab"),
+        constraints=[{"type": "primary_key", "columns": ["k"]}],
+    )
+    spark.createDataFrame(src, "sk BIGINT, w BIGINT") \
+        .createOrReplaceTempView("dsrc")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE dtab (k BIGINT PRIMARY KEY, v BIGINT)")
+    con.execute("INSERT INTO dtab SELECT range, range * 10 FROM range(20)")
+    con.execute("CREATE TABLE dsrc (sk BIGINT, w BIGINT)")
+    con.executemany("INSERT INTO dsrc VALUES (?, ?)", src)
+    n_stmts = 0
+    while n_stmts < 40:
+        live = [k for (k,) in con.execute("SELECT k FROM dtab ORDER BY k")
+                .fetchall()]
+        if rng.random() < 0.6:
+            group = [_random_dml(rng, fresh, live, in_txn=False)]
+        else:
+            group = [
+                "BEGIN",
+                *[_random_dml(rng, fresh, live, in_txn=True)
+                  for _ in range(rng.randint(2, 4))],
+                "COMMIT" if rng.random() < 0.7 else "ROLLBACK",
+            ]
+        for stmt in group:
+            eng.sql(stmt)
+            con.execute(stmt)
+        n_stmts += len(group) - 2 if len(group) > 1 else 1
+        got = sorted(
+            tuple(r) for r in eng.sql("SELECT k, v FROM dtab").collect()
+        )
+        want = con.execute("SELECT k, v FROM dtab ORDER BY k").fetchall()
+        assert got == want, group
+    con.close()

@@ -15,6 +15,7 @@ from data_chunk_compaction_in_duckdb_spark.storage import (
     ConstraintViolation,
     VersionedTable,
 )
+from data_chunk_compaction_in_duckdb_spark.storage.versioned import _StagedTable
 
 
 @pytest.fixture()
@@ -53,7 +54,7 @@ def test_delete_rewrites_only_affected_files(vt):
     n_match = vt.read().filter(cond).count()
     assert n_match > 0
     before = vt.read().count()
-    affected = vt._affected_files(cond, vt.latest_version())
+    affected = _StagedTable(vt)._affected_files(lambda df: df.filter(cond))
     v = vt.delete_where(cond)
     m = vt._manifest(v)
     untouched = set(vt._manifest(0)["files"]) - affected
@@ -383,6 +384,36 @@ def test_stored_column_guards_against_generated_refs(gvt):
         gvt.rename_column("o_totalprice", "price")
     with pytest.raises(ValueError, match="already exists"):
         gvt.add_column("is_urgent", "string")
+
+
+def test_update_of_generated_or_unknown_column_is_binder_error(
+    gvt, spark, tmp_path
+):
+    """Autocommit UPDATE raises the Binder error BEGIN..COMMIT raises,
+    and publishes nothing — on the Python verb and through Engine.sql."""
+    from data_chunk_compaction_in_duckdb_spark.engine import Engine
+
+    v = gvt.latest_version()
+    for col in ("total_cents", "nosuch"):
+        with pytest.raises(ValueError, match="Binder Error: cannot UPDATE"):
+            gvt.update_where(F.lit(True), {col: F.lit(0)})
+    assert gvt.latest_version() == v
+    eng = Engine(spark=spark, register=False)
+    g = eng.create_versioned_table(
+        "g", spark.range(3).selectExpr("id AS k", "id AS v"),
+        str(tmp_path / "g"), generated={"v2": "v * 2"},
+    )
+    for stmt in ("UPDATE g SET v2 = 0", "UPDATE g SET nosuch = 0"):
+        with pytest.raises(ValueError, match="Binder Error: cannot UPDATE"):
+            eng.sql(stmt)
+        eng.sql("BEGIN")
+        with pytest.raises(ValueError, match="Binder Error: cannot UPDATE"):
+            eng.sql(stmt)
+        eng.sql("COMMIT")
+    assert g.latest_version() == 0
+    assert sorted(
+        tuple(r) for r in eng.sql("SELECT k, v, v2 FROM g").collect()
+    ) == [(0, 0, 0), (1, 1, 2), (2, 2, 4)]
 
 
 # ------------------------------------------------------ zone-map skipping
