@@ -14,6 +14,7 @@ query.  A file with any column whose inferred type depends on more than
 its footer type (e.g. other timestamp units or zones, unsigned ints,
 binary, struct, map, INT96), or with Spark's own row metadata, falls back
 to `spark.read.parquet`'s inference, which is one Spark job per table.
+`table_rows` reads a table's row count from the same footer.
 """
 
 from __future__ import annotations
@@ -72,22 +73,28 @@ def footer_type(t, ntz: bool) -> T.DataType | None:
     return _FOOTER_TYPES.get(str(t))
 
 
-def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The schema ``spark.read.parquet(path)`` would infer, read from the
-    local file's parquet footer without a Spark job; None when any column
-    needs Spark's own inference (see `_FOOTER_TYPES`) or ``path`` is not
-    a readable local parquet file.  Every field is nullable, as Spark
-    makes every file-source column."""
+def _footer(path: str):
+    """The local parquet file's footer metadata, or None when ``path`` is
+    not a readable local parquet file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     if not os.path.isfile(path):
         return None
     try:
-        md = pq.read_metadata(path)
+        return pq.read_metadata(path)
     except (OSError, pa.ArrowException):
         return None
-    if _SPARK_ROW_METADATA in (md.metadata or {}):
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from the
+    local file's parquet footer without a Spark job; None when any column
+    needs Spark's own inference (see `_FOOTER_TYPES`) or ``path`` is not
+    a readable local parquet file.  Every field is nullable, as Spark
+    makes every file-source column."""
+    md = _footer(path)
+    if md is None or _SPARK_ROW_METADATA in (md.metadata or {}):
         return None
     ntz = (
         spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled").lower()
@@ -100,6 +107,17 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
             return None
         fields.append(T.StructField(f.name, dt, True))
     return T.StructType(fields)
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of a fixture table: the footer's ``num_rows`` when the
+    table is one readable local parquet file (no Spark job), else
+    ``count()`` over `load_table`, the same fallback rule as
+    `footer_schema`."""
+    md = _footer(os.path.join(sf_dir, f"{name}.parquet"))
+    if md is None:
+        return load_table(spark, sf_dir, name).count()
+    return md.num_rows
 
 
 # (applicationId, sf_dir, name) -> base DataFrame.  A DataFrame here is a

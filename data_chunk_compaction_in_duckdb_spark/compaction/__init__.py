@@ -14,7 +14,11 @@ small-file problem.  This package provides:
 - profiler.py   partition-size stats + chunk-factor metrics
                 (BeeProfiler/ZebraProfiler/HashJoinProfiler analog)
 - compact.py    compact()/pipeline_break() DataFrame operators
-                (CompactingPhysicalOperator / PhysicalPipelineBreaker)
+                (CompactingPhysicalOperator / PhysicalPipelineBreaker);
+                like the reference, compact() decides on the input it
+                holds: one that already fits in one wave of the
+                session's task slots passes through with no Spark job,
+                only wider inputs pay for the partition histogram
 - tuner.py      UCB1 multi-armed bandit learning target sizes per named
                 stage (CompactTuner/MultiArmedBandit)
 - auto.py       AutoCompactFrame — the operator-wrapper analog: filters/

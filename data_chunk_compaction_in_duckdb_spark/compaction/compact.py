@@ -67,14 +67,22 @@ def compact(
     `run_stage_tuned` (integration.py): the bandit picks target_rows,
     this function executes the move.
 
-    Computes the partition histogram (one narrow JVM-side aggregation)
-    first; already-compact inputs return as-is under every strategy but
-    ``full`` (the reference's pass-through when the chunk is >=
-    threshold, physical_operator.cpp:262-266).
+    ``binary`` and ``dynamic`` decide on the input they hold, as the
+    reference does (no look-ahead pass, physical_operator.cpp:250-311):
+    when the planned partition count is at most the session's task slots
+    (``defaultParallelism``) the input already runs in one wave of tasks
+    and returns as-is, with no histogram job.  Merging it could save at
+    most n - 1 task launches; the histogram costs a re-run of the whole
+    upstream subtree.  This is the reference's pass-through for a chunk
+    at or above the threshold (physical_operator.cpp:262-266) at Spark's
+    unit of work.
 
-    At 100 TB the histogram job is the same scan AQE already does for its
-    runtime statistics; call compact() after selective filters/joins
-    where AQE's stage boundary isn't available (mid-stage narrow chains).
+    Wider inputs, and every ``logical``/``full`` call, get the partition
+    histogram (one narrow JVM-side aggregation) first; already-compact
+    inputs return as-is under every strategy but ``full``.  At 100 TB the
+    histogram job is the same scan AQE already does for its runtime
+    statistics; call compact() after selective filters/joins where AQE's
+    stage boundary isn't available (mid-stage narrow chains).
     """
     if strategy not in STRATEGIES:
         raise ValueError(
@@ -83,7 +91,15 @@ def compact(
         )
     if strategy == "none":
         return df
-    hist = partition_histogram(df)
+    # The physical RDD's partition count: planning only, except that
+    # under AQE an input ending in an exchange runs its map stage here.
+    n = df._jdf.queryExecution().toRdd().getNumPartitions()
+    if (
+        strategy in ("binary", "dynamic")
+        and n <= df.sparkSession.sparkContext.defaultParallelism
+    ):
+        return df  # one wave of tasks already
+    hist = partition_histogram(df, n_partitions=n)
     if hist.n_rows == 0 or hist.n_partitions <= 1:
         return df
     needed = max(1, -(-hist.n_rows // target_rows))  # ceil

@@ -14,24 +14,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def partition_row_counts(df: DataFrame) -> list[int]:
+def partition_row_counts(df: DataFrame, n_partitions: int | None = None) -> list[int]:
     """Rows per partition, index-aligned (empty partitions report 0).
 
     ``df.rdd.getNumPartitions()`` and the pids observed inside the
     groupBy can disagree: each is its own query execution, and AQE may
     coalesce them differently (observed: pid 34 from a 32-partition
     rdd view).  Size by whichever is larger so an AQE mismatch degrades
-    to extra trailing zeros instead of an IndexError."""
+    to extra trailing zeros instead of an IndexError.
+
+    ``n_partitions`` is the planned count when the caller already read
+    it (compact() does), so the plan is not built twice."""
     # JVM-side partition probe — identical count to df.rdd without
-    # building the Python-serialized RDD (~540 ms driver cost per call;
-    # this sits in compact()'s per-invocation path).
-    n = df._jdf.queryExecution().toRdd().getNumPartitions()
+    # building the Python-serialized RDD (~540 ms driver cost per call).
+    if n_partitions is None:
+        n_partitions = df._jdf.queryExecution().toRdd().getNumPartitions()
     rows = (
         df.groupBy(F.spark_partition_id().alias("_pid"))
         .agg(F.count(F.lit(1)).alias("_n"))
         .collect()
     )
-    out = [0] * max([n] + [r["_pid"] + 1 for r in rows])
+    out = [0] * max([n_partitions] + [r["_pid"] + 1 for r in rows])
     for r in rows:
         out[r["_pid"]] = r["_n"]
     return out
@@ -57,8 +60,10 @@ class PartitionHistogram:
         return self.undersized_fraction > threshold
 
 
-def partition_histogram(df: DataFrame) -> PartitionHistogram:
-    counts = partition_row_counts(df)
+def partition_histogram(
+    df: DataFrame, n_partitions: int | None = None
+) -> PartitionHistogram:
+    counts = partition_row_counts(df, n_partitions)
     if not counts:
         return PartitionHistogram(0, 0, 0, 0, 0.0, 0, 0, 0.0)
     total = sum(counts)

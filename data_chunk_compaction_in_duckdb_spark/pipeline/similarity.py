@@ -557,10 +557,12 @@ def _nearest_clusters(
     n_clusters: int,
     centroids: list[list[float]] | None = None,
 ) -> Column:
-    """Array of cluster ids ordered by descending dot(v, centroid) —
-    one fixed linear-algebra expression, JVM-side, no shuffle.  Default
-    centroids are the deterministic md5 directions; pass the output of
-    ``train_ivf_centroids`` for data-adapted cells."""
+    """Array of cluster ids, nearest first: ascending (-dot(v, centroid),
+    id), so ties go to the lower id and NaN dots come last (Spark orders
+    NaN above every number) — the oracle's ``list_sort(struct(-dot, i))``
+    order.  One fixed linear-algebra expression, JVM-side, no shuffle.
+    Default centroids are the deterministic md5 directions; pass the
+    output of ``train_ivf_centroids`` for data-adapted cells."""
     cents = centroids or [_centroid(dim, i) for i in range(n_clusters)]
     # one transform over the literal centroid matrix, not n_clusters
     # separate dot expressions — see _codebook_scores for why; built by
@@ -575,9 +577,9 @@ def _nearest_clusters(
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        return F.struct(dot.alias("dot"), i.cast("int").alias("idx"))
+        return F.struct((-dot).alias("negdot"), i.cast("int").alias("idx"))
 
-    ranked = F.sort_array(F.transform(cents_lit, entry), asc=False)
+    ranked = F.sort_array(F.transform(cents_lit, entry))
     return F.transform(ranked, lambda s: s.idx)
 
 
@@ -750,13 +752,11 @@ def _ivf_fused_topk(
 
     Exactness contracts (each replicating the path it replaces):
 
-    - corpus cell = ``np.argsort(-dots, stable)[:, 0]`` over the
-      dim-sequential dot fold — ``_assign_cells_arrow``'s ranking (ties
-      -> low idx, NaN dots -> last);
-    - query probes = dots desc with ties -> HIGH idx and NaN dots
-      first — ``_nearest_clusters``'s ``sort_array(struct(dot, idx),
-      asc=False)`` order (struct comparison descends both fields; NaN
-      is greatest);
+    - corpus cell and query probes share one ranking,
+      ``np.argsort(-dots, stable)`` over the dim-sequential dot fold
+      (ties -> low idx, NaN dots -> last): ``_assign_cells_arrow``'s
+      cell and ``_nearest_clusters``'s probe order, i.e. the oracle's
+      ``list_sort(struct(-dot, i))``;
     - cosine/top-k semantics identical to ``_ivf_cogroup_rerank``'s
       kernel (NULL on zero denominator, NaN pass-through, NaN-first
       desc order, match-id tiebreak)."""
@@ -791,9 +791,7 @@ def _ivf_fused_topk(
             qdots = qdots + qv[:, j][:, None] * cm[:, j][None, :]
             qn_sq = qn_sq + qv[:, j] * qv[:, j]
         qn = np.sqrt(qn_sq)
-        vk = np.where(np.isnan(qdots), -np.inf, -qdots)
-        idx = np.broadcast_to(np.arange(ncells), (nq, ncells))
-        order = np.lexsort((-idx, vk), axis=1)
+        order = np.argsort(-qdots, axis=1, kind="stable")
         probe_mask = np.zeros((nq, ncells), dtype=bool)
         take = min(n_probe, ncells)
         np.put_along_axis(probe_mask, order[:, :take], True, axis=1)

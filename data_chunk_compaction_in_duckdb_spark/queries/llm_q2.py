@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_chunk_compaction_in_duckdb_spark.catalog import load_table
+from data_chunk_compaction_in_duckdb_spark.catalog import load_table, table_rows
 from data_chunk_compaction_in_duckdb_spark.queries.llm_q import (
     _components_doubling_sql,
 )
@@ -442,15 +442,13 @@ def dedup_semantic_ivf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     setting degraded to 35x the sf0.1 time (round-4 bench) while the
     rule keeps scaling linear.  The oracle applies the SAME rule in SQL
     (GREATEST(8, COUNT(*) // 250)) and re-derives the md5 centroids
-    in-query, so the value check holds at every SF, sf1 included.  The
-    count() is one scalar job — model-sized driver state, same budget
-    class as the ANN trainers' collects."""
+    in-query, so the value check holds at every SF, sf1 included."""
     from data_chunk_compaction_in_duckdb_spark.pipeline import (
         semantic_ivf_neardup_pairs,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n_clusters = max(8, emb.count() // 250)
+    n_clusters = max(8, table_rows(spark, sf_dir, "embeddings") // 250)
     out = semantic_ivf_neardup_pairs(
         emb, "vec_id", "embedding", dim=64, n_clusters=n_clusters,
         n_assign=2, threshold=0.25,

@@ -199,6 +199,9 @@ class VersionedTable:
         # statistics, src/storage/statistics/, lifted to file grain):
         # carried-forward files reuse the previous manifest's entry, new
         # files get one parquet-footer read each — O(new files), local.
+        # A new file whose footer counts 0 rows (the survivors of a
+        # TRUNCATE, or of a DELETE that empties whole files) leaves the
+        # file set: no later read or lookup opens it.
         prev_stats: dict = {}
         if version > 0:
             try:
@@ -209,12 +212,14 @@ class VersionedTable:
         for f in files:
             entry = prev_stats.get(f)
             if entry is None:
-                entry = _file_stats(os.path.join(self.path, f))
+                n_rows, entry = _file_stats(os.path.join(self.path, f))
+                if n_rows == 0:
+                    continue
             stats[f] = entry
         return {
             "version": version,
             "op": op,
-            "files": sorted(files),
+            "files": sorted(stats),
             "schema": schema.json(),
             "mapping": mapping,
             "used_physical": used_physical,
@@ -1003,8 +1008,12 @@ class _StagedTable:
 
     def insert(self, rows: DataFrame) -> None:
         aligned = rows.select(*self._stored_cols())
+        cons = self.m.get("constraints", [])
+        # Only new primary keys are checked against the staged table;
+        # skip building its relation for every other INSERT.
+        has_pk = any(c["type"] == "primary_key" for c in cons)
         self.vt._validate(
-            aligned, self.m.get("constraints", []), current=self.read()
+            aligned, cons, current=self.read() if has_pk else None
         )
         self.pending.append(aligned)
 
@@ -1187,11 +1196,11 @@ def quarantine(df: DataFrame, constraints: list[dict]) -> DataFrame:
 # ------------------------------------------------------- file skipping
 
 
-def _file_stats(path: str) -> dict[str, list]:
-    """Per-file zone map from the parquet footer: physical column →
-    [min, max] across row groups (None when the writer recorded no
-    stats, e.g. for binary/nested columns).  Footer-only — never reads
-    data pages."""
+def _file_stats(path: str) -> tuple[int, dict[str, list]]:
+    """The file's row count and per-file zone map from the parquet
+    footer: physical column → [min, max] across row groups (None when
+    the writer recorded no stats, e.g. for binary/nested columns).
+    Footer-only — never reads data pages."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -1209,7 +1218,7 @@ def _file_stats(path: str) -> dict[str, list]:
                 out[name] = [min(out[name][0], lo), max(out[name][1], hi)]
             else:
                 out[name] = [lo, hi]
-    return {
+    return md.num_rows, {
         k: v
         for k, v in out.items()
         if isinstance(v[0], (int, float, str, bool))

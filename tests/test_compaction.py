@@ -149,10 +149,27 @@ def test_compact_strategy_matrix(spark):
     binary = compact(frag, target_rows=5_000, strategy="binary")
     assert binary.rdd.getNumPartitions() == 2
 
+    dynamic = compact(frag, target_rows=5_000, strategy="dynamic")
+    assert dynamic.rdd.getNumPartitions() == 2
+
     # already-compact input passes through under binary and dynamic
     ok = spark.range(0, 10_000).repartition(2)
     assert compact(ok, target_rows=5_000, strategy="binary").rdd.getNumPartitions() == 2
     assert compact(ok, target_rows=5_000, strategy="dynamic").rdd.getNumPartitions() == 2
+
+    # an input that fits in one wave of the session's task slots is
+    # returned as-is without a Spark job (no partition histogram)
+    wave = spark.range(0, 10_000, numPartitions=2)
+    sc = spark.sparkContext
+    for strategy in ("binary", "dynamic"):
+        group = f"compact-one-wave-{strategy}"
+        sc.setJobGroup(group, group)
+        try:
+            out = compact(wave, target_rows=5_000, strategy=strategy)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert out is wave
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
     with _pytest.raises(ValueError):
         compact(frag, strategy="learning")

@@ -269,10 +269,10 @@ def test_ivf_ann_topk_matches_python_reference(spark, sf_dir):
     """Both IVF scoring kernels — the fused one-pass kernel (ad-hoc
     corpus) and the per-cell cogroup (stored ``corpus_cells``) — return
     exactly the rows of a plain-Python IVF top-k: left-fold dots,
-    ``math.sqrt`` norms, corpus cell = lowest of ``(isnan(dot), -dot,
-    idx)``, query probes in ``_nearest_clusters``'s order (NaN first,
-    dot desc, idx desc), top-k by (NaN first, cosine desc, NULL last,
-    match_id).  Degenerate rows, as corpus vectors and as queries: a
+    ``math.sqrt`` norms, cells ranked by ``(isnan(dot), -dot, idx)`` —
+    the oracle's ``list_sort(struct(-dot, i))`` — for the corpus cell
+    (first) and the query probes (first ``n_probe``), top-k by (NaN
+    first, cosine desc, NULL last, match_id).  Degenerate rows, as corpus vectors and as queries: a
     zero-norm vector has NULL cosine (0 denominator), a NaN-element
     vector has NaN cosine, kept and ranked first."""
     import math
@@ -304,17 +304,16 @@ def test_ivf_ann_topk_matches_python_reference(spark, sf_dir):
     def nan_or(d, v):
         return 0.0 if math.isnan(d) else v
 
-    def cell_of(v):
+    def ranked_cells(v):
         dots = [_fold_dot(v, c) for c in cents]
-        return min(range(n_clusters),
-                   key=lambda i: (math.isnan(dots[i]), nan_or(dots[i], -dots[i]), i))
+        return sorted(range(n_clusters),
+                      key=lambda i: (math.isnan(dots[i]), nan_or(dots[i], -dots[i]), i))
+
+    def cell_of(v):
+        return ranked_cells(v)[0]
 
     def probes(v):
-        dots = [_fold_dot(v, c) for c in cents]
-        order = sorted(range(n_clusters),
-                       key=lambda i: (not math.isnan(dots[i]),
-                                      nan_or(dots[i], -dots[i]), -i))
-        return set(order[:n_probe])
+        return set(ranked_cells(v)[:n_probe])
 
     def cosine(a, b):
         den = math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
@@ -347,8 +346,13 @@ def test_ivf_ann_topk_matches_python_reference(spark, sf_dir):
         }
         assert got == want, corpus_cells is None
     assert any(m == nan_row and c == "nan" for q, m, c in want if q < zero)
-    zero_rows = [c for q, _, c in want if q == zero]
-    assert len(zero_rows) == k and all(c is None for c in zero_rows)
+    # the zero-norm query's dots all tie, so it probes the lowest cells;
+    # cell 0 holds the NaN row (its dots are all NaN), whose cosine is
+    # NaN (a 0 x NaN denominator) and ranks first, then NULLs
+    assert probes(vecs[zero]) == {0, 1, 2, 3} and cells[nan_row] == 0
+    zero_rows = {m: c for q, m, c in want if q == zero}
+    assert len(zero_rows) == k and zero_rows.pop(nan_row) == "nan"
+    assert all(c is None for c in zero_rows.values())
 
 
 def test_ivf_trained_centroids_deterministic_and_competitive(spark, sf_dir):

@@ -244,8 +244,13 @@ def test_insert_or_replace_on_pk_table(spark, tmp_path):
 
 
 def test_truncate(eng):
+    vt = eng._versioned["txt"]
     eng.sql("TRUNCATE txt")
     assert _count(eng) == 0
+    # the emptied files leave the manifest; time travel is unchanged
+    assert vt._manifest(vt.latest_version())["files"] == []
+    assert vt.read(0).count() == 10
+    assert vt.read().columns == ["k", "v"]
     eng.sql("INSERT INTO txt VALUES (1, 10)")
     assert _count(eng) == 1
     with pytest.raises(ValueError, match="Catalog Error"):

@@ -249,6 +249,26 @@ def test_insert_pk_collision_rejected(cvt):
     assert cvt.latest_version() == before  # nothing committed
 
 
+def test_insert_builds_staged_read_only_for_primary_key(vt, cvt, monkeypatch):
+    """Only a PRIMARY KEY checks new rows against the staged table, so
+    only then does INSERT build its relation."""
+    plain = vt.read().limit(1)
+    collide = cvt.read().limit(1)
+    calls = []
+    orig = _StagedTable.read
+
+    def spy(self):
+        calls.append(self.vt.path)
+        return orig(self)
+
+    monkeypatch.setattr(_StagedTable, "read", spy)
+    vt.insert(plain)
+    assert calls == []
+    with pytest.raises(ConstraintViolation, match="collide"):
+        cvt.insert(collide)
+    assert calls == [cvt.path]
+
+
 def test_insert_check_violation_rejected(cvt):
     bad = cvt.read().limit(1).withColumn(
         "o_orderkey", F.lit(-1).cast("long")
