@@ -9,27 +9,23 @@ a UCB1 bandit (CompactTuner, src/include/duckdb/common/negative_feedback.hpp).
 Spark's execution unit is the partition, and the same computation —
 "detect undersized data units, adaptively coalesce them to a learned
 target before the next operator" — appears as the small-partition /
-small-file problem.  This package provides:
+small-file problem.  ``compact()`` is the one compaction entry point,
+called directly where the stream fragments.  This package has four
+modules:
 
+- __init__.py   these re-exports
 - profiler.py   partition-size stats + chunk-factor metrics
                 (BeeProfiler/ZebraProfiler/HashJoinProfiler analog)
-- compact.py    compact()/pipeline_break() DataFrame operators
+- compact.py    compact()/pipeline_break()/fan_out() DataFrame operators
                 (CompactingPhysicalOperator / PhysicalPipelineBreaker);
                 like the reference, compact() decides on the input it
                 holds: one that already fits in one wave of the
                 session's task slots passes through with no Spark job,
                 only wider inputs pay for the partition histogram
 - tuner.py      UCB1 multi-armed bandit learning target sizes per named
-                stage (CompactTuner/MultiArmedBandit)
-- auto.py       AutoCompactFrame — the operator-wrapper analog: filters/
-                joins mark compaction points, settled automatically
-                before the next consumer (Engine(auto_compact=True))
+                stage (CompactTuner/MultiArmedBandit); the caller closes
+                the loop: suggest → compact(target_rows=) → observe
 """
-
-from data_chunk_compaction_in_duckdb_spark.compaction.auto import (  # noqa: F401
-    AutoCompactFrame,
-    unwrap,
-)
 
 from data_chunk_compaction_in_duckdb_spark.compaction.compact import (  # noqa: F401
     compact,
@@ -45,7 +41,4 @@ from data_chunk_compaction_in_duckdb_spark.compaction.profiler import (  # noqa:
 from data_chunk_compaction_in_duckdb_spark.compaction.tuner import (  # noqa: F401
     CompactTuner,
     UCB1Bandit,
-)
-from data_chunk_compaction_in_duckdb_spark.compaction.integration import (  # noqa: F401
-    run_stage_tuned,
 )

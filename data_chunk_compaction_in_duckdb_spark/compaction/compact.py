@@ -37,12 +37,14 @@ DEFAULT_TARGET_ROWS = 1_000_000
 #: one git branch per strategy over the same three suites).
 STRATEGIES = ("none", "logical", "full", "binary", "dynamic")
 
+#: ``dynamic`` repartitions (rebalances) instead of coalescing when the
+#: largest partition exceeds this multiple of the mean.
+SKEW_TOLERANCE = 4.0
+
 
 def compact(
     df: DataFrame,
     target_rows: int = DEFAULT_TARGET_ROWS,
-    skew_tolerance: float = 4.0,
-    stats_sample: bool = True,
     strategy: str = "dynamic",
 ) -> DataFrame:
     """Coalesce a fragmented DataFrame toward ``target_rows`` per
@@ -61,11 +63,11 @@ def compact(
       fragmented means full compaction, otherwise pass-through.
     - ``dynamic``  (dynamic_cpt, default): histogram heuristic — cheap
       coalesce when fragmented-but-balanced, repartition only under
-      skew (max > skew_tolerance x mean).
+      skew (max > SKEW_TOLERANCE x mean).
 
-    The learning branch of the matrix is `CompactTuner` +
-    `run_stage_tuned` (integration.py): the bandit picks target_rows,
-    this function executes the move.
+    The learning branch of the matrix is `CompactTuner`: the bandit
+    picks ``target_rows``, this function executes the move, and the
+    caller feeds the stage's throughput back (see its docstring).
 
     ``binary`` and ``dynamic`` decide on the input they hold, as the
     reference does (no look-ahead pass, physical_operator.cpp:250-311):
@@ -87,7 +89,7 @@ def compact(
     if strategy not in STRATEGIES:
         raise ValueError(
             f"strategy must be one of {STRATEGIES} (learning = CompactTuner"
-            " + run_stage_tuned)"
+            ".suggest + compact(target_rows=))"
         )
     if strategy == "none":
         return df
@@ -112,25 +114,25 @@ def compact(
     if strategy == "binary":
         fragmented = hist.mean_rows < target_rows / 2
         return df.repartition(needed) if fragmented else df
-    skewed = hist.max_rows > skew_tolerance * max(hist.mean_rows, 1.0)
+    skewed = hist.max_rows > SKEW_TOLERANCE * max(hist.mean_rows, 1.0)
     if skewed:
         return df.repartition(needed)
     return df.coalesce(needed)
 
 
-def pipeline_break(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialization barrier: persist and (optionally) force evaluation.
+def pipeline_break(df: DataFrame) -> DataFrame:
+    """Materialization barrier: evaluate ``df`` once, now.
 
     The reference inserts PhysicalPipelineBreaker under long join chains
     so each hash table stays cache-resident while it is probed
-    (split_long_pipeline.cpp:7-33).  In Spark the analog is persisting the
-    intermediate so divergent/downstream stages reuse one materialization
-    instead of recomputing the subtree.
+    (split_long_pipeline.cpp:7-33).  In Spark the analog is materializing
+    the intermediate so divergent/downstream stages reuse one
+    materialization instead of recomputing the subtree.  An eager local
+    checkpoint does that and leaves nothing in the session's cache
+    manager: its blocks belong to the returned DataFrame alone, so no
+    cached intermediate outlives the caller's use of it.
     """
-    out = df.persist()
-    if eager:
-        out.count()
-    return out
+    return df.localCheckpoint(eager=True)
 
 
 def fan_out(

@@ -52,12 +52,8 @@ class PartitionHistogram:
     mean_rows: float
     p50_rows: int
     empty_partitions: int
-    # fraction of partitions smaller than half the mean — the
-    # "fragmentation" signal that triggers compaction
+    # fraction of partitions smaller than half the mean
     undersized_fraction: float
-
-    def fragmented(self, threshold: float = 0.5) -> bool:
-        return self.undersized_fraction > threshold
 
 
 def partition_histogram(

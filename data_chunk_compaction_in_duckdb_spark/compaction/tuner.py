@@ -21,11 +21,17 @@ pass their own arms for byte-based targets.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 DEFAULT_ARMS: tuple[int, ...] = tuple(
     1024 * t for t in (32, 64, 128, 256, 384, 512, 768, 1024)
 )
+
+# Drift restart: once the best arm has DRIFT_WINDOW pulls, a full window
+# of its latest rewards averaging below DRIFT_TOLERANCE x its long-run
+# mean resets every arm.
+DRIFT_WINDOW = 8
+DRIFT_TOLERANCE = 0.5
 
 
 @dataclass
@@ -45,7 +51,6 @@ class _ArmState:
         return self.m2 / self.pulls if self.pulls > 1 else 0.0
 
 
-@dataclass
 class UCB1Bandit:
     """UCB-tuned bandit over a fixed arm set.
 
@@ -55,20 +60,14 @@ class UCB1Bandit:
     scale, so any monotone metric works.
     """
 
-    arms: tuple[int, ...] = DEFAULT_ARMS
-    drift_window: int = 8
-    drift_tolerance: float = 0.5
-    _states: dict[int, _ArmState] = field(default_factory=dict)
-    _t: int = 0
-    _recent: list[float] = field(default_factory=list)
-
-    def __post_init__(self) -> None:
+    def __init__(self, arms: tuple[int, ...] = DEFAULT_ARMS) -> None:
+        self.arms = arms
         self.reset()
 
     def reset(self) -> None:
         self._states = {a: _ArmState() for a in self.arms}
         self._t = 0
-        self._recent = []
+        self._recent: list[float] = []
 
     def select(self) -> int:
         self._t += 1
@@ -91,15 +90,14 @@ class UCB1Bandit:
         # Drift detection: if the best arm's recent rewards collapse below
         # its long-run mean, restart exploration.
         best = max(self._states.values(), key=lambda s: s.mean if s.pulls else -1e18)
-        if st is best and st.pulls >= self.drift_window:
+        if st is best and st.pulls >= DRIFT_WINDOW:
             self._recent.append(reward)
-            if len(self._recent) > self.drift_window:
+            if len(self._recent) > DRIFT_WINDOW:
                 self._recent.pop(0)
             if (
-                len(self._recent) == self.drift_window
+                len(self._recent) == DRIFT_WINDOW
                 and st.mean > 0
-                and sum(self._recent) / self.drift_window
-                < self.drift_tolerance * st.mean
+                and sum(self._recent) / DRIFT_WINDOW < DRIFT_TOLERANCE * st.mean
             ):
                 self.reset()
 
@@ -120,7 +118,7 @@ class CompactTuner:
         tuner = CompactTuner()
         target = tuner.suggest("join_probe_1")
         out = compact(df, target_rows=target)
-        t0 = time.monotonic(); out.count(); dt = time.monotonic() - t0
+        t0 = time.monotonic(); rows = out.count(); dt = time.monotonic() - t0
         tuner.observe("join_probe_1", rows / dt)
     """
 

@@ -1063,13 +1063,36 @@ def _rw_intdiv(sql: str) -> str | None:
     return None
 
 
+# A bare VARCHAR target type: DuckDB's VARCHAR is unbounded, Spark's
+# needs a length, and its unbounded twin is STRING.  `VARCHAR(n)` and
+# DDL column types are left alone.
+_VARCHAR_CAST_RE = re.compile(r"(\bAS\s+|::\s*)VARCHAR\b(?!\s*\()", re.I)
+
+
+def _rw_varchar_cast(sql: str) -> str | None:
+    """`CAST(x AS VARCHAR)` / `x::VARCHAR` -> STRING (leftmost)."""
+    lits = _literal_spans(sql)
+    for m in _VARCHAR_CAST_RE.finditer(sql):
+        if any(a <= m.start() < b for a, b in lits):
+            continue
+        if m.group(1).upper().startswith("AS") and _enclosing_call_name(
+            sql, m.start()
+        ) not in ("cast", "try_cast"):
+            continue  # a column alias named varchar
+        return sql[: m.end(1)] + "STRING" + sql[m.end() :]
+    return None
+
+
 def rewrite_expressions(sql: str) -> str | None:
     """Apply every DuckDB expression-grammar rewrite to a fixpoint.
     Returns the rewritten SQL, or None when the text is already
     Spark-clean (the overwhelmingly common case — one regex probe per
     family, no scan)."""
     if not re.search(
-        r"\[|\{|->|//|\bSIMILAR\s+TO\b|" + _FN_PROBE, sql, re.I
+        r"\[|\{|->|//|\bSIMILAR\s+TO\b|" + _VARCHAR_CAST_RE.pattern + "|"
+        + _FN_PROBE,
+        sql,
+        re.I,
     ):
         return None
     out = sql
@@ -1080,6 +1103,7 @@ def rewrite_expressions(sql: str) -> str | None:
             or _rw_brackets(out)
             or _rw_similar_to(out)
             or _rw_intdiv(out)
+            or _rw_varchar_cast(out)
             or _rw_fn_aliases(out)
             or _rw_fn_complex(out)
             or _rw_struct_literal(out)
@@ -1118,6 +1142,9 @@ _FN_ALIASES = {
     "list_filter": "filter",
     "list_position": "array_position",
     "list_indexof": "array_position",
+    # one-argument form; DuckDB's recursive := / max_depth := options
+    # have no Spark twin
+    "unnest": "explode",
 }
 _FN_ALIAS_RE = re.compile(
     r"\b(" + "|".join(_FN_ALIASES) + r")\s*\(", re.I

@@ -14,7 +14,10 @@ A user of the reference switches like this::
     eng.compact(df)                                                    # compaction layer
 
 ``Engine.sql`` classifies each statement once and hands it to one
-handler; its docstring lists the statement kinds.
+handler; its docstring lists the statement kinds.  ``sql()`` and
+``table()`` return plain DataFrames: compaction is never implicit, the
+caller places ``compact()`` where the stream fragments, as the reference
+places CompactingPhysicalOperator (physical_operator.cpp:250-311).
 """
 
 from __future__ import annotations
@@ -76,13 +79,9 @@ class Engine:
         spark: SparkSession | None = None,
         sf_dir: str = _catalog.DEFAULT_SF_DIR,
         register: bool = True,
-        auto_compact: bool = False,
-        compact_target_rows: int | None = None,
     ) -> None:
         self.spark = spark or get_spark()
         self.sf_dir = sf_dir
-        self.auto_compact = auto_compact
-        self.compact_target_rows = compact_target_rows
         self.tables: dict[str, DataFrame] = {}
         if register:
             self.tables = _catalog.register_views(self.spark, sf_dir)
@@ -106,20 +105,6 @@ class Engine:
         self._seq_root: str | None = None
         self._index_root: str | None = None
         self._seq_gen = self._art_gen = self._idx_gen = 0
-
-    def _wrap(self, df: DataFrame):
-        """With ``auto_compact`` on, hand out CompactingPhysicalOperator-
-        style handles (compaction/auto.py): filters/joins composed on the
-        result mark compaction points, settled by one dynamic compact()
-        before the next fragmentation-sensitive consumer.  Off (default):
-        the plain DataFrame, compaction left to the caller/AQE."""
-        if not self.auto_compact:
-            return df
-        from data_chunk_compaction_in_duckdb_spark.compaction.auto import (
-            AutoCompactFrame,
-        )
-
-        return AutoCompactFrame(df, target_rows=self.compact_target_rows)
 
     # -- entry point 1: SQL string (Connection::Query)
 
@@ -196,9 +181,7 @@ class Engine:
         ``?`` markers with ``*args`` are the prepared-statement path
         (reference client_context.cpp:534-560) — bound by Spark's
         parameterized SQL, never string interpolation.  Inside the SQL
-        text Catalyst+AQE own compaction (shuffle-read coalescing); with
-        ``auto_compact`` on, the returned handle also auto-compacts
-        anything composed on it at the DataFrame level."""
+        text Catalyst+AQE own compaction (shuffle-read coalescing)."""
         expr = dialect.rewrite_expressions(query)
         if expr is not None:
             query = expr
@@ -272,7 +255,7 @@ class Engine:
             df = self.spark.sql(query)
         if drop_col:
             df = df.drop(drop_col)
-        return self._wrap(local_exec.run(self.spark, df, self.local_exec_counts))
+        return local_exec.run(self.spark, df, self.local_exec_counts)
 
     def _rewrite_catalog_tfs(self, query: str) -> str:
         """Materialize each catalog-TF call site (``duckdb_tables()``
@@ -894,7 +877,7 @@ class Engine:
     def table(self, name: str) -> DataFrame:
         if name not in self.tables:
             self.tables[name] = _catalog.load_table(self.spark, self.sf_dir, name)
-        return self._wrap(self.tables[name])
+        return self.tables[name]
 
     def explain(self, df: DataFrame, mode: str = "formatted") -> str:
         """EXPLAIN (the reference's EXPLAIN ANALYZE harvest point,

@@ -1,87 +1,7 @@
-"""AutoCompactFrame (compaction/auto.py): the CompactingPhysicalOperator
-wrapper — transparency, single-settle placement, Engine flag."""
+"""Engine handles are plain DataFrames: nothing wraps them, and the caller
+places compact() (compaction/compact.py) where it wants it."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-
-def test_auto_frame_is_semantically_transparent(spark, sf_dir):
-    from data_chunk_compaction_in_duckdb_spark.compaction import unwrap
-    from data_chunk_compaction_in_duckdb_spark.engine import Engine
-
-    eng = Engine(spark=spark, sf_dir=sf_dir, auto_compact=True)
-    li = eng.table("lineitem")
-    orders = eng.table("orders")
-    auto = (
-        li.filter(F.col("l_quantity") < 5)
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-    )
-    plain_eng = Engine(spark=spark, sf_dir=sf_dir)
-    pli = plain_eng.table("lineitem")
-    por = plain_eng.table("orders")
-    plain = (
-        pli.filter(F.col("l_quantity") < 5)
-        .join(por, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-    )
-    assert sorted(map(tuple, unwrap(auto).collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-
-def test_auto_frame_settles_once_per_boundary(spark, sf_dir, monkeypatch):
-    """A filter chain feeding a join must trigger exactly ONE compact()
-    call (marks collapse; joins don't re-mark) — per-operator settling
-    would re-execute the pipeline once per join."""
-    import data_chunk_compaction_in_duckdb_spark.compaction.auto as auto_mod
-    from data_chunk_compaction_in_duckdb_spark.engine import Engine
-
-    calls = []
-    real = auto_mod.compact
-
-    def spy(df, **kw):
-        calls.append(kw)
-        return real(df, **kw)
-
-    monkeypatch.setattr(auto_mod, "compact", spy)
-    eng = Engine(spark=spark, sf_dir=sf_dir, auto_compact=True)
-    li = eng.table("lineitem")
-    orders = eng.table("orders")
-    cust = eng.table("customer")
-    out = (
-        li.filter(F.col("l_quantity") < 10)
-        .filter(F.col("l_discount") >= 0)
-        .select("l_orderkey", "l_quantity")
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-    )
-    out.count()
-    assert len(calls) == 1, f"expected one settle, saw {len(calls)}"
-    assert calls[0]["strategy"] == "dynamic"
-
-
-def test_auto_frame_no_compaction_without_marks(spark, sf_dir, monkeypatch):
-    """Projections and aggregations alone never trigger the histogram
-    probe — compaction points come only from the selective family."""
-    import data_chunk_compaction_in_duckdb_spark.compaction.auto as auto_mod
-    from data_chunk_compaction_in_duckdb_spark.engine import Engine
-
-    calls = []
-    real = auto_mod.compact
-
-    def spy(df, **kw):
-        calls.append(kw)
-        return real(df, **kw)
-
-    monkeypatch.setattr(auto_mod, "compact", spy)
-    eng = Engine(spark=spark, sf_dir=sf_dir, auto_compact=True)
-    orders = eng.table("orders")
-    orders.select("o_orderstatus").groupBy("o_orderstatus").count()
-    assert calls == []
 
 
 def test_engine_flag_off_returns_plain_frames(spark, sf_dir):
@@ -92,15 +12,3 @@ def test_engine_flag_off_returns_plain_frames(spark, sf_dir):
     eng = Engine(spark=spark, sf_dir=sf_dir)
     assert isinstance(eng.table("nation"), DataFrame)
     assert isinstance(eng.sql("SELECT 1 AS x"), DataFrame)
-
-
-def test_engine_sql_wrapped_under_flag(spark, sf_dir):
-    from data_chunk_compaction_in_duckdb_spark.compaction import (
-        AutoCompactFrame,
-    )
-    from data_chunk_compaction_in_duckdb_spark.engine import Engine
-
-    eng = Engine(spark=spark, sf_dir=sf_dir, auto_compact=True)
-    out = eng.sql("SELECT o_orderkey FROM orders")
-    assert isinstance(out, AutoCompactFrame)
-    assert out.count() > 0

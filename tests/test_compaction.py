@@ -55,10 +55,14 @@ def test_pipeline_break_materializes(spark, sf_dir):
     from data_chunk_compaction_in_duckdb_spark.compaction import pipeline_break
 
     li = load_table(spark, sf_dir, "lineitem").groupBy("l_returnflag").count()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     out = pipeline_break(li)
-    assert out.is_cached
-    assert out.count() == li.count()
-    out.unpersist()
+    # materialized without registering anything in the session's cache
+    assert cache.isEmpty()
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, li.collect()))
 
 
 def test_ucb1_converges_to_best_arm():

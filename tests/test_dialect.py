@@ -277,6 +277,21 @@ def test_expr_intdiv():
     assert _rw("SELECT 7 // 2 AS d") == "SELECT 7  div  2 AS d"
 
 
+def test_expr_varchar_cast_is_string():
+    assert _rw("SELECT CAST(x AS VARCHAR) FROM t") == (
+        "SELECT CAST(x AS STRING) FROM t"
+    )
+    assert _rw("SELECT TRY_CAST(f(x, 2) AS varchar), y::VARCHAR FROM t") == (
+        "SELECT TRY_CAST(f(x, 2) AS STRING), y::STRING FROM t"
+    )
+    # a sized VARCHAR, a DDL column type, a column alias and a literal
+    # are left alone
+    assert _rw("SELECT CAST(x AS VARCHAR(30)) FROM t") is None
+    assert _rw("CREATE TABLE t (a VARCHAR, b INT)") is None
+    assert _rw("SELECT x AS varchar FROM t") is None
+    assert _rw("SELECT 'CAST(x AS VARCHAR)' AS s") is None
+
+
 def test_expr_literals_are_data():
     assert _rw("SELECT '-> [1:2] // SIMILAR TO' AS lit") is None
     assert _rw('SELECT "a//b" FROM t') is None
@@ -290,6 +305,10 @@ def test_fn_aliases():
     assert (
         _rw("SELECT starts_with(s, 'A') FROM t")
         == "SELECT startswith(s, 'A') FROM t"
+    )
+    assert (
+        _rw("SELECT unnest([0, 1, 2, 3]) AS i")
+        == "SELECT explode(array(0, 1, 2, 3)) AS i"
     )
     # names Spark already resolves are never touched
     assert _rw("SELECT contains(s, 'b'), date_part('year', d) FROM t") is None

@@ -25,13 +25,16 @@ def test_job_like_all_broadcast_single_exchange(spark, sf_dir):
     assert count_exchanges(df) <= 2
 
 
-def test_run_stage_tuned_learns(spark, sf_dir):
-    """Closed loop: repeated tuned runs of a recurring stage must record
-    rewards for the played arms and keep results correct."""
+def test_tuned_compaction_loop_learns(spark, sf_dir):
+    """Closed loop: repeated tuned runs of a recurring stage
+    (suggest -> compact -> count -> observe) must record rewards for the
+    played arms and keep results correct."""
+    import time
+
     from data_chunk_compaction_in_duckdb_spark.catalog import load_table
     from data_chunk_compaction_in_duckdb_spark.compaction import (
         CompactTuner,
-        run_stage_tuned,
+        compact,
     )
 
     li = load_table(spark, sf_dir, "lineitem").repartition(16)
@@ -39,9 +42,12 @@ def test_run_stage_tuned_learns(spark, sf_dir):
     expected = frag.count()
     tuner = CompactTuner(arms=(1_000, 10_000, 100_000))
     for _ in range(6):
-        rows, elapsed = run_stage_tuned(frag, "recurring_etl", tuner)
+        target = tuner.suggest("recurring_etl")
+        t0 = time.monotonic()
+        rows = compact(frag, target_rows=target).count()
+        elapsed = max(time.monotonic() - t0, 1e-6)
+        tuner.observe("recurring_etl", rows / elapsed)
         assert rows == expected
-        assert elapsed > 0
     bandit = tuner._bandit("recurring_etl")
     assert sum(s.pulls for s in bandit._states.values()) == 6
     assert tuner.best("recurring_etl") in (1_000, 10_000, 100_000)

@@ -270,15 +270,6 @@ def test_read_inside_a_rolled_back_transaction(eng, monkeypatch):
     assert both(eng, monkeypatch, read)[1] == []
 
 
-def test_auto_compact_still_wraps_the_result(spark, sf_dir):
-    from data_chunk_compaction_in_duckdb_spark.compaction.auto import AutoCompactFrame
-
-    e = Engine(spark, sf_dir, auto_compact=True)
-    out = e.sql("SELECT c_custkey, c_name FROM customer WHERE c_custkey = 5")
-    assert isinstance(out, AutoCompactFrame) and e.local_exec_counts["local"] == 1
-    assert [tuple(r) for r in out.collect()] == [(5, "Customer#000000005")]
-
-
 @pytest.mark.parametrize(
     "text",
     ["5", "-5", "+7", "007", "0", "2147483647", "2147483648", "-2147483648",

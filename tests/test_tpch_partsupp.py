@@ -52,3 +52,42 @@ def test_partsupp_shape(spark, sf_dir):
     ).first()
     assert 1 <= stats.qmin and stats.qmax <= 9999
     assert 0.01 <= stats.cmin and stats.cmax <= 1000.0
+
+
+def test_official_texts_run_through_engine_sql(spark, sf_dir):
+    """The DuckDB-dialect oracle texts of official q2 and q11 (bare
+    ``CAST(... AS VARCHAR)``, ``unnest([...])``) run through Engine.sql
+    and match DuckDB at sf0.01."""
+    import os
+
+    import duckdb
+
+    from data_chunk_compaction_in_duckdb_spark import catalog
+    from data_chunk_compaction_in_duckdb_spark.engine import Engine
+    from data_chunk_compaction_in_duckdb_spark.queries import REGISTRY
+    from tests.conftest import TABLES
+    from tests.oracle_compare import _cells_equal, normalize
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf01):
+        pytest.skip(f"{sf01} not present")
+    duck = duckdb.connect()
+    try:
+        for t in TABLES:
+            duck.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf01}/{t}.parquet')"
+            )
+        eng = Engine(spark=spark, sf_dir=sf01)
+        for name in ("tpch_q2_official", "tpch_q11_official"):
+            text = REGISTRY[name].oracle
+            sdf = eng.sql(text)
+            got = normalize(sdf.columns, [tuple(r) for r in sdf.collect()])
+            res = duck.execute(text)
+            want = normalize(
+                [d[0] for d in res.description], [tuple(r) for r in res.fetchall()]
+            )
+            assert got and len(got) == len(want), (name, len(got), len(want))
+            assert all(map(_cells_equal, got, want)), name
+    finally:
+        duck.close()
+        catalog.register_views(spark, sf_dir)  # rebind the suite's fixture views

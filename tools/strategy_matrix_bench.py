@@ -39,7 +39,6 @@ def main() -> None:
     from data_chunk_compaction_in_duckdb_spark.compaction import (
         CompactTuner,
         compact,
-        run_stage_tuned,
     )
     from data_chunk_compaction_in_duckdb_spark.compaction.compact import (
         STRATEGIES,
@@ -93,70 +92,18 @@ def main() -> None:
                     " be semantically transparent"
                 )
 
-        # auto branch: the SAME pipeline composed through
-        # Engine(auto_compact=True) handles, with NO hand-placed compact()
-        # call — the AutoCompactFrame wrapper must place the dynamic
-        # compaction at the filter→join boundary itself and land within
-        # noise of the hand-placed dynamic row.
-        from data_chunk_compaction_in_duckdb_spark.compaction import unwrap
-        from data_chunk_compaction_in_duckdb_spark.engine import Engine
-
-        eng = Engine(
-            spark=spark,
-            sf_dir=SF_DIR,
-            auto_compact=True,
-            compact_target_rows=100_000,
-        )
-
-        def auto_pipeline():
-            li = eng.table("lineitem")
-            orders = eng.table("orders")
-            cust = eng.table("customer")
-            nation = eng.table("nation")
-            max_part = li.agg((F.max("l_partkey") / 10).alias("_maxp10"))
-            filtered = (
-                li.crossJoin(F.broadcast(max_part.df))
-                .filter(F.col("l_partkey") <= F.col("_maxp10"))
-                .drop("_maxp10")
-            )
-            return (
-                filtered.join(orders, filtered.l_orderkey == orders.o_orderkey)
-                .join(cust, orders.o_custkey == cust.c_custkey)
-                .join(
-                    F.broadcast(nation.df),
-                    cust.c_nationkey == nation.n_nationkey,
-                )
-                .groupBy("n_name")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.round(F.sum("l_extendedprice"), 2).alias("total"),
-                )
-            )
-
-        def auto_run() -> float:
-            t0 = time.monotonic()
-            unwrap(auto_pipeline()).write.format("noop").mode("overwrite").save()
-            return time.monotonic() - t0
-
-        auto_run()  # warm-up
-        results["auto"] = round(
-            statistics.median(auto_run() for _ in range(REPS)), 4
-        )
-        rows = sorted(tuple(r) for r in unwrap(auto_pipeline()).collect())
-        if rows != golden:
-            raise AssertionError(
-                "auto_compact changed results — compaction must be"
-                " semantically transparent"
-            )
-
         # learning branch: the bandit converges a per-stage target
         tuner = CompactTuner()
         curve = []
         li = load_table(spark, SF_DIR, "lineitem")
         max_part_val = li.agg(F.max("l_partkey")).first()[0] / 10
+        frag = li.filter(F.col("l_partkey") <= max_part_val)
         for _ in range(6):
-            frag = li.filter(F.col("l_partkey") <= max_part_val)
-            _, elapsed = run_stage_tuned(frag, "microbench_filter", tuner)
+            target = tuner.suggest("microbench_filter")
+            t0 = time.monotonic()
+            n_rows = compact(frag, target_rows=target).count()
+            elapsed = max(time.monotonic() - t0, 1e-6)
+            tuner.observe("microbench_filter", n_rows / elapsed)
             curve.append(round(elapsed, 4))
 
         print(
