@@ -28,6 +28,8 @@ hoist would change which row survives per group).
 
 from __future__ import annotations
 
+import bisect
+import math
 import re
 
 _QUALIFY_WORD = re.compile(r"\bQUALIFY\b", re.I)
@@ -39,119 +41,223 @@ _AS_ALIAS = re.compile(r"\bAS\s+(\w+)\s*$", re.I)
 _BARE_ALIAS = re.compile(r"\)\s+(\w+)\s*$")
 
 
-def _toplevel_spans(sql: str):
-    """Yield (start, end) spans of SQL text at parenthesis depth 0,
-    skipping single-quoted strings, double-quoted identifiers and
-    line/block comments."""
-    depth = 0
-    i, n = 0, len(sql)
-    span_start = 0
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            if depth == 0 and span_start < i:
-                yield (span_start, i)
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
+# --- the one lexical pass ---------------------------------------------
+# Every quote-, comment- and bracket-aware scan of a statement works on
+# one ``Lexed(sql)`` result (DuckDB lexes a statement once and every later
+# pass reads its tokens).  The rule: ``'...'`` strings with ``''``
+# escapes, ``"..."`` quoted identifiers, ``--`` line comments and
+# ``/* */`` block comments are data; an unterminated one runs to the end
+# of the text.  Brackets ``()``, ``[]`` and ``{}`` are matched over the
+# masked text, so a bracket inside quoted text or a comment never counts.
+
+_LITERAL_RE = re.compile(
+    r"'[^']*(?:''[^']*)*'?"  # string literal, '' escapes a quote
+    r'|"[^"]*"?'  # quoted identifier
+    r"|--[^\n]*"  # line comment
+    r"|/\*.*?(?:\*/|\Z)",  # block comment
+    re.S,
+)
+_BRACKET_RE = re.compile(r"[()\[\]{}]")
+_PAIR = {c: p for p in ("()", "[]", "{}") for c in p}
+_COMMA_RE = re.compile(",")
+_OPERAND_RE = re.compile(r"[$:]?[\w.\"]+|\?")
+
+
+class Lexed:
+    """One lexical pass over ``sql``.
+
+    ``spans`` are the ``(start, end)`` spans of its string literals,
+    quoted identifiers and comments; ``masked`` is ``sql`` with each
+    span blanked to spaces (same length, so a match on ``masked`` is at
+    the same index in ``sql`` and never sees quoted text).  Bracket
+    matching and the depth-0 scans are built on first use."""
+
+    def __init__(self, sql: str) -> None:
+        self.sql = sql
+        self.spans: list[tuple[int, int]] = []
+        parts: list[str] = []
+        last = 0
+        for m in _LITERAL_RE.finditer(sql):
+            a, b = m.span()
+            self.spans.append((a, b))
+            parts += (sql[last:a], " " * (b - a))
+            last = b
+        parts.append(sql[last:])
+        self.masked = "".join(parts)
+        self._pairs: dict[int, int] | None = None
+
+    def span_at(self, i: int) -> tuple[int, int] | None:
+        """The literal/comment span containing index ``i``, else None."""
+        k = bisect.bisect_right(self.spans, (i, math.inf)) - 1
+        if k >= 0 and i < self.spans[k][1]:
+            return self.spans[k]
+        return None
+
+    def _brackets(self) -> dict[int, int]:
+        # one pass: each bracket's partner (both directions), the
+        # openers in text order, and the depth-0 regions between them
+        if self._pairs is None:
+            pairs: dict[int, int] = {}
+            stack: list[int] = []
+            self._openers: list[int] = []
+            self._top: list[tuple[int, int]] = []
+            start, text = 0, self.masked
+            for m in _BRACKET_RE.finditer(text):
+                i, ch = m.start(), m.group()
+                if ch in "([{":
+                    if not stack and start < i:
+                        self._top.append((start, i))
+                    stack.append(i)
+                    self._openers.append(i)
+                elif stack and text[stack[-1]] + ch == _PAIR[ch]:
+                    o = stack.pop()
+                    pairs[o], pairs[i] = i, o
+                    if not stack:
+                        start = i + 1
+            if not stack and start < len(text):
+                self._top.append((start, len(text)))
+            self._pairs = pairs
+        return self._pairs
+
+    def partner(self, i: int) -> int:
+        """Index of the bracket matching the one at ``i`` (forwards from
+        an opener, backwards from a closer)."""
+        j = self._brackets().get(i)
+        if j is None:
+            raise ValueError(f"unbalanced {_PAIR[self.sql[i]]} in expression")
+        return j
+
+    def enclosing_call(self, pos: int) -> str | None:
+        """Lower-cased name of the function whose argument list holds
+        ``pos`` (None at top level or in a bare paren group)."""
+        pairs = self._brackets()
+        for o in reversed(self._openers):
+            if o < pos and self.masked[o] == "(" and pairs.get(o, pos) >= pos:
+                m = re.search(r"(\w+)\s*$", self.masked[:o])
+                return m.group(1).lower() if m else None
+        return None
+
+    def toplevel(self, pattern: re.Pattern, pos: int = 0):
+        """Matches of ``pattern`` over the masked text at bracket depth
+        0 (each match lies inside one depth-0 region), from ``pos``."""
+        self._brackets()
+        for s, e in self._top:
+            if e > pos:
+                yield from pattern.finditer(self.masked, max(s, pos), e)
+
+    def find_toplevel(self, pattern: re.Pattern, pos: int = 0):
+        """The first depth-0 match of ``pattern`` from ``pos``, or None."""
+        return next(self.toplevel(pattern, pos), None)
+
+    def operand_start(self, end: int) -> int:
+        """Start index of the postfix-operand chain ending just before
+        ``end`` — identifiers (dotted / ``::``-cast chains), string
+        literals, function calls, paren groups and subscript groups."""
+        sql = self.sql
+        i = end - 1
+        while i >= 0 and sql[i].isspace():
+            i -= 1
+        if i < 0:
+            raise ValueError("operator at start of expression")
+        while i >= 0:
+            ch = sql[i]
+            if ch == ")":
+                i = self.partner(i) - 1
+                # adjacent identifier = function name (unless a keyword)
+                m = re.search(r"(\w+)\s*$", sql[: i + 1])
+                if m and m.group(1).upper() not in _SQL_KEYWORDS_LEFT:
+                    i = m.start(1) - 1
+            elif ch == "]":
+                i = self.partner(i) - 1
+                continue  # the base of the subscript is further left
+            elif ch == "}":
+                i = self.partner(i) - 1
+            elif ch in "'\"":
+                i = self.span_at(i)[0] - 1
+            elif ch.isalnum() or ch == "_":
+                while i >= 0 and (sql[i].isalnum() or sql[i] == "_"):
+                    i -= 1
+                # parameter markers are operands: `$1` / `$name`, and a
+                # SINGLE leading `:` (Spark's named form — a double colon
+                # is a cast, handled by the connector check below)
+                if i >= 0 and sql[i] == "$":
+                    i -= 1
                     break
-                i += 1
-            if depth == 0:
-                span_start = i + 1
-        elif ch == '"':
-            if depth == 0 and span_start < i:
-                yield (span_start, i)
+                if (
+                    i >= 0
+                    and sql[i] == ":"
+                    and not (i >= 1 and sql[i - 1] == ":")
+                ):
+                    i -= 1
+                    break
+            else:
+                break
+            # connectors keep the chain going left: `.` and `::`
+            j = i
+            while j >= 0 and sql[j].isspace():
+                j -= 1
+            if j >= 0 and sql[j] == ".":
+                i = j - 1
+                continue
+            if j >= 1 and sql[j - 1 : j + 1] == "::":
+                i = j - 2
+                continue
+            break
+        start = i + 1
+        while start < end and sql[start].isspace():
+            start += 1
+        return start
+
+    def operand_end(self, start: int) -> int:
+        """End index (exclusive) of the prefix operand starting at
+        ``start`` — a string/number literal, identifier chain, function
+        call or paren group (enough for a SIMILAR TO pattern)."""
+        sql, n = self.sql, len(self.sql)
+        i = start
+        while i < n and sql[i].isspace():
             i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-            if depth == 0:
-                span_start = i + 1
-        elif ch == "-" and sql[i : i + 2] == "--":
-            if depth == 0 and span_start < i:
-                yield (span_start, i)
-            while i < n and sql[i] != "\n":
-                i += 1
-            if depth == 0:
-                span_start = i + 1
-        elif ch == "/" and sql[i : i + 2] == "/*":
-            if depth == 0 and span_start < i:
-                yield (span_start, i)
-            j = sql.find("*/", i + 2)
-            i = n if j < 0 else j + 1
-            if depth == 0:
-                span_start = i + 1
-        elif ch == "(":
-            if depth == 0 and span_start < i:
-                yield (span_start, i)
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                span_start = i + 1
-        i += 1
-    if depth == 0 and span_start < n:
-        yield (span_start, n)
+        if i >= n:
+            raise ValueError("operator at end of expression")
+        if sql[i] == "'":
+            return self.span_at(i)[1]
+        if sql[i] == "(":
+            return self.partner(i) + 1
+        # parameter markers ($1 / $name / :name / ?) are operands
+        m = _OPERAND_RE.match(sql, i)
+        if not m:
+            raise ValueError(f"cannot parse operand at: {sql[i:i+30]!r}")
+        k = m.end()
+        while k < n and sql[k].isspace():
+            k += 1
+        if k < n and sql[k] == "(":
+            return self.partner(k) + 1
+        return m.end()
+
+    def split_toplevel(self) -> list[str]:
+        """``sql`` split on its depth-0 commas (pieces unstripped)."""
+        cuts = [m.start() for m in self.toplevel(_COMMA_RE)]
+        return [
+            self.sql[a + 1 : b]
+            for a, b in zip([-1] + cuts, cuts + [len(self.sql)])
+        ]
 
 
-def _find_toplevel(sql: str, pattern: re.Pattern, from_pos: int = 0):
-    for s, e in _toplevel_spans(sql):
-        if e <= from_pos:
+def sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
+    """``pattern.sub(repl, sql)`` that skips matches starting inside a
+    string literal, quoted identifier or comment — a call site must
+    never be rewritten when its name appears as DATA (``SELECT
+    'duckdb_settings()' AS s``).  ``repl`` is a plain string or a
+    ``match -> str`` callable."""
+    lx = Lexed(sql)
+    parts: list[str] = []
+    last = 0
+    for m in pattern.finditer(sql):
+        if lx.span_at(m.start()) is not None:
             continue
-        m = pattern.search(sql, max(s, from_pos), e)
-        if m:
-            return m
-    return None
-
-
-def _count_markers(sql: str) -> int:
-    """Count positional ``?`` parameter markers outside string literals,
-    quoted identifiers and comments (any parenthesis depth)."""
-    count = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == '"':
-            i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-        elif ch == "-" and sql[i : i + 2] == "--":
-            while i < n and sql[i] != "\n":
-                i += 1
-        elif ch == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            i = n if j < 0 else j + 1
-        elif ch == "?":
-            count += 1
-        i += 1
-    return count
-
-
-def _split_toplevel_commas(s: str) -> list[str]:
-    """Split ``s`` on commas at parenthesis depth 0 (string/comment
-    aware)."""
-    commas = []
-    for a, b in _toplevel_spans(s):
-        for i in range(a, b):
-            if s[i] == ",":
-                commas.append(i)
-    parts, prev = [], 0
-    for c in commas:
-        parts.append(s[prev:c])
-        prev = c + 1
-    parts.append(s[prev:])
-    return parts
+        parts.append(sql[last : m.start()])
+        parts.append(repl(m) if callable(repl) else repl)
+        last = m.end()
+    return "".join(parts) + sql[last:]
 
 
 def _alias_map(select_list: str) -> dict[str, str]:
@@ -161,7 +267,7 @@ def _alias_map(select_list: str) -> dict[str, str]:
     Bare identifiers after arbitrary expressions are NOT treated as
     aliases (``a + b`` has no alias named b)."""
     out: dict[str, str] = {}
-    for item in _split_toplevel_commas(select_list):
+    for item in Lexed(select_list).split_toplevel():
         it = item.strip()
         m = _AS_ALIAS.search(it)
         if m:
@@ -207,16 +313,14 @@ def rewrite_qualify(sql: str, column_resolver=None):
     function), so aliases shadowed by a resolvable source column are
     NOT substituted; the injected predicate then binds to the source
     column inside the head's own scope, matching DuckDB's precedence."""
-    m = _find_toplevel(sql, _QUALIFY_WORD)
+    lx = Lexed(sql)
+    m = lx.find_toplevel(_QUALIFY_WORD)
     if m is None:
         return None
+    t = lx.find_toplevel(_TAIL_WORD, m.end())
+    cut = len(sql) if t is None else t.start()
     head = sql[: m.start()].rstrip()
-    rest = sql[m.end() :]
-    t = _find_toplevel(rest, _TAIL_WORD)
-    if t is not None:
-        pred, tail = rest[: t.start()], rest[t.start() :]
-    else:
-        pred, tail = rest, ""
+    pred, tail = sql[m.end() : cut], sql[cut:]
     pred = pred.strip().rstrip(";").strip()
     tail = tail.strip().rstrip(";").strip()
     if not pred:
@@ -227,16 +331,10 @@ def rewrite_qualify(sql: str, column_resolver=None):
     # Detection is any-depth outside literals (windows nest inside
     # CAST/function parens); the one unenforced corner is a window that
     # exists ONLY inside a subquery, which DuckDB would still reject.
-    over = re.compile(r"\bOVER\b", re.I)
-
-    def _has_over(s: str) -> bool:
-        lits = _literal_spans(s)
-        return any(
-            not any(a <= m.start() < b for a, b in lits)
-            for m in over.finditer(s)
-        )
-
-    if not (_has_over(pred) or _has_over(head)):
+    if not any(
+        re.search(r"\bOVER\b", part, re.I)
+        for part in (lx.masked[: m.start()], lx.masked[m.end() : cut])
+    ):
         raise ValueError(
             "Binder Error: at least one window function must appear in "
             "the SELECT clause or the QUALIFY clause"
@@ -261,8 +359,12 @@ def rewrite_qualify(sql: str, column_resolver=None):
             flags=re.I,
         )
 
+    def markers(text: str) -> int:
+        return Lexed(text).masked.count("?")
+
+    hx = Lexed(head)
     m_sel = _SELECT_HEAD.match(head)
-    m_from = _find_toplevel(head, _FROM_WORD)
+    m_from = hx.find_toplevel(_FROM_WORD)
     inject_ok = (
         m_sel is not None
         and m_from is not None
@@ -279,14 +381,13 @@ def rewrite_qualify(sql: str, column_resolver=None):
             # optional relation aliases (an unresolvable alias token
             # simply contributes nothing)
             src: set[str] = set()
-            for s, e in _toplevel_spans(head):
-                for mt in _FROM_JOIN_IDENT.finditer(head, s, e):
-                    for ident in re.findall(r"[A-Za-z_]\w*", mt.group(0)):
-                        if ident.upper() in ("FROM", "JOIN"):
-                            continue
-                        cols = column_resolver(ident)
-                        if cols:
-                            src.update(c.lower() for c in cols)
+            for mt in hx.toplevel(_FROM_JOIN_IDENT):
+                for ident in re.findall(r"[A-Za-z_]\w*", mt.group(0)):
+                    if ident.upper() in ("FROM", "JOIN"):
+                        continue
+                    cols = column_resolver(ident)
+                    if cols:
+                        src.update(c.lower() for c in cols)
             amap = {a: x for a, x in amap.items() if a.lower() not in src}
         if amap:
             # Substitute ALL aliases in ONE pass over the ORIGINAL
@@ -302,12 +403,9 @@ def rewrite_qualify(sql: str, column_resolver=None):
                 )
                 + r")\b"
             )
-            lits = _literal_spans(pred)
             parts: list[str] = []
             last = 0
-            for m in alias_re.finditer(pred):
-                if any(a <= m.start() < b for a, b in lits):
-                    continue
+            for m in alias_re.finditer(Lexed(pred).masked):
                 # dot-qualified references are relation-scoped (v.rn) —
                 # substituting either side of the dot produces invalid
                 # SQL (v.(expr)) or rewrites the qualifier itself
@@ -316,7 +414,7 @@ def rewrite_qualify(sql: str, column_resolver=None):
                 ):
                     continue
                 expr = amap[m.group(1)]
-                if _count_markers(expr):
+                if markers(expr):
                     # substituting would duplicate ? markers — fall back
                     inject_ok = False
                     break
@@ -335,9 +433,9 @@ def rewrite_qualify(sql: str, column_resolver=None):
             f"SELECT {distinct}* FROM (\n{inner}\n) __q WHERE __qualify"
             + (f"\n{tail}" if tail else "")
         )
-        n_sel = _count_markers(select_list)
-        n_rest = _count_markers(head[m_from.start() :])
-        n_pred = _count_markers(pred_sub)
+        n_sel = markers(select_list)
+        n_rest = markers(head[m_from.start() :])
+        n_pred = markers(pred_sub)
 
         def reorder(args: list) -> list:
             # original: sel, rest, pred, tail -> new: sel, pred, rest, tail
@@ -362,7 +460,7 @@ def rewrite_qualify(sql: str, column_resolver=None):
         ") __qq WHERE __qualify"
         + (f"\n{tail}" if tail else "")
     )
-    n_head, n_pred = _count_markers(head), _count_markers(pred)
+    n_head, n_pred = markers(head), markers(pred)
 
     def reorder(args: list) -> list:
         # original marker order: head, pred, tail ->
@@ -394,77 +492,9 @@ def rewrite_qualify(sql: str, column_resolver=None):
 # driver's column-name-sorted compare and any explicit projection are
 # order-insensitive.
 
-_STARMOD_WORD = re.compile(r"^(EXCLUDE|REPLACE)\b", re.I)
+_STAR_RE = re.compile(r"\*(?=\s*(?:EXCLUDE|REPLACE)\b)", re.I)
+_STARMOD_WORD = re.compile(r"\s*(EXCLUDE|REPLACE)\b\s*", re.I)
 _IDENT = re.compile(r"\w+")
-
-
-def _match_paren_group(sql: str, i: int) -> int:
-    """Given sql[i] == '(', return the index AFTER the matching ')'
-    (string-literal aware)."""
-    depth = 0
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in star modifier")
-
-
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    """Spans of string literals, quoted identifiers and comments —
-    regions where SQL keywords are data, at ANY parenthesis depth."""
-    spans = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            a = i
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-            spans.append((a, i + 1))
-        elif ch == '"':
-            a = i
-            i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-            spans.append((a, i + 1))
-        elif ch == "-" and sql[i : i + 2] == "--":
-            a = i
-            while i < n and sql[i] != "\n":
-                i += 1
-            spans.append((a, i))
-        elif ch == "/" and sql[i : i + 2] == "/*":
-            a = i
-            j = sql.find("*/", i + 2)
-            i = n if j < 0 else j + 1
-            spans.append((a, i + 1))
-        i += 1
-    return spans
-
-
-def mask_literals(sql: str) -> str:
-    """``sql`` with every literal, quoted identifier and comment blanked
-    to spaces (positions preserved), so keyword and marker scans never
-    see quoted text."""
-    out = list(sql)
-    for a, b in _literal_spans(sql):
-        out[a:b] = " " * (min(b, len(out)) - a)
-    return "".join(out)
 
 
 # --- statement classification ------------------------------------------
@@ -505,7 +535,7 @@ def classify_statement(sql: str) -> str:
     ``catalog_ddl`` (view/schema), ``sequence_ddl``, ``table_ddl``
     (CREATE TABLE / [UNIQUE] INDEX), ``explain``, ``maintenance``,
     ``introspection``, ``settings`` or ``query`` (everything else)."""
-    m = _HEAD_RE.match(mask_literals(sql))
+    m = _HEAD_RE.match(Lexed(sql).masked)
     if m is None:
         return "query"
     word = m.group(1).upper()
@@ -543,67 +573,53 @@ def rewrite_star_modifiers(sql: str) -> str | None:
     + appended replacement expressions.  Returns the rewritten SQL, or
     None when no star modifier is present."""
     out = sql
-    changed = True
-    any_change = False
-    while changed:
-        changed = False
-        lits = _literal_spans(out)
-        for star in re.finditer(r"\*", out):
-            i = star.start()
-            if any(a <= i < b for a, b in lits):
-                continue
-            if not _star_is_expression(out, i):
-                continue
-            j = i + 1
-            while j < len(out) and out[j].isspace():
-                j += 1
-            m = _STARMOD_WORD.match(out[j:])
-            if not m:
-                continue
-            excluded: list[str] = []
-            replacements: list[tuple[str, str]] = []
-            k = j
-            while True:
-                m = _STARMOD_WORD.match(out[k:])
-                if not m:
-                    break
-                kind = m.group(1).upper()
-                p = k + m.end()
-                while p < len(out) and out[p].isspace():
-                    p += 1
-                if p < len(out) and out[p] == "(":
-                    end = _match_paren_group(out, p)
-                    body = out[p + 1 : end - 1]
-                else:
-                    mi = _IDENT.match(out, p)
-                    if not mi:
-                        raise ValueError(f"malformed {kind} modifier")
-                    end, body = mi.end(), mi.group(0)
-                if kind == "EXCLUDE":
-                    excluded.extend(
-                        c.strip() for c in _split_toplevel_commas(body)
-                    )
-                else:
-                    for item in _split_toplevel_commas(body):
-                        ma = _AS_ALIAS.search(item.strip())
-                        if not ma:
-                            raise ValueError(
-                                "REPLACE items need the `expr AS col` form"
-                            )
-                        replacements.append(
-                            (item.strip()[: ma.start()].strip(), ma.group(1))
+    while True:
+        lx = Lexed(out)
+        star = next(
+            (
+                m
+                for m in _STAR_RE.finditer(lx.masked)
+                if _star_is_expression(out, m.start())
+            ),
+            None,
+        )
+        if star is None:
+            return out if out is not sql else None
+        excluded: list[str] = []
+        replacements: list[tuple[str, str]] = []
+        k = star.end()
+        while m := _STARMOD_WORD.match(lx.masked, k):
+            kind = m.group(1).upper()
+            p = m.end()
+            if lx.masked.startswith("(", p):
+                end = lx.partner(p) + 1
+                body = out[p + 1 : end - 1]
+            else:
+                mi = _IDENT.match(out, p)
+                if not mi:
+                    raise ValueError(f"malformed {kind} modifier")
+                end, body = mi.end(), mi.group(0)
+            items = [c.strip() for c in Lexed(body).split_toplevel()]
+            if kind == "EXCLUDE":
+                excluded.extend(items)
+            else:
+                for item in items:
+                    ma = _AS_ALIAS.search(item)
+                    if not ma:
+                        raise ValueError(
+                            "REPLACE items need the `expr AS col` form"
                         )
-                k = end
-                while k < len(out) and out[k].isspace():
-                    k += 1
-            drop = excluded + [c for _, c in replacements]
-            star_txt = out[: i + 1] + f" EXCEPT ({', '.join(drop)})"
-            extra = "".join(f", {e} AS {c}" for e, c in replacements)
-            out = star_txt + extra + " " + out[k:]
-            changed = True
-            any_change = True
-            break
-    return out if any_change else None
+                    replacements.append(
+                        (item[: ma.start()].strip(), ma.group(1))
+                    )
+            k = end
+        while k < len(out) and out[k].isspace():
+            k += 1
+        i = star.start()
+        drop = excluded + [c for _, c in replacements]
+        star_txt = out[: i + 1] + f" EXCEPT ({', '.join(drop)})"
+        extra = "".join(f", {e} AS {c}" for e, c in replacements)
+        out = star_txt + extra + " " + out[k:]
 
 
 # --- DuckDB expression-grammar rewrites (round 9) ----------------------
@@ -622,13 +638,18 @@ def rewrite_star_modifiers(sql: str) -> str | None:
 #   a // b                     -> a div b               (integer division;
 #                                  DuckDB falls back to / on non-integer
 #                                  operands — documented divergence)
+#   x::T[] / CAST(x AS T[n])   -> ARRAY<T>             (array type suffix)
 #
-# All rewrites are literal-span aware (a bracket or arrow inside a
-# string, quoted identifier or comment is data).  `->` with a
-# non-literal right side is left untouched so Spark lambda arrows
-# (`transform(a, x -> x + 1)`) keep working; a literal-RHS arrow whose
-# left side is a bare lambda parameter of a known higher-order function
-# is also skipped.
+# Every rewrite reads the one lexical pass (``Lexed``) of its input: a
+# '...' string ('' escapes), a "..." identifier, a -- line comment or a
+# /* */ block comment is data.  Keyword and operator searches run on
+# ``masked``; ``partner`` matches brackets, ``operand_start`` /
+# ``operand_end`` find an operator's operands, ``enclosing_call`` names
+# the call around a position, and ``split_toplevel`` splits argument
+# lists.  `->` with a non-literal right side is left untouched so Spark
+# lambda arrows (`transform(a, x -> x + 1)`) keep working; a
+# literal-RHS arrow whose left side is a bare lambda parameter of a
+# known higher-order function is also skipped.
 
 _SQL_KEYWORDS_LEFT = frozenset(
     """AND OR NOT IN IS LIKE ILIKE GLOB BETWEEN WHEN THEN ELSE CASE END
@@ -645,226 +666,20 @@ _HOF_NAMES = frozenset(
 )
 
 _INT_LIT = re.compile(r"-?\d+\s*$")
+_TYPE_HEAD_RE = re.compile(r"(::\s*|\bAS\s+)(\w+)\s*$", re.I)
+_TYPE_DIMS_RE = re.compile(r"(?:\s*\[\s*\d*\s*\])+")
 _PLAIN_KEY = re.compile(r"[A-Za-z_]\w*$")
 
 
-def _match_fwd(sql: str, i: int, open_ch: str, close_ch: str) -> int:
-    """Index AFTER the bracket matching sql[i] == open_ch (string- and
-    quoted-identifier-aware)."""
-    depth, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == '"':
-            i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-        elif ch == open_ch:
-            depth += 1
-        elif ch == close_ch:
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError(f"unbalanced {open_ch}{close_ch} in expression")
+_COLON_RE = re.compile("::|:")
 
 
-def _match_bwd(sql: str, i: int, open_ch: str, close_ch: str) -> int:
-    """Index of the bracket matching sql[i] == close_ch, scanning left
-    (string-aware via a forward pre-pass)."""
-    stack = []
-    j, n = 0, len(sql)
-    while j <= i:
-        ch = sql[j]
-        if ch == "'":
-            j += 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-        elif ch == '"':
-            j += 1
-            while j < n and sql[j] != '"':
-                j += 1
-        elif ch == open_ch:
-            stack.append(j)
-        elif ch == close_ch:
-            if j == i:
-                return stack[-1]
-            if stack:
-                stack.pop()
-        j += 1
-    raise ValueError(f"unbalanced {open_ch}{close_ch} in expression")
-
-
-def _operand_left(sql: str, end: int) -> int:
-    """Start index of the postfix-operand chain ending just before
-    ``end`` — identifiers (dotted / ``::``-cast chains), string
-    literals, function calls, paren groups and subscript groups."""
-    i = end - 1
-    while i >= 0 and sql[i].isspace():
-        i -= 1
-    if i < 0:
-        raise ValueError("operator at start of expression")
-    while i >= 0:
-        ch = sql[i]
-        if ch == ")":
-            i = _match_bwd(sql, i, "(", ")") - 1
-            # adjacent identifier = function name (unless a keyword)
-            j = i
-            while j >= 0 and sql[j].isspace():
-                j -= 1
-            m = re.search(r"(\w+)\s*$", sql[: j + 1])
-            if m and m.group(1).upper() not in _SQL_KEYWORDS_LEFT:
-                i = m.start(1) - 1
-        elif ch == "]":
-            i = _match_bwd(sql, i, "[", "]") - 1
-            continue  # the base of the subscript is further left
-        elif ch == "}":
-            i = _match_bwd(sql, i, "{", "}") - 1
-        elif ch == "'":
-            i -= 1
-            while i >= 0:
-                if sql[i] == "'":
-                    if i - 1 >= 0 and sql[i - 1] == "'":
-                        i -= 2
-                        continue
-                    break
-                i -= 1
-            i -= 1
-        elif ch == '"':
-            i -= 1
-            while i >= 0 and sql[i] != '"':
-                i -= 1
-            i -= 1
-        elif ch.isalnum() or ch == "_":
-            while i >= 0 and (sql[i].isalnum() or sql[i] == "_"):
-                i -= 1
-            # parameter markers are operands: `$1` / `$name`, and a
-            # SINGLE leading `:` (Spark's named form — a double colon
-            # is a cast, handled by the connector check below)
-            if i >= 0 and sql[i] == "$":
-                i -= 1
-                break
-            if (
-                i >= 0
-                and sql[i] == ":"
-                and not (i >= 1 and sql[i - 1] == ":")
-            ):
-                i -= 1
-                break
-        else:
-            break
-        # connectors keep the chain going left: `.` and `::`
-        j = i
-        while j >= 0 and sql[j].isspace():
-            j -= 1
-        if j >= 0 and sql[j] == ".":
-            i = j - 1
-            continue
-        if j >= 1 and sql[j - 1 : j + 1] == "::":
-            i = j - 2
-            continue
-        break
-    start = i + 1
-    while start < end and sql[start].isspace():
-        start += 1
-    return start
-
-
-def _operand_right(sql: str, start: int) -> int:
-    """End index (exclusive) of the prefix operand starting at
-    ``start`` — a string/number literal, identifier chain, function
-    call or paren group (enough for a SIMILAR TO pattern)."""
-    n = len(sql)
-    i = start
-    while i < n and sql[i].isspace():
-        i += 1
-    if i >= n:
-        raise ValueError("operator at end of expression")
-    if sql[i] == "'":
-        i += 1
-        while i < n:
-            if sql[i] == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    i += 2
-                    continue
-                break
-            i += 1
-        return i + 1
-    if sql[i] == "(":
-        return _match_fwd(sql, i, "(", ")")
-    # parameter markers ($1 / $name / :name / ?) are operands
-    m = re.match(r"[$:]?[\w.\"]+|\?", sql[i:])
-    if not m:
-        raise ValueError(f"cannot parse operand at: {sql[i:i+30]!r}")
-    j = i + m.end()
-    k = j
-    while k < n and sql[k].isspace():
-        k += 1
-    if k < n and sql[k] == "(":
-        return _match_fwd(sql, k, "(", ")")
-    return j
-
-
-def _enclosing_call_name(sql: str, pos: int) -> str | None:
-    """Name of the function whose argument list contains ``pos``
-    (None at top level) — used to skip lambda arrows inside HOFs."""
-    depth = 0
-    i = pos - 1
-    while i >= 0:
-        ch = sql[i]
-        if ch == "'":
-            i -= 1
-            while i >= 0 and sql[i] != "'":
-                i -= 1
-        elif ch == ")":
-            depth += 1
-        elif ch == "(":
-            if depth == 0:
-                m = re.search(r"(\w+)\s*$", sql[:i])
-                return m.group(1).lower() if m else None
-            depth -= 1
-        i -= 1
-    return None
-
-
-def _toplevel_colon(body: str) -> int:
-    """Index of the slice colon at bracket/paren depth 0, skipping
-    ``::`` casts and string literals; -1 when absent."""
-    depth, i, n = 0, 0, len(body)
-    while i < n:
-        ch = body[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if body[i] == "'":
-                    if i + 1 < n and body[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == ":" and depth == 0:
-            if i + 1 < n and body[i + 1] == ":":
-                i += 2
-                continue
-            return i
-        i += 1
+def _slice_colon(body: str) -> int:
+    """Index of the slice colon at bracket depth 0 (``::`` casts are
+    not slice colons); -1 when absent."""
+    for m in Lexed(body).toplevel(_COLON_RE):
+        if m.group() == ":":
+            return m.start()
     return -1
 
 
@@ -909,14 +724,12 @@ def _slice_rewrite(operand: str, lo: str, hi: str, is_list: bool = False) -> str
 
 def _rw_brackets(sql: str) -> str | None:
     """One bracket rewrite (leftmost applicable): list literal,
-    integer-literal subscript, or slice.  Returns None when no bracket
-    needs rewriting."""
-    lits = _literal_spans(sql)
-    for m in re.finditer(r"\[", sql):
+    integer-literal subscript, slice, or array type suffix.  Returns
+    None when no bracket needs rewriting."""
+    lx = Lexed(sql)
+    for m in re.finditer(r"\[", lx.masked):
         i = m.start()
-        if any(a <= i < b for a, b in lits):
-            continue
-        close = _match_fwd(sql, i, "[", "]")
+        close = lx.partner(i) + 1
         body = sql[i + 1 : close - 1]
         j = i - 1
         while j >= 0 and sql[j].isspace():
@@ -939,13 +752,28 @@ def _rw_brackets(sql: str) -> str | None:
             return sql[:i] + f"array({body})" + sql[close:]
         # DuckDB array TYPE suffixes (`x::INT[3]`, `CAST(x AS INT[])`)
         # are not subscripts — the word before the bracket is a type
-        # name introduced by `::` or `AS`
-        type_pos = re.search(r"(::\s*|\bAS\s+)\w+(\[\d*\])*\s*$", sql[:i], re.I)
-        if type_pos:
+        # name introduced by `::` or a CAST's `AS`.  Each bracket pair
+        # is one ARRAY<...> level (a fixed size is not kept); T goes
+        # through the same VARCHAR -> STRING mapping as a plain cast.
+        tm = _TYPE_HEAD_RE.search(sql, 0, i)
+        if tm:
+            dims = _TYPE_DIMS_RE.match(sql, i)
+            if dims and (
+                tm.group(1).startswith(":")
+                or lx.enclosing_call(i) in ("cast", "try_cast")
+            ):
+                t = tm.group(2)
+                t = "STRING" if t.upper() == "VARCHAR" else t
+                k = dims.group().count("[")
+                return (
+                    sql[: tm.start(2)]
+                    + "ARRAY<" * k + t + ">" * k
+                    + sql[dims.end() :]
+                )
             continue
-        colon = _toplevel_colon(body)
+        colon = _slice_colon(body)
         if colon >= 0:
-            start = _operand_left(sql, i)
+            start = lx.operand_start(i)
             operand = sql[start:i].strip()
             # a syntactically-visible array operand slices as a list
             is_list = bool(
@@ -962,7 +790,7 @@ def _rw_brackets(sql: str) -> str | None:
             # (probed; plain element_at raises under ANSI).  Index 0 is
             # NULL in DuckDB but an INVALID_INDEX_OF_ZERO error even in
             # try_element_at — fold it to a NULL index.
-            start = _operand_left(sql, i)
+            start = lx.operand_start(i)
             operand = sql[start:i].strip()
             idx = body.strip()
             if int(idx) == 0:
@@ -998,23 +826,20 @@ def _rw_arrows(sql: str) -> str | None:
     extracts text.  Only literal right sides rewrite; Spark lambda
     arrows (non-literal RHS, or bare-identifier LHS inside a known
     higher-order function) are preserved."""
-    lits = _literal_spans(sql)
-    for m in re.finditer(r"->>?", sql):
+    lx = Lexed(sql)
+    for m in re.finditer(r"->>?", lx.masked):
         i = m.start()
-        if any(a <= i < b for a, b in lits):
-            continue
         is_text = m.group(0) == "->>"
-        rend = _operand_right(sql, m.end())
+        rend = lx.operand_end(m.end())
         path = _json_path(sql[m.end() : rend])
         if path is None:
             continue  # lambda body or computed path — leave alone
-        start = _operand_left(sql, i)
+        start = lx.operand_start(i)
         operand = sql[start:i].strip()
         if _PLAIN_KEY.fullmatch(operand) or re.fullmatch(
             r"\(\s*\w+(\s*,\s*\w+)*\s*\)", operand
         ):
-            fn = _enclosing_call_name(sql, start)
-            if fn in _HOF_NAMES:
+            if lx.enclosing_call(start) in _HOF_NAMES:
                 continue  # `transform(a, x -> 1)`-style lambda
         qpath = path.replace("'", "''")
         if is_text:
@@ -1035,12 +860,10 @@ def _rw_similar_to(sql: str) -> str | None:
     pattern anchored for a FULL match (DuckDB probed: the pattern is a
     plain regex — '%' is NOT a wildcard — and must match the whole
     string)."""
-    lits = _literal_spans(sql)
-    for m in _SIMILAR_RE.finditer(sql):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
+    lx = Lexed(sql)
+    for m in _SIMILAR_RE.finditer(lx.masked):
         neg = "NOT " if m.group(1) else ""
-        rend = _operand_right(sql, m.end())
+        rend = lx.operand_end(m.end())
         rhs = sql[m.end() : rend].strip()
         if rhs.startswith("'") and rhs.endswith("'") and len(rhs) >= 2:
             patt = rhs[1:-1]
@@ -1055,12 +878,8 @@ def _rw_intdiv(sql: str) -> str | None:
     """`a // b` -> `a div b` (DuckDB's integer division truncates
     toward zero, exactly Spark's div; non-integer operands fall back
     to `/` in DuckDB — the one documented divergence)."""
-    lits = _literal_spans(sql)
-    for m in re.finditer(r"//", sql):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
-        return sql[: m.start()] + " div " + sql[m.end() :]
-    return None
+    m = re.search(r"//", Lexed(sql).masked)
+    return None if m is None else sql[: m.start()] + " div " + sql[m.end() :]
 
 
 # A bare VARCHAR target type: DuckDB's VARCHAR is unbounded, Spark's
@@ -1071,12 +890,10 @@ _VARCHAR_CAST_RE = re.compile(r"(\bAS\s+|::\s*)VARCHAR\b(?!\s*\()", re.I)
 
 def _rw_varchar_cast(sql: str) -> str | None:
     """`CAST(x AS VARCHAR)` / `x::VARCHAR` -> STRING (leftmost)."""
-    lits = _literal_spans(sql)
-    for m in _VARCHAR_CAST_RE.finditer(sql):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
-        if m.group(1).upper().startswith("AS") and _enclosing_call_name(
-            sql, m.start()
+    lx = Lexed(sql)
+    for m in _VARCHAR_CAST_RE.finditer(lx.masked):
+        if m.group(1).upper().startswith("AS") and lx.enclosing_call(
+            m.start()
         ) not in ("cast", "try_cast"):
             continue  # a column alias named varchar
         return sql[: m.end(1)] + "STRING" + sql[m.end() :]
@@ -1231,41 +1048,11 @@ def _strf_to_java(fmt: str) -> str | None:
     return "".join(out)
 
 
-def _split_call_args(body: str) -> list[str]:
-    """Split a call's argument text on top-level commas (paren-,
-    bracket- and string-aware)."""
-    parts: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if body[j] == "'":
-                    if j + 1 < n and body[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(body[i : j + 1])
-            i = j + 1
-            continue
-        if ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-            i += 1
-            continue
-        cur.append(ch)
-        i += 1
-    if cur or parts:
-        parts.append("".join(cur).strip())
-    return parts
+def _call_args(body: str) -> list[str]:
+    """A call's argument texts, stripped (none for an empty body)."""
+    if not body.strip():
+        return []
+    return [a.strip() for a in Lexed(body).split_toplevel()]
 
 
 def _str_lit(text: str) -> str | None:
@@ -1280,16 +1067,10 @@ _JAVA_RE_META = set("\\.[]{}()*+?^$|")
 
 
 def _rw_fn_aliases(sql: str) -> str | None:
-    lits = _literal_spans(sql)
-    for m in _FN_ALIAS_RE.finditer(sql):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
-        return (
-            sql[: m.start(1)]
-            + _FN_ALIASES[m.group(1).lower()]
-            + sql[m.end(1) :]
-        )
-    return None
+    m = _FN_ALIAS_RE.search(Lexed(sql).masked)
+    if m is None:
+        return None
+    return sql[: m.start(1)] + _FN_ALIASES[m.group(1).lower()] + sql[m.end(1) :]
 
 
 def _rw_fn_complex(sql: str) -> str | None:
@@ -1297,14 +1078,11 @@ def _rw_fn_complex(sql: str) -> str | None:
     regex escape), list_prepend (argument swap), epoch (double cast),
     date_diff/datediff 3-arg (boundary count), strftime/strptime
     (format translation), list_unique (distinct non-null count)."""
-    lits = _literal_spans(sql)
-    for m in _FN_COMPLEX_RE.finditer(sql):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
+    lx = Lexed(sql)
+    for m in _FN_COMPLEX_RE.finditer(lx.masked):
         name = m.group(1).lower()
-        open_i = sql.index("(", m.end(1))
-        close = _match_fwd(sql, open_i, "(", ")")
-        args = _split_call_args(sql[open_i + 1 : close - 1])
+        close = lx.partner(m.end() - 1) + 1
+        args = _call_args(sql[m.end() : close - 1])
         repl: str | None = None
         if name == "string_split" and len(args) == 2:
             sep = _str_lit(args[1])
@@ -1351,20 +1129,18 @@ def _rw_struct_literal(sql: str) -> str | None:
     identically in both engines).  ``MAP {...}`` literals are left
     untouched (DuckDB map subscript returns a LIST — no faithful Spark
     equivalent; Spark fails loudly on the brace)."""
-    lits = _literal_spans(sql)
-    for m in re.finditer(r"\{", sql):
+    lx = Lexed(sql)
+    for m in re.finditer(r"\{", lx.masked):
         i = m.start()
-        if any(a <= i < b for a, b in lits):
-            continue
         prev = re.search(r"(\w+)\s*$", sql[:i])
         if prev and prev.group(1).upper() == "MAP":
             continue
-        close = _match_fwd(sql, i, "{", "}")
+        close = lx.partner(i) + 1
         body = sql[i + 1 : close - 1]
         pairs: list[str] = []
         ok = True
-        for part in _split_call_args(body):
-            colon = _toplevel_colon(part)
+        for part in _call_args(body):
+            colon = _slice_colon(part)
             if colon < 0:
                 ok = False
                 break

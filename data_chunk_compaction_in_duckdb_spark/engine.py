@@ -272,7 +272,7 @@ class Engine:
                 built.add(name)
             return f"__{name}"
 
-        return settings.sub_outside_literals(_CATALOG_TF_RE, to_view, query)
+        return dialect.sub_outside_literals(_CATALOG_TF_RE, to_view, query)
 
     # -- dml (reference physical_insert/delete/update.cpp): each
     #    statement is one verb on its target — staged in the open

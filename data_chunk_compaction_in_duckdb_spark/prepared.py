@@ -43,9 +43,6 @@ import re
 from dataclasses import dataclass
 
 from data_chunk_compaction_in_duckdb_spark import dialect
-from data_chunk_compaction_in_duckdb_spark.settings import (
-    sub_outside_literals,
-)
 
 PREPARE_RE = re.compile(r"^\s*PREPARE\s+(\w+)\s+AS\s+(.*?);?\s*$", re.I | re.S)
 EXECUTE_RE = re.compile(
@@ -99,20 +96,20 @@ def analyze(name: str, body: str) -> PreparedStatement:
     """Classify the statement's parameter style and pre-rewrite its
     markers to Spark named-parameter form (:p1.. / :name)."""
     # counted on the masked text, rewritten by sub_outside_literals: both
-    # use dialect._literal_spans, so counting and rewriting agree on what
+    # read the same lexical pass, so counting and rewriting agree on what
     # is a marker (a ``?`` in a comment never inflates the arity)
-    masked = dialect.mask_literals(body)
+    masked = dialect.Lexed(body).masked
     numbered = [int(x) for x in _NUMBERED_RE.findall(masked)]
     named = _NAMED_RE.findall(masked)  # cannot match $1: leading [A-Za-z_]
     qmarks = len(_QMARK_RE.findall(masked))
     if named:
         order = list(dict.fromkeys(named))
-        bound = sub_outside_literals(
+        bound = dialect.sub_outside_literals(
             re.compile(r"\$([A-Za-z_]\w*)"), lambda m: f":{m.group(1)}", body
         )
         return PreparedStatement(name, body, "named", len(order), order, bound)
     if numbered:
-        bound = sub_outside_literals(
+        bound = dialect.sub_outside_literals(
             re.compile(r"\$(\d+)"), lambda m: f":p{m.group(1)}", body
         )
         return PreparedStatement(
@@ -120,7 +117,7 @@ def analyze(name: str, body: str) -> PreparedStatement:
         )
     if qmarks:
         counter = iter(range(1, qmarks + 1))
-        bound = sub_outside_literals(
+        bound = dialect.sub_outside_literals(
             re.compile(r"\?"), lambda m: f":p{next(counter)}", body
         )
         return PreparedStatement(name, body, "numbered", qmarks, [], bound)
@@ -130,13 +127,9 @@ def analyze(name: str, body: str) -> PreparedStatement:
 def split_args(raw: str) -> tuple[list[str], dict[str, str]]:
     """EXECUTE argument list → (positional_texts, named_texts); the
     named form is DuckDB's ``ident := expr``."""
-    from data_chunk_compaction_in_duckdb_spark.storage.dmlsql import (
-        _split_top_level,
-    )
-
     pos: list[str] = []
     named: dict[str, str] = {}
-    for part in _split_top_level(raw, ","):
+    for part in dialect.Lexed(raw).split_toplevel():
         part = part.strip()
         m = re.match(r"^([A-Za-z_]\w*)\s*:=\s*(.*)$", part, re.S)
         if m:
@@ -244,7 +237,7 @@ def substitute(st: PreparedStatement, binds: dict[str, str]) -> str:
     """Substitute the rewritten ``:name`` markers with parenthesized
     argument expressions (outside literals) — the prepared-DML path,
     where the statement re-enters the engine's own SQL dispatch."""
-    return sub_outside_literals(
+    return dialect.sub_outside_literals(
         _MARKER_RE,
         lambda m: f"({binds[m.group(1)]})"
         if m.group(1) in binds
@@ -347,7 +340,7 @@ def fold_args(spark, binds: dict[str, str]) -> dict:
     if not binds:
         return {}
     for text in binds.values():
-        if re.search(r"\bSELECT\b", dialect.mask_literals(text), re.I):
+        if re.search(r"\bSELECT\b", dialect.Lexed(text).masked, re.I):
             raise ValueError(
                 "Invalid Input Error: Only scalar parameters, named "
                 "parameters or NULL supported for EXECUTE"

@@ -645,8 +645,12 @@ def storage_sequence_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="seq_q_")
     try:
         seq = Sequence.create(spark, root + "/s", start=1000, increment=7)
-        assert seq.nextval() == 1000 and seq.nextval() == 1007
-        assert seq.currval() == 1007
+        got = (seq.nextval(), seq.nextval(), seq.currval())
+        if got != (1000, 1007, 1007):
+            raise RuntimeError(
+                f"sequence nextval/nextval/currval gave {got}, "
+                "expected (1000, 1007, 1007)"
+            )
         fwd = with_sequence(cust, seq, "seq_id", order=["c_custkey"])
         rev = Sequence.create(
             spark,

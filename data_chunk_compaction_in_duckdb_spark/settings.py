@@ -302,25 +302,3 @@ def check_scope(name: str, scope, verb: str) -> None:
         raise ValueError(
             f'Catalog Error: option "{key}" cannot be {verb} locally'
         )
-
-
-def sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
-    """``pattern.sub(repl, sql)`` that skips matches inside string
-    literals, quoted identifiers and comments — table-function call
-    sites must never be rewritten when the name appears as DATA
-    (``SELECT 'duckdb_settings()' AS s``).  ``repl`` is a plain string
-    or a ``match -> str`` callable."""
-    from data_chunk_compaction_in_duckdb_spark.dialect import (
-        _literal_spans,
-    )
-
-    lits = _literal_spans(sql)
-    parts: list[str] = []
-    last = 0
-    for m in pattern.finditer(sql):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
-        parts.append(sql[last : m.start()])
-        parts.append(repl(m) if callable(repl) else repl)
-        last = m.end()
-    return "".join(parts) + sql[last:]

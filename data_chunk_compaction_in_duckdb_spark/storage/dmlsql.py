@@ -21,6 +21,11 @@ from __future__ import annotations
 
 import re
 
+from data_chunk_compaction_in_duckdb_spark.dialect import (
+    Lexed,
+    sub_outside_literals,
+)
+
 _BEGIN_RE = re.compile(
     r"^\s*(?:BEGIN(?:\s+TRANSACTION)?|START\s+TRANSACTION)\s*;?\s*$", re.I
 )
@@ -47,6 +52,8 @@ _DELETE_RE = re.compile(
 _UPDATE_RE = re.compile(
     r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?);?\s*$", re.I | re.S
 )
+_WHERE_WORD = re.compile(r"\bWHERE\b", re.I)
+_FROM_WORD = re.compile(r"\bFROM\b", re.I)
 _FROM_CLAUSE_RE = re.compile(
     r"^\s*(\w+)(?:\s+(?:AS\s+)?(\w+))?\s*$", re.I
 )
@@ -113,61 +120,6 @@ def parse_delete(
     return m.group(1), (where.strip() or None) if where else None, using
 
 
-def _split_top_level(text: str, sep: str) -> list[str]:
-    """Split on ``sep`` (a single char or keyword handled by caller) at
-    paren depth 0 and outside single-quoted literals."""
-    parts, depth, start, i, n = [], 0, 0, 0, len(text)
-    in_str = False
-    while i < n:
-        c = text[i]
-        if in_str:
-            if c == "'":
-                # '' escapes a quote inside a literal
-                if i + 1 < n and text[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and c == sep:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return parts
-
-
-def _find_top_level_kw(text: str, kw: str) -> int:
-    """Index of a depth-0 keyword outside literals, or -1."""
-    depth, i, n, k = 0, 0, len(text), len(kw)
-    in_str = False
-    while i < n:
-        c = text[i]
-        if in_str:
-            if c == "'":
-                if i + 1 < n and text[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and text[i : i + k].upper() == kw:
-            before = text[i - 1] if i else " "
-            after = text[i + k] if i + k < n else " "
-            if not before.isalnum() and before != "_" and not after.isalnum():
-                return i
-        i += 1
-    return -1
-
-
 def parse_update(
     sql: str,
 ) -> tuple[str, dict[str, str], str | None, tuple[str, str] | None] | None:
@@ -180,24 +132,25 @@ def parse_update(
     if not m:
         return None
     table, tail = m.group(1), m.group(2)
-    wi = _find_top_level_kw(tail, "WHERE")
+    wm = Lexed(tail).find_toplevel(_WHERE_WORD)
     where = None
-    if wi >= 0:
-        where = tail[wi + 5 :].strip() or None
-        tail = tail[:wi]
+    if wm is not None:
+        where = tail[wm.end() :].strip() or None
+        tail = tail[: wm.start()]
     from_ = None
-    fi = _find_top_level_kw(tail, "FROM")
-    if fi >= 0:
-        fm = _FROM_CLAUSE_RE.match(tail[fi + 4 :])
+    fm = Lexed(tail).find_toplevel(_FROM_WORD)
+    if fm is not None:
+        src = tail[fm.end() :]
+        tail = tail[: fm.start()]
+        fm = _FROM_CLAUSE_RE.match(src)
         if not fm:
             raise ValueError(
                 "Parser Error: UPDATE ... FROM supports a single "
-                f"[aliased] table source, got: {tail[fi + 4:].strip()!r}"
+                f"[aliased] table source, got: {src.strip()!r}"
             )
         from_ = (fm.group(1), fm.group(2) or fm.group(1))
-        tail = tail[:fi]
     assignments: dict[str, str] = {}
-    for part in _split_top_level(tail, ","):
+    for part in Lexed(tail).split_toplevel():
         if "=" not in part:
             raise ValueError(f"Parser Error: malformed SET clause: {part!r}")
         col, expr = part.split("=", 1)
@@ -212,10 +165,6 @@ def rewrite_qualified(text: str, table: str, alias: str) -> str:
     is needed), and the TARGET table qualifier drops (target columns
     are unqualified in the joined frame).  Rewrites skip string
     literals/comments."""
-    from data_chunk_compaction_in_duckdb_spark.settings import (
-        sub_outside_literals,
-    )
-
     text = sub_outside_literals(
         re.compile(rf"\b{re.escape(alias)}\.(\w+)"),
         lambda m: f"__src_{m.group(1)}",

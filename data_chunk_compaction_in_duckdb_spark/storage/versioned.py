@@ -875,6 +875,21 @@ class VersionedTable:
             )
         return latest + 1
 
+    def _delete_unreferenced(self, live: set[str]) -> list[str]:
+        """Delete every data file not in ``live`` (paths relative to the
+        table root), then the partition directories left empty; returns
+        the deleted files' relative paths."""
+        removed = []
+        for p in glob.glob(os.path.join(self.data_dir, "*", "*.parquet")):
+            rel = os.path.relpath(p, self.path)
+            if rel not in live:
+                os.remove(p)
+                removed.append(rel)
+        for d in glob.glob(os.path.join(self.data_dir, "*")):
+            if os.path.isdir(d) and not os.listdir(d):
+                shutil.rmtree(d)
+        return removed
+
     def vacuum_orphans(self) -> list[str]:
         """Remove data files referenced by NO manifest at any version —
         debris from crashed/conflicted writes.  History and time travel
@@ -889,16 +904,7 @@ class VersionedTable:
                 live.update(self._manifest(v)["files"])
             except FileNotFoundError:
                 continue  # already truncated by an explicit vacuum()
-        removed = []
-        for p in glob.glob(os.path.join(self.data_dir, "*", "*.parquet")):
-            rel = os.path.relpath(p, self.path)
-            if rel not in live:
-                os.remove(p)
-                removed.append(rel)
-        for d in glob.glob(os.path.join(self.data_dir, "*")):
-            if os.path.isdir(d) and not os.listdir(d):
-                shutil.rmtree(d)
-        return removed
+        return self._delete_unreferenced(live)
 
     def vacuum(self, retain_last: int = 1) -> list[str]:
         """Drop data files referenced by NO retained manifest (and the
@@ -910,15 +916,7 @@ class VersionedTable:
         live: set[str] = set()
         for v in range(horizon, latest + 1):
             live.update(self._manifest(v)["files"])
-        removed = []
-        for p in glob.glob(os.path.join(self.data_dir, "*", "*.parquet")):
-            rel = os.path.relpath(p, self.path)
-            if rel not in live:
-                os.remove(p)
-                removed.append(rel)
-        for d in glob.glob(os.path.join(self.data_dir, "*")):
-            if os.path.isdir(d) and not os.listdir(d):
-                shutil.rmtree(d)
+        removed = self._delete_unreferenced(live)
         for v in range(horizon):
             mp = os.path.join(self.log_dir, f"{v:08d}.json")
             if os.path.exists(mp):

@@ -291,7 +291,7 @@ class EngineSqlContext:
 
     def _sub_pragma_table_info(self, sql: str) -> str:
         from data_chunk_compaction_in_duckdb_spark import introspect
-        from data_chunk_compaction_in_duckdb_spark.settings import (
+        from data_chunk_compaction_in_duckdb_spark.dialect import (
             sub_outside_literals,
         )
 

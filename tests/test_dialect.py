@@ -8,10 +8,11 @@ from __future__ import annotations
 import pytest
 
 from data_chunk_compaction_in_duckdb_spark.dialect import (
-    _count_markers,
+    Lexed,
     rewrite_qualify,
     rewrite_star_modifiers,
 )
+from data_chunk_compaction_in_duckdb_spark.storage.dmlsql import parse_update
 
 
 def test_qualify_none_when_absent_or_nested():
@@ -62,7 +63,7 @@ def test_qualify_marker_reorder_inject_form():
     # original arg order: sel(1), rest(2), pred(3), tail(4)
     # rewritten text order: sel, pred, rest, tail
     assert reorder([1, 2, 3, 4]) == [1, 3, 2, 4]
-    assert _count_markers(rewritten) == 4
+    assert Lexed(rewritten).masked.count("?") == 4
     with pytest.raises(ValueError, match="positional args"):
         reorder([1])
 
@@ -222,9 +223,11 @@ def test_expr_index_is_one_based_element_at():
     assert "CAST(NULL AS INT)" in _rw("SELECT arr[0] FROM t")
     # string-keyed subscripts (map/struct) are native in both engines
     assert _rw("SELECT m['k'] FROM t") is None
-    # type brackets are not subscripts
-    assert _rw("SELECT CAST(x AS INT[]) FROM t") is None
-    assert _rw("SELECT x::INT[3] FROM t") is None
+    # type brackets are not subscripts: they become ARRAY<T>
+    assert _rw("SELECT CAST(x AS INT[]) FROM t") == (
+        "SELECT CAST(x AS ARRAY<INT>) FROM t"
+    )
+    assert _rw("SELECT x::INT[3] FROM t") == "SELECT x::ARRAY<INT> FROM t"
 
 
 def test_expr_slice_string_vs_list():
@@ -374,3 +377,55 @@ def test_review_r9_strftime_literal_letters():
     assert _rw("SELECT strftime(ts, '%Y-%m-%dT%H') FROM t") == (
         "SELECT date_format(ts, 'yyyy-MM-dd''T''HH') FROM t"
     )
+
+
+# --- one lexical pass: texts where the old per-function scanners
+# disagreed about what counts as quoted text
+
+_LEXER_CASES = [
+    (
+        parse_update,
+        "UPDATE t SET a = 1 /* x, y */ WHERE id = 1",
+        ("t", {"a": "1 /* x, y */"}, "id = 1", None),
+    ),
+    (
+        parse_update,
+        'UPDATE t SET "where" = 1 WHERE id = 1',
+        ("t", {"where": "1"}, "id = 1", None),
+    ),
+    (
+        parse_update,
+        "UPDATE t SET a = 1 -- no where here\n WHERE id = 2",
+        ("t", {"a": "1 -- no where here"}, "id = 2", None),
+    ),
+    (
+        rewrite_star_modifiers,
+        'SELECT * EXCLUDE ("a)b", c) FROM t',
+        'SELECT * EXCEPT ("a)b", c) FROM t',
+    ),
+    (
+        _rw,
+        "SELECT [1, /* ] */ 2] AS x",
+        "SELECT array(1, /* ] */ 2) AS x",
+    ),
+]
+
+
+@pytest.mark.parametrize("fn,sql,want", _LEXER_CASES)
+def test_one_lexical_rule(fn, sql, want):
+    assert fn(sql) == want
+
+
+def test_lexed_spans_mask_and_brackets():
+    sql = "SELECT 'it''s', \"a(b\" -- c)\n, f([1, (2)], '}') /* ( */"
+    lx = Lexed(sql)
+    assert [sql[a:b] for a, b in lx.spans] == [
+        "'it''s'", '"a(b"', "-- c)", "'}'", "/* ( */"
+    ]
+    assert len(lx.masked) == len(sql) and "'" not in lx.masked
+    f = sql.index("f(") + 1
+    assert sql[lx.partner(f)] == ")" and lx.partner(lx.partner(f)) == f
+    assert lx.enclosing_call(sql.index("[1")) == "f"
+    assert [p.strip() for p in lx.split_toplevel()] == [
+        "SELECT 'it''s'", '"a(b" -- c)', "f([1, (2)], '}') /* ( */"
+    ]

@@ -3,6 +3,8 @@ analog), DataFrame entry, explain, compaction hooks."""
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_engine_sql_and_tables(spark, sf_dir):
     from data_chunk_compaction_in_duckdb_spark.engine import Engine
@@ -575,3 +577,24 @@ def test_sql_checkpoint_folds_versioned_tables(spark, tmp_path):
     eng.sql("BEGIN")
     eng.sql("CHECKPOINT")
     eng.sql("ROLLBACK")
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT ['a', 'b']::VARCHAR[] AS v",
+        "SELECT CAST([1, 2] AS VARCHAR[]) AS v",
+        "SELECT TRY_CAST([[1], [2, 3]] AS VARCHAR[][]) AS v",
+        "SELECT n_nationkey AS k, [n_nationkey, n_regionkey]::BIGINT[] AS v "
+        "FROM nation ORDER BY k",
+    ],
+)
+def test_sql_array_type_suffix_matches_duckdb(spark, sf_dir, duck, sql):
+    """DuckDB's ``T[]`` cast targets reach Spark as ``ARRAY<T>``, with
+    VARCHAR as STRING, and give DuckDB's values."""
+    from data_chunk_compaction_in_duckdb_spark.engine import Engine
+
+    eng = Engine(spark=spark, sf_dir=sf_dir)
+    got = [tuple(r) for r in eng.sql(sql).collect()]
+    want = [tuple(r) for r in duck.execute(sql).fetchall()]
+    assert got == want

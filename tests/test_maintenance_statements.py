@@ -47,6 +47,15 @@ def test_vacuum_inside_transaction_is_noop(eng):
     assert eng.sql("SELECT count(*) AS c FROM mnt").collect()[0]["c"] == 6
 
 
+def test_update_comments_are_not_clause_text(eng):
+    """A comma or a WHERE inside an UPDATE's comment is comment text,
+    never SET-list or clause syntax."""
+    eng.sql("UPDATE mnt SET v = 1 /* x, y */ WHERE k = 1")
+    eng.sql("UPDATE mnt SET v = 2 -- no where here\n WHERE k = 2")
+    rows = {r["k"]: r["v"] for r in eng.sql("SELECT k, v FROM mnt").collect()}
+    assert rows == {0: 0, 1: 1, 2: 2, 3: 21, 4: 28, 5: 35}
+
+
 def test_export_import_roundtrip_parquet(eng, spark, tmp_path):
     d = str(tmp_path / "exp1")
     eng.sql(f"EXPORT DATABASE '{d}'")

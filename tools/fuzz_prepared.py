@@ -40,33 +40,23 @@ _TYPED_KEYWORD_RE = re.compile(
 )
 
 
-def _protected_spans(sql: str) -> list[tuple[int, int]]:
-    """Regions where a parameter marker would defeat the TEXTUAL
-    dialect rewrites (documented engine limitation): bracket
-    subscripts/slices/list literals, JSON-arrow right sides, and
-    SIMILAR TO patterns all require literal text at rewrite time."""
-    from data_chunk_compaction_in_duckdb_spark.dialect import (
-        _literal_spans,
-        _match_fwd,
-        _operand_right,
-    )
-
-    lits = _literal_spans(sql)
+def _protected_spans(lx) -> list[tuple[int, int]]:
+    """Regions of the lexed statement ``lx`` where a parameter marker
+    would defeat the TEXTUAL dialect rewrites (documented engine
+    limitation): bracket subscripts/slices/list literals, JSON-arrow
+    right sides, and SIMILAR TO patterns all require literal text at
+    rewrite time."""
     prot: list[tuple[int, int]] = []
-    for m in re.finditer(r"\[", sql):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
+    for m in re.finditer(r"\[", lx.masked):
         try:
-            prot.append((m.start(), _match_fwd(sql, m.start(), "[", "]")))
+            prot.append((m.start(), lx.partner(m.start()) + 1))
         except ValueError:
-            prot.append((m.start(), len(sql)))
-    for m in re.finditer(r"->>?|\bSIMILAR\s+TO\b", sql, re.I):
-        if any(a <= m.start() < b for a, b in lits):
-            continue
+            prot.append((m.start(), len(lx.sql)))
+    for m in re.finditer(r"->>?|\bSIMILAR\s+TO\b", lx.masked, re.I):
         try:
-            prot.append((m.start(), _operand_right(sql, m.end())))
+            prot.append((m.start(), lx.operand_end(m.end())))
         except ValueError:
-            prot.append((m.start(), len(sql)))
+            prot.append((m.start(), len(lx.sql)))
     return prot
 
 
@@ -78,20 +68,17 @@ def lift_parameters(
     occurrence its own parameter, DuckDB's numbered style).  Returns
     (parameterized_sql, values) or None when the query has no liftable
     literal."""
-    from data_chunk_compaction_in_duckdb_spark.dialect import (
-        _literal_spans,
-        mask_literals,
-    )
+    from data_chunk_compaction_in_duckdb_spark.dialect import Lexed
 
-    masked = mask_literals(sql)
-    prot = _protected_spans(sql)
+    lx = Lexed(sql)
+    prot = _protected_spans(lx)
 
     def clear(a: int, b: int) -> bool:
         return not any(pa < b and a < pb for pa, pb in prot)
 
     spans = [
         (m.start(), m.end())
-        for m in _INT_RE.finditer(masked)
+        for m in _INT_RE.finditer(lx.masked)
         if clear(m.start(), m.end())
     ]
     # typed DATE literals lift whole (`DATE '...'` is one value)
@@ -101,7 +88,7 @@ def lift_parameters(
             spans.append((m.start(), m.end()))
             date_spans.add((m.start(), m.end()))
     # plain string literals (not the payload of a typed literal)
-    for a, b in _literal_spans(sql):
+    for a, b in lx.spans:
         if sql[a] != "'" or not clear(a, b):
             continue
         if _TYPED_KEYWORD_RE.search(sql[:a].rstrip()):
