@@ -23,7 +23,6 @@ places CompactingPhysicalOperator (physical_operator.cpp:250-311).
 from __future__ import annotations
 
 import re as _re
-from collections import Counter
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -98,8 +97,11 @@ class Engine:
         self._prepared = prepared.PreparedStore()
         self._settings = settings.SettingsStore(self.spark)
         # query statements read on the driver ("local") and the reason
-        # each other one kept its Spark plan (local_exec.run)
-        self.local_exec_counts: Counter = Counter()
+        # each other one kept its Spark plan (local_exec.run); recipe
+        # hits, misses and why a miss was not recorded (local_exec.Recipes)
+        self.local_exec_counts = local_exec.Counts()
+        self._recipes = local_exec.Recipes(self.spark)
+        self.recipe_counts = self._recipes.counts
         # per-engine temp roots (created lazily, removed on close())
         # and generation counters that keep replaced paths fresh
         self._seq_root: str | None = None
@@ -169,7 +171,17 @@ class Engine:
           fixture file or the versioned manifest version the view
           names now — a snapshot.  A bigger input or any other shape
           keeps the Spark plan; ``local_exec_counts`` counts the local
-          reads and each fallback's reason.
+          reads and each fallback's reason.  A local read leaves a
+          recipe (``local_exec.Recipes``) keyed on the rewritten text
+          and the arguments' names and literal types.  The same
+          statement again, outside a transaction, is a recipe hit when
+          the temp views its plan went through and the session conf
+          are unchanged: the new argument values are bound into the
+          recipe and pyarrow reads the rows, with no ``spark.sql``,
+          optimizer or footer pass.  Anything else (no recipe, a
+          failed check, a value its column type cannot hold, an
+          error) takes the full path above; ``recipe_counts`` counts
+          hits, misses and why a miss was not recorded.
 
         A handler whose grammar does not match passes the statement on
         to the query handler (``SET spark.sql.x = v``, ``EXECUTE
@@ -247,15 +259,23 @@ class Engine:
             query, drop_col, reorder = q
             if args:
                 args = tuple(reorder(list(args)))
-        if args:
-            df = self.spark.sql(query, args=list(args))
-        elif params:
-            df = self.spark.sql(query, args=params)
-        else:
-            df = self.spark.sql(query)
-        if drop_col:
-            df = df.drop(drop_col)
-        return local_exec.run(self.spark, df, self.local_exec_counts)
+
+        def spark_sql() -> DataFrame:
+            if args:
+                df = self.spark.sql(query, args=list(args))
+            elif params:
+                df = self.spark.sql(query, args=params)
+            else:
+                df = self.spark.sql(query)
+            return df.drop(drop_col) if drop_col else df
+
+        return self._recipes.read(
+            query,
+            dict(enumerate(args)) if args else params,
+            spark_sql,
+            self.local_exec_counts,
+            in_txn=self._txn is not None,
+        )
 
     def _rewrite_catalog_tfs(self, query: str) -> str:
         """Materialize each catalog-TF call site (``duckdb_tables()``
@@ -452,11 +472,15 @@ class Engine:
             self.spark.sql(self._rewrite_catalog_tfs(body)).createOrReplaceTempView(
                 name
             )
+            if name in _catalog.TABLES:
+                _catalog.invalidate_views(self.spark)
             self._views = {**self._views, name: body}
             return None
         m = _DROP_VIEW_RE.match(query)
         if m:
             if_exists, name = bool(m.group(1)), m.group(2)
+            if name in _catalog.TABLES:
+                _catalog.invalidate_views(self.spark)
             if name in self._views:
                 del self._views[name]
                 self.spark.catalog.dropTempView(name)

@@ -1,4 +1,5 @@
-"""Driver-local execution of tiny point and range reads.
+"""Driver-local execution of tiny point and range reads, and the recipes
+that let a repeated one skip Spark's parser, analyzer and optimizer.
 
 A serving read returns a row or a handful, yet through Spark it pays for
 a job: scheduling, a Java compile for each new key, a task and the
@@ -41,6 +42,82 @@ ineligible statement costs one or two calls to the JVM and no optimizer
 run; only one that passes adds the optimized plan's JSON and its input
 files.
 
+Decide, then execute.  `decide` turns an eligible plan into a `Recipe`:
+the input files, the file column behind each output, ``df.schema``, and
+the filter as conjuncts pyarrow evaluates.  `execute` turns a recipe
+plus argument values into the pyarrow read and ``createDataFrame``.
+`run` is the two in a row, the full path.
+
+Recipes.  `Recipes.read` answers each query ``Engine._query`` runs.  A
+recipe hit binds the new argument values into a recorded recipe and
+runs only `execute`: no ``spark.sql``, no plan JSON, no footer pass.
+This is DuckDB's bind-once, execute-many prepared statement
+(``client_context.cpp:534-560``); the EDBT 2020 "Incremental Based
+Framework for Efficient Top-K Similarity Search in Interactive Data
+Analysis Sessions" likewise reuses work across a session's repeated
+queries.
+
+- Key: the statement text after the dialect rewrites, plus each
+  argument's name (or position) and the Spark literal type ``F.lit``
+  gives its value — an ``int`` is ``integer`` inside int32 range and
+  ``long`` outside it, a ``str`` is ``string``.  Any other value (NULL,
+  a float, a numpy scalar, which ``spark.sql`` refuses as an argument)
+  has no key: its statement takes the full path.
+- Record: a miss takes the full path.  When that reads locally, the
+  recipe is kept in a least-recently-used map of at most
+  `_RECIPES_MAX` entries.  Each parameter becomes a slot in the one
+  filter literal it folded to.  Spark binds arguments while it parses,
+  so a parameter's place comes from the text parsed once more without
+  them: each parameter has exactly one marker, and it is an operand of
+  a top-level WHERE conjunct that compares it with a column (``=``,
+  ``<``, ``<=``, ``>``, ``>=``, or an ``IN`` list).  A marker anywhere
+  else (a projection, a subquery, a function's argument) or an
+  argument the text never uses is not recorded.  Nor is a statement
+  unless every conjunct of the analyzed filters compares a column with
+  literals, so no optimizer rule can derive a literal from a parameter
+  (constant propagation would) or from session state (a SQL function,
+  a session variable, ``current_date()``); the optimizer kept those
+  literals' values, none dropped; and each parameter's value is exactly
+  one literal of the analyzed filter, compared directly with the column
+  (through at most a widening integral cast), and exactly one of the
+  optimized filter, under the same comparison (an unwrapped cast can
+  turn ``>=`` into ``=`` at a type's bound).  A statement not recorded
+  is remembered as refused, so its next misses only run the full path:
+  for any values when the text, the argument types and the view names
+  decide it, else for the same values only (a value that is also a
+  literal of the text, or a type's bound).  Its view names changing, or
+  the entry leaving the map, lets it try again.
+- Validation, on every hit, in four JVM calls for a one-view read: each
+  temp view the analyzed plan passes through still holds an equal
+  ``TemporaryViewRelation`` (``getRawTempView(name)``), and the session
+  conf fingerprint (``getAllConfs().hashCode()``) is unchanged.  That
+  catches a rebind or SET done by any path: a commit's view rebind,
+  ``createOrReplaceTempView`` and ``spark.conf.set`` called directly.
+  Both are captured before the recording miss calls ``spark.sql``, so a
+  commit racing that miss can only leave a recipe that fails
+  validation; the first local run of a statement therefore only learns
+  its view names, and the next miss records.  A relation not reached
+  through a temp view is never recorded.  A failed validation drops the
+  recipe.  Not caught: refreshing a view's file listing in place
+  (``REFRESH TABLE`` over a directory).
+- Bind: a value outside the range of its slot's column type takes the
+  full path, which stays the oracle; so does any exception on a hit.
+- Inside an open transaction nothing hits and nothing is recorded.
+- Recipes hold plan metadata — file paths, names, types, literals —
+  never rows.
+
+Counters.  ``Engine.local_exec_counts`` counts ``"local"`` for every
+local read, hits included, else the fallback reason.
+``Engine.recipe_counts`` counts ``"hit"`` and ``"miss"``; each miss adds
+``"record"`` or why it was not recorded (``"fallback"``: not local;
+``"names"``: view names learned; ``"views"``: view names changed;
+``"relation"``: a relation not reached through a temp view;
+``"slot"``: a filter literal or parameter place not certain;
+``"refused"``: refused before, not tried again; ``"error"``); a recipe
+that did not answer adds ``"invalid"``, ``"bind"`` or ``"hit_error"``; a
+statement with no key adds ``"txn"`` or ``"args"``.  Both are `Counts`,
+safe to add to from several threads.
+
 Snapshot semantics: the files are read inside the call, so the returned
 DataFrame holds the rows of the fixture file, or of the versioned
 table's manifest version, that the view names at call time.  A later
@@ -53,8 +130,11 @@ import json
 import operator
 import os
 import re
-from collections import Counter
+import threading
+from collections import Counter, OrderedDict
+from dataclasses import dataclass, replace
 from functools import reduce
+from typing import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,13 +145,22 @@ from data_chunk_compaction_in_duckdb_spark import catalog
 _EXPR = "org.apache.spark.sql.catalyst.expressions."
 _PLAN = "org.apache.spark.sql.catalyst.plans.logical."
 _RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_ANALYSIS = "org.apache.spark.sql.catalyst.analysis."
+_MARKERS = frozenset({_ANALYSIS + "NamedParameter", _ANALYSIS + "PosParameter"})
+
+# statement recipes one engine keeps, least recently used out first
+_RECIPES_MAX = 256
 
 # analyzed-plan nodes a local read can start from; a tree-string line's
 # node name follows its drawing prefix (" :- ", " +- ", indentation)
 _ANALYZED_NODES = frozenset({"Project", "Filter", "SubqueryAlias", "View", "Relation"})
 _NODE_RE = re.compile(r"^[\s:+\-]*(\w+)")
+# a temp view's line names it alone; a relation read by path has no name
+_TEMP_VIEW_RE = re.compile(r"^[\s:+\-]*View \(`([^`.]+)`, ")
+_PATH_RELATION_RE = re.compile(r"^[\s:+\-]*Relation \[")
 
 _INTEGRAL = frozenset({"byte", "short", "integer", "long"})
+_WIDTH = {"byte": 0, "short": 1, "integer": 2, "long": 3}
 _COMPARE = {
     "EqualTo": operator.eq,
     "LessThan": operator.lt,
@@ -95,20 +184,63 @@ class _Ineligible(Exception):
         self.reason = reason
 
 
-def run(spark: SparkSession, df: DataFrame, counts: Counter) -> DataFrame:
-    """``df``'s rows read on the driver when its plan is eligible (see
-    the module docstring), else ``df`` itself.  ``counts`` gains
-    ``"local"`` for a local read, else the fallback reason."""
+class Counts(Counter):
+    """A Counter that several threads may `add` to."""
+
+    def __init__(self, *args, **kwargs) -> None:
+        super().__init__(*args, **kwargs)
+        self._lock = threading.Lock()
+
+    def add(self, key: str) -> None:
+        with self._lock:
+            self[key] += 1
+
+
+@dataclass(frozen=True)
+class _Slot:
+    """A statement parameter's place in a recipe's filter."""
+
+    param: int | str  # position of a ``?`` argument, or a ``:name``
+
+
+@dataclass(frozen=True)
+class _Conjunct:
+    """One filter conjunct: ``column kind values``."""
+
+    column: str
+    kind: str  # "IsNotNull", "In" or a `_COMPARE` name, column side first
+    arrow: object  # the column's Arrow type; None for IsNotNull
+    values: tuple  # ints or strs, or a `_Slot` bound at `execute`
+
+
+@dataclass(frozen=True)
+class Recipe:
+    """What `execute` needs to read an eligible statement's rows."""
+
+    views: tuple[str, ...] | None  # temp views passed through; None: not all
+    paths: tuple[str, ...]
+    fields: tuple  # Arrow fields read: the outputs' and the filter's columns
+    outputs: tuple[str, ...]  # the file column behind each output
+    schema: T.StructType
+    conjuncts: tuple[_Conjunct, ...]
+
+
+def run(spark: SparkSession, df: DataFrame, counts: Counts) -> tuple[DataFrame, Recipe | None]:
+    """``df``'s rows read on the driver and their recipe when its plan is
+    eligible (see the module docstring), else ``df`` itself and None.
+    ``counts`` gains ``"local"`` for a local read, else the fallback
+    reason."""
     try:
-        out = _read_local(spark, df)
+        recipe = decide(spark, df)
+        out = execute(spark, recipe)
     except _Ineligible as e:
-        counts[e.reason] += 1
-        return df
+        counts.add(e.reason)
+        return df, None
     except Exception:  # noqa: BLE001 — counted; the Spark plan answers
-        counts["error"] += 1
-        return df
-    counts["local"] += 1
-    return out
+        counts.add("error")
+        return df, None
+    counts.add("local")
+    return out, recipe
 
 
 def _tree(nodes: list[dict]) -> dict:
@@ -130,12 +262,10 @@ def _conjuncts(expr: dict) -> list[dict]:
     return [expr]
 
 
-def _predicate(cond: dict, column) -> tuple[str, object]:
-    """(column name, pyarrow expression) of one filter conjunct that
-    pyarrow evaluates exactly as Spark does; ``column`` maps an
-    expression to its relation column ``(name, json type, type)``."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _predicate(cond: dict, column) -> _Conjunct:
+    """One filter conjunct that pyarrow evaluates exactly as Spark does;
+    ``column`` maps an expression to its relation column ``(name, json
+    type, type)``."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     kind, kids = cond["class"].rsplit(".", 1)[-1], cond["kids"]
@@ -145,9 +275,8 @@ def _predicate(cond: dict, column) -> tuple[str, object]:
     if col is None:
         raise _Ineligible("conjunct")
     name, json_type, dt = col
-    field = pc.field(name)
     if kind == "IsNotNull":
-        return name, field.is_valid()
+        return _Conjunct(name, kind, None, ())
     literals = kids[1:]
     if not literals or any(
         k["class"] != _EXPR + "Literal" or k["value"] is None or k["dataType"] != json_type
@@ -155,16 +284,13 @@ def _predicate(cond: dict, column) -> tuple[str, object]:
     ):
         raise _Ineligible("conjunct")
     if json_type in _INTEGRAL:
-        values = [int(k["value"]) for k in literals]
+        values = tuple(int(k["value"]) for k in literals)
     elif json_type == "string" and kind == "EqualTo":
-        values = [k["value"] for k in literals]
+        values = tuple(k["value"] for k in literals)
     else:
         raise _Ineligible("conjunct")
-    arrow = to_arrow_type(dt)
-    if kind == "In":
-        return name, field.isin(pa.array(values, arrow))
-    if kind in _COMPARE and len(literals) == 1:
-        return name, _COMPARE[kind](field, pa.scalar(values[0], arrow))
+    if kind == "In" or (kind in _COMPARE and len(literals) == 1):
+        return _Conjunct(name, kind, to_arrow_type(dt), values)
     raise _Ineligible("conjunct")
 
 
@@ -233,20 +359,26 @@ def _check_footers(spark: SparkSession, paths: list[str], types: dict) -> None:
             raise _Ineligible("bytes")
 
 
-def _read_local(spark: SparkSession, df: DataFrame) -> DataFrame:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+def decide(spark: SparkSession, df: DataFrame) -> Recipe:
+    """The recipe of ``df``'s local read; raises `_Ineligible` with the
+    first rule the plan breaks."""
     qe = df._jdf.queryExecution()
     analyzed = qe.analyzed()
     if analyzed.nodeName() not in _ANALYZED_NODES:
         raise _Ineligible("shape")
+    views: list[str] | None = []
     for line in analyzed.toString().splitlines():
         m = _NODE_RE.match(line)
         if m is None or m.group(1) not in _ANALYZED_NODES or (
             m.group(1) == "Relation" and not line.rstrip().endswith(" parquet")
         ):
             raise _Ineligible("shape")
+        if views is not None and m.group(1) in ("View", "Relation"):
+            v = _TEMP_VIEW_RE.match(line)
+            if v is not None:
+                views.append(v.group(1))
+            elif not _PATH_RELATION_RE.match(line):
+                views = None  # a catalog table or view: no temp view to check
 
     node = _tree(json.loads(qe.optimizedPlan().toJSON()))
     project = filt = None
@@ -280,23 +412,357 @@ def _read_local(spark: SparkSession, df: DataFrame) -> DataFrame:
     schema = df.schema
     if len(outputs) != len(schema.fields):
         raise _Ineligible("shape")
-    predicates = [
+    conjuncts = tuple(
         _predicate(c, column) for c in (_conjuncts(_tree(filt["condition"])) if filt else [])
-    ]
+    )
     types = {name: dt for name, _, dt in columns.values()}
-    needed = {n: types[n] for n in [*outputs, *(name for name, _ in predicates)]}
-    fields = [_arrow_field(n, dt) for n, dt in needed.items()]
+    needed = {n: types[n] for n in [*outputs, *(c.column for c in conjuncts)]}
+    fields = tuple(_arrow_field(n, dt) for n, dt in needed.items())
 
     paths = _local_paths(df.inputFiles())
     _check_footers(spark, paths, needed)
+    return Recipe(
+        tuple(views) if views else None, tuple(paths), fields, tuple(outputs), schema, conjuncts
+    )
+
+
+def _bind(value, arrow):
+    """``value`` for a slot of Arrow type ``arrow``; a value the column
+    type cannot hold takes the full path."""
+    import pyarrow as pa
+
+    if pa.types.is_integer(arrow):
+        half = 1 << (arrow.bit_width - 1)
+        ok = type(value) is int and -half <= value < half
+    else:
+        ok = type(value) is str
+    if not ok:
+        raise _Ineligible("bind")
+    return value
+
+
+def _arrow_filter(c: _Conjunct, args: dict | None):
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    field = pc.field(c.column)
+    if c.kind == "IsNotNull":
+        return field.is_valid()
+    values = [_bind(args[v.param], c.arrow) if isinstance(v, _Slot) else v for v in c.values]
+    if c.kind == "In":
+        return field.isin(pa.array(values, c.arrow))
+    return _COMPARE[c.kind](field, pa.scalar(values[0], c.arrow))
+
+
+def execute(spark: SparkSession, recipe: Recipe, args: dict | None = None) -> DataFrame:
+    """The rows ``recipe`` reads, with ``args`` (parameter -> value)
+    bound into its slots, as a DataFrame over a ``LocalRelation``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    filters = [_arrow_filter(c, args) for c in recipe.conjuncts]
     table = pq.read_table(
-        paths,
-        schema=pa.schema(fields),
-        columns=list(dict.fromkeys(outputs)),
-        filters=reduce(operator.and_, (p for _, p in predicates)) if predicates else None,
+        list(recipe.paths),
+        schema=pa.schema(recipe.fields),
+        columns=list(dict.fromkeys(recipe.outputs)),
+        filters=reduce(operator.and_, filters) if filters else None,
         partitioning=None,
     )
     # One chunk per column: Spark drops the rows of an Arrow stream
     # whose batches follow zero-row ones (empty part files yield those).
-    table = table.select(outputs).rename_columns(schema.names).combine_chunks()
-    return spark.createDataFrame(table, schema=schema)
+    table = table.select(list(recipe.outputs)).rename_columns(recipe.schema.names)
+    return spark.createDataFrame(table.combine_chunks(), schema=recipe.schema)
+
+
+# -- recipes
+
+
+def _lit_type(value) -> str | None:
+    """The Spark type ``F.lit(value)`` gives, for the values a recipe
+    key takes; None for any other value."""
+    if type(value) is str:
+        return "string"
+    if type(value) is int:
+        if -(2**31) <= value < 2**31:
+            return "integer"
+        if -(2**63) <= value < 2**63:
+            return "long"
+    return None
+
+
+def _key(query: str, args: dict) -> tuple | None:
+    types = tuple((name, _lit_type(v)) for name, v in sorted(args.items()))
+    if any(t is None for _, t in types):
+        return None
+    return query, types
+
+
+def _analyzed_filters(df: DataFrame) -> list[dict]:
+    """The conditions of the analyzed plan's filters, nested; the plan is
+    the chain of unary nodes down to one relation that `decide` took."""
+    node = df._jdf.queryExecution().analyzed()
+    conditions = []
+    while True:
+        if node.nodeName() == "Filter":
+            conditions.append(_tree(json.loads(node.condition().toJSON())))
+        kids = node.children()
+        if kids.isEmpty():
+            return conditions
+        node = kids.apply(0)
+
+
+def _literals(expr: dict, up: tuple = ()):
+    """``(literal, its ancestors nearest first)`` for each literal in
+    ``expr``."""
+    if expr["class"] == _EXPR + "Literal":
+        yield expr, up
+    for kid in expr["kids"]:
+        yield from _literals(kid, (expr, *up))
+
+
+def _operand_of(literal: dict, up: tuple) -> str | None:
+    """The comparison ``literal`` is a direct operand of, seen from the
+    other side ("In" or a `_COMPARE` name), or None.  A widening
+    integral cast, which type coercion adds, may sit between them."""
+    node = literal
+    if up and up[0]["class"] == _EXPR + "Cast":
+        src, dst = literal["dataType"], up[0]["dataType"]
+        if not (src in _WIDTH and dst in _WIDTH and _WIDTH[src] < _WIDTH[dst]):
+            return None
+        node, up = up[0], up[1:]
+    if not up:
+        return None
+    kind, kids = up[0]["class"].rsplit(".", 1)[-1], up[0]["kids"]
+    if kind == "In":
+        return kind if kids[0] is not node else None
+    if kind in _SWAPPED:
+        return kind if kids[1] is node else _SWAPPED[kind]
+    return None
+
+
+def _is(expr: dict, name: str) -> bool:
+    """Whether ``expr``, under at most one cast, is of class ``name``."""
+    if expr["class"] == _EXPR + "Cast":
+        expr = expr["kids"][0]
+    return expr["class"] == _EXPR + name
+
+
+def _simple(cond: dict) -> bool:
+    """Whether analyzed conjunct ``cond`` compares a column with literals
+    and nothing else, so no optimizer rule can derive a new literal
+    from it."""
+    kind, kids = cond["class"].rsplit(".", 1)[-1], cond["kids"]
+    if kind == "IsNotNull":
+        return _is(kids[0], "AttributeReference")
+    if kind == "In":
+        return _is(kids[0], "AttributeReference") and all(_is(k, "Literal") for k in kids[1:])
+    if kind in _SWAPPED:
+        return {_is(k, "AttributeReference") for k in kids} == {True, False} and any(
+            _is(k, "Literal") for k in kids
+        )
+    return False
+
+
+def _objects(x):
+    """Every JSON object in ``x``, nested ones included."""
+    if isinstance(x, dict):
+        yield x
+        x = list(x.values())
+    if isinstance(x, list):
+        for v in x:
+            yield from _objects(v)
+
+
+def _markers_placed(spark: SparkSession, query: str, params: dict) -> bool:
+    """Whether ``query``, parsed without arguments, has exactly one
+    parameter marker for each of ``params`` and no other, each an
+    operand of a top-level WHERE conjunct whose other side is a column:
+    a comparison, or an ``IN`` list."""
+    try:
+        parsed = spark._jsparkSession.sessionState().sqlParser().parsePlan(query)
+        plan = json.loads(parsed.toJSON())
+    except Exception:  # noqa: BLE001 — a marker only the bound text parses with
+        return False
+    markers = [o for o in _objects(plan) if o.get("class") in _MARKERS]
+    placed = []
+    for node in plan:
+        if node["class"] != _PLAN + "Filter":
+            continue
+        for c in _conjuncts(_tree(node["condition"])):
+            kind, kids = c["class"].rsplit(".", 1)[-1], c["kids"]
+            if kind in _SWAPPED and len(kids) == 2:
+                placed += [
+                    a
+                    for a, b in (kids, kids[::-1])
+                    if a["class"] in _MARKERS and b["class"] == _ANALYSIS + "UnresolvedAttribute"
+                ]
+            elif kind == "In" and kids[0]["class"] == _ANALYSIS + "UnresolvedAttribute":
+                placed += [k for k in kids[1:] if k["class"] in _MARKERS]
+    if len(placed) != len(markers):
+        return False
+    # a ``?`` binds the argument of its rank by place in the text
+    ranks = sorted(m["pos"] for m in markers if "pos" in m)
+    ids = [m["name"] if "name" in m else ranks.index(m["pos"]) for m in placed]
+    return Counter(ids) == Counter(params.keys())
+
+
+def _with_slots(
+    spark: SparkSession, query: str, recipe: Recipe, df: DataFrame, args: dict
+) -> tuple[Recipe | None, bool]:
+    """``recipe`` with each parameter's literal made a slot, or None when
+    a filter literal may not be a constant of the text or some
+    parameter's place in the filter is not certain (see the module
+    docstring); and whether that None holds for any argument values,
+    not only these."""
+    analyzed = [c for cond in _analyzed_filters(df) for c in _conjuncts(cond)]
+    if not all(_simple(c) for c in analyzed) or (args and not _markers_placed(spark, query, args)):
+        return None, True
+    found = [x for cond in analyzed for x in _literals(cond)]
+    optimized = [v for c in recipe.conjuncts for v in c.values]
+    if Counter(lit["value"] for lit, _ in found) != Counter(str(v) for v in optimized):
+        return None, False
+    conjuncts = list(recipe.conjuncts)
+    for param, value in args.items():
+        direct = [_operand_of(lit, up) for lit, up in found if lit["value"] == str(value)]
+        where = [
+            (i, j)
+            for i, c in enumerate(conjuncts)
+            for j, v in enumerate(c.values)
+            if type(v) is type(value) and v == value
+        ]
+        if len(direct) != 1 or len(where) != 1:
+            return None, False
+        (i, j), c = where[0], conjuncts[where[0][0]]
+        if direct[0] != c.kind:
+            return None, False
+        conjuncts[i] = replace(c, values=(*c.values[:j], _Slot(param), *c.values[j + 1 :]))
+    return replace(recipe, conjuncts=tuple(conjuncts)), False
+
+
+def _values(args: dict) -> tuple:
+    return tuple(v for _, v in sorted(args.items()))
+
+
+@dataclass(frozen=True)
+class _Entry:
+    views: tuple[str, ...]  # the temp views the statement's plan went through
+    recipe: Recipe | None = None
+    options: tuple = ()  # each view's getRawTempView, captured before spark.sql
+    conf: int = 0  # the session conf fingerprint, captured with them
+    # not recorded: () for any argument values, else the values refused
+    refused: tuple | None = None
+
+
+class Recipes:
+    """One engine's statement recipes (see the module docstring)."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.counts = Counts()
+        self._spark = spark
+        self._entries: OrderedDict[tuple, _Entry] = OrderedDict()
+        self._lock = threading.Lock()
+        self._jvm_state = None
+
+    def read(
+        self,
+        query: str,
+        args: dict,
+        sql: Callable[[], DataFrame],
+        counts: Counts,
+        *,
+        in_txn: bool,
+    ) -> DataFrame:
+        """The rows of ``query`` with ``args`` (parameter -> value): a
+        recipe hit, else the full path over the plan ``sql()`` builds.
+        ``counts`` is `run`'s."""
+        key = None if in_txn else _key(query, args)
+        if key is None:
+            self.counts.add("txn" if in_txn else "args")
+            return run(self._spark, sql(), counts)[0]
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is not None:
+                self._entries.move_to_end(key)
+        if entry is not None and entry.recipe is not None:
+            out = self._hit(key, entry, args)
+            if out is not None:
+                counts.add("local")
+                return out
+        self.counts.add("miss")
+        refused = entry is not None and entry.refused in ((), _values(args))
+        captured = None
+        if entry is not None and not refused:
+            try:
+                captured = self._capture(entry.views)
+            except Exception:  # noqa: BLE001 — the miss just records nothing
+                captured = None
+        df = sql()
+        out, recipe = run(self._spark, df, counts)
+        if recipe is None:
+            self.counts.add("fallback")
+            return out
+        if refused and recipe.views == entry.views:
+            self.counts.add("refused")
+            return out
+        try:
+            reason = self._record(key, captured, recipe, df, args)
+        except Exception:  # noqa: BLE001 — counted; the read stands
+            reason = "error"
+        self.counts.add(reason)
+        return out
+
+    def _jvm(self):
+        if self._jvm_state is None:
+            state = self._spark._jsparkSession.sessionState()
+            self._jvm_state = (state.catalog(), state.conf())
+        return self._jvm_state
+
+    def _capture(self, views: tuple[str, ...]) -> _Entry:
+        catalog_, conf = self._jvm()
+        options = tuple(catalog_.getRawTempView(v) for v in views)
+        return _Entry(views, None, options, conf.getAllConfs().hashCode())
+
+    def _hit(self, key: tuple, entry: _Entry, args: dict) -> DataFrame | None:
+        try:
+            catalog_, conf = self._jvm()
+            valid = conf.getAllConfs().hashCode() == entry.conf and all(
+                o.equals(catalog_.getRawTempView(v)) for v, o in zip(entry.views, entry.options)
+            )
+            if valid:
+                out = execute(self._spark, entry.recipe, args)
+                self.counts.add("hit")
+                return out
+            self.counts.add("invalid")
+        except _Ineligible as e:  # a value its slot's type cannot hold
+            self.counts.add(e.reason)
+            return None
+        except Exception:  # noqa: BLE001 — counted; the full path answers
+            self.counts.add("hit_error")
+        self._put(key, entry, _Entry(entry.views))
+        return None
+
+    def _record(
+        self, key: tuple, captured: _Entry | None, recipe: Recipe, df: DataFrame, args: dict
+    ) -> str:
+        if recipe.views is None:
+            return "relation"
+        if captured is None or captured.views != recipe.views:
+            self._put(key, None, _Entry(recipe.views))
+            return "names" if captured is None else "views"
+        slotted, any_values = _with_slots(self._spark, key[0], recipe, df, args)
+        if slotted is None:
+            self._put(key, None, _Entry(recipe.views, refused=() if any_values else _values(args)))
+            return "slot"
+        self._put(key, None, replace(captured, recipe=slotted))
+        return "record"
+
+    def _put(self, key: tuple, old: _Entry | None, new: _Entry) -> None:
+        """Store ``new`` under ``key``; when ``old`` is given, only if
+        ``key`` still holds it."""
+        with self._lock:
+            if old is not None and self._entries.get(key) is not old:
+                return
+            self._entries[key] = new
+            self._entries.move_to_end(key)
+            while len(self._entries) > _RECIPES_MAX:
+                self._entries.popitem(last=False)

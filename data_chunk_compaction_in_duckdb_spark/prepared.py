@@ -26,12 +26,12 @@ Probed semantics mirrored exactly:
 
 Spark-first execution: markers are rewritten to Spark's ``:name``
 named-parameter form OUTSIDE string literals and the arguments bind
-through ``spark.sql(query, args=...)`` as literal Columns, never by
-string interpolation.  ``fold_args`` makes those Columns: a plain
-literal argument (an integer in BIGINT range, a simple quoted string,
-NULL, TRUE, FALSE) is folded in Python without a Spark job, and so are
-the NULLs of PREPARE's validation; any other argument expression is
-folded by one FROM-less SELECT, which is one Spark job.
+through ``spark.sql(query, args=...)`` as literals, never by string
+interpolation.  ``fold_args`` makes their values: a plain literal
+argument (an integer in BIGINT range, a simple quoted string, NULL,
+TRUE, FALSE) is folded in Python without a Spark job, and so are the
+NULLs of PREPARE's validation; any other argument expression is folded
+by one FROM-less SELECT, which is one Spark job.
 A body that is not a query (prepared DML on versioned tables, ...)
 re-enters ``Engine.sql`` with the markers substituted as parenthesized
 SQL expressions, the same constant expressions DuckDB binds.
@@ -323,20 +323,20 @@ def _plain_literal(text: str) -> tuple[bool, object]:
 
 
 def fold_args(spark, binds: dict[str, str]) -> dict:
-    """Evaluate EXECUTE argument expressions to literal Columns.
+    """Evaluate EXECUTE argument expressions to literal values.
 
     Spark's parameterized SQL accepts only LITERAL arguments
     (INVALID_SQL_ARG otherwise), while DuckDB accepts any constant
-    scalar expression.  A plain literal (`_plain_literal`) becomes
-    ``F.lit`` of its value directly, with no Spark work.  Any other
-    argument (an expression, a decimal — ``1.5`` is DECIMAL(2,1) in SQL
-    but DOUBLE through ``F.lit``) is constant-folded by one FROM-less
-    SELECT over all of them, which runs one Spark job, and passed as the
-    typed literal of its value.  Subquery arguments are rejected with
+    scalar expression.  A plain literal (`_plain_literal`) is its Python
+    value, with no Spark work.  Any other argument (an expression, a
+    decimal — ``1.5`` is DECIMAL(2,1) in SQL but DOUBLE through
+    ``F.lit``) is constant-folded by one FROM-less SELECT over all of
+    them, which runs one Spark job, and passed as the value that SELECT
+    returns.  ``spark.sql(query, args=...)`` makes each value the
+    ``F.lit`` Column it binds, so a statement answered from a recipe
+    (local_exec) builds none.  Subquery arguments are rejected with
     DuckDB's exact error (probed: 'Only scalar parameters, named
     parameters or NULL supported')."""
-    from pyspark.sql import functions as F
-
     if not binds:
         return {}
     for text in binds.values():
@@ -349,12 +349,12 @@ def fold_args(spark, binds: dict[str, str]) -> dict:
     for k, text in binds.items():
         plain, value = _plain_literal(text)
         if plain:
-            out[k] = F.lit(value)
+            out[k] = value
         else:
             rest.append(k)
     if rest:
         # param names are \w+, safe as aliases
         projection = ", ".join(f"({binds[k]}) AS {k}" for k in rest)
         row = spark.sql(f"SELECT {projection}").collect()[0]
-        out.update({k: F.lit(row[k]) for k in rest})
+        out.update({k: row[k] for k in rest})
     return out

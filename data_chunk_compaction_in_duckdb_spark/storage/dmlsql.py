@@ -32,26 +32,25 @@ _BEGIN_RE = re.compile(
 _COMMIT_RE = re.compile(r"^\s*COMMIT\s*;?\s*$", re.I)
 _ROLLBACK_RE = re.compile(r"^\s*(?:ROLLBACK|ABORT)\s*;?\s*$", re.I)
 
+# the head of an INSERT; the column list and the VALUES/SELECT body
+# follow it (matched over the lexed text by parse_insert)
 INSERT_RE = re.compile(
-    r"^\s*INSERT\s+(?:OR\s+(REPLACE|IGNORE)\s+)?INTO\s+(\w+)\s*"
-    r"(?:\(([^)]*)\)\s*)?(VALUES\b.*|SELECT\b.*)$",
-    re.I | re.S,
+    r"^\s*INSERT\s+(?:OR\s+(REPLACE|IGNORE)\s+)?INTO\s+(\w+)\s*", re.I
 )
-_ON_CONFLICT_NOTHING_RE = re.compile(
-    r"\s+ON\s+CONFLICT\s+DO\s+NOTHING\s*;?\s*$", re.I
-)
+_BODY_RE = re.compile(r"\s*((?:VALUES|SELECT)\b)", re.I)
+_ON_CONFLICT_NOTHING_RE = re.compile(r"\s+ON\s+CONFLICT\s+DO\s+NOTHING$", re.I)
 TRUNCATE_RE = re.compile(
     r"^\s*TRUNCATE\s+(?:TABLE\s+)?(\w+)\s*;?\s*$", re.I
 )
+# DELETE and UPDATE match the statement with its terminator stripped
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+(\w+)"
     r"(?:\s+USING\s+(\w+)(?:\s+(?:AS\s+)?(\w+))?)?"
-    r"(?:\s+WHERE\s+(.*?))?;?\s*$",
+    r"(?:\s+WHERE\s+(.*))?$",
     re.I | re.S,
 )
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?);?\s*$", re.I | re.S
-)
+_UPDATE_RE = re.compile(r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*)$", re.I | re.S)
+_EQUALS = re.compile("=")
 _WHERE_WORD = re.compile(r"\bWHERE\b", re.I)
 _FROM_WORD = re.compile(r"\bFROM\b", re.I)
 _FROM_CLAUSE_RE = re.compile(
@@ -72,6 +71,24 @@ def parse_txn_verb(sql: str) -> str | None:
     return None
 
 
+def _strip_terminator(sql: str) -> str:
+    """``sql`` without its trailing whitespace, comments and one ``;``
+    (a comment before the ``;`` goes too)."""
+    lx = Lexed(sql)
+    end, semicolon = len(sql), False
+    while end > 0:
+        span = lx.span_at(end - 1)
+        if sql[end - 1].isspace():
+            end -= 1
+        elif span is not None and sql.startswith(("--", "/*"), span[0]):
+            end = span[0]
+        elif sql[end - 1] == ";" and span is None and not semicolon:
+            end, semicolon = end - 1, True
+        else:
+            break
+    return sql[:end]
+
+
 def parse_insert(
     sql: str,
 ) -> tuple[str, list[str] | None, str, str | None] | None:
@@ -82,14 +99,24 @@ def parse_insert(
     ``'ignore'`` for the OR REPLACE / OR IGNORE prefixes; a trailing
     ``ON CONFLICT DO NOTHING`` clause (DuckDB's equivalent spelling,
     probed) also maps to ``'ignore'``."""
+    sql = _strip_terminator(sql)
     m = INSERT_RE.match(sql)
     if not m:
         return None
     mode = m.group(1).lower() if m.group(1) else None
-    cols = None
-    if m.group(3) is not None:
-        cols = [c.strip().strip('"') for c in m.group(3).split(",") if c.strip()]
-    body = m.group(4).rstrip().rstrip(";")
+    lx, start, cols = Lexed(sql), m.end(), None
+    if sql.startswith("(", start):
+        try:
+            close = lx.partner(start)
+        except ValueError:
+            return None
+        inner = Lexed(sql[start + 1 : close])
+        cols = [c.strip().strip('"') for c in inner.split_toplevel() if c.strip()]
+        start = close + 1
+    b = _BODY_RE.match(lx.masked, start)
+    if not b:
+        return None
+    body = sql[b.start(1) :]
     oc = _ON_CONFLICT_NOTHING_RE.search(body)
     if oc:
         body = body[: oc.start()]
@@ -110,7 +137,7 @@ def parse_delete(
     ``(source_table, alias)`` for DuckDB's ``DELETE FROM t USING s
     [AS a] WHERE ...`` join-delete form (alias defaults to the source
     name)."""
-    m = _DELETE_RE.match(sql)
+    m = _DELETE_RE.match(_strip_terminator(sql))
     if not m:
         return None
     where = m.group(4)
@@ -126,9 +153,11 @@ def parse_update(
     """``(table, {column: expr_sql}, where_sql | None, from_ | None)``
     or None; ``from_`` is ``(source_table, alias)`` for DuckDB's
     ``UPDATE t SET ... FROM s [AS a] WHERE ...`` join-update form.  The
-    SET list splits on depth-0 commas outside literals, so expressions
-    may contain function calls and quoted strings."""
-    m = _UPDATE_RE.match(sql)
+    SET list splits on depth-0 commas outside literals, and each item
+    at its first ``=`` outside literals, so expressions may contain
+    function calls and quoted strings and a quoted column name may hold
+    ``=``."""
+    m = _UPDATE_RE.match(_strip_terminator(sql))
     if not m:
         return None
     table, tail = m.group(1), m.group(2)
@@ -151,9 +180,10 @@ def parse_update(
         from_ = (fm.group(1), fm.group(2) or fm.group(1))
     assignments: dict[str, str] = {}
     for part in Lexed(tail).split_toplevel():
-        if "=" not in part:
+        eq = Lexed(part).find_toplevel(_EQUALS)
+        if eq is None:
             raise ValueError(f"Parser Error: malformed SET clause: {part!r}")
-        col, expr = part.split("=", 1)
+        col, expr = part[: eq.start()], part[eq.end() :]
         assignments[col.strip().strip('"')] = expr.strip()
     return table, assignments, where, from_
 

@@ -1,7 +1,8 @@
 """Driver-local reads (local_exec) give what the Spark plan gives.
 
 Each statement runs twice through ``Engine.sql``: once as the engine runs
-it, and once with ``local_exec.run`` patched to hand back the Spark plan.
+it, and once with ``local_exec.Recipes.read`` patched to hand back the
+Spark plan.
 Rows (order aside) and the JVM-side schema, nullability included, must
 match, and ``Engine.local_exec_counts`` says which path the first run took.
 """
@@ -31,7 +32,11 @@ def eng(spark, sf_dir, tmp_path):
 
 
 def _spark_plan(monkeypatch):
-    return monkeypatch.setattr(local_exec, "run", lambda spark, df, counts: df)
+    """Every query keeps the plan ``spark.sql`` builds: no local read and
+    no recipe hit."""
+    return monkeypatch.setattr(
+        local_exec.Recipes, "read", lambda self, query, args, sql, counts, in_txn=False: sql()
+    )
 
 
 def _rows(df) -> list[tuple]:
@@ -293,7 +298,8 @@ def test_plain_execute_arguments_fold_like_the_select(spark, text):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("fold-args")) == []
-    assert spark.range(1).select(folded["p1"].alias("x")).schema["x"].dataType == lit_type(value)
+    # spark.sql binds a value as F.lit does, so the value fixes the type
+    assert type(folded["p1"]) is type(value) and folded["p1"] == value
 
 
 @pytest.mark.parametrize(
@@ -304,5 +310,6 @@ def test_other_execute_arguments_fold_through_the_select(spark, text):
     assert not prepared._plain_literal(text)[0]
     folded = prepared.fold_args(spark, {"p1": text, "p2": "3"})
     row = spark.sql(f"SELECT ({text}) AS x").collect()[0]
-    got = spark.range(1).select(folded["p1"].alias("x"), folded["p2"].alias("y")).collect()[0]
+    got = spark.range(1).select(F.lit(folded["p1"]).alias("x"), F.lit(folded["p2"]).alias("y"))
+    got = got.collect()[0]
     assert got.x == row.x and got.y == 3

@@ -14,16 +14,26 @@ reads of the shape Engine.sql reads on the driver (local_exec); the
 summary line says how many EXECUTEs took that path instead of a Spark
 job.
 
+Each statement that read on the driver is EXECUTEd again after each of
+these events, and every answer is compared with DuckDB's: nothing
+(a statement-recipe hit), a commit to a versioned table, a SET, a
+rebind of every fixture view and a re-PREPARE of the same text.  The
+summary line gives those EXECUTEs' recipe hit/miss split
+(``Engine.recipe_counts``).
+
 Usage: python tools/fuzz_prepared.py [n_queries] [seed]
 Exit 1 on any divergence.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import random
 import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -147,12 +157,20 @@ def local_select(rng: random.Random) -> str:
     return f"SELECT {proj} FROM {table} WHERE {' AND '.join(conds)}"
 
 
+def _same(sdf, oracle: list) -> bool:
+    """Whether ``sdf``'s rows equal DuckDB's normalized ``oracle`` rows."""
+    from tests.oracle_compare import _cells_equal, normalize
+
+    got = normalize(sdf.columns, [tuple(x) for x in sdf.collect()])
+    return len(got) == len(oracle) and all(_cells_equal(a, b) for a, b in zip(got, oracle))
+
+
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 300
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     import duckdb
 
-    from tests.oracle_compare import _cells_equal, normalize
+    from tests.oracle_compare import normalize
     from tools.fuzz_differential import TABLES, gen_query
 
     duck = duckdb.connect()
@@ -166,10 +184,25 @@ def main() -> int:
 
     spark = get_spark(app_name="fuzz-prepared", cpus=4, shuffle_partitions=4)
     eng = Engine(spark=spark, sf_dir=SF_DIR)
+    vt = eng.create_versioned_table(
+        "fz_v", eng.tables["orders"], tempfile.mkdtemp(prefix="fuzz_prepared_")
+    )
+    threads = itertools.cycle((3, 4))
+    events = {
+        "repeat": lambda p_sql: None,
+        "commit": lambda p_sql: eng.sql(
+            "UPDATE fz_v SET o_totalprice = o_totalprice + 1 WHERE o_orderkey = 1"
+        ),
+        "set": lambda p_sql: eng.sql(f"SET threads = {next(threads)}"),
+        "rebind": lambda p_sql: [
+            eng.tables[t].createOrReplaceTempView(t) for t in TABLES
+        ],
+        "reprepare": lambda p_sql: eng.sql(f"PREPARE fz AS {p_sql}"),
+    }
 
     rng = random.Random(seed)
     bad: list[tuple[str, str]] = []
-    lifted = local = 0
+    lifted = local = repeats = 0
     for i in range(n):
         sql = local_select(rng) if rng.random() < 0.3 else gen_query(rng)
         lift = lift_parameters(sql, rng)
@@ -194,31 +227,36 @@ def main() -> int:
                 continue
             bad.append((p_sql, f"duckdb error: {str(e)[:200]}"))
             continue
+        on = normalize(o_cols, o_rows)
         try:
             eng.sql(f"PREPARE fz AS {p_sql}")
             before = eng.local_exec_counts["local"]
             sdf = eng.sql(f"EXECUTE fz({args})")
-            local += eng.local_exec_counts["local"] - before
-            s_cols = sdf.columns
-            s_rows = [tuple(x) for x in sdf.collect()]
+            went_local = eng.local_exec_counts["local"] > before
+            local += went_local
+            if not _same(sdf, on):
+                bad.append((p_sql, f"rows differ, args=({args})"))
+            # the same EXECUTE after each event
+            for name, event in events.items() if went_local else ():
+                event(p_sql)
+                repeats += 1
+                if not _same(eng.sql(f"EXECUTE fz({args})"), on):
+                    bad.append((p_sql, f"rows differ after {name}, args=({args})"))
             eng.sql("DEALLOCATE fz")
         except Exception as e:  # noqa: BLE001
             bad.append((p_sql, f"engine error: {str(e)[:300]}"))
             continue
-        sn = normalize(s_cols, s_rows)
-        on = normalize(o_cols, o_rows)
-        same = len(sn) == len(on) and all(
-            _cells_equal(a, b) for a, b in zip(sn, on)
-        )
-        if not same:
-            bad.append((p_sql, f"rows {len(sn)}/{len(on)} args=({args})"))
         if (i + 1) % 50 == 0:
             print(f"[{i + 1}/{n}] lifted={lifted} divergences={len(bad)}")
     for sql, reason in bad:
         print(f"DIVERGENCE: {reason}\n  {sql}")
+    eng.sql("RESET threads")
+    shutil.rmtree(vt.path, ignore_errors=True)
+    rc = eng.recipe_counts
     print(
         f"done: {n} generated, {lifted} parameterized+executed "
-        f"({local} read on the driver), {len(bad)} divergences"
+        f"({local} read on the driver), {len(bad)} divergences; "
+        f"{repeats} repeated EXECUTEs, recipes {rc['hit']} hits / {rc['miss']} misses"
     )
     return 1 if bad else 0
 
