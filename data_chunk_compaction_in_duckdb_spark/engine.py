@@ -69,6 +69,15 @@ _CATALOG_TF_RE = _re.compile(
 )
 
 
+def _plain(value: Any) -> Any:
+    """A numpy scalar argument as the Python value it holds: ``spark.sql``
+    refuses a numpy one (``F.lit`` wraps it in a cast), and a recipe key
+    takes only ``int`` and ``str``."""
+    import numpy as np
+
+    return value.item() if isinstance(value, (np.bool_, np.number, np.str_)) else value
+
+
 class Engine:
     """One engine instance ≈ one reference Connection: a SparkSession with
     the fixture catalog registered as temp views."""
@@ -227,6 +236,8 @@ class Engine:
 
         if args and params:
             raise ValueError("use positional ? args or named :params, not both")
+        args = tuple(_plain(v) for v in args)
+        params = {name: _plain(v) for name, v in params.items()}
         query = self._rewrite_catalog_tfs(query)
         if settings.CURRENT_SETTING_RE.search(query):
             self._register_current_setting_udf()

@@ -43,10 +43,31 @@ run; only one that passes adds the optimized plan's JSON and its input
 files.
 
 Decide, then execute.  `decide` turns an eligible plan into a `Recipe`:
-the input files, the file column behind each output, ``df.schema``, and
-the filter as conjuncts pyarrow evaluates.  `execute` turns a recipe
-plus argument values into the pyarrow read and ``createDataFrame``.
-`run` is the two in a row, the full path.
+the input files, the file column behind each output, ``df.schema``, the
+filter as conjuncts pyarrow evaluates, and the session conf the
+DataFrame build needs (time zone, Arrow target schema, schema JSON).
+`execute` turns a recipe plus argument values into the pyarrow read and
+the DataFrame.  `run` is the two in a row, the full path.
+
+The build.  ``spark.createDataFrame(table, schema)`` ends in one JVM
+entry point, ``PythonSQLUtils.toDataFrame(batches, schemaJson,
+session)``.  On its way there it sets the thread's active session,
+reads four confs, resolves ``PythonSQLUtils`` three times and writes the
+Arrow stream to a temp file that the JVM reads back: 21 py4j round
+trips.
+`execute` prepares the table as PySpark does (timestamps localized to
+the session time zone, cast to ``to_arrow_schema`` of the schema under
+``arrowUseLargeVarTypes``), serializes its one record batch with
+``RecordBatch.serialize`` — the encapsulated IPC message the JVM's file
+reader hands on — and calls that entry point over
+``scala.collection.Iterator.single(bytes)`` (``Iterator.empty`` for no
+rows): two round trips.  The handles are resolved once per engine
+(`_Jvm`), and the conf inputs are read at decide time, so the conf
+fingerprint a hit checks also guards them.  The JVM side is unchanged:
+it still picks a ``LocalRelation`` or, above
+``spark.sql.execution.arrow.localRelationThreshold``, an RDD.  It takes
+the session as an argument and activates it around the analysis, so no
+thread needs an active session of its own.
 
 Recipes.  `Recipes.read` answers each query ``Engine._query`` runs.  A
 recipe hit binds the new argument values into a recorded recipe and
@@ -61,8 +82,9 @@ queries.
   argument's name (or position) and the Spark literal type ``F.lit``
   gives its value — an ``int`` is ``integer`` inside int32 range and
   ``long`` outside it, a ``str`` is ``string``.  Any other value (NULL,
-  a float, a numpy scalar, which ``spark.sql`` refuses as an argument)
-  has no key: its statement takes the full path.
+  a float, a bool) has no key: its statement takes the full path.
+  ``Engine._query`` has already turned a numpy scalar into the Python
+  value it holds.
 - Record: a miss takes the full path.  When that reads locally, the
   recipe is kept in a least-recently-used map of at most
   `_RECIPES_MAX` entries.  Each parameter becomes a slot in the one
@@ -87,7 +109,8 @@ queries.
   decide it, else for the same values only (a value that is also a
   literal of the text, or a type's bound).  Its view names changing, or
   the entry leaving the map, lets it try again.
-- Validation, on every hit, in four JVM calls for a one-view read: each
+- Validation, on every hit, in four JVM calls for a one-view read (the
+  build then adds two): each
   temp view the analyzed plan passes through still holds an equal
   ``TemporaryViewRelation`` (``getRawTempView(name)``), and the session
   conf fingerprint (``getAllConfs().hashCode()``) is unchanged.  That
@@ -223,16 +246,41 @@ class Recipe:
     outputs: tuple[str, ...]  # the file column behind each output
     schema: T.StructType
     conjuncts: tuple[_Conjunct, ...]
+    # the DataFrame build's session conf, read at decide time
+    timezone: str  # spark.sql.session.timeZone
+    arrow_schema: object  # `schema` in Arrow, under arrowUseLargeVarTypes
+    schema_json: str
 
 
-def run(spark: SparkSession, df: DataFrame, counts: Counts) -> tuple[DataFrame, Recipe | None]:
+class _Jvm:
+    """One engine's JVM handles.  Each py4j attribute lookup is a round
+    trip of its own, so they are resolved once."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        jvm, session = spark._jvm, spark._jsparkSession
+        state = session.sessionState()
+        self.spark = spark
+        self.session = session
+        self.catalog = state.catalog()
+        self.conf = state.conf()
+        iterator = jvm.scala.collection.Iterator
+        self.single = iterator.single
+        self.empty = iterator.empty()  # stateless: one serves every call
+        self.to_dataframe = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.toDataFrame
+
+
+def run(
+    handles: Callable[[], _Jvm], df: DataFrame, counts: Counts
+) -> tuple[DataFrame, Recipe | None]:
     """``df``'s rows read on the driver and their recipe when its plan is
     eligible (see the module docstring), else ``df`` itself and None.
     ``counts`` gains ``"local"`` for a local read, else the fallback
-    reason."""
+    reason.  ``handles`` gives the engine's `_Jvm`; it is called inside
+    the same guard, so a session without one just keeps ``df``."""
     try:
-        recipe = decide(spark, df)
-        out = execute(spark, recipe)
+        jvm = handles()
+        recipe = decide(jvm, df)
+        out = execute(jvm, recipe)
     except _Ineligible as e:
         counts.add(e.reason)
         return df, None
@@ -331,13 +379,12 @@ def _local_paths(uris: list[str]) -> list[str]:
     return paths
 
 
-def _check_footers(spark: SparkSession, paths: list[str], types: dict) -> None:
+def _check_footers(limit: int, paths: list[str], types: dict) -> None:
     """Every file stores each column of ``types`` under its exact name
     and mapped type, or not at all; the needed column chunks fit under
-    the broadcast threshold."""
+    ``limit`` bytes."""
     import pyarrow.parquet as pq
 
-    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     size = 0
     for path in paths:
         md = pq.read_metadata(path)
@@ -359,9 +406,11 @@ def _check_footers(spark: SparkSession, paths: list[str], types: dict) -> None:
             raise _Ineligible("bytes")
 
 
-def decide(spark: SparkSession, df: DataFrame) -> Recipe:
+def decide(jvm: _Jvm, df: DataFrame) -> Recipe:
     """The recipe of ``df``'s local read; raises `_Ineligible` with the
     first rule the plan breaks."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     qe = df._jdf.queryExecution()
     analyzed = qe.analyzed()
     if analyzed.nodeName() not in _ANALYZED_NODES:
@@ -420,9 +469,22 @@ def decide(spark: SparkSession, df: DataFrame) -> Recipe:
     fields = tuple(_arrow_field(n, dt) for n, dt in needed.items())
 
     paths = _local_paths(df.inputFiles())
-    _check_footers(spark, paths, needed)
+    _check_footers(jvm.conf.autoBroadcastJoinThreshold(), paths, needed)
+    arrow_schema = to_arrow_schema(
+        schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=jvm.conf.arrowUseLargeVarTypes(),
+    )
     return Recipe(
-        tuple(views) if views else None, tuple(paths), fields, tuple(outputs), schema, conjuncts
+        tuple(views) if views else None,
+        tuple(paths),
+        fields,
+        tuple(outputs),
+        schema,
+        conjuncts,
+        jvm.conf.sessionLocalTimeZone(),
+        arrow_schema,
+        schema.json(),
     )
 
 
@@ -454,9 +516,11 @@ def _arrow_filter(c: _Conjunct, args: dict | None):
     return _COMPARE[c.kind](field, pa.scalar(values[0], c.arrow))
 
 
-def execute(spark: SparkSession, recipe: Recipe, args: dict | None = None) -> DataFrame:
+def execute(jvm: _Jvm, recipe: Recipe, args: dict | None = None) -> DataFrame:
     """The rows ``recipe`` reads, with ``args`` (parameter -> value)
-    bound into its slots, as a DataFrame over a ``LocalRelation``."""
+    bound into its slots, as a DataFrame over a ``LocalRelation``: a
+    pyarrow read, then `_build`, the DataFrame ``createDataFrame`` would
+    make, in two JVM calls instead of ~21 and a temp file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -468,10 +532,32 @@ def execute(spark: SparkSession, recipe: Recipe, args: dict | None = None) -> Da
         filters=reduce(operator.and_, filters) if filters else None,
         partitioning=None,
     )
-    # One chunk per column: Spark drops the rows of an Arrow stream
-    # whose batches follow zero-row ones (empty part files yield those).
     table = table.select(list(recipe.outputs)).rename_columns(recipe.schema.names)
-    return spark.createDataFrame(table.combine_chunks(), schema=recipe.schema)
+    return _build(jvm, table, recipe)
+
+
+def _build(jvm: _Jvm, table, recipe: Recipe) -> DataFrame:
+    """The DataFrame ``spark.createDataFrame(table, recipe.schema)``
+    gives, built in one ``toDataFrame`` call (see the module docstring):
+    the same table preparation, the same Arrow record batch encoding and
+    the same JVM entry point, without the temp file and the conf reads.
+    The rows go as one batch, not cut at ``arrowMaxRecordsPerBatch``;
+    that changes only the partition count of the RDD the JVM builds
+    above ``arrowLocalRelationThreshold``, not the rows."""
+    from pyspark.sql.pandas.types import _check_arrow_table_timestamps_localize
+
+    table = _check_arrow_table_timestamps_localize(table, recipe.schema, True, recipe.timezone)
+    # One chunk per column (empty part files leave zero-row chunks), so
+    # the table is the one record batch ``Iterator.single`` carries.
+    table = table.cast(recipe.arrow_schema).combine_chunks()
+    if table.num_rows:
+        (batch,) = table.to_batches()
+        batches = jvm.single(batch.serialize().to_pybytes())
+    else:
+        batches = jvm.empty
+    df = DataFrame(jvm.to_dataframe(batches, recipe.schema_json, jvm.session), jvm.spark)
+    df._schema = recipe.schema  # as createDataFrame: ``df.schema`` asks no JVM
+    return df
 
 
 # -- recipes
@@ -661,7 +747,7 @@ class Recipes:
         self._spark = spark
         self._entries: OrderedDict[tuple, _Entry] = OrderedDict()
         self._lock = threading.Lock()
-        self._jvm_state = None
+        self._handles: _Jvm | None = None
 
     def read(
         self,
@@ -678,7 +764,7 @@ class Recipes:
         key = None if in_txn else _key(query, args)
         if key is None:
             self.counts.add("txn" if in_txn else "args")
-            return run(self._spark, sql(), counts)[0]
+            return run(self._jvm, sql(), counts)[0]
         with self._lock:
             entry = self._entries.get(key)
             if entry is not None:
@@ -697,7 +783,7 @@ class Recipes:
             except Exception:  # noqa: BLE001 — the miss just records nothing
                 captured = None
         df = sql()
-        out, recipe = run(self._spark, df, counts)
+        out, recipe = run(self._jvm, df, counts)
         if recipe is None:
             self.counts.add("fallback")
             return out
@@ -711,25 +797,24 @@ class Recipes:
         self.counts.add(reason)
         return out
 
-    def _jvm(self):
-        if self._jvm_state is None:
-            state = self._spark._jsparkSession.sessionState()
-            self._jvm_state = (state.catalog(), state.conf())
-        return self._jvm_state
+    def _jvm(self) -> _Jvm:
+        if self._handles is None:
+            self._handles = _Jvm(self._spark)
+        return self._handles
 
     def _capture(self, views: tuple[str, ...]) -> _Entry:
-        catalog_, conf = self._jvm()
-        options = tuple(catalog_.getRawTempView(v) for v in views)
-        return _Entry(views, None, options, conf.getAllConfs().hashCode())
+        jvm = self._jvm()
+        options = tuple(jvm.catalog.getRawTempView(v) for v in views)
+        return _Entry(views, None, options, jvm.conf.getAllConfs().hashCode())
 
     def _hit(self, key: tuple, entry: _Entry, args: dict) -> DataFrame | None:
         try:
-            catalog_, conf = self._jvm()
-            valid = conf.getAllConfs().hashCode() == entry.conf and all(
-                o.equals(catalog_.getRawTempView(v)) for v, o in zip(entry.views, entry.options)
+            jvm = self._jvm()
+            valid = jvm.conf.getAllConfs().hashCode() == entry.conf and all(
+                o.equals(jvm.catalog.getRawTempView(v)) for v, o in zip(entry.views, entry.options)
             )
             if valid:
-                out = execute(self._spark, entry.recipe, args)
+                out = execute(jvm, entry.recipe, args)
                 self.counts.add("hit")
                 return out
             self.counts.add("invalid")

@@ -171,34 +171,88 @@ def test_broadcast_threshold_bounds_the_local_read(eng, monkeypatch, spark):
     assert both(eng, monkeypatch, sql)[0] == "local"
 
 
-def test_every_mapped_type_in_the_projection(eng, monkeypatch, spark, tmp_path):
+def _alltypes(spark, tmp_path, repeat: int = 1) -> str:
+    """A parquet file with a column of each type in `catalog.footer_type`'s
+    mapped set, NULLs in all but ``i64``, its 3 rows ``repeat`` times
+    over with ``i64`` counting up, read by the temp view ``alltypes``."""
     path = str(tmp_path / "alltypes.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "b": pa.array([True, None, False], pa.bool_()),
-                "i8": pa.array([1, 2, None], pa.int8()),
-                "i16": pa.array([-3, None, 300], pa.int16()),
-                "i32": pa.array([None, 7, -70000], pa.int32()),
-                "i64": pa.array([1, 2, 3], pa.int64()),
-                "f": pa.array([1.5, None, -0.25], pa.float32()),
-                "d": pa.array([None, 2.25, 1e300], pa.float64()),
-                "s": pa.array(["x", "", None], pa.string()),
-                "day": pa.array([dt.date(2024, 2, 29), None, dt.date(1900, 1, 1)], pa.date32()),
-                "ts": pa.array([dt.datetime(2024, 1, 1, 12, 30, 0, 123456), None,
-                                dt.datetime(1969, 12, 31, 23, 59, 59)], pa.timestamp("us")),
-                "li": pa.array([[1, None], None, []], pa.list_(pa.int64())),
-                "nl": pa.array([[[1], [2, 3]], [None], None], pa.list_(pa.list_(pa.int32()))),
-            }
-        ),
-        path,
+    base = pa.table(
+        {
+            "b": pa.array([True, None, False], pa.bool_()),
+            "i8": pa.array([1, 2, None], pa.int8()),
+            "i16": pa.array([-3, None, 300], pa.int16()),
+            "i32": pa.array([None, 7, -70000], pa.int32()),
+            "i64": pa.array([1, 2, 3], pa.int64()),
+            "f": pa.array([1.5, None, -0.25], pa.float32()),
+            "d": pa.array([None, 2.25, 1e300], pa.float64()),
+            "s": pa.array(["x", "", None], pa.string()),
+            "day": pa.array([dt.date(2024, 2, 29), None, dt.date(1900, 1, 1)], pa.date32()),
+            "ts": pa.array([dt.datetime(2024, 1, 1, 12, 30, 0, 123456), None,
+                            dt.datetime(1969, 12, 31, 23, 59, 59)], pa.timestamp("us")),
+            "li": pa.array([[1, None], None, []], pa.list_(pa.int64())),
+            "nl": pa.array([[[1], [2, 3]], [None], None], pa.list_(pa.list_(pa.int32()))),
+        }
     )
+    table = pa.concat_tables([base] * repeat)
+    table = table.set_column(4, "i64", pa.array(range(1, table.num_rows + 1), pa.int64()))
+    pq.write_table(table, path)
     schema = catalog.footer_schema(spark, path)
     assert schema is not None
     spark.read.schema(schema).parquet(path).createOrReplaceTempView("alltypes")
+    return path
+
+
+def test_every_mapped_type_in_the_projection(eng, monkeypatch, spark, tmp_path):
+    _alltypes(spark, tmp_path)
     for where in ("i64 >= 1", "i8 = 2", "i16 IN (-3, 300)", "i32 < 0", "s = ''",
                   "b IS NOT NULL", "i64 = 99"):
         assert both(eng, monkeypatch, f"SELECT * FROM alltypes WHERE {where}")[0] == "local"
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {},
+        {"spark.sql.session.timeZone": "America/Los_Angeles"},
+        {"spark.sql.execution.arrow.useLargeVarTypes": "true"},
+        # every non-empty build then goes to an RDD on the JVM side
+        {"spark.sql.execution.arrow.localRelationThreshold": "1"},
+    ],
+)
+def test_the_build_matches_create_dataframe(eng, spark, tmp_path, conf):
+    """`local_exec._build` gives what ``spark.createDataFrame`` gives for
+    the same Arrow table and schema: rows in order, and the schema with
+    its nullability; a recipe recorded before a SET of the build's conf
+    is recorded again."""
+    path = _alltypes(spark, tmp_path, repeat=400)
+    sql = "SELECT * FROM alltypes WHERE i64 >= :k"
+    for k in (1, 1):  # the first local run learns the view, the second records
+        eng.sql(sql, k=k)
+    try:
+        for name, value in conf.items():
+            spark.conf.set(name, value)
+        before, local = eng.recipe_counts.copy(), eng.local_exec_counts["local"]
+        for k in (1, 1200, 1201):  # many rows, one, none
+            got, ref = eng.sql(sql, k=k), spark.sql(sql, args={"k": k})
+            assert _jvm_schema(got) == _jvm_schema(ref)
+            assert _rows(got) == _rows(ref), k
+        assert eng.local_exec_counts["local"] == local + 3
+        moved = {"miss": 1, "invalid": 1, "record": 1, "hit": 2} if conf else {"hit": 3}
+        assert eng.recipe_counts - before == moved
+
+        jvm = eng._recipes._jvm()
+        recipe = local_exec.decide(jvm, spark.table("alltypes"))
+        full = pq.read_table(path, schema=pa.schema(recipe.fields))
+        for n in (0, 1, 2, 3, full.num_rows):
+            table = full.slice(0, n)
+            got = local_exec._build(jvm, table, recipe)
+            ref = spark.createDataFrame(table, schema=recipe.schema)
+            assert got.schema == ref.schema == recipe.schema
+            assert _jvm_schema(got) == _jvm_schema(ref)
+            assert got.collect() == ref.collect(), n
+    finally:
+        for name in conf:
+            spark.conf.unset(name)
 
 
 def test_column_case_differs_from_the_file(eng, monkeypatch, spark, tmp_path):

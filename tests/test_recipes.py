@@ -9,9 +9,11 @@ from __future__ import annotations
 import sys
 import threading
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 from data_chunk_compaction_in_duckdb_spark import catalog, local_exec
 from data_chunk_compaction_in_duckdb_spark.engine import Engine
@@ -78,6 +80,105 @@ def test_serving_shapes_hit_with_new_keys(eng, spark, monkeypatch, sql, keys):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("recipe-hit")) == []
+
+
+def test_a_hit_makes_six_jvm_calls_and_runs_no_job(eng, spark, monkeypatch):
+    """Four calls validate the recipe (conf fingerprint, the view) and two
+    build the DataFrame; its collect runs no Spark job."""
+    warm(eng, CUSTOMER, k=7)
+    sent, me = [], threading.get_ident()
+    real = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if threading.get_ident() == me:  # not py4j's finalizer thread
+            sent.append(command)
+        return real(self, command)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("recipe-budget", "recipe-budget")
+    before = eng.recipe_counts.copy()
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(ClientServerConnection, "send_command", counted)
+            df = eng.sql(CUSTOMER, k=8)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert eng.recipe_counts - before == {"hit": 1}
+    assert [r.c_custkey for r in rows] == [8]
+    assert any("\ntoDataFrame\n" in c for c in sent)
+    assert len(sent) <= 6, [c.split("\n")[:3] for c in sent]
+    assert list(sc.statusTracker().getJobIdsForGroup("recipe-budget")) == []
+
+
+def test_numpy_arguments_read_like_python_ones(eng):
+    by_name = "SELECT c_custkey, c_acctbal FROM customer WHERE c_name = :n"
+    positional = "SELECT o_orderkey FROM orders WHERE o_custkey = ? AND o_orderkey < ?"
+    warm(eng, CUSTOMER, k=7)
+    warm(eng, by_name, n="Customer#000000007")
+    for _ in range(2):
+        eng.sql(positional, 4, 10**6)
+    before = eng.recipe_counts.copy()
+    for k in (8, 9, 10**4):
+        for convert in (np.int64, np.int32):
+            assert _rows(eng.sql(CUSTOMER, k=convert(k))) == _rows(eng.sql(CUSTOMER, k=k))
+            got = _rows(eng.sql(positional, convert(k), convert(10**6)))
+            assert got == _rows(eng.sql(positional, k, 10**6))
+        name = f"Customer#{k:09d}"
+        assert _rows(eng.sql(by_name, n=np.str_(name))) == _rows(eng.sql(by_name, n=name))
+    assert eng.recipe_counts - before == {"hit": 3 * 10}
+
+
+def test_fresh_threads_hit_while_another_commits(eng, spark):
+    """Three threads that never called Spark before share the engine and
+    its JVM handles; a recipe hit sets no active session, and each
+    thread's hits read right while a fourth commits and rebinds a view."""
+    keys = (1, 7, 8, 42, 99, 149, 150, 10**6)
+    expect = {
+        (sql, k): _rows(spark.sql(sql, args={"k": k}))
+        for sql in (CUSTOMER, BY_CUSTOMER) for k in keys
+    }
+    for sql in (CUSTOMER, BY_CUSTOMER):
+        warm(eng, sql, k=keys[0])
+    vt = eng._versioned["orders_v"]
+    before = eng.recipe_counts.copy()
+    done, errors, reads = threading.Event(), [], []
+
+    def writer():
+        try:
+            for i in range(6):
+                eng.sql(f"UPDATE orders_v SET o_totalprice = {i}.5 WHERE o_orderkey = 3")
+                if i % 2:
+                    vt.checkpoint()
+                    eng.refresh_versioned_view("orders_v", vt)
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(f"writer: {e!r}")
+        finally:
+            done.set()
+
+    def reader(offset: int):
+        try:
+            i = offset
+            while not done.is_set() or i < offset + 2 * len(keys):
+                sql, k = (CUSTOMER, BY_CUSTOMER)[i % 2], keys[i % len(keys)]
+                got = _rows(eng.sql(sql, k=k))
+                if got != expect[sql, k]:
+                    errors.append(f"{sql} k={k}: {got}")
+                reads.append(1)
+                i += 1
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(f"reader: {e!r}")
+
+    threads = [threading.Thread(target=writer)]
+    threads += [threading.Thread(target=reader, args=(i,)) for i in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:5]
+    counts = eng.recipe_counts - before
+    assert counts["hit"] == len(reads), counts
 
 
 def test_positional_arguments_bind_by_position(eng):
