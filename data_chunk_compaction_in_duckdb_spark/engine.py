@@ -175,10 +175,12 @@ class Engine:
           output is a column or a rename of one, every column type is
           footer-mapped, and the needed column chunks fit under
           ``spark.sql.autoBroadcastJoinThreshold``, pyarrow reads the
-          rows inside this call and the result is a DataFrame over a
-          LocalRelation: its actions run no Spark job, and it holds the
-          fixture file or the versioned manifest version the view
-          names now — a snapshot.  A bigger input or any other shape
+          rows inside this call and the result is a DataFrame that
+          holds them (``local_exec.LocalFrame``): its ``collect`` makes
+          no JVM call, its other actions run over a LocalRelation built
+          on first use and no Spark job, and it holds the fixture file
+          or the versioned manifest version the view names now — a
+          snapshot.  A bigger input or any other shape
           keeps the Spark plan; ``local_exec_counts`` counts the local
           reads and each fallback's reason.  A local read leaves a
           recipe (``local_exec.Recipes``) keyed on the rewritten text

@@ -4,11 +4,12 @@ that let a repeated one skip Spark's parser, analyzer and optimizer.
 A serving read returns a row or a handful, yet through Spark it pays for
 a job: scheduling, a Java compile for each new key, a task and the
 result fetch.  `run` reads such a statement's rows on the driver with
-pyarrow and returns them as a DataFrame over a ``LocalRelation``, whose
-actions run no Spark job.  DuckDB (SIGMOD 2019) makes the case that an
-embedded engine has to make short statements cheap; the reference's
-CompactingPhysicalOperator likewise sends an input under a size
-threshold down a cheaper path.
+pyarrow and returns a DataFrame that holds them: its ``collect`` makes
+no JVM call, and its other actions run over a ``LocalRelation`` and no
+Spark job.  DuckDB (SIGMOD 2019) makes the case that an embedded engine
+has to make short statements cheap and hand a small result to its host
+without serializing it; the reference's CompactingPhysicalOperator
+likewise sends an input under a size threshold down a cheaper path.
 
 Eligibility comes from Spark's own plans, not from the SQL text.  A
 statement is read locally when all of these hold; the first rule it
@@ -47,7 +48,18 @@ the input files, the file column behind each output, ``df.schema``, the
 filter as conjuncts pyarrow evaluates, and the session conf the
 DataFrame build needs (time zone, Arrow target schema, schema JSON).
 `execute` turns a recipe plus argument values into the pyarrow read and
-the DataFrame.  `run` is the two in a row, the full path.
+the `LocalFrame` that holds it.  `run` is the two in a row, the full
+path.
+
+The frame.  A `LocalFrame` is a classic PySpark DataFrame that holds the
+Arrow table.  Its ``collect`` converts the table to Rows on the driver
+with ``ArrowTableToRowsConversion``, the converter Spark Connect's
+``collect`` uses: no JVM call, no socket, no pickled row stream.  Its
+``schema`` is the recipe's.  Every other method goes through ``_jdf``,
+which `_build` makes on the first use, once even when threads share the
+frame; the read already happened, so a late build holds the same rows.
+A build error therefore surfaces at that first use, not as a fallback
+to the Spark plan.
 
 The build.  ``spark.createDataFrame(table, schema)`` ends in one JVM
 entry point, ``PythonSQLUtils.toDataFrame(batches, schemaJson,
@@ -55,7 +67,7 @@ session)``.  On its way there it sets the thread's active session,
 reads four confs, resolves ``PythonSQLUtils`` three times and writes the
 Arrow stream to a temp file that the JVM reads back: 21 py4j round
 trips.
-`execute` prepares the table as PySpark does (timestamps localized to
+`_build` prepares the table as PySpark does (timestamps localized to
 the session time zone, cast to ``to_arrow_schema`` of the schema under
 ``arrowUseLargeVarTypes``), serializes its one record batch with
 ``RecordBatch.serialize`` — the encapsulated IPC message the JVM's file
@@ -109,8 +121,8 @@ queries.
   decide it, else for the same values only (a value that is also a
   literal of the text, or a type's bound).  Its view names changing, or
   the entry leaving the map, lets it try again.
-- Validation, on every hit, in four JVM calls for a one-view read (the
-  build then adds two): each
+- Validation, on every hit, in four JVM calls for a one-view read
+  (``collect`` adds none; a first other use adds the build's two): each
   temp view the analyzed plan passes through still holds an equal
   ``TemporaryViewRelation`` (``getRawTempView(name)``), and the session
   conf fingerprint (``getAllConfs().hashCode()``) is unchanged.  That
@@ -162,6 +174,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from data_chunk_compaction_in_duckdb_spark import catalog
 
@@ -516,11 +529,11 @@ def _arrow_filter(c: _Conjunct, args: dict | None):
     return _COMPARE[c.kind](field, pa.scalar(values[0], c.arrow))
 
 
-def execute(jvm: _Jvm, recipe: Recipe, args: dict | None = None) -> DataFrame:
+def execute(jvm: _Jvm, recipe: Recipe, args: dict | None = None) -> LocalFrame:
     """The rows ``recipe`` reads, with ``args`` (parameter -> value)
-    bound into its slots, as a DataFrame over a ``LocalRelation``: a
-    pyarrow read, then `_build`, the DataFrame ``createDataFrame`` would
-    make, in two JVM calls instead of ~21 and a temp file."""
+    bound into its slots: a pyarrow read, held by a `LocalFrame` that
+    answers ``collect`` from it and builds its JVM DataFrame only when
+    another method needs one."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -533,17 +546,51 @@ def execute(jvm: _Jvm, recipe: Recipe, args: dict | None = None) -> DataFrame:
         partitioning=None,
     )
     table = table.select(list(recipe.outputs)).rename_columns(recipe.schema.names)
-    return _build(jvm, table, recipe)
+    return LocalFrame(jvm, table, recipe)
 
 
-def _build(jvm: _Jvm, table, recipe: Recipe) -> DataFrame:
-    """The DataFrame ``spark.createDataFrame(table, recipe.schema)``
-    gives, built in one ``toDataFrame`` call (see the module docstring):
-    the same table preparation, the same Arrow record batch encoding and
-    the same JVM entry point, without the temp file and the conf reads.
-    The rows go as one batch, not cut at ``arrowMaxRecordsPerBatch``;
-    that changes only the partition count of the RDD the JVM builds
-    above ``arrowLocalRelationThreshold``, not the rows."""
+class LocalFrame(ClassicDataFrame):
+    """A local read's DataFrame over the Arrow table it holds (see "The
+    frame" in the module docstring): ``collect`` answers from the table
+    with no JVM call, and ``_jdf`` is built on first use, once."""
+
+    def __new__(cls, *args, **kwargs):  # the parent's __new__ only dispatches
+        return object.__new__(cls)
+
+    def __init__(self, jvm: _Jvm, table, recipe: Recipe) -> None:
+        self._lock = threading.Lock()
+        super().__init__(None, jvm.spark)  # sets ``_jdf`` to None: not built
+        self._handles = jvm
+        self._table = table
+        self._recipe = recipe
+        self.__dict__["schema"] = recipe.schema  # the parent's cached_property
+
+    @property
+    def _jdf(self):
+        if self._built is None:
+            with self._lock:
+                if self._built is None:
+                    self._built = _build(self._handles, self._table, self._recipe)
+        return self._built
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:
+        self._built = jdf
+
+    def collect(self) -> list[T.Row]:
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        return ArrowTableToRowsConversion.convert(self._table, self._recipe.schema)
+
+
+def _build(jvm: _Jvm, table, recipe: Recipe):
+    """The JVM DataFrame ``spark.createDataFrame(table, recipe.schema)``
+    builds, in one ``toDataFrame`` call (see the module docstring): the
+    same table preparation, the same Arrow record batch encoding and the
+    same JVM entry point, without the temp file and the conf reads.  The
+    rows go as one batch, not cut at ``arrowMaxRecordsPerBatch``; that
+    changes only the partition count of the RDD the JVM builds above
+    ``arrowLocalRelationThreshold``, not the rows."""
     from pyspark.sql.pandas.types import _check_arrow_table_timestamps_localize
 
     table = _check_arrow_table_timestamps_localize(table, recipe.schema, True, recipe.timezone)
@@ -555,9 +602,7 @@ def _build(jvm: _Jvm, table, recipe: Recipe) -> DataFrame:
         batches = jvm.single(batch.serialize().to_pybytes())
     else:
         batches = jvm.empty
-    df = DataFrame(jvm.to_dataframe(batches, recipe.schema_json, jvm.session), jvm.spark)
-    df._schema = recipe.schema  # as createDataFrame: ``df.schema`` asks no JVM
-    return df
+    return jvm.to_dataframe(batches, recipe.schema_json, jvm.session)
 
 
 # -- recipes

@@ -11,10 +11,15 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import struct
+import sys
+import threading
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -22,6 +27,7 @@ from data_chunk_compaction_in_duckdb_spark import catalog, local_exec, prepared
 from data_chunk_compaction_in_duckdb_spark.engine import Engine
 
 ORDER_COLS = "o_orderkey, o_custkey, o_orderstatus, o_totalprice"
+NAN = float("nan")
 
 
 @pytest.fixture()
@@ -171,11 +177,15 @@ def test_broadcast_threshold_bounds_the_local_read(eng, monkeypatch, spark):
     assert both(eng, monkeypatch, sql)[0] == "local"
 
 
-def _alltypes(spark, tmp_path, repeat: int = 1) -> str:
+def _alltypes(spark, tmp_path, repeat: int = 1, nan: bool = False) -> str:
     """A parquet file with a column of each type in `catalog.footer_type`'s
     mapped set, NULLs in all but ``i64``, its 3 rows ``repeat`` times
-    over with ``i64`` counting up, read by the temp view ``alltypes``."""
+    over with ``i64`` counting up, read by the temp view ``alltypes``.
+    With ``nan`` the float columns hold NaN and -0.0 beside a NULL."""
     path = str(tmp_path / "alltypes.parquet")
+    f, d = [1.5, None, -0.25], [None, 2.25, 1e300]
+    if nan:
+        f, d = [NAN, None, -0.0], [None, -0.0, NAN]
     base = pa.table(
         {
             "b": pa.array([True, None, False], pa.bool_()),
@@ -183,8 +193,8 @@ def _alltypes(spark, tmp_path, repeat: int = 1) -> str:
             "i16": pa.array([-3, None, 300], pa.int16()),
             "i32": pa.array([None, 7, -70000], pa.int32()),
             "i64": pa.array([1, 2, 3], pa.int64()),
-            "f": pa.array([1.5, None, -0.25], pa.float32()),
-            "d": pa.array([None, 2.25, 1e300], pa.float64()),
+            "f": pa.array(f, pa.float32()),
+            "d": pa.array(d, pa.float64()),
             "s": pa.array(["x", "", None], pa.string()),
             "day": pa.array([dt.date(2024, 2, 29), None, dt.date(1900, 1, 1)], pa.date32()),
             "ts": pa.array([dt.datetime(2024, 1, 1, 12, 30, 0, 123456), None,
@@ -220,7 +230,7 @@ def test_every_mapped_type_in_the_projection(eng, monkeypatch, spark, tmp_path):
     ],
 )
 def test_the_build_matches_create_dataframe(eng, spark, tmp_path, conf):
-    """`local_exec._build` gives what ``spark.createDataFrame`` gives for
+    """`local_exec._build` builds what ``spark.createDataFrame`` builds for
     the same Arrow table and schema: rows in order, and the schema with
     its nullability; a recipe recorded before a SET of the build's conf
     is recorded again."""
@@ -245,7 +255,7 @@ def test_the_build_matches_create_dataframe(eng, spark, tmp_path, conf):
         full = pq.read_table(path, schema=pa.schema(recipe.fields))
         for n in (0, 1, 2, 3, full.num_rows):
             table = full.slice(0, n)
-            got = local_exec._build(jvm, table, recipe)
+            got = DataFrame(local_exec._build(jvm, table, recipe), spark)
             ref = spark.createDataFrame(table, schema=recipe.schema)
             assert got.schema == ref.schema == recipe.schema
             assert _jvm_schema(got) == _jvm_schema(ref)
@@ -253,6 +263,127 @@ def test_the_build_matches_create_dataframe(eng, spark, tmp_path, conf):
     finally:
         for name in conf:
             spark.conf.unset(name)
+
+
+def _exact(rows) -> list:
+    """``rows`` as their class, field names and cells, each cell with its
+    type and a float as its bits: NaN equals NaN, -0.0 differs from 0.0,
+    ``True`` from ``1``."""
+
+    def cell(v):
+        if isinstance(v, list):
+            return [cell(x) for x in v]
+        return (type(v).__name__, struct.pack(">d", v) if isinstance(v, float) else v)
+
+    return [(type(r).__name__, getattr(r, "__fields__", None), [cell(v) for v in r]) for r in rows]
+
+
+@pytest.mark.parametrize("tz", [None, "America/Los_Angeles"])
+def test_collect_from_arrow_matches_the_jvm(eng, spark, tmp_path, tz):
+    """A local read's ``collect`` answers from its Arrow table, builds
+    nothing, and gives the Rows the JVM collect of the same frame gives,
+    in order, and those of ``spark.sql``: field names (duplicates too),
+    cell types, and floats bit for bit, for every mapped type at 0 to
+    1200 rows."""
+    _alltypes(spark, tmp_path, repeat=400, nan=True)
+    statements = (
+        "SELECT * FROM alltypes WHERE i64 <= :k",
+        "SELECT i64 AS x, i32 AS x, nl, ts AS t, f, d FROM alltypes WHERE i64 <= :k",
+    )
+    try:
+        if tz:
+            spark.conf.set("spark.sql.session.timeZone", tz)
+        for sql in statements:
+            for k in (1, 1):  # the first local run learns the view, the second records
+                eng.sql(sql, k=k)
+            before = eng.recipe_counts.copy()
+            for k in (0, 1, 2, 3, 1200):
+                got = eng.sql(sql, k=k)
+                assert isinstance(got, local_exec.LocalFrame), (sql, k)
+                rows = got.collect()
+                assert got._built is None, "collect built the JVM DataFrame"
+                assert len(rows) == k
+                jvm = DataFrame(got._jdf, spark).collect()
+                ref = spark.sql(sql, args={"k": k}).collect()
+                assert _exact(rows) == _exact(jvm), (sql, k)
+                assert sorted(_exact(rows), key=repr) == sorted(_exact(ref), key=repr), (sql, k)
+            assert eng.recipe_counts - before == {"hit": 5}
+    finally:
+        spark.conf.unset("spark.sql.session.timeZone")
+
+
+def test_the_local_frame_is_a_dataframe(eng, monkeypatch, spark):
+    """Every method but ``collect`` runs on the JVM DataFrame the local
+    frame builds on first use, and equals the Spark plan's answer."""
+    sql = "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_custkey = :k"
+    got = eng.sql(sql, k=4)
+    with monkeypatch.context() as m:
+        _spark_plan(m)
+        ref = eng.sql(sql, k=4)
+    assert isinstance(got, local_exec.LocalFrame) and not isinstance(ref, local_exec.LocalFrame)
+    n = ref.count()
+    assert n > 1
+    assert got.take(2) == ref.take(2) and got.take(n + 5) == ref.take(n + 5)
+    assert got.first() == ref.first()
+    assert got.toPandas().equals(ref.toPandas())
+    orders = spark.table("orders")
+    assert _rows(got.union(orders.limit(3).select(*ref.columns))) == _rows(
+        ref.union(orders.limit(3).select(*ref.columns))
+    )
+    joined = [got.join(orders, "o_orderkey"), ref.join(orders, "o_orderkey")]
+    assert _rows(joined[0]) == _rows(joined[1]) and _jvm_schema(joined[0]) == _jvm_schema(joined[1])
+    agg = "SELECT count(*) AS n, sum(o_totalprice) AS total, max(o_orderkey) AS top FROM {}"
+    try:
+        got.createOrReplaceTempView("local_frame")
+        ref.createOrReplaceTempView("spark_frame")
+        assert spark.sql(agg.format("local_frame")).collect() == spark.sql(
+            agg.format("spark_frame")
+        ).collect()
+    finally:
+        spark.catalog.dropTempView("local_frame")
+        spark.catalog.dropTempView("spark_frame")
+    try:
+        assert got.cache() is got and got.is_cached
+        assert got.count() == n and _rows(got) == _rows(ref)
+        assert got.storageLevel == ref.cache().storageLevel
+    finally:
+        got.unpersist()
+        ref.unpersist()
+
+
+def test_threads_first_touching_a_frame_build_it_once(eng, monkeypatch):
+    got = eng.sql("SELECT c_custkey, c_name FROM customer WHERE c_custkey = :k", k=5)
+    assert isinstance(got, local_exec.LocalFrame)
+    real, calls = local_exec._build, []
+
+    def slow(*args):
+        calls.append(threading.get_ident())
+        time.sleep(0.2)  # the other thread asks while this one builds
+        return real(*args)
+
+    monkeypatch.setattr(local_exec, "_build", slow)
+    start, seen = threading.Barrier(2, timeout=30), []
+
+    def touch():
+        start.wait()
+        seen.append(got._jdf)
+
+    threads = [threading.Thread(target=touch) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1 and len(seen) == 2 and seen[0] is seen[1]
+    assert got._jdf is seen[0] and len(calls) == 1
+    assert [tuple(r) for r in DataFrame(got._jdf, got.sparkSession).collect()] == [
+        tuple(r) for r in got.collect()
+    ]
 
 
 def test_column_case_differs_from_the_file(eng, monkeypatch, spark, tmp_path):

@@ -82,9 +82,14 @@ def test_serving_shapes_hit_with_new_keys(eng, spark, monkeypatch, sql, keys):
     assert list(sc.statusTracker().getJobIdsForGroup("recipe-hit")) == []
 
 
-def test_a_hit_makes_six_jvm_calls_and_runs_no_job(eng, spark, monkeypatch):
-    """Four calls validate the recipe (conf fingerprint, the view) and two
-    build the DataFrame; its collect runs no Spark job."""
+@pytest.mark.parametrize("first", ["count", "view"])
+def test_a_hit_and_its_collect_make_four_jvm_calls_and_build_nothing(
+    eng, spark, monkeypatch, fixture_views, first
+):
+    """Four calls validate the recipe (conf fingerprint, the view); the
+    collect answers from the Arrow table: no JVM DataFrame, no job.  The
+    frame's first JVM use builds it in one ``toDataFrame``, the next
+    builds nothing."""
     warm(eng, CUSTOMER, k=7)
     sent, me = [], threading.get_ident()
     real = ClientServerConnection.send_command
@@ -94,21 +99,31 @@ def test_a_hit_makes_six_jvm_calls_and_runs_no_job(eng, spark, monkeypatch):
             sent.append(command)
         return real(self, command)
 
-    sc = spark.sparkContext
-    sc.setJobGroup("recipe-budget", "recipe-budget")
+    def built() -> int:
+        return sum("\ntoDataFrame\n" in c for c in sent)
+
+    uses = {
+        "count": lambda df: df.count() == 1,
+        "view": lambda df: df.createOrReplaceTempView("hit_frame") is None
+        and spark.table("hit_frame").collect() == rows,
+    }
+    sc, group = spark.sparkContext, f"recipe-budget-{first}"
+    sc.setJobGroup(group, group)
     before = eng.recipe_counts.copy()
     try:
         with monkeypatch.context() as m:
             m.setattr(ClientServerConnection, "send_command", counted)
             df = eng.sql(CUSTOMER, k=8)
-        rows = df.collect()
+            rows = df.collect()
+            assert len(sent) <= 4 and built() == 0, [c.split("\n")[:3] for c in sent]
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+            assert uses[first](df) and built() == 1
+            assert uses[{"count": "view", "view": "count"}[first]](df) and built() == 1
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.dropTempView("hit_frame")
     assert eng.recipe_counts - before == {"hit": 1}
     assert [r.c_custkey for r in rows] == [8]
-    assert any("\ntoDataFrame\n" in c for c in sent)
-    assert len(sent) <= 6, [c.split("\n")[:3] for c in sent]
-    assert list(sc.statusTracker().getJobIdsForGroup("recipe-budget")) == []
 
 
 def test_numpy_arguments_read_like_python_ones(eng):

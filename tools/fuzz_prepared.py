@@ -21,6 +21,12 @@ rebind of every fixture view and a re-PREPARE of the same text.  The
 summary line gives those EXECUTEs' recipe hit/miss split
 (``Engine.recipe_counts``).
 
+Each answer's Rows must carry their DataFrame's column names as
+``__fields__``, and those must be DuckDB's column names.  Column order is
+counted, not compared: ``SELECT * REPLACE`` puts the replaced column
+last, where DuckDB keeps its place.  The summary also says how many
+collects a local read answered from its Arrow table.
+
 Usage: python tools/fuzz_prepared.py [n_queries] [seed]
 Exit 1 on any divergence.
 """
@@ -34,6 +40,7 @@ import re
 import shutil
 import sys
 import tempfile
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -157,11 +164,21 @@ def local_select(rng: random.Random) -> str:
     return f"SELECT {proj} FROM {table} WHERE {' AND '.join(conds)}"
 
 
-def _same(sdf, oracle: list) -> bool:
-    """Whether ``sdf``'s rows equal DuckDB's normalized ``oracle`` rows."""
+def _same(sdf, oracle: list, names: list[str], tally: Counter) -> bool:
+    """Whether ``sdf``'s rows equal DuckDB's normalized ``oracle`` rows,
+    each row's ``__fields__`` equals ``sdf.columns`` and those hold
+    DuckDB's column ``names``.  ``tally`` counts the collects answered
+    from a local read's Arrow table (``"arrow"``) and those whose column
+    order differs from DuckDB's (``"order"``)."""
+    from data_chunk_compaction_in_duckdb_spark.local_exec import LocalFrame
     from tests.oracle_compare import _cells_equal, normalize
 
-    got = normalize(sdf.columns, [tuple(x) for x in sdf.collect()])
+    rows = sdf.collect()
+    tally["arrow"] += isinstance(sdf, LocalFrame)
+    if any(list(r.__fields__) != sdf.columns for r in rows) or sorted(sdf.columns) != sorted(names):
+        return False
+    tally["order"] += sdf.columns != names
+    got = normalize(sdf.columns, [tuple(x) for x in rows])
     return len(got) == len(oracle) and all(_cells_equal(a, b) for a, b in zip(got, oracle))
 
 
@@ -203,6 +220,7 @@ def main() -> int:
     rng = random.Random(seed)
     bad: list[tuple[str, str]] = []
     lifted = local = repeats = 0
+    tally: Counter = Counter()
     for i in range(n):
         sql = local_select(rng) if rng.random() < 0.3 else gen_query(rng)
         lift = lift_parameters(sql, rng)
@@ -234,13 +252,13 @@ def main() -> int:
             sdf = eng.sql(f"EXECUTE fz({args})")
             went_local = eng.local_exec_counts["local"] > before
             local += went_local
-            if not _same(sdf, on):
+            if not _same(sdf, on, o_cols, tally):
                 bad.append((p_sql, f"rows differ, args=({args})"))
             # the same EXECUTE after each event
             for name, event in events.items() if went_local else ():
                 event(p_sql)
                 repeats += 1
-                if not _same(eng.sql(f"EXECUTE fz({args})"), on):
+                if not _same(eng.sql(f"EXECUTE fz({args})"), on, o_cols, tally):
                     bad.append((p_sql, f"rows differ after {name}, args=({args})"))
             eng.sql("DEALLOCATE fz")
         except Exception as e:  # noqa: BLE001
@@ -256,7 +274,9 @@ def main() -> int:
     print(
         f"done: {n} generated, {lifted} parameterized+executed "
         f"({local} read on the driver), {len(bad)} divergences; "
-        f"{repeats} repeated EXECUTEs, recipes {rc['hit']} hits / {rc['miss']} misses"
+        f"{repeats} repeated EXECUTEs, recipes {rc['hit']} hits / {rc['miss']} misses; "
+        f"{tally['arrow']} collects answered from Arrow, "
+        f"{tally['order']} in another column order than DuckDB's"
     )
     return 1 if bad else 0
 
